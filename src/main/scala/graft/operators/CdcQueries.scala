@@ -143,13 +143,13 @@ object CdcQueries {
     // A9: truncate frontier — the declared-surface twin of
     // CdcApply.dropTruncated, with the frontier keyed by USER here (one
     // row per user with any error) rather than by table. That makes this
-    // a frontier-semi-join pattern, not the broadcast-sized per-TABLE
+    // a frontier-semi-join pattern, not the driver-sized per-TABLE
     // frontier of the streaming apply: at 100 TB a per-user frontier
     // grows with the user population, so no broadcast hint — AQE
     // broadcasts when the error-user set turns out dimension-sized and
     // shuffles on user_id otherwise (both sides already key on it).
-    // CdcApply.dropTruncated keeps the true broadcast shape
-    // (frontier ≤ #tables).
+    // CdcApply.dropTruncated, whose frontier is ≤ #tables entries,
+    // collects it to the driver and filters by literal LSN instead.
     "cdc_truncate_frontier" -> QueryDef(
       (spark, dir) => {
         val ev = t(spark, dir, "events")

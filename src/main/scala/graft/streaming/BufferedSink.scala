@@ -1,8 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -18,11 +17,19 @@ import org.apache.spark.sql.types.StructType
   * (`pkg/tableengines/generic.go` FlushToMainTable, `pkg/consumer`
   * standby-status [recall:med] — SURVEY §0 caveat applies).
   *
-  * Spark mapping: `foreachBatch` hands us (batch, batchId); we stage the
-  * batch to `_staging/<batchId>`, atomically rename into the committed
-  * area, and record the batchId in a manifest. A redelivered batchId
+  * Spark mapping: a landing takes (batch, batchId), stages the batch to
+  * `_staging/<batchId>`, atomically renames it into the committed area,
+  * and records the batchId in a manifest. A redelivered batchId
   * (checkpoint replay after crash) is a no-op — the manifest is the
   * equivalent of the reference's persisted LSN.
+  *
+  * One landing path, two entry points. [[writeStamped]] lands a batch
+  * that already carries `__row_id`; [[writeBatch]] is [[stampRowIds]]
+  * followed by that same landing. The routed stream stamps its decoded
+  * micro-batch ONCE for every table and lands each table's slice through
+  * [[writeStamped]], so a table costs one write job per micro-batch, not
+  * a stamp of its own; ids then stay batchId-major and strictly
+  * increasing in LSN order within a table, but are not dense per table.
   *
   * ALL state I/O goes through [[StateFs]] (the Hadoop `FileSystem` API),
   * so `tableDir` may live on the stream's checkpoint store — HDFS, S3A,
@@ -31,14 +38,16 @@ import org.apache.spark.sql.types.StructType
   * marker DIRECTORY (`_committed_batches/b=<id>`, creation = commit)
   * rather than an appended file: HDFS append is optional and object
   * stores have none, and one marker per batch keeps the commit a single
-  * create instead of a read-modify-write.
+  * create instead of a read-modify-write. A landing lists the manifest
+  * once and reads the segments' coverage once, so its state reads do not
+  * multiply with the number of batches ever landed.
   *
   * Compaction (A11's second half): with `mergeThreshold > 0`, once that
   * many committed batch dirs are live they are merged — sorted by the
-  * explicit `__row_id` stamped at write time (batchId-major, intra-batch
-  * arrival order minor; `monotonically_increasing_id` is NOT stable, so we
-  * never use it) — into one `main/seg-<maxBatchId>` segment, and the
-  * merged batch dirs are deleted. Without compaction a long-running
+  * explicit `__row_id` (batchId-major, intra-batch arrival order minor)
+  * — into one `main/seg-<maxBatchId>` segment, and the merged batch dirs
+  * are deleted. The compaction read is given the landed schema, so it
+  * runs no schema-inference job. Without compaction a long-running
   * stream lands one directory per micro-batch forever and every read
   * re-opens all of them — unbounded small-file growth, the failure every
   * real long-running replication hits.
@@ -56,10 +65,7 @@ import org.apache.spark.sql.types.StructType
   * @param mergeThreshold compact every N committed batches; 0 = never
   *        (the raw landing behavior).
   * @param orderCols intra-batch arrival-order key for `__row_id` (the WAL
-  *        feed's `lsn` by default). Ranks over it are computed with the
-  *        parallel two-level decomposition (range-partition → local
-  *        row_number → broadcast partition-count offsets), so stamping
-  *        stays distributed even for a GB-scale snapshot micro-batch.
+  *        feed's `lsn` by default); see [[BufferedSink.stampRowIds]].
   * @param segmentMerge engine-aware row reduction applied to each
   *        segment's rows as it compacts (ClickHouse's background
   *        part-merge analog — [[CdcApply.mergeSlice]]); identity by
@@ -91,82 +97,64 @@ final class BufferedSink(tableDir: String, mergeThreshold: Int = 0,
     StateFs.listNames(mainDir).filter(_.startsWith("seg-")).sorted
       .map(new HPath(mainDir, _))
 
-  /** Idempotent micro-batch write: stage → atomic move → manifest marker,
-    * then compaction when the live-batch count reaches the threshold.
-    * Safe to call again with the same batchId (crash-replay path).
+  /** Idempotent micro-batch write: stamp `__row_id`, then [[writeStamped]]'s
+    * landing. Safe to call again with the same batchId (crash-replay
+    * path); a replay is detected before the stamp runs.
     */
   def writeBatch(batch: DataFrame, batchId: Long): Boolean = {
-    if (committedBatches().contains(batchId)) return false
+    val done = committedBatches()
+    if (done.contains(batchId)) return false
+    val (stamped, release) = stampRowIds(batch, batchId)
+    try land(stamped, batchId, done) finally release()
+  }
+
+  /** Idempotent landing of a batch that already carries `__row_id`: stage
+    * → atomic move → manifest marker, then compaction when the live-batch
+    * count reaches the threshold.
+    */
+  def writeStamped(stamped: DataFrame, batchId: Long): Boolean = {
+    val done = committedBatches()
+    !done.contains(batchId) && land(stamped, batchId, done)
+  }
+
+  private def land(stamped: DataFrame, batchId: Long, done: Set[Long]): Boolean = {
     val staging = new HPath(root, s"_staging/$batchId")
     val target = new HPath(root, s"batch=$batchId")
-    // explicit arrival-order row_id (SURVEY §1.1 aux columns): batchId in
-    // the high 32 bits, the intra-batch rank in the low 32.
-    // fall back to all columns when the configured order key is absent
-    // (generic batches): still a deterministic total order attempt, so a
-    // replayed batch stamps identical row_ids.
-    val (ordered, release) = stampRowIds(batch, batchId)
-    try ordered.write.mode("overwrite").parquet(staging.toString)
-    finally release()
+    stamped.write.mode("overwrite").parquet(staging.toString)
     // a lost commitMove means a previous attempt's move already landed
     // (crashed between move and marker): keep the committed copy
     if (!StateFs.commitMove(staging, target)) StateFs.delete(staging)
     StateFs.addMarker(committed, batchId)
-    if (mergeThreshold > 0) maybeCompact(batch.sparkSession)
+    if (mergeThreshold > 0)
+      compactDue(stamped.sparkSession, done + batchId, Some(stamped.schema))
     true
   }
 
-  /** Stamp `__row_id = batchId·2³² + global arrival rank` WITHOUT an
-    * unpartitioned window — a snapshot micro-batch can be GBs, and a
-    * single-task `row_number` funnel is exactly the scale-killer the
-    * repo-wide PlanShapeSpec pin forbids. The win_ntile two-level
-    * decomposition instead: range-partition on the order key (equal keys
-    * land in one partition, so partition i's rows all order before
-    * partition i+1's), per-partition `row_number` (parallel), then global
-    * rank = broadcast prefix-sum of preceding partition counts + local
-    * rank — bit-identical to a single global window's stamp. The ranked
-    * relation is persisted so the sampled range boundaries are computed
-    * once: counts and the final join must see ONE partitioning, or a
-    * replayed batch could stamp different ids. Returns the stamped frame
-    * and a release thunk the caller runs after consuming it.
-    */
-  def stampRowIds(batch: DataFrame, batchId: Long): (DataFrame, () => Unit) = {
-    // the working columns below are added with withColumn, which silently
-    // REPLACES same-named user columns — refuse loudly instead of
-    // corrupting a batch that happens to carry one of the reserved names
-    val reserved = Seq("__pid", "__lrn", "__off", "__row_id")
-    val clash = batch.columns.filter(reserved.contains)
-    require(clash.isEmpty,
-      s"batch carries reserved internal column(s) ${clash.mkString(", ")}; " +
-        "rename them before sinking")
-    val effOrder =
-      if (orderCols.forall(batch.columns.contains)) orderCols
-      else batch.columns.toSeq
-    val sortCols = effOrder.map(col)
-    val ranked = batch
-      .repartitionByRange(sortCols: _*)
-      .withColumn("__pid", spark_partition_id())
-      .withColumn("__lrn", row_number().over(
-        Window.partitionBy("__pid").orderBy(sortCols: _*)).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val counts = ranked.groupBy("__pid").agg(count(lit(1)).as("__pcnt"))
-    val offsets = counts.as("a")
-      .join(broadcast(counts.as("b")), col("b.__pid") < col("a.__pid"), "left")
-      .groupBy(col("a.__pid").as("__pid"))
-      .agg(coalesce(sum(col("b.__pcnt")), lit(0L)).as("__off"))
-    val ordered = ranked.join(broadcast(offsets), "__pid")
-      .withColumn("__row_id",
-        (lit(batchId) * lit(1L << 32) + col("__off") + col("__lrn")).cast("long"))
-      .drop("__pid", "__lrn", "__off")
-    (ordered, () => { ranked.unpersist(false); () })
-  }
+  /** [[BufferedSink.stampRowIds]] over this sink's arrival-order key. */
+  def stampRowIds(batch: DataFrame, batchId: Long): (DataFrame, () => Unit) =
+    BufferedSink.stampRowIds(batch, batchId, orderCols)
 
   /** Compact when ≥ mergeThreshold live batches exist. Also retires any
     * batch dir a previous crash left behind after its segment committed.
     */
-  def maybeCompact(spark: SparkSession): Unit = {
-    retireCoveredDirs()
-    val live = liveBatches()
-    if (live.size >= mergeThreshold && live.nonEmpty) compact(spark, live)
+  def maybeCompact(spark: SparkSession): Unit =
+    compactDue(spark, committedBatches(), None)
+
+  /** `done` is the committed set and `landed` the schema of the batch
+    * just landed, when there is one (else the compaction read infers it).
+    */
+  private def compactDue(spark: SparkSession, done: Set[Long],
+                         landed: Option[StructType]): Unit = {
+    val covered = compactedBatches()
+    val onDisk = StateFs.listNames(root).collect {
+      case n if n.startsWith("batch=") => n.stripPrefix("batch=").toLong
+    }.toSet
+    retire(covered & onDisk)
+    val live = done -- covered
+    if (live.size >= mergeThreshold && live.nonEmpty) {
+      compact(spark, live, landed)
+      retire(live & onDisk)
+    }
   }
 
   /** Merge the given committed batches into one main segment in __row_id
@@ -174,13 +162,15 @@ final class BufferedSink(tableDir: String, mergeThreshold: Int = 0,
     * BY row_id; TRUNCATE buffer`. Idempotent: a replayed segment move
     * keeps the existing committed segment.
     */
-  private def compact(spark: SparkSession, batches: Set[Long]): Unit = {
+  private def compact(spark: SparkSession, batches: Set[Long],
+                      landed: Option[StructType]): Unit = {
     val segId = batches.max
     val staging = new HPath(root, s"_staging/seg-$segId")
     val target = new HPath(mainDir, s"seg-$segId")
     if (!StateFs.exists(target)) {
       val dirs = batches.toSeq.sorted.map(b => s"$tableDir/batch=$b")
-      segmentMerge(spark.read.parquet(dirs: _*))
+      val reader = landed.fold(spark.read)(spark.read.schema)
+      segmentMerge(reader.parquet(dirs: _*))
         .sort(col("__row_id"))
         .write.mode("overwrite").parquet(staging.toString)
       // coverage metadata INSIDE the staged segment: data + the record of
@@ -190,16 +180,13 @@ final class BufferedSink(tableDir: String, mergeThreshold: Int = 0,
       // lost move = a concurrent replay committed the segment first
       if (!StateFs.commitMove(staging, target)) StateFs.delete(staging)
     }
-    retireCoveredDirs()
   }
 
-  /** Delete any live batch dir whose id a committed segment covers —
+  /** Delete the given batch dirs (all covered by a committed segment) —
     * normal post-compaction cleanup AND lazy crash repair.
     */
-  private def retireCoveredDirs(): Unit =
-    compactedBatches().foreach { b =>
-      StateFs.delete(new HPath(root, s"batch=$b"))
-    }
+  private def retire(batches: Set[Long]): Unit =
+    batches.foreach(b => StateFs.delete(new HPath(root, s"batch=$b")))
 
   /** Number of live batch dirs on disk (bounded by mergeThreshold when
     * compaction is on — the test handle for "file growth is bounded").
@@ -234,5 +221,76 @@ final class BufferedSink(tableDir: String, mergeThreshold: Int = 0,
   /** foreachBatch adapter: `stream.writeStream.foreachBatch(sink.forEachBatch _)`. */
   def forEachBatch(batch: DataFrame, batchId: Long): Unit = {
     writeBatch(batch, batchId); ()
+  }
+}
+
+object BufferedSink {
+
+  // working columns of the stamp; a batch carrying one is refused
+  private val Reserved = Seq("__pid", "__lrn", "__off", "__row_id")
+
+  /** Stamp `__row_id = batchId·2³² + global arrival rank` (1-based, in
+    * `orderCols` order) WITHOUT an unpartitioned window — a snapshot
+    * micro-batch can be GBs, and a single-task `row_number` funnel is
+    * exactly the scale-killer the repo-wide PlanShapeSpec pin forbids.
+    *
+    * Two levels instead: range-partition on the order key (equal keys
+    * land in one partition, so partition i's rows all order before
+    * partition i+1's) and sort within each partition. A row's local rank
+    * is then its position in its sorted partition, which
+    * `monotonically_increasing_id` encodes below the partition index;
+    * over an arbitrary partitioning that id is no stable order, but over
+    * a sorted range partition it is exactly the rank. The ranked relation
+    * is persisted, and one job collects its per-partition counts (one row
+    * per partition) to the driver, which turns them into prefix-sum
+    * offsets and hands them back as an array literal: global rank =
+    * offset(partition) + local rank, bit-identical to a single global
+    * window's stamp. The counts and the stamped rows read the SAME
+    * persisted partitioning, so the ids agree with each other. The stamp
+    * costs the range sample, the shuffle and the counts job: no window
+    * exchange, aggregate exchange or broadcast.
+    *
+    * When the batch lacks an order column, every column is the order key
+    * (generic batches): still a deterministic total order attempt, so a
+    * replayed batch stamps identical row_ids. Returns the stamped frame
+    * and a release thunk the caller runs after consuming it.
+    */
+  def stampRowIds(batch: DataFrame, batchId: Long,
+                  orderCols: Seq[String] = Seq("lsn")): (DataFrame, () => Unit) = {
+    // the working columns below would silently REPLACE same-named user
+    // columns — refuse loudly instead of corrupting the batch
+    val clash = batch.columns.filter(Reserved.contains)
+    require(clash.isEmpty,
+      s"batch carries reserved internal column(s) ${clash.mkString(", ")}; " +
+        "rename them before sinking")
+    val effOrder =
+      if (orderCols.forall(batch.columns.contains)) orderCols
+      else batch.columns.toSeq
+    val sortCols = effOrder.map(c => col(s"`$c`"))
+    val ranked = batch
+      .repartitionByRange(sortCols: _*)
+      .sortWithinPartitions(sortCols: _*)
+      // both evaluated in the one task that builds the partition:
+      // monotonically_increasing_id = (partition index << 33) + position
+      .select(col("*"), spark_partition_id().as("__pid"),
+        (monotonically_increasing_id() -
+          shiftleft(spark_partition_id().cast("long"), 33) + 1L).as("__lrn"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val counts = ranked.select(col("__pid")).as(Encoders.scalaInt)
+      .mapPartitions { pids =>
+        val n = scala.collection.mutable.HashMap.empty[Int, Long]
+        pids.foreach(p => n(p) = n.getOrElse(p, 0L) + 1L)
+        n.iterator
+      }(Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong))
+      .collect().groupMapReduce(_._1)(_._2)(_ + _)
+    // offsets(p) = rows in partitions before p
+    val offsets = (0 until counts.keys.maxOption.fold(0)(_ + 1))
+      .scanLeft(0L)((acc, p) => acc + counts.getOrElse(p, 0L))
+    val stamped = ranked
+      .withColumn("__off", lit(offsets.toArray).getItem(col("__pid")))
+      .withColumn("__row_id",
+        (lit(batchId) * lit(1L << 32) + col("__off") + col("__lrn")).cast("long"))
+      .drop("__pid", "__lrn", "__off")
+    (stamped, () => { ranked.unpersist(false); () })
   }
 }

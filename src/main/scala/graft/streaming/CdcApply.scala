@@ -24,37 +24,49 @@ object CdcApply {
     * AFTER the table's LAST truncate survive; the `T` rows themselves
     * carry no data and are dropped.
     *
-    * Scale shape: truncates are rare, so the per-table frontier relation
-    * aggregates to ≤ #tables rows — broadcast it back and the change
-    * stream itself never shuffles. (A window over `table` would funnel
-    * the whole stream into #tables partitions.)
+    * Scale shape: truncates are rare, so the per-table frontiers
+    * ([[truncateFrontiers]]) are ≤ #tables entries, resolved on the
+    * driver; the drop is then a literal filter per truncated table, and
+    * the change stream itself never shuffles or joins. (A window over
+    * `table` would funnel the whole stream into #tables partitions; a
+    * broadcast join of the frontier relation would cost its own jobs on
+    * every evaluation.)
     */
-  def dropTruncated(changes: DataFrame): DataFrame = {
-    val frontiers = changes
-      .filter(col("op") === ChangeRelation.OpTruncate)
-      .groupBy(col("table").as("__t"))
-      .agg(max(col("lsn")).as("__tmax"))
-    changes
-      .filter(col("op") =!= ChangeRelation.OpTruncate)
-      .join(broadcast(frontiers), col("table") === col("__t"), "left")
-      .filter(col("__tmax").isNull || col("lsn") > col("__tmax"))
-      .drop("__t", "__tmax")
-  }
+  def dropTruncated(changes: DataFrame, frontiers: Map[String, Long]): DataFrame =
+    frontiers.foldLeft(changes.filter(col("op") =!= ChangeRelation.OpTruncate)) {
+      case (live, (table, frontier)) =>
+        live.filter(!(col("table") <=> lit(table)) || col("lsn") > frontier)
+    }
+
+  /** Every table's truncate frontier (the LSN of its last `T` event),
+    * collected to the driver by one aggregate of ≤ #tables rows.
+    */
+  def truncateFrontiers(changes: DataFrame): Map[String, Long] =
+    changes.filter(col("op") === ChangeRelation.OpTruncate)
+      .groupBy(col("table")).agg(max(col("lsn")))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  // Each apply below takes the changes' truncate frontiers, or resolves
+  // them itself (one aggregate job) when the caller has none in hand.
 
   /** MergeTree append: inserts only; U/D are not supported by the plain
     * engine (the reference rejects them at config time — SURVEY §2.A6).
     * Truncate-aware: inserts before a table's last `T` event are wiped.
     */
-  def applyAppend(changes: DataFrame): DataFrame =
-    dropTruncated(changes)
+  def applyAppend(changes: DataFrame, frontiers: Map[String, Long]): DataFrame =
+    dropTruncated(changes, frontiers)
       .filter(col("op") === ChangeRelation.OpInsert).select(col("after.*"))
+
+  def applyAppend(changes: DataFrame): DataFrame =
+    applyAppend(changes, truncateFrontiers(changes))
 
   /** ReplacingMergeTree FINAL: latest version (= LSN) per key wins;
     * a DELETE tombstone removes the key entirely. Truncate-aware.
     */
-  def applyReplacing(changes: DataFrame, keyCols: Seq[String]): DataFrame = {
+  def applyReplacing(changes: DataFrame, keyCols: Seq[String],
+                     frontiers: Map[String, Long]): DataFrame = {
     val w = Window.partitionBy(keyCols.map(k => col(s"key_$k")): _*).orderBy(col("lsn").desc)
-    val keyed = dropTruncated(changes).withColumns(
+    val keyed = dropTruncated(changes, frontiers).withColumns(
       keyCols.map(k => s"key_$k" ->
         coalesce(col(s"after.$k"), col(s"before.$k"))).toMap)
     keyed
@@ -63,23 +75,33 @@ object CdcApply {
       .select(col("after.*"))
   }
 
+  def applyReplacing(changes: DataFrame, keyCols: Seq[String]): DataFrame =
+    applyReplacing(changes, keyCols, truncateFrontiers(changes))
+
   /** CollapsingMergeTree: signed row pairs; rows whose sign-sum collapses
     * to 0 vanish, survivors are the net +1 row values.
-    * Emits the signed physical stream (what the reference buffers to CH).
+    * Emits the signed physical stream (what the reference buffers to CH)
+    * in ONE pass: each change explodes into its signed rows (I → +after,
+    * U → −before +after, D → −before), where a union of per-op filters
+    * would scan the changes once per op.
     * Truncate-aware: pre-truncate history never enters the signed stream.
     */
-  def toSignedRows(changes0: DataFrame): DataFrame = {
-    val changes = dropTruncated(changes0)
-    val ins = changes.filter(col("op") === ChangeRelation.OpInsert)
-      .select(col("lsn"), col("after").as("row"), lit(1).as("sign"))
-    val updOld = changes.filter(col("op") === ChangeRelation.OpUpdate)
-      .select(col("lsn"), col("before").as("row"), lit(-1).as("sign"))
-    val updNew = changes.filter(col("op") === ChangeRelation.OpUpdate)
-      .select(col("lsn"), col("after").as("row"), lit(1).as("sign"))
-    val del = changes.filter(col("op") === ChangeRelation.OpDelete)
-      .select(col("lsn"), col("before").as("row"), lit(-1).as("sign"))
-    ins.unionByName(updOld).unionByName(updNew).unionByName(del)
+  def toSignedRows(changes: DataFrame, frontiers: Map[String, Long]): DataFrame = {
+    def signed(side: String, sign: Int): Column =
+      struct(col(side).as("row"), lit(sign).as("sign"))
+    val op = col("op")
+    dropTruncated(changes, frontiers)
+      .select(col("lsn"), explode(
+        when(op === ChangeRelation.OpInsert, array(signed("after", 1)))
+          .when(op === ChangeRelation.OpUpdate,
+            array(signed("before", -1), signed("after", 1)))
+          .when(op === ChangeRelation.OpDelete, array(signed("before", -1))))
+        .as("s"))
+      .select(col("lsn"), col("s.row").as("row"), col("s.sign").as("sign"))
   }
+
+  def toSignedRows(changes: DataFrame): DataFrame =
+    toSignedRows(changes, truncateFrontiers(changes))
 
   /** Read-side collapse of the signed stream: groupBy full row value,
     * keep sum(sign) != 0 — ClickHouse's merge-time collapse as one agg.

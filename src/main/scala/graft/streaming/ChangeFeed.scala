@@ -95,53 +95,55 @@ object ChangeFeed {
   def parseBase64Frames(raw: DataFrame): Dataset[PgOutput.Frame] =
     parseFrames(raw.select(unbase64(col("value")).as("value")))
 
-  /** The feed's `R` frames as a relation-definition relation
-    * `(relId, rlsn, relName, cols)` — pg2ch's live relation map in
-    * DataFrame form. Tiny by construction (one row per schema change),
-    * so callers broadcast it; [[StreamRunner]] also persists it across
-    * micro-batches (the R frame arrives ONCE at subscription start, not
-    * once per batch).
+  /** One relation definition: an entry of pg2ch's live relation map,
+    * governing the relation's tuples from `rlsn` on.
     */
-  def relationDefs(frames: Dataset[PgOutput.Frame]): DataFrame = {
+  final case class RelationDef(relId: Int, rlsn: Long, relName: String,
+                               cols: Seq[String])
+
+  /** The feed's `R` frames as relation definitions. Tiny by construction
+    * (one row per schema change), so callers collect them to the driver.
+    */
+  def relationDefs(frames: Dataset[PgOutput.Frame]): Dataset[RelationDef] = {
     val spark = frames.sparkSession
     import spark.implicits._
     frames.filter(f => f.tag == "R")
-      .map(f => (f.relId, f.lsn.getOrElse(0L), f.relName, f.colNames))
-      .toDF("relId", "rlsn", "relName", "cols")
+      .map(f => RelationDef(f.relId, f.lsn.getOrElse(0L), f.relName, f.colNames))
   }
 
-  /** A static relation registry as definitions at `rlsn = -1` — in effect
+  /** A static relation registry as definitions at `rlsn = -1`: in effect
     * from before the first frame, superseded by any feed `R` frame.
     */
-  def staticDefs(spark: org.apache.spark.sql.SparkSession,
-                 defs: Seq[(Int, String, Seq[String])]): DataFrame = {
-    import spark.implicits._
-    defs.map { case (id, n, cols) => (id, -1L, n, cols) }
-      .toDF("relId", "rlsn", "relName", "cols")
+  def staticDefs(defs: Seq[(Int, String, Seq[String])]): Seq[RelationDef] =
+    defs.map { case (id, n, cols) => RelationDef(id, -1L, n, cols) }
+
+  // rlsn first, as the as-of pick below requires; the rest only makes
+  // exact-rlsn ties deterministic
+  private val defOrder: Ordering[RelationDef] = {
+    import scala.math.Ordering.Implicits.seqOrdering
+    Ordering.by((d: RelationDef) => (d.rlsn, d.relName, d.cols))
   }
 
-  /** Decoded frames → the UNTYPED change relation. `extraDefs` (static
-    * registry and/or cached definitions from earlier batches) unions with
-    * the feed's own `R` frames; each tuple resolves its table name and
-    * column list from the latest definition at-or-below its LSN — an
-    * as-of lookup done as ONE broadcast join (the definition relation
-    * aggregates to ≤ #tables × #schema-changes rows; the change stream
-    * itself never shuffles).
+  /** Decoded frames → the UNTYPED change relation. `defs` is the complete
+    * definition set (feed `R` frames, cached definitions from earlier
+    * batches, the static registry). Each tuple resolves its table name and
+    * column list from the latest definition at-or-below its LSN.
+    *
+    * The definitions are a driver-side set of at most #tables ×
+    * #schema-changes entries, so the as-of lookup is a map LITERAL in the
+    * projection: no join, no broadcast job, and the change stream itself
+    * never shuffles.
     */
   def rawFromFrames(frames: Dataset[PgOutput.Frame],
-                    extraDefs: DataFrame = null,
+                    defs: Seq[RelationDef],
                     dropMalformed: Boolean = true): DataFrame = {
     val spark = frames.sparkSession
     import spark.implicits._
 
-    val feedDefs = relationDefs(frames)
-    val defs = if (extraDefs == null) feedDefs else feedDefs.unionByName(extraDefs)
     // every definition per relid, rlsn-ascending: the as-of pick below is
-    // "last element ≤ lsn". sort_array on structs orders by rlsn first.
-    val defsAgg = defs
-      .groupBy("relId")
-      .agg(sort_array(collect_list(
-        struct(col("rlsn"), col("relName"), col("cols")))).as("defs"))
+    // "last element ≤ lsn"
+    val byRel: Map[Int, Seq[RelationDef]] =
+      defs.distinct.groupBy(_.relId).map { case (id, ds) => id -> ds.sorted(defOrder) }
 
     // tuple/truncate frames → raw change rows (B/C framing and R frames
     // carry no row data). Malformed frames surface with null op/lsn.
@@ -159,13 +161,13 @@ object ChangeFeed {
       }
     }.toDF("lsn", "op", "relId", "bcells", "acells")
 
-    val joined = rows
-      .join(broadcast(defsAgg), Seq("relId"), "left")
+    val resolved = rows
       // as-of: last definition with rlsn ≤ this tuple's lsn. try_element_at:
-      // an empty filter result (tuple before any definition) → null, not an
-      // ANSI INVALID_ARRAY_INDEX kill.
+      // an unknown relid or an empty filter result (tuple before any
+      // definition) → null, not an ANSI key/index error.
       .withColumn("eff", try_element_at(
-        filter(col("defs"), d => d("rlsn") <= col("lsn")), lit(-1)))
+        filter(try_element_at(typedLit(byRel), col("relId")),
+          d => d("rlsn") <= col("lsn")), lit(-1)))
       .withColumn("cols", col("eff.cols"))
       .withColumn("table", col("eff.relName"))
 
@@ -178,7 +180,7 @@ object ChangeFeed {
       (col("bcells").isNull || size(col("bcells")) === size(col("cols"))) &&
       (col("acells").isNull || size(col("acells")) === size(col("cols")))
     val needsCells = col("op").isin("I", "U", "D")
-    val marked = joined.withColumn("op",
+    val marked = resolved.withColumn("op",
       when(!needsCells || cellsOk, col("op")))
 
     // name-keyed cell maps; guarded by cellsOk so map_from_arrays can
@@ -206,11 +208,11 @@ object ChangeFeed {
                        dropMalformed: Boolean = true,
                        relations: Map[Int, String] = Map.empty): DataFrame = {
     val frames = parseFrames(raw)
-    val static =
-      if (relations.isEmpty) null
-      else staticDefs(raw.sparkSession,
-        relations.toSeq.map { case (id, n) => (id, n, rowSchema.fieldNames.toSeq) })
-    typed(rawFromFrames(frames, static, dropMalformed), rowSchema)
+    val static = staticDefs(relations.toSeq.map { case (id, n) =>
+      (id, n, rowSchema.fieldNames.toSeq) })
+    // one job collects the feed's own definitions for the as-of literal
+    val defs = relationDefs(frames).collect().toSeq ++ static
+    typed(rawFromFrames(frames, defs, dropMalformed), rowSchema)
   }
 
   /** [[fromBinaryFrames]] over a base64 text feed. */
@@ -229,7 +231,9 @@ object ChangeFeed {
     * column → feed column [recall:med]): each target field reads the
     * feed cell named `columnsMap(field)` (default: its own name). Feed
     * columns not in `rowSchema` are dropped — the config-driven column
-    * subset (SURVEY §2.A4's config half).
+    * subset (SURVEY §2.A4's config half). Every other column passes
+    * through unchanged, so a `__row_id` stamped on the raw relation rides
+    * along into each table's slice.
     */
   def typed(rawDf: DataFrame, rowSchema: StructType,
             columnsMap: Map[String, String] = Map.empty): DataFrame = {
@@ -238,7 +242,9 @@ object ChangeFeed {
         val src = columnsMap.getOrElse(f.name, f.name)
         try_element_at(col(m), lit(src)).try_cast(f.dataType).as(f.name)
       }: _*))
-    rawDf.select(col("lsn"), col("op"), col("table"),
-      side("before").as("before"), side("after").as("after"))
+    rawDf.select(rawDf.columns.toSeq.map {
+      case c @ ("before" | "after") => side(c).as(c)
+      case c => col(s"`$c`")
+    }: _*)
   }
 }

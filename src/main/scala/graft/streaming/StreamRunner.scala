@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -20,12 +20,12 @@ import org.apache.spark.sql.types.StructType
   * Spark mapping — SINGLE-DECODE ROUTED TOPOLOGY: one streaming query
   * reads the shared WAL feed; inside `foreachBatch` the micro-batch is
   * decoded ONCE into the untyped change relation ([[ChangeFeed]] raw
-  * layer, persisted in memory), then routed to every configured table as
-  * a cheap typed projection + [[BufferedSink]] two-phase batchId-
+  * layer), stamped with `__row_id` once, and routed to every configured
+  * table as a cheap typed projection + [[BufferedSink]] two-phase batchId-
   * idempotent landing. N configured tables cost ONE feed read + decode
   * per micro-batch, not N — at a 100-table feed the per-table-query
   * alternative re-reads and re-decodes the same WAL 100×, which is the
-  * first thing a real deployment hits (VERDICT r03 item 1).
+  * first thing a real deployment hits.
   *
   * Crash semantics are unchanged from the per-table shape: each
   * (table, batchId) landing is independently idempotent, so a crash
@@ -140,6 +140,10 @@ object StreamRunner {
     val sinks = cfg.tables.map(tc => tc.name -> sinkFor(cfg, tc.name)).toMap
     val chSink = cfg.clickhouseUrl.map(url =>
       new graft.sinks.HttpCHSink(url, s"${cfg.outputDir}/_ch_state"))
+    val relations =
+      if (cfg.feedFormat == "pgoutput")
+        Some(new RelationCache(spark, new HPath(cfg.outputDir, "_relations")))
+      else None
     val reader = spark.readStream
     cfg.tables.map(_.bufferSize).filter(_ > 0).reduceOption(_ min _)
       .foreach(n => reader.option("maxFilesPerTrigger", n))
@@ -148,112 +152,148 @@ object StreamRunner {
       .queryName("graft_replicate")
       .option("checkpointLocation", s"${cfg.checkpointDir}/_routed")
       .foreachBatch { (rawBatch: DataFrame, batchId: Long) =>
-        routeBatch(spark, cfg, sinks, chSink, rawBatch, batchId)
+        routeBatch(cfg, sinks, chSink, relations, rawBatch, batchId)
       }
     cfg.inactivityFlushMs.foreach(ms => writer.trigger(Trigger.ProcessingTime(ms)))
     Seq(writer.start())
   }
 
-  /** One micro-batch: decode once, route to every table's sink.
+  /** One micro-batch: decode once, stamp once, route to every table's sink.
     *
-    * The decoded relation is persisted for the duration of the route, so
-    * table 2..N replay an in-memory projection, never the parse. For
-    * binary feeds the feed's `R` frames are also landed in a relation
-    * cache (`_relations/` parquet — pg2ch's live relation map, which must
-    * survive across micro-batches because a subscription sends each
-    * table's R frame ONCE, not once per batch). The cache is a versioned
-    * full snapshot per R-bearing batch (see [[writeRelationCache]]) and
-    * replay-safe twice over: the version move is idempotent, and
-    * definitions are LSN-versioned so re-merging the same defs changes
-    * nothing at resolution time.
+    * Each micro-batch pays a fixed cost per Spark job, and that cost, not
+    * the row count, dominated small batches. So a batch runs a fixed,
+    * small set of jobs:
+    *  - binary feeds: one job parses the frames into a persisted copy and
+    *    collects the batch's `R` definitions to the driver, plus one
+    *    relation-cache write when the batch carries `R` frames;
+    *  - the stamp ([[BufferedSink.stampRowIds]]) over the decoded rows of
+    *    every configured table: the range sample, the shuffle, and the
+    *    per-partition counts job. Its persisted result is the batch's only
+    *    cached copy from then on;
+    *  - with a ClickHouse mirror, one aggregate for every table's truncate
+    *    frontier (table → LSN of its last `T`);
+    *  - per table, exactly two: the landing write ([[BufferedSink.
+    *    writeStamped]] over the table's slice, with no re-stamp) and the
+    *    ClickHouse POST, whose encode drops pre-truncate rows with a
+    *    literal LSN filter;
+    *  - compaction, when a table reaches its threshold.
+    * A replayed batch that every layer already holds runs none of them.
+    * The relation definitions never touch Spark on the way in: the merged
+    * set lives in a driver-side [[RelationCache]] and reaches the decode
+    * as a literal.
     */
-  private def routeBatch(spark: SparkSession, cfg: RunnerConfig,
+  private def routeBatch(cfg: RunnerConfig,
                          sinks: Map[String, BufferedSink],
                          chSink: Option[graft.sinks.HttpCHSink],
+                         relations: Option[RelationCache],
                          rawBatch: DataFrame, batchId: Long): Unit = {
-    val cleanup = scala.collection.mutable.ListBuffer.empty[() => Unit]
-    try {
-      val decoded = (cfg.feedFormat match {
+    // a replay of a batch that every table's landing and mirror already
+    // hold: both layers would be no-ops, so skip the decode and stamp too.
+    // (The relation cache needs nothing either: the first run wrote this
+    // batch's version before it landed anything.)
+    val replayed = cfg.tables.forall { tc =>
+      sinks(tc.name).committedBatches().contains(batchId) &&
+        chSink.forall(_.committedBatches(tc.name).contains(batchId))
+    }
+    if (replayed) return
+    // binary feeds parse into a persisted frame copy that lives until the
+    // stamp has materialized its own
+    var frames: Option[Dataset[PgOutput.Frame]] = None
+    val (stamped, release) = try {
+      val decoded = cfg.feedFormat match {
         case "json" => ChangeFeed.fromJsonLinesRaw(rawBatch)
         case "pgoutput" =>
-          val frames = ChangeFeed.parseBase64Frames(rawBatch)
+          val parsed = ChangeFeed.parseBase64Frames(rawBatch)
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          cleanup += (() => { frames.unpersist(); () })
-          val cacheDir = new HPath(cfg.outputDir, "_relations")
-          val cachedBefore = readRelationCache(spark, cacheDir)
-          val feedDefs = ChangeFeed.relationDefs(frames)
-          if (!feedDefs.isEmpty)
-            writeRelationCache(spark, cacheDir, batchId,
-              cachedBefore.fold(feedDefs)(_.unionByName(feedDefs)))
-          val cached = readRelationCache(spark, cacheDir)
-          val static = ChangeFeed.staticDefs(spark,
-            cfg.tables.filter(_.relId >= 0)
-              .map(tc => (tc.relId, tc.name, tc.feedColumns)))
-          val extra = cached.fold(static)(_.unionByName(static))
-          ChangeFeed.rawFromFrames(frames, extra)
+          frames = Some(parsed)
+          val defs = relations.get.merge(batchId,
+            ChangeFeed.relationDefs(parsed).collect().toSeq)
+          val static = ChangeFeed.staticDefs(cfg.tables.filter(_.relId >= 0)
+            .map(tc => (tc.relId, tc.name, tc.feedColumns)))
+          ChangeFeed.rawFromFrames(parsed, defs ++ static)
         case other =>
           throw new IllegalArgumentException(s"unknown feed_format: $other")
-      }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      cleanup += (() => { decoded.unpersist(); () })
-
-      // ONE aggregate over the persisted decoded batch yields every
-      // table's truncate flag — the per-table `isEmpty` probe was N extra
-      // jobs per micro-batch in the routed topology. The set is at most
-      // |tables| strings, so the collect is driver-trivial.
-      val truncatedTables: Set[String] =
-        if (chSink.isEmpty) Set.empty
-        else decoded.filter(col("op") === ChangeRelation.OpTruncate)
-          .select(col("table")).distinct()
-          .collect().map(_.getString(0)).toSet
+      }
+      // lsn-major, table-minor: a T frame naming several relations yields
+      // equal-LSN rows, and a replayed batch must stamp them identically
+      BufferedSink.stampRowIds(
+        decoded.filter(col("table").isin(cfg.tables.map(_.name): _*)),
+        batchId, Seq("lsn", "table"))
+    } finally frames.foreach(_.unpersist())
+    try {
+      // only the mirror needs the truncate frontiers
+      val frontiers =
+        if (chSink.isEmpty) Map.empty[String, Long]
+        else CdcApply.truncateFrontiers(stamped)
 
       cfg.tables.foreach { tc =>
-        val typedBatch = ChangeFeed.typed(
-          decoded.filter(col("table") === tc.name), tc.rowSchema, tc.columnsMap)
-        sinks(tc.name).writeBatch(typedBatch, batchId)
+        val slice = ChangeFeed.typed(
+          stamped.filter(col("table") === tc.name), tc.rowSchema, tc.columnsMap)
+        sinks(tc.name).writeStamped(slice, batchId)
         // ship AFTER the landing commits: both layers are idempotent on
         // batchId, so a crash between them replays into two no-ops
         chSink.foreach { ch =>
-          ch.insert(encodeForCH(tc, typedBatch), tc.name, batchId,
-            truncateFirst = truncatedTables.contains(tc.name))
+          ch.insert(encodeForCH(tc, slice, frontiers), tc.name,
+            batchId, truncateFirst = frontiers.contains(tc.name))
         }
       }
-    } finally cleanup.foreach(_.apply())
+    } finally release()
   }
 
-  /** The R-definition cache is VERSIONED full snapshots, not an append
-    * log: each R-bearing batch writes the complete definition set to
-    * `_relations/v=<batchId>` (staged + atomic move — replay keeps the
-    * committed version) and retires older versions, so reads open ONE
-    * tiny parquet dir regardless of how many schema changes the feed has
-    * ever carried. An append-per-batch layout would re-open an
-    * ever-growing file list on every micro-batch — the same small-file
-    * failure BufferedSink's compaction exists to prevent.
+  /** The merged `R` definitions — pg2ch's live relation map, which must
+    * survive across micro-batches and restarts because a subscription
+    * sends each table's R frame ONCE, not once per batch.
+    *
+    * The working copy is a driver-side set, loaded once (with an explicit
+    * schema, so no inference job) when the query starts. The durable copy
+    * is VERSIONED full snapshots, not an append log: each R-bearing batch
+    * writes the complete set to `_relations/v=<batchId>` (staged + atomic
+    * move — replay keeps the committed version) and retires older
+    * versions, so a restart opens ONE tiny parquet dir regardless of how
+    * many schema changes the feed has ever carried. Batches without R
+    * frames touch neither. Replay is safe twice over: the version move is
+    * idempotent, and definitions are LSN-versioned, so re-merging the
+    * same definitions changes nothing at resolution time.
     */
-  private def readRelationCache(spark: SparkSession,
-                                cacheDir: HPath): Option[DataFrame] =
-    latestCacheVersion(cacheDir).map(v =>
-      spark.read.parquet(new HPath(cacheDir, s"v=$v").toString))
+  private final class RelationCache(spark: SparkSession, dir: HPath) {
+    import spark.implicits._
 
-  private def latestCacheVersion(cacheDir: HPath): Option[Long] =
-    StateFs.listNames(cacheDir)
-      .collect { case s if s.startsWith("v=") => s.stripPrefix("v=").toLong }
-      .maxOption
+    private var defs: Seq[ChangeFeed.RelationDef] =
+      latestVersion().fold(Seq.empty[ChangeFeed.RelationDef])(v =>
+        spark.read.schema(Encoders.product[ChangeFeed.RelationDef].schema)
+          .parquet(new HPath(dir, s"v=$v").toString)
+          .as[ChangeFeed.RelationDef].collect().toSeq)
 
-  private def writeRelationCache(spark: SparkSession, cacheDir: HPath,
-                                 batchId: Long, defs: DataFrame): Unit = {
-    val target = new HPath(cacheDir, s"v=$batchId")
-    if (!StateFs.exists(target)) {
-      val staging = new HPath(cacheDir, s"_staging_v$batchId")
-      defs.distinct().coalesce(1).write.mode("overwrite").parquet(staging.toString)
-      // lost move = a concurrent replay committed this version first
-      if (!StateFs.commitMove(staging, target)) StateFs.delete(staging)
+    /** Fold a batch's feed definitions in; the complete merged set. */
+    def merge(batchId: Long,
+              feed: Seq[ChangeFeed.RelationDef]): Seq[ChangeFeed.RelationDef] = {
+      if (feed.nonEmpty) {
+        defs = (defs ++ feed).distinct
+        write(batchId)
+      }
+      defs
     }
-    // retire superseded versions (lazy: a crash here just leaves one
-    // extra dir for the next write to retire)
-    latestCacheVersion(cacheDir).foreach { latest =>
-      StateFs.listNames(cacheDir)
-        .filter(n => n.startsWith("v=") && n.stripPrefix("v=").toLong < latest)
-        .foreach(n => StateFs.delete(new HPath(cacheDir, n)))
+
+    private def latestVersion(): Option[Long] =
+      StateFs.listNames(dir)
+        .collect { case s if s.startsWith("v=") => s.stripPrefix("v=").toLong }
+        .maxOption
+
+    private def write(batchId: Long): Unit = {
+      val target = new HPath(dir, s"v=$batchId")
+      if (!StateFs.exists(target)) {
+        val staging = new HPath(dir, s"_staging_v$batchId")
+        defs.toDS().coalesce(1).write.mode("overwrite").parquet(staging.toString)
+        // lost move = a concurrent replay committed this version first
+        if (!StateFs.commitMove(staging, target)) StateFs.delete(staging)
+      }
+      // retire superseded versions (lazy: a crash here just leaves one
+      // extra dir for the next write to retire)
+      latestVersion().foreach { latest =>
+        StateFs.listNames(dir)
+          .filter(n => n.startsWith("v=") && n.stripPrefix("v=").toLong < latest)
+          .foreach(n => StateFs.delete(new HPath(dir, n)))
+      }
     }
   }
 
@@ -264,15 +304,17 @@ object StreamRunner {
     * Collapsing ships the signed ±1 row pairs; plain MergeTree appends
     * inserts only. Truncate markers never ship as rows — the sink issues
     * `TRUNCATE TABLE` on the CH side instead (see [[routeBatch]]) — and
-    * every branch drops same-batch pre-truncate changes
-    * ([[CdcApply.dropTruncated]]), so the mirror never retains rows the
-    * landed log has frontier-dropped.
+    * every branch drops the changes at or below the table's same-batch
+    * truncate frontier (`frontiers`, resolved once per batch on the
+    * driver — [[CdcApply.dropTruncated]]), so the mirror never retains
+    * rows the landed log has frontier-dropped.
     */
-  def encodeForCH(tc: TableConfig, changes: DataFrame): DataFrame = {
+  def encodeForCH(tc: TableConfig, changes: DataFrame,
+                  frontiers: Map[String, Long]): DataFrame = {
     val rowCols = tc.rowSchema.fieldNames.toSeq
     tc.engine match {
       case "ReplacingMergeTree" =>
-        val live = CdcApply.dropTruncated(changes)
+        val live = CdcApply.dropTruncated(changes, frontiers)
         val upserts = live
           .filter(col("op") =!= ChangeRelation.OpDelete)
           .select(rowCols.map(c => col(s"after.$c")) ++
@@ -283,10 +325,10 @@ object StreamRunner {
             Seq(col("lsn").as("ver"), lit(1).as("deleted")): _*)
         upserts.unionByName(tombstones)
       case "CollapsingMergeTree" =>
-        CdcApply.toSignedRows(changes)
+        CdcApply.toSignedRows(changes, frontiers)
           .select(rowCols.map(c => col(s"row.$c")) :+ col("sign"): _*)
       case "MergeTree" =>
-        CdcApply.applyAppend(changes)
+        CdcApply.applyAppend(changes, frontiers)
       case other => throw new IllegalArgumentException(s"unknown engine: $other")
     }
   }
@@ -301,8 +343,10 @@ object StreamRunner {
       .drop("__row_id")
 
   /** Read-side FINAL — the reference's target-table semantics applied
-    * over the landed log (truncate-aware via CdcApply.dropTruncated,
-    * which every apply composes).
+    * over the landed log, truncate-aware. The apply resolves the table's
+    * truncate frontier on the driver when called (one aggregate over the
+    * log's `op`, `table` and `lsn` columns), so the FINAL itself filters
+    * by a literal LSN instead of joining a frontier back into the log.
     */
   def readFinal(spark: SparkSession, cfg: RunnerConfig, table: String): DataFrame = {
     val tc = cfg.tables.find(_.name == table)

@@ -60,8 +60,10 @@ object StreamTwins {
     * Input: a [[ChangeRelation]]-shaped stream over the fixture row
     * (`k`,`v`); state scales as O(live keys), partitioned by key hash —
     * the Spark-native form of pg2ch's per-table in-memory buffer merge.
-    * Cross-key ops (truncate) stay on the foreachBatch path
-    * ([[CdcApply.dropTruncated]]); per-key state cannot see them.
+    * Cross-key ops (truncate) stay on the foreachBatch path, where the
+    * routed batch resolves every table's truncate frontier once and
+    * drops pre-truncate rows by literal LSN ([[CdcApply.dropTruncated]]);
+    * per-key state cannot see them.
     */
   def replacingLatestStream(changes: DataFrame): DataFrame = {
     val spark = changes.sparkSession

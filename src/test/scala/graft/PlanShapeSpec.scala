@@ -696,18 +696,46 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("graph_community_lpa: labels ride co-partitioned equi-joins, never broadcast") {
-    val plan = executedPlan("graph_community_lpa")
-    assert(countOf(plan, "CartesianProduct") === 0
-      && countOf(plan, "BroadcastNestedLoopJoin") === 0,
-      s"vote joins must stay equi-joins:\n$plan")
-    // NOTE: at sf0.001 Catalyst may legitimately broadcast the tiny label
-    // relation (size-based choice, flips to shuffle join from stats at
-    // scale) — the pin is on JOIN KIND (equi), not on the exchange side.
-    // each round's label relation is persisted (two consumers: neighbor
-    // join + self-vote) — the cache scan must appear, or every round
-    // recomputes its predecessor twice
-    assert(plan.contains("InMemoryTableScan"),
-      s"per-round label persist lost:\n$plan")
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val df = Registry.all.toMap.apply("graph_community_lpa").fn(spark, sf001)
+    df.write.format("noop").mode("overwrite").save()
+    try {
+      val plan = df.queryExecution.executedPlan.toString
+      assert(countOf(plan, "CartesianProduct") === 0
+        && countOf(plan, "BroadcastNestedLoopJoin") === 0,
+        s"vote joins must stay equi-joins:\n$plan")
+      // NOTE: at sf0.001 Catalyst may legitimately broadcast the tiny label
+      // relation (size-based choice, flips to shuffle join from stats at
+      // scale) — the pin is on JOIN KIND (equi), not on the exchange side.
+
+      // each round's label relation has two consumers (the neighbor join
+      // and the self-vote). It must be materialized once and read by both,
+      // whether as a persist (InMemoryTableScan) or a checkpoint (Scan
+      // ExistingRDD); otherwise every round recomputes its predecessor
+      // once per consumer.
+      assert(plan.contains("InMemoryTableScan") || plan.contains("Scan ExistingRDD"),
+        s"per-round label materialization lost:\n$plan")
+      val logical = df.queryExecution.optimizedPlan
+      val labelReads = logical.collect {
+        case r: LogicalRDD if r.output.exists(_.name == "label") => s"rdd:${r.rdd.id}"
+        case m: InMemoryRelation if m.output.exists(_.name == "label") =>
+          s"cache:${System.identityHashCode(m.cacheBuilder)}"
+      }
+      assert(labelReads.size >= 2 && labelReads.distinct.size === 1,
+        s"the last round's label relation must be one materialization read " +
+          s"by both consumers, got $labelReads:\n$logical")
+      // a materialized relation hides its build, so the only label-build
+      // subtree left in the plan is the final round's (its rank window);
+      // a recomputed round would repeat its build once per consumer
+      val windows = logical.collect { case w: LWindow => w }.size
+      assert(windows === 1,
+        s"label build appears $windows times, not once:\n$logical")
+    } finally {
+      graft.core.releaseQueryCaches(spark)
+      spark.catalog.clearCache()
+    }
   }
 
   test("scan_zorder_layout: per-row interleave + one bounded aggregate") {
