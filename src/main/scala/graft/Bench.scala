@@ -34,8 +34,8 @@ object Bench {
     * regression that breaks a heavy query must FAIL the bench, not improve
     * its total (a swallowed throw scores ~0 s).
     *
-    * Contention hardening (VERDICT r07 #1 — the r7 driver sweep recorded
-    * 466 s for a query that runs in 8 s isolated):
+    * Contention hardening (a contended sweep once recorded 466 s for a
+    * query that runs in 8 s isolated):
     *  - Pass 0 runs every query once UNMEASURED: it absorbs the one-time
     *    costs (JIT of each query's generated code, OS page cache of its
     *    parquet footprint, shared-pipeline materialization) that would
@@ -45,7 +45,7 @@ object Bench {
     *  - Each query is then measured twice, the second pass INTERLEAVED
     *    (all queries once, then all again) instead of back-to-back, so a
     *    sustained multi-minute load spike cannot cover both runs of the
-    *    same query (r6's back-to-back min-of-2 failed exactly that way).
+    *    same query (a back-to-back min-of-2 fails exactly that way).
     *    With warmup hoisted into pass 0, a >1.5x pair disagreement now
     *    MEANS host contention, not cold start.
     *  - A fixed canary probe is re-timed every `canaryEvery` queries and
@@ -82,10 +82,10 @@ object Bench {
       (sec, err)
     }
     // Per-key progress to STDERR (stdout stays the driver's one compact
-    // JSON line): when a sweep dies mid-flight — the r17 100× board lost
+    // JSON line): when a sweep dies mid-flight — a 100× board once lost
     // its JVM to an uncaught executor OutOfMemoryError 62 minutes in —
     // the log must attribute the death to a KEY, not a stage id.
-    // err is collapsed to ONE line before truncation (ADVICE r17): a
+    // err is collapsed to ONE line before truncation: a
     // multi-line exception message would break the one-line-per-key log
     // this channel exists to provide.
     def progress(pass: String, name: String, sec: Double, err: Option[String]): Unit =
@@ -122,8 +122,7 @@ object Bench {
           val runs =
             if (two.max > 1.5 * two.min) {
               // the interleaved pair disagrees past the contention
-              // threshold (VERDICT r12 #7 asked for 1.5x, matching the
-              // pair_agree metric, instead of the old 3x): neither
+              // threshold (1.5x, the pair_agree metric's): neither
               // measurement can be trusted to bracket the true cost —
               // tiebreak with a third (its error, if any, is ignored:
               // the query already succeeded twice).
@@ -154,10 +153,9 @@ object Bench {
   /** The FULL sweep record: per-query scored (min-of-N) seconds, the raw
     * run lists (2, or 3 after a >1.5x disagreement), and the canary series
     * (chronological) with its cadence in `canary_every`. At 127 queries
-    * this is ~8 KB — far past the driver's 2000-char stdout tail window
-    * (every BENCH_r*.json through r8 shows `parsed: null` with the line's
-    * HEAD truncated), so this form goes to a FILE and the stdout line is
-    * [[renderCompact]].
+    * this is ~8 KB — far past a 2000-char stdout tail window, which
+    * would truncate the line's HEAD — so this form goes to a FILE and
+    * the stdout line is [[renderCompact]].
     */
   def renderJson(sweep: Sweep, sfDir: String): String = {
     val results = sweep.results
@@ -200,7 +198,7 @@ object Bench {
     * those). `value` is the total over ALL queries; `queries` carries the
     * fixed [[headline]] subset; `slowest` the top-5 by scored time;
     * `pair_agree_pct` the share of keys whose two interleaved runs agree
-    * within 1.5x (the contention health metric from VERDICT r07 #1);
+    * within 1.5x (the contention health metric);
     * `canary_med`/`canary_max` summarize the probe series; `detail` is
     * the file carrying the full [[renderJson]] record.
     */
@@ -224,11 +222,10 @@ object Bench {
       else 100.0 * pairs.count { r =>
         val two = r.runs.take(2); two.max <= 1.5 * math.max(two.min, 1e-9)
       } / pairs.size
-    // Self-labeling evidence (VERDICT r12 #7 / r13 #5): every key whose
-    // interleaved pair disagreed >1.5x carries its FULL run list in the
-    // compact line (worst 5 by ratio, count of the rest), so a contended
-    // driver run shows per-key third-run evidence instead of a bare
-    // percentage — the r12 162 s artifact would have labeled itself.
+    // Self-labeling evidence: every key whose interleaved pair disagreed
+    // >1.5x carries its FULL run list in the compact line (worst 5 by
+    // ratio, count of the rest), so a contended run shows per-key
+    // third-run evidence instead of a bare percentage.
     val disagree = pairs
       .filter { r => val two = r.runs.take(2); two.max > 1.5 * math.max(two.min, 1e-9) }
       .sortBy { r => val two = r.runs.take(2); -(two.max / math.max(two.min, 1e-9)) }
@@ -255,17 +252,13 @@ object Bench {
   }
 
   /** Data-derived shuffle-partition default (the SCALE.md sizing rule),
-    * every constant in it measured. The 100× calibration, twice: the
-    * r14 sweep showed 60M-row iterative-join sorts at the 32-core floor
-    * exhausting an 8 GB heap on the ≈1.9 GB 100× twin while 256 ran
-    * clean — and an r15 re-run at exactly 256 still tipped over once
-    * mid-sweep (UNABLE_TO_ACQUIRE_MEMORY in pagerank's sort), so 256 is
-    * the cliff edge, not a safe point. Round 17 re-measured the cliff
-    * at the 203-key surface and it had MOVED ONTO 512: cold pagerank at
-    * the 1.96 GB twin OOM'd reproducibly at 512 partitions
-    * (UNABLE_TO_ACQUIRE_MEMORY in the iteration join's sort) while 1024
-    * ran clean AND faster (128.9 s vs the r16 512-point's 162.0 s —
-    * smaller sorts spill less). The 10× calibration: a blind 4 MiB rule
+    * every constant in it measured. The 100× calibration: 60M-row
+    * iterative-join sorts at the 32-core floor exhaust an 8 GB heap on
+    * the ≈1.9 GB 100× twin; 256 partitions still tipped over once
+    * mid-sweep (UNABLE_TO_ACQUIRE_MEMORY in pagerank's sort); at the
+    * 203-key surface cold pagerank on the 1.96 GB twin OOM'd
+    * reproducibly at 512, while 1024 ran clean AND faster (128.9 s vs
+    * 162.0 s — smaller sorts spill less). The 10× calibration: a blind 4 MiB rule
     * split the 187 MB twin 64 ways and cost 21% task-overhead wall
     * (219.9 s vs 181.8 s at the core floor), so the floor holds until
     * even a COARSE 16 MiB split would exceed the core count. Rounded UP
@@ -273,22 +266,19 @@ object Bench {
     * At cluster scale the same rule is the volume-proportional INITIAL
     * partition count handed to AQE, not a fixed core-count constant.
     *
-    * Round 18 (VERDICT r17 #2): memory-per-core enters the rule — via
-    * the EFFECTIVE heap, and with a wave-depth floor, because round
-    * 18's 300× audit falsified the first (asymmetric) design. That
-    * design kept a flat 2 MiB anchor ("a too-fine initial count
-    * coalesces for free under AQE") — but AQE coalescing cannot reach
-    * CACHED plans (canChangeCachedPlanOutputPartitioning=false pins
-    * them by design, VERDICT r14 #5), and iterative keys live on
-    * cached relations, so the 4096 initial count still taxed every
-    * LPA/pagerank iteration: measured at 300×/16 GiB with the AQE
-    * wiring ON, graph_community_lpa = 218.0 s at 1024 initial, 444.0 s
-    * at 2048, >1140 s (killed) at the old rule's 4096 — super-linear
-    * in the initial count alone (SCALE.md round-18). Two derivations,
-    * both from measurements:
+    * Memory per core enters the rule via the EFFECTIVE heap, with a
+    * wave-depth floor. A flat 2 MiB anchor ("a too-fine initial count
+    * coalesces for free under AQE") does not hold: AQE coalescing
+    * cannot reach CACHED plans (canChangeCachedPlanOutputPartitioning=
+    * false pins them by design), and iterative keys live on cached
+    * relations, so a 4096 initial count taxes every LPA/pagerank
+    * iteration: at 300×/16 GiB with the AQE wiring ON,
+    * graph_community_lpa ran 218.0 s at 1024 initial, 444.0 s at 2048,
+    * >1140 s (killed) at 4096 — super-linear in the initial count alone
+    * (SCALE.md). Two derivations, both from measurements:
     *  - `effective = heap − 4 GiB` (floored at heap/4): the single-JVM
-    *    co-residence reserve. The heap-cliff measurements (round 17)
-    *    showed driver + session caches eat a roughly FIXED slice —
+    *    co-residence reserve. The heap-cliff measurements showed
+    *    driver + session caches eat a roughly FIXED slice —
     *    8 GiB dies at 100×/300× while 16 GiB runs clean — so sort
     *    memory scales with the heap BEYOND that slice, not with the
     *    raw heap. perPartition = effMemPerCore >> 6 lands exactly on
@@ -315,11 +305,11 @@ object Bench {
     // Two regimes with a measured boundary: while a 16 MiB/partition
     // split still fits inside the core count the corpus is latency-
     // bound and MORE partitions only add task overhead (the 187 MB 10×
-    // twin ran 181.8 s at the 32-core floor and 219.9 s split 64 ways —
-    // scale/bench_full_10x_{r14,r15}.json); past that boundary the
+    // twin ran 181.8 s at the 32-core floor and 219.9 s split 64 ways,
+    // scale/bench_full_10x_*.json); past that boundary the
     // corpus is sort-memory-bound and gets the memory-per-core sizing.
     val coarse = (bytes + (16L << 20) - 1) / (16L << 20)
-    // Latency regime returns the core count DIRECTLY (ADVICE r15): the
+    // Latency regime returns the core count DIRECTLY: the
     // power-of-two rounding exists so AQE can coalesce the data-derived
     // value cleanly, but rounding the core floor itself would hand a
     // local[12] 16 partitions — pure task overhead vs the partitions=
@@ -333,50 +323,50 @@ object Bench {
     // Floor 32 tasks/core (the measured iterative optimum at both 100×
     // and 300×); cap 64 tasks/core-or-4096 — the cap sits strictly
     // ABOVE the floor so the volume/memory-derived p still binds on
-    // many-core shapes (ADVICE r18: a shared floor==cap collapsed the
-    // rule to a constant 32·cpus there, silently abandoning the
-    // per-partition byte budget the memory regime exists to enforce).
+    // many-core shapes (a shared floor==cap would collapse the rule to a
+    // constant 32·cpus there, abandoning the per-partition byte budget
+    // the memory regime exists to enforce).
     math.min(math.max(p, 32L * cpus), math.max(4096L, 64L * cpus)).toInt
   }
 
   /** Memory per core, ONE basis shared by the initial-partition rule
-    * and the AQE advisory (VERDICT r18 #3 — they previously derived
-    * from effective vs raw heap six lines apart): heap minus a 4 GiB
+    * and the AQE advisory: heap minus a 4 GiB
     * reserve for what never shows up in per-task arithmetic (driver
     * bookkeeping, broadcast vars, session caches, late-sweep status-
-    * store ballast — the measured pass-2 OOM margin, SCALE.md
-    * round-18), floored at heap/4 so small heaps keep a sane budget. */
+    * store ballast — the measured pass-2 OOM margin, SCALE.md),
+    * floored at heap/4 so small heaps keep a sane budget. */
   private[graft] def effectiveMemPerCore(cpus: Int, heapBytes: Long): Long = {
     val effective = math.max(heapBytes - (4L << 30), math.max(1L, heapBytes) / 4)
     effective / math.max(1, cpus)
   }
 
-  /** Memory-regime AQE wiring (VERDICT r17 #4): when the volume-derived
+  /** Memory-regime AQE wiring: when the volume-derived
     * INITIAL partition count exceeds the core count, let AQE coalesce
     * each post-shuffle stage to an advisory size derived from memory
     * per core instead of Spark's parallelism-first default (which only
     * coalesces below minPartitionSize=1 MiB — at 1024/4096 initial
     * partitions of 2–4 MiB each it never fires, so mid-size map-heavy
     * stages paid 1.5–1.8× task overhead at 100× and iterative keys
-    * 4.3× at 300×, SCALE.md round-17). Advisory = effective memPerCore
+    * 4.3× at 300×, SCALE.md). Advisory = effective memPerCore
     * >> 6 (6 MiB at 16 GiB/32 cores): the 100× iterative join (~4.5 GB
     * shuffle) coalesces to ~768-equivalent tasks — inside the measured
     * clean-and-fast band around 1024 — while a 300 MB map-heavy stage
-    * drops to ~128 tasks (the floor) instead of 1024. minPartitionNum pins 4× the core count as the floor: the
-    * first (floor = cores) wiring let pagerank's ~500 MB iteration
-    * exchange coalesce to ~62 tasks of ~8 MiB compressed each, and on
-    * the late-sweep heap (session caches + shared pipelines resident)
-    * 32 such tasks concurrently OOM'd the 16 GiB 100× board in pass 2
-    * — a sweep the r17 un-coalesced 1024-partition board survived.
+    * drops to ~128 tasks (the floor) instead of 1024. minPartitionNum
+    * pins 4× the core count as the floor: at floor = cores pagerank's
+    * ~500 MB iteration exchange coalesced to ~62 tasks of ~8 MiB
+    * compressed each, and on the late-sweep heap (session caches +
+    * shared pipelines resident) 32 such tasks concurrently OOM'd the
+    * 16 GiB 100× board in pass 2 — a sweep the un-coalesced
+    * 1024-partition board survived.
     * 4×cores halves-plus the per-task footprint while keeping ~90% of
     * the task-overhead win over the 1024-way split.
     *
-    * Latency regime (count == cores, round 19): Spark's parallelism-
+    * Latency regime (count == cores): Spark's parallelism-
     * first default never coalesces below the core count, so every
     * micro-exchange of a multi-stage query (probe-bounded beam hops,
     * per-band windows, 6-row stage aggregates) runs a full `cpus`-task
     * wave on kilobytes of data — pure scheduling overhead, and the
-    * reason the r17 board measured local[4] FASTER than local[32] on a
+    * reason a board measured local[4] FASTER than local[32] on a
     * 17 MB corpus (guide §2.2: fewer, larger reduce partitions). The
     * wiring turns parallelism-first off here too, which drops Spark's
     * coalesce floor to 1 (CoalesceShufflePartitions: non-parallelism-
@@ -396,8 +386,7 @@ object Bench {
     val env = sys.env.get("SPARK_GRAFT_AQE_ADVISORY")
     if (env.contains("off")) return Seq.empty
     // Advisory off the same EFFECTIVE memory-per-core basis as
-    // [[autoShufflePartitions]] (VERDICT r18 #3 — raw heap here vs
-    // effective heap there was two bases for one concept): 16 GiB/32
+    // [[autoShufflePartitions]], one basis for one concept: 16 GiB/32
     // cores → 384 MiB effective/core → 6 MiB advisory (was 8 MiB raw —
     // the safe direction: smaller coalesce targets mean more, smaller
     // tasks, and the 4×cores floor still bounds the coalesce).
@@ -413,62 +402,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // shuffle partitions are sized to the DATA by default (VERDICT r14
-    // #3 — the SCALE.md rule as code, not prose): at 100x the r14 sweep
-    // measured graph_pagerank DYING at partitions=cores (60M-row sorts
-    // split 32 ways exhaust an 8 GB heap) and running clean at 256.
-    // [[autoShufflePartitions]] derives the default from corpus bytes;
-    // the env var still overrides for sweeps that pin the knob.
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS",
-      autoShufflePartitions(sfDir, cpus.toInt).toString)
-    println(s"[bench] shuffle_partitions=$shufflePartitions " +
-      (if (sys.env.contains("SPARK_GRAFT_SHUFFLE_PARTITIONS")) "(env)" else "(auto)"))
-    // harness-level common-subexpression sharing: the minhash consumers
-    // (lsh/verified/keep_list/cluster_components/est/incremental) reuse
-    // ONE materialized pipeline per (session, sf) — semantics unchanged
-    // (TextQueries.verifiedSharedAll), sweep measurably less.
-    // SPARK_GRAFT_SHARED=false turns it off so a SCALE sweep can measure
-    // each pipeline's true end-to-end cost incl. its feature pass (the
-    // session cache otherwise hides exactly the part that scales).
-    System.setProperty("graft.shared.pipeline",
-      sys.env.getOrElse("SPARK_GRAFT_SHARED", "true"))
-    // Bench times the same computation CORRECTNESS verifies: pin the
-    // declared oracle centroid ring (overridable for knob sweeps). The
-    // library default outside these harnesses is the √N production ring;
-    // ScaleKnob + SCALE.md carry its measurements.
-    System.setProperty("graft.ann.ring",
-      sys.env.getOrElse("SPARK_GRAFT_ANN_RING", "oracle"))
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      // Iterative-graph exchange reuse (VERDICT r14 #5): at the default
-      // (true) AQE may repartition cached plans, so consumers cannot
-      // rely on a cached relation's layout and re-exchange it. false
-      // preserves cached-plan output partitioning; measured at sf0.1
-      // this cuts graph_pagerank's runtime shuffle 49.1->20.0 MB
-      // (4.35M->2.02M records) with LPA and the rest neutral.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false")
-      .config("spark.ui.enabled", "false")
-      // Headless-harness status-store diet (round 18): a 203-key ×
-      // 3-pass 100× sweep runs ~7,000 stages, and with the AQE wiring
-      // each execution retains re-planned plan graphs + per-stage
-      // metrics in the driver's SQL/status stores (defaults keep 1000
-      // executions) — multi-GB ballast by pass 2 that serves no one
-      // with the UI off. The 16 GiB 100× board OOM'd in pass-2
-      // pagerank at the SAME stage twice before this diet; the
-      // tightened periodic GC also lets ContextCleaner's weak-ref
-      // shuffle cleanup actually fire inside one sweep (default 30min
-      // ≈ half the sweep).
-      .config("spark.sql.ui.retainedExecutions", "64")
-      .config("spark.ui.retainedJobs", "200")
-      .config("spark.ui.retainedStages", "200")
-      .config("spark.cleaner.periodicGC.interval", "5min")
-    // Memory-regime AQE coalesce wiring — see [[aqeScaleConfigs]].
-    val spark = aqeScaleConfigs(shufflePartitions.toInt, cpus.toInt)
-      .foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(sfDir)
     // Warm the JVM/codegen/parquet-reader paths once so the first measured
     // query doesn't absorb ~6s of one-time JIT + session initialization.
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -494,12 +428,10 @@ object Bench {
     val sweep = runAll(spark, sfDir, selected)
     // Full record (per-query run pairs + canary series, ~8 KB at 127
     // queries) goes to a file; stdout gets ONLY the compact line, last,
-    // so the driver's 2000-char tail capture can parse it (BENCH_r2–r8
-    // all show `parsed: null` from the full line's head being truncated).
-    // Round 10: build.sbt sets `run / outputStrategy := StdoutOutput` so
-    // sbt passes this line through UN-prefixed — r9 showed the full line
-    // in the tail yet parsed:null because sbt's logger prepended
-    // "[info] " to it.
+    // so a 2000-char tail capture can parse it (the full line's head
+    // would be truncated). build.sbt sets `run / outputStrategy :=
+    // StdoutOutput` so sbt passes this line through without the
+    // "[info] " prefix its logger would prepend.
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
       "/root/repo/bench_full.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),
@@ -509,5 +441,53 @@ object Bench {
     println(renderCompact(sweep, sfDir, detailPath))
     spark.stop()
     if (sweep.results.exists(_.err.isDefined)) sys.exit(1)
+  }
+
+  /** The harness session: the one configuration every entry point
+    * (Bench, Verify, StreamBench, PlanAudit, ScaleGen, ScaleKnob, Smoke)
+    * runs, so the plan that is verified is the plan that is timed.
+    *  - `local[SPARK_GRAFT_CPUS]` (default 4);
+    *  - shuffle partitions sized to the data under `sfDir`
+    *    ([[autoShufflePartitions]]; at 100× graph_pagerank died at
+    *    partitions = cores and ran clean at 256), unless
+    *    SPARK_GRAFT_SHUFFLE_PARTITIONS pins them for a sweep;
+    *  - the memory-regime AQE coalesce wiring ([[aqeScaleConfigs]]);
+    *  - UTC session time, the zone the DuckDB oracle compares in;
+    *  - `graft.shared.pipeline=true`: the minhash and graph consumers
+    *    reuse one materialized build per (session, sf), values
+    *    unchanged (TextQueries.verifiedSharedAll, JoinQueries).
+    */
+  def session(sfDir: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val shufflePartitions = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").map(_.toInt)
+      .getOrElse(autoShufflePartitions(sfDir, cpus))
+    println(s"[session] local[$cpus] shuffle_partitions=$shufflePartitions " +
+      (if (sys.env.contains("SPARK_GRAFT_SHUFFLE_PARTITIONS")) "(env)" else "(auto)"))
+    System.setProperty("graft.shared.pipeline", "true")
+    val builder = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      // Iterative consumers join cached relations on their cached
+      // layout: at the default (true) AQE may repartition a cached plan,
+      // and every consumer re-exchanges it (graph_pagerank's runtime
+      // shuffle at sf0.1 is 49.1 MB that way, 20.0 MB with it pinned).
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false")
+      .config("spark.ui.enabled", "false")
+      // Headless status-store diet: a 203-key × 3-pass 100× sweep runs
+      // ~7,000 stages, and the default 1000 retained executions (each
+      // with its re-planned AQE graphs and per-stage metrics) grow to
+      // multi-GB of driver heap that nothing reads with the UI off. The
+      // shorter periodic GC lets ContextCleaner's weak-reference
+      // shuffle cleanup fire inside one sweep.
+      .config("spark.sql.ui.retainedExecutions", "64")
+      .config("spark.ui.retainedJobs", "200")
+      .config("spark.ui.retainedStages", "200")
+      .config("spark.cleaner.periodicGC.interval", "5min")
+    val spark = aqeScaleConfigs(shufflePartitions, cpus)
+      .foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Deterministic scale-up generator (VERDICT r11 #4): produce an
+/** Deterministic scale-up generator: produce an
   * M×-scaled twin of a testdata directory so the heavy families' cost
   * curves can be MEASURED instead of argued. The base corpus is never
   * modified; the output is the union of M key-shifted copies with two
@@ -41,14 +41,7 @@ object ScaleGen {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = if (args.length > 1) args(1) else "/tmp/graft_sf1"
     val mult = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(src)
     scaleInto(spark, src, out, mult)
     spark.stop()
   }
@@ -61,8 +54,8 @@ object ScaleGen {
     def copies(name: String, nOutBase: Int)(shift: (DataFrame, Int) => DataFrame): Unit = {
       val base = spark.read.parquet(s"$src/$name.parquet")
       val scaled = (0 until mult).map(k => shift(base, k)).reduce(_ unionByName _)
-      // output files scale with the data, not a fixed constant (VERDICT
-      // r14 #3): nOutBase is calibrated for a 10× twin, so beyond 10×
+      // output files scale with the data, not a fixed constant:
+      // nOutBase is calibrated for a 10× twin, so beyond 10×
       // grow it linearly — a 100× lineitem lands in 320 files instead of
       // 32 monoliths, keeping per-file size (and any reader that maps
       // files to splits) flat as M grows.
@@ -104,43 +97,45 @@ object ScaleGen {
 }
 
 /** Measure sim_graph_ann's kNN-edge build at a chosen centroid ring
-  * (SCALE.md's "fix where it isn't linear" leg): the declared oracle
-  * constant pins 10 centroids, so at M× corpus the cell-local self-join
-  * does ~M² the work; a ring grown ~√N restores near-linear wall. This
-  * probe times the SAME parameterized build the declared queries run
+  * (SCALE.md's "fix where it isn't linear" leg): the declared ring pins
+  * 10 centroids, so at M× corpus the cell-local self-join does ~M² the
+  * work; a ring grown ~√N restores near-linear wall. This probe times
+  * the SAME parameterized build the declared queries run
   * (SimilarityQueries.graphAnnEdges → ivfAssignedAt → cellKnn) at each
-  * setting, so the prescription is a measurement of the shipping path.
+  * ring, so the prescription is a measurement of the shipping path.
   *
   * Usage: `runMain graft.ScaleKnob <sfDir> <ring>` where ring is
-  * `oracle` (the declared [480,490) constant), `sqrt` (the ⌈√N⌉
-  * production default), or an integer target centroid count.
+  * `oracle` (the declared [480,490) ring), `sqrt` (⌈√N⌉ centroids), or
+  * an integer target centroid count.
   */
 object ScaleKnob {
+  import graft.operators.SimilarityQueries.{OracleRing, Ring, SpreadRing, corpusN, graphAnnEdges}
+
+  /** The ring a ScaleKnob argument names; spread rings are sized from
+    * the corpus count of `dir`. */
+  private def parseRing(spark: SparkSession, dir: String, arg: String): Ring = arg match {
+    case "oracle" => OracleRing
+    case "sqrt" => SpreadRing(math.max(1L, math.round(math.sqrt(corpusN(spark, dir).toDouble))))
+    case n if n.nonEmpty && n.forall(_.isDigit) =>
+      SpreadRing(math.max(1L, corpusN(spark, dir) / math.max(1L, n.toLong)))
+    case other => throw new IllegalArgumentException(
+      s"ring must be oracle, sqrt or a centroid count, got '$other'")
+  }
+
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val ringArg = if (args.length > 1) args(1) else "sqrt"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // resolve through the SAME knob the declared queries read (this is a
-    // standalone main — the property set is process-local and final)
-    System.setProperty("graft.ann.ring", ringArg)
-    val ring = graft.operators.SimilarityQueries.annRing(spark, dir)
+    val spark = Bench.session(dir)
+    val ring = parseRing(spark, dir, args.lift(1).getOrElse("sqrt"))
     // warm pass (JIT + page cache), then two measured runs, min scored —
     // the Bench discipline in miniature
     def once(): Double = {
       val t0 = System.nanoTime()
-      graft.operators.SimilarityQueries.graphAnnEdges(spark, dir, ring)
-        .write.format("noop").mode("overwrite").save()
+      graphAnnEdges(spark, dir, ring).write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
     }
     once()
     val sec = math.min(once(), once())
-    val n = graft.operators.SimilarityQueries.graphAnnEdges(spark, dir, ring).count()
+    val n = graphAnnEdges(spark, dir, ring).count()
     println(f"[scaleknob] dir=$dir ring=$ring edges=$n sec=$sec%.2f")
     spark.stop()
   }

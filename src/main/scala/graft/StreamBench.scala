@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, Path, StandardCopyOption}
 
-/** Driver-visible streaming sweep (VERDICT r10 next-round #4): every
+/** Driver-visible streaming sweep: every
   * StreamTwins twin runs through a REAL file-source micro-batch
   * StreamingQuery — the driver's events table chunked into sequential
   * file arrivals (one `processAllAvailable` per drop, so per-key state
@@ -37,8 +37,7 @@ object StreamBench {
     * and rename into place — same directory, so the move is atomic. A
     * plain Files.copy raced the always-on micro-batch poll at 100×
     * (45 MB per chunk): the source listed the half-written file and the
-    * query died with FAILED_READ_FILE, a scale-revealed harness bug in
-    * the same family as round-14's id-split one.
+    * query died with FAILED_READ_FILE, a scale-revealed harness bug.
     */
   private def arrive(src: Path, dir: Path, name: String): Unit = {
     val tmp = dir.resolve("." + name + ".tmp")
@@ -55,7 +54,7 @@ object StreamBench {
     Files.copy(part.toPath, dest, StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Per-twin streaming-state size (VERDICT r13 #4): total rows across
+  /** Per-twin streaming-state size: total rows across
     * the final micro-batch's state operators — the number that must stay
     * O(live keys), not O(events), for watermark eviction to be real.
     * Keyed by the runTwin/restartTwin name; −1 marks "no progress seen".
@@ -183,7 +182,7 @@ object StreamBench {
     }
   }
 
-  /** Like [[runTwin]] but BOUNDED-DRIVER (VERDICT r15 #3): instead of a
+  /** Like [[runTwin]] but BOUNDED-DRIVER: instead of a
     * memory sink that collects every emitted row (the scd2 twin's
     * full interval table — 10M rows at 100×, the reason the streaming
     * sweep needed a 24 GB driver heap), the sink folds each micro-batch
@@ -214,7 +213,7 @@ object StreamBench {
     }
   }
 
-  /** Crash-recovery run (VERDICT r11 #5): the twin processes the first
+  /** Crash-recovery run: the twin processes the first
     * arrival, the query is STOPPED, `downArrivals` further files land
     * while it is down, then a NEW query resumes from the same
     * checkpoint and processes everything else. The sink is foreachBatch
@@ -261,23 +260,9 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outPath = if (args.length > 1) args(1) else "STREAMBENCH.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    System.setProperty("graft.shared.pipeline", "true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Iterative-graph exchange reuse (VERDICT r14 #5): at the default
-      // (true) AQE may repartition cached plans, so consumers cannot
-      // rely on a cached relation's layout and re-exchange it. false
-      // preserves cached-plan output partitioning; measured at sf0.1
-      // this cuts graph_pagerank's runtime shuffle 49.1->20.0 MB
-      // (4.35M->2.02M records) with LPA and the rest neutral.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(sfDir)
+    // the staged feeds below read events.parquet (TIMESTAMP(NANOS)) raw
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     import graft.streaming.{ChangeRelation, StreamTwins}
 
     def batch(key: String): Array[Row] = {
@@ -294,8 +279,8 @@ object StreamBench {
     // ts-monotone, so this equals the old id-tercile split; on a
     // ScaleGen twin it does NOT — every key-shifted copy replays the
     // base ts range, so an id split hands the watermark operators
-    // arbitrarily late replays of whole copies. The round-14 x10 run
-    // measured exactly that: the four watermark twins (session,
+    // arbitrarily late replays of whole copies. A 10× run measured
+    // exactly that: the four watermark twins (session,
     // interval_join, dedup_counts, hourly_topk) diverged under the id
     // split — a harness-contract bug, not an engine one. The CDC change
     // feeds below keep their LSN (event_id) split: a replication log
@@ -395,8 +380,8 @@ object StreamBench {
     }
 
     run("session") {
-      // engine-side per-user digest of the complete-mode session table
-      // (VERDICT r15 #3 family): the comparison needs per-user session
+      // engine-side per-user digest of the complete-mode session table:
+      // the comparison needs per-user session
       // counts + the conservation total, never the 9.5M session rows
       val rows = runTwinComplete(spark, evParts, evSchema, "session")(
         s => StreamTwins.sessionCounts(normalize(s))) { df =>
@@ -414,7 +399,7 @@ object StreamBench {
     }
 
     run("session_append") {
-      // BOUNDED-STATE session leg (VERDICT r14 #2): the complete-mode
+      // BOUNDED-STATE session leg: the complete-mode
       // twin above must hold every session ever seen (a harness
       // necessity — complete mode is what lets the memory sink equal
       // the batch query), so its state is O(all sessions). This leg
@@ -425,9 +410,9 @@ object StreamBench {
       // O(open sessions) ≈ O(active users). Emissions are checked
       // exactly against the batch inventory's closed-by-watermark
       // subset (either boundary convention accepted: end ≤ W / end < W).
-      // Both sides reduce to (count, checksum) digests in the engine
-      // (VERDICT r15 #3 family) — the old set comparison held 9.5M
-      // closed-session tuples on the driver at 100×.
+      // Both sides reduce to (count, checksum) digests in the engine —
+      // a set comparison would hold 9.5M closed-session tuples on the
+      // driver at 100×.
       val cols = Seq("user_id", "start_s", "cnt")
       val (sc2, sh2) = runTwinDigest(spark, evParts, evSchema,
         "session_append", "append", cols) { s =>
@@ -476,9 +461,9 @@ object StreamBench {
       // emits the full join, so compare the stream's (p_id, v_id)-ordered
       // 500-prefix against the batch rows — identical to the old whole-set
       // compare whenever total pairs ≤ 500 (the base corpus), and correct
-      // at scale where the declared limit truncates (round-14 x10 run:
-      // 7140 stream pairs vs the batch's 500 — a comparison bug, the
-      // stream's prefix matched throughout)
+      // at scale where the declared limit truncates (a 10× run emits
+      // 7140 stream pairs against the batch's 500; the stream's prefix
+      // matches throughout)
       val sAll = events("ivj", "append")(StreamTwins.intervalJoinStream(_))
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       val s = sAll.sortBy(t => (t._1, t._2)).take(500).toSet
@@ -500,10 +485,9 @@ object StreamBench {
     }
 
     run("scd2") {
-      // ENGINE-SIDE comparison (VERDICT r15 #3): the old harness
-      // collected the stream's full closed-interval table through the
-      // memory sink — 10M rows at 100×, the single reason the streaming
-      // sweep needed SPARK_DRIVER_MEM=24g. Both sides now reduce to a
+      // ENGINE-SIDE comparison: collecting the stream's full
+      // closed-interval table through the memory sink would hold 10M
+      // rows at 100× (a 24g driver). Both sides now reduce to a
       // (count, 60-bit-hash-sum) digest in the engine: equal digests ⟺
       // the emitted multiset EQUALS the batch inventory's closed
       // (valid_to IS NOT NULL) subset — full-set equality, STRONGER
@@ -643,7 +627,7 @@ object StreamBench {
     }
 
     run("transition_pairs") {
-      // engine-side per-(from,to) counts (VERDICT r15 #3 family): the
+      // engine-side per-(from,to) counts: the
       // stream emits O(events) pair rows — 9.85M at 100×, a harness
       // OOM through the memory sink — but the comparison is a ≤|types|²
       // count map, so fold each micro-batch to counts in the engine

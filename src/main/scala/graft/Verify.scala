@@ -1,34 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // share the verified-dedup minhash pipeline across the sweep's three
-    // consumers (TextQueries.verifiedShared) — values identical, ~2 full
-    // pipeline recomputes saved per sweep.
-    System.setProperty("graft.shared.pipeline", "true")
-    // Correctness runs pin the DECLARED centroid ring (vec_id ∈
-    // [480,490)) — the constant the oracle SQL reproduces. The library
-    // default is the √N production ring (SimilarityQueries.annRing).
-    System.setProperty("graft.ann.ring", "oracle")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Iterative-graph exchange reuse (VERDICT r14 #5): at the default
-      // (true) AQE may repartition cached plans, so consumers cannot
-      // rely on a cached relation's layout and re-exchange it. false
-      // preserves cached-plan output partitioning; measured at sf0.1
-      // this cuts graph_pagerank's runtime shuffle 49.1->20.0 MB
-      // (4.35M->2.02M records) with LPA and the rest neutral.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the session Bench times, so the verified plan is the timed plan
+    val spark = Bench.session(sfDir)
     new java.io.File(outDir).mkdirs()
     // Dev-loop subset: SPARK_GRAFT_ONLY=q1,q2 dumps just those queries
     // (the driver never sets it, so the full sweep is unchanged).

@@ -22,46 +22,30 @@ import graft.core._
 object JoinQueries {
 
   // ------------------------------------------------------------------
-  // Shared graph builds (VERDICT r09 #5 — the dedup_incremental
-  // precedent): graph_pagerank and graph_triangle_count are the two
-  // heaviest sweep queries and each re-derives its persisted edge
-  // relations on every harness run (bench warm-up + 2 measured passes =
-  // 3 rebuilds). The two queries walk DIFFERENT graphs — pagerank the
-  // customer–supplier bipartite graph, triangle count the part
-  // co-purchase graph — so there is no single edge relation to share
-  // BETWEEN them; what they share is the amortization mechanism: under
-  // `graft.shared.pipeline` (Bench/Verify sweeps set it) each build runs
-  // once per (session, partitions, sf) and is localCheckpoint'ed
-  // session-lifetime, bypassing the per-query cache registry. Un-shared
-  // (ScalaTest, PlanShapeSpec) every query builds its own scopedPersist
-  // plan exactly as before — values identical by construction, the
-  // build IS the same expression chain.
+  // Shared graph builds: graph_pagerank and graph_triangle_count are the
+  // two heaviest sweep queries, and a harness runs each of them several
+  // times (bench warm-up + 2 measured passes). They walk DIFFERENT
+  // graphs — pagerank the customer–supplier bipartite graph, triangle
+  // count the part co-purchase graph — so what they share is the
+  // amortization: under `graft.shared.pipeline` (the harness session
+  // sets it) each build runs once per (session, partitions, sf) and is
+  // localCheckpoint'ed for the session's lifetime, bypassing the
+  // per-query cache registry. Un-shared (ScalaTest, PlanShapeSpec)
+  // every query builds its own scopedPersist plan — values identical by
+  // construction, the build IS the same expression chain.
+  //
+  // The checkpoint carrier holds deserialized row blocks, the cheapest
+  // to re-scan: it won the warm sweep at every scale measured (sf0.1
+  // graph keys 2.1/2.1/0.5 s against 4.7/4.8/3.4 s persisted; 100×
+  // pagerank 68.8 s against 108.5 s, SCALE.md). It strips the hash
+  // layout, so each iteration re-exchanges edgesDeg. A persisted build
+  // keeps that layout and wins a COLD single query (the unshared
+  // scopedPersist path) and, on a multi-node cluster where the avoided
+  // exchanges cross the network, would be the better shared carrier.
   // ------------------------------------------------------------------
 
   private val graphCache =
     scala.collection.mutable.Map.empty[(SparkSession, String, String), (DataFrame, DataFrame)]
-
-  /** Shared-build carrier (VERDICT r15 #2 — measured BOTH ways, SCALE.md
-    * round-16). checkpoint (default): deserialized row blocks, cheapest
-    * to re-scan, the warm-sweep winner at EVERY scale measured (sf0.1
-    * graph keys 2.1/2.1/0.5 s vs 4.7/4.8/3.4 s at persist; 100× board
-    * pagerank 68.8 s vs 108.5 s). persist: preserves the hash layout
-    * (pagerank COLD single-query 66.2 s vs 162.0 s, −183M shuffle
-    * records at 100×) but the columnar cache re-scan plus sweep-wide
-    * storage-memory pressure invert the win on warm boards — the
-    * documented negative result. `graft.shared.carrier=persist` keeps
-    * the cold-query/cluster-shaped alternative selectable; on a real
-    * multi-node cluster, where the avoided exchanges cross the network,
-    * persist is the right choice for iterative consumers. Round 17 adds
-    * two more (VERDICT r16 #4, chasing the warm/cold split): "bucketed"
-    * — organize-once bucketed parquet (layout in the files, parquet
-    * re-scan, no storage pressure) — and "disk" — persist(DISK_ONLY)
-    * (layout via the cache, batches on local disk). Both pagerank-only:
-    * triangle/LPA join on two different keys, so no single bucket
-    * column serves them.
-    */
-  private def sharedCarrier: String =
-    sys.props.getOrElse("graft.shared.carrier", "checkpoint")
 
   /** Pagerank's co-partitioned relations: (deg, edgesDeg). */
   private def pagerankGraph(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
@@ -84,67 +68,10 @@ object JoinQueries {
     else graphCache.synchronized {
       val key = (spark, dir + "#pr", spark.conf.get("spark.sql.shuffle.partitions", ""))
       graphCache.getOrElseUpdate(key, {
-        // Carrier choice (VERDICT r15 #2, measured in SCALE.md round-16):
-        //  - checkpoint (default): deserialized row blocks — cheapest to
-        //    RE-SCAN, so warm sweep runs are fast (r15 bench numbers),
-        //    but the layout is stripped and every iteration re-exchanges
-        //    edgesDeg (49.1 MB runtime shuffle at sf0.1 local[4]).
-        //  - persist: the SAME three relations the unshared scopedPersist
-        //    path caches (edges included — persisting only deg/edgesDeg
-        //    leaves the cached edgesDeg behind an exchange consumers
-        //    repeat): layout preserved under the pinned
-        //    canChangeCachedPlanOutputPartitioning=false, 2.4× less
-        //    shuffle (20.0 MB), but the columnar cache re-scan costs
-        //    ~+2-3 s per warm run locally. On a multi-node cluster the
-        //    shuffle crosses the NETWORK while the cache re-scan stays
-        //    node-local — there, persist is the right default; in this
-        //    single-JVM harness wall-clock favors checkpoint.
-        // ShuffleAudit measures both via graft.shared.carrier.
-        sharedCarrier match {
-          case "checkpoint" =>
-            val (deg, edgesDeg) = build(identity)
-            (deg.localCheckpoint(true), edgesDeg.localCheckpoint(true))
-          case "bucketed" =>
-            // Third carrier (VERDICT r16 #4): organize-once BUCKETED
-            // PARQUET — the SkewBucketingSpec layout applied to the
-            // shared build. bucketBy(src) bakes the hash layout into
-            // the FILES, so iterative consumers joining on src read a
-            // pre-bucketed scan with no exchange (the persist win)
-            // while the re-scan is a plain columnar parquet read with
-            // zero storage-memory pressure (the checkpoint win). The
-            // organize cost is one write per relation at build time —
-            // the cluster-shaped trade: pay the layout once, every
-            // iteration and every warm run reuses it from disk.
-            val (deg, edgesDeg) = build(identity)
-            (bucketedCarrier(spark, dir, "deg", deg, "src"),
-              bucketedCarrier(spark, dir, "edges", edgesDeg, "src"))
-          case "disk" =>
-            // persist(DISK_ONLY): keeps the InMemoryRelation layout
-            // guarantee (under the pinned
-            // canChangeCachedPlanOutputPartitioning=false) without
-            // competing for storage memory with the sweep — the
-            // serialized columnar batches live on local disk.
-            build(_.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
-          case _ =>
-            build(_.persist())
-        }
+        val (deg, edgesDeg) = build(identity)
+        (deg.localCheckpoint(true), edgesDeg.localCheckpoint(true))
       })
     }
-  }
-
-  /** Write `df` as a bucketed+sorted parquet table on `key` and read it
-    * back — the "bucketed" shared-build carrier. One table per
-    * (dir, partitions) cache entry, overwritten on regeneration; data
-    * lands under java.io.tmpdir, not the warehouse. */
-  private def bucketedCarrier(spark: SparkSession, dir: String, part: String,
-                              df: DataFrame, key: String): DataFrame = {
-    val buckets = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val tag = java.lang.Integer.toHexString((dir + "#" + buckets).hashCode)
-    val tbl = s"graft_carrier_${part}_$tag"
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_bucketed/$tbl"
-    df.write.mode("overwrite").option("path", path)
-      .bucketBy(buckets, key).sortBy(key).format("parquet").saveAsTable(tbl)
-    spark.table(tbl)
   }
 
   /** Triangle counting's sampled canonical edge relation (x < y). */
@@ -169,17 +96,7 @@ object JoinQueries {
     else graphCache.synchronized {
       val key = (spark, dir + "#tri", spark.conf.get("spark.sql.shuffle.partitions", ""))
       graphCache.getOrElseUpdate(key, {
-        // persist for the same layout reason as [[pagerankGraph]]: the
-        // distinct's hashpartitioning(x, y) stays visible to consumers.
-        // Only the persist/checkpoint pair applies here — the triangle
-        // and LPA consumers join on x and y separately, so neither the
-        // bucketed nor the DISK_ONLY pagerank carrier has a single key
-        // to organize on; unknown carriers take the checkpoint default.
-        if (sharedCarrier == "persist") {
-          val e = build.persist(); (e, e)
-        } else {
-          val e = build.localCheckpoint(true); (e, e)
-        }
+        val e = build.localCheckpoint(true); (e, e)
       })._1
     }
   }
@@ -216,7 +133,7 @@ object JoinQueries {
              |JOIN region ON n_regionkey = r_regionkey
              |GROUP BY r_name ORDER BY r_name""".stripMargin.replace("\n", " "))),
 
-    // ClickHouse dictGet pattern (VERDICT r10 next-round #7): a
+    // ClickHouse dictGet pattern: a
     // key→attributes DICTIONARY relation (nation⋈region, built ONCE) is
     // consulted by TWO independent fact enrichments in the same query —
     // customers and suppliers each resolve nationkey → (n_name, r_name)
@@ -845,7 +762,7 @@ object JoinQueries {
         val e = triangleEdges(spark, dir)
         // x < y everywhere, so the two directions are disjoint and the
         // union of a distinct pair set is a distinct arc set
-        // eager checkpoint, not lazy persist (round 19): und and each
+        // eager checkpoint, not lazy persist: und and each
         // round's labels have 2-3 consumers that AQE submits as
         // concurrent query stages; a lazy persist recomputes the whole
         // previous round once per consumer before the cache lands, and

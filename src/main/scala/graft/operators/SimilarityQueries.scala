@@ -86,7 +86,7 @@ object SimilarityQueries {
     else simCache.synchronized {
       // key salted with the dataset fingerprint: a ScaleGen regeneration
       // at the same dir mid-session gets a fresh build, not stale rows —
-      // and (ADVICE r15) the superseded generation's checkpointed blocks
+      // and the superseded generation's checkpointed blocks
       // are released on insert, so growth is per-LIVE-dataset, not
       // per-regeneration. Entries still hold SparkSession refs for the
       // JVM lifetime — the documented shared-pipeline contract
@@ -107,21 +107,16 @@ object SimilarityQueries {
     }
 
   // ------------------------------------------------------------------
-  // Centroid-ring knob (VERDICT r12/r13 #1). The declared queries pin
-  // the 10-vector ring vec_id ∈ [480,490) — the constant every oracle
-  // SQL reproduces — but a FIXED ring cannot survive corpus growth:
-  // cell population grows ∝ N/|ring|, so the cell-local self-join in
-  // [[cellKnn]] does (N/|ring|)² work per cell — measured ×49.6 wall at
-  // ×30 data (SCALE.md round 12). The production default therefore
-  // grows the ring ~√N (total pair work ~N^1.5; the round-12 ScaleKnob
-  // sweep measured 12× wall at 30× data on this setting), selected by
-  // the `graft.ann.ring` system property:
-  //   "oracle"      → the declared [480,490) constant. Verify, Bench and
-  //                   the test harness set this — the oracle contract.
-  //   "<int>"       → ~that many centroids, hash-spread over the corpus
-  //   unset|"sqrt"  → ~⌈√N⌉ centroids — the measured production default
-  // Spread rings select members by xxhash64(vec_id) % k == 0: one
-  // narrow deterministic predicate — no sampling pass, stable under
+  // Centroid rings. The declared queries use the 10-vector ring
+  // vec_id ∈ [480,490) ([[OracleRing]]) — the constant every oracle SQL
+  // reproduces. A FIXED ring does not survive corpus growth: cell
+  // population grows ∝ N/|ring|, so the cell-local self-join in
+  // [[cellKnn]] does (N/|ring|)² work per cell (×49.6 wall at ×30 data,
+  // SCALE.md). Spread rings grow ~√N instead (12× wall at 30× data):
+  // the `*_spread` keys run [[PortableSpreadRing]], which DuckDB
+  // mirrors, and ScaleKnob measures [[SpreadRing]] at any size. Spread
+  // rings select members by hash(vec_id) % k == 0: one narrow
+  // deterministic predicate — no sampling pass, stable under
   // repartition/retry — so ring membership is computable on BOTH the
   // raw corpus and an already-assigned relation without a join.
   // ------------------------------------------------------------------
@@ -134,7 +129,7 @@ object SimilarityQueries {
     * √N sizing, same one-narrow-predicate selection, but DuckDB can
     * mirror it, so the production fold-assignment path earns its own
     * CORRECTNESS row (`sim_ivf_spread`) instead of resting solely on
-    * GraphAnnSpec's fold≡aggregate pin (VERDICT r14 #1). */
+    * GraphAnnSpec's fold≡aggregate pin. */
   private[graft] final case class PortableSpreadRing(k: Long) extends Ring
 
   /** Spark-side portable 60-bit hash of vec_id (TextQueries' hx trick). */
@@ -153,9 +148,9 @@ object SimilarityQueries {
     * total bytes, max NANOSECOND mtime (Files.getLastModifiedTime; the
     * millisecond File.lastModified collapses to 1 s granularity on many
     * filesystems, so a same-size regeneration within the same second
-    * could silently reuse a stale count — ADVICE r15). Keys [[nCache]]
+    * could silently reuse a stale count). Keys [[nCache]]
     * (and salts [[sharedOr]]'s key) so regenerating the dataset at a
-    * different scale IN THE SAME SESSION (ScaleGen → query, ADVICE r14)
+    * different scale IN THE SAME SESSION (ScaleGen → query)
     * re-counts instead of sizing spread rings from a stale N. One
     * filesystem stat pass, no Spark job.
     */
@@ -184,17 +179,6 @@ object SimilarityQueries {
         nCache.keys.filter(k => k._1 == dir && k._2 != fp).toSeq
           .foreach(nCache.remove)
       nCache.getOrElseUpdate((dir, fp), t(spark, dir, "embeddings").count())
-    }
-
-  /** Resolve the session ring for the declared queries (knob table above). */
-  private[graft] def annRing(spark: SparkSession, dir: String): Ring =
-    sys.props.get("graft.ann.ring") match {
-      case Some("oracle") => OracleRing
-      case Some(s) if s.nonEmpty && s.forall(_.isDigit) =>
-        SpreadRing(math.max(1L, corpusN(spark, dir) / math.max(1L, s.toLong)))
-      case _ =>
-        SpreadRing(math.max(1L,
-          math.round(math.sqrt(corpusN(spark, dir).toDouble))))
     }
 
   /** The production-sized PORTABLE ring for `dir`: k = round(√N) members
@@ -236,7 +220,7 @@ object SimilarityQueries {
     *  - [[ivfAssignedFold]] — for spread rings: the ring is bounded
     *    (~√N), so collect it once, ship it as ONE array literal in the
     *    task binary, and argmax it per row inside a codegen'd fold. No
-    *    N×|ring| intermediate, no exchange AT ALL — the round-14 sweep
+    *    N×|ring| intermediate, no exchange AT ALL — a 30× sweep
     *    measured the agg form's N×|ring| aggregate input as the √N
     *    ring's cost on assignment-only queries (sim_ivf_topk 0.58→4.17 s
     *    at 30×); this form removes exactly that term.
@@ -274,7 +258,7 @@ object SimilarityQueries {
       ringCents(spark, dir, ring).orderBy("cid").collect().toSeq
         .map(r => (r.getLong(0), r.getSeq[Float](1), r.getDouble(2)))
     require(centsLocal.nonEmpty, s"empty centroid ring $ring")
-    // Ring carrier (VERDICT r15 #6): the typedLit form embeds the ring
+    // Ring carrier: the typedLit form embeds the ring
     // in the plan/codegen constant pool — fine while small, but plan
     // size would grow with √N. Past `graft.ring.broadcastBytes`
     // (default 4 MiB) the ring ships as an sc.broadcast instead and the
@@ -316,13 +300,11 @@ object SimilarityQueries {
     }
   }
 
-  /** [[ivfAssignedAt]] at the session ring, shared/persisted — the IVF
-    * family's entry point.
+  /** [[ivfAssignedAt]] at the declared ring, shared/persisted — the
+    * IVF family's entry point.
     */
-  private def ivfAssigned(spark: SparkSession, dir: String): DataFrame = {
-    val ring = annRing(spark, dir)
-    sharedOr(spark, s"ivf@$ring", dir) { ivfAssignedAt(spark, dir, ring) }
-  }
+  private def ivfAssigned(spark: SparkSession, dir: String): DataFrame =
+    sharedOr(spark, s"ivf@$OracleRing", dir) { ivfAssignedAt(spark, dir, OracleRing) }
 
   /** Corpus PQ code table `(vec_id, m, code)` — the broadcast-codebook
     * min_by aggregate shared by the ADC family.
@@ -364,7 +346,7 @@ object SimilarityQueries {
     * scopedPersist otherwise. Values identical by construction either way.
     */
   private def graphEdges0(spark: SparkSession, dir: String): DataFrame =
-    sharedOr(spark, s"ged0@${annRing(spark, dir)}", dir) {
+    sharedOr(spark, s"ged0@$OracleRing", dir) {
       cellKnn(ivfAssigned(spark, dir), lit(true), 8)
     }
 
@@ -381,7 +363,7 @@ object SimilarityQueries {
     // shuffle_hash, not sort-merge: cid has |ring| distinct values, so a
     // merge join would SORT every (large) cell group just to pair
     // cell-mates a hash table pairs directly; the per-cell funnel itself
-    // is the ring-size knob (SCALE.md round 12 — ring ∝ √N)
+    // is the ring-size knob (SCALE.md — ring ∝ √N)
     m.select(col("cid"), col("vec_id").as("src"), col("v").as("sv"), col("nv").as("sn"))
       .join(m.select(col("cid"), col("vec_id").as("dst"),
         col("v").as("dv"), col("nv").as("dn")).hint("shuffle_hash"), Seq("cid"))
@@ -448,7 +430,7 @@ object SimilarityQueries {
     import org.apache.spark.sql.types.DecimalType
     val M = 4
     val sub = expr("slice(embedding, m * 16 + 1, 16)")
-    val cents = ringCents(spark, dir, annRing(spark, dir))
+    val cents = ringCents(spark, dir, OracleRing)
     // (1) IVF cell per vector — the shared assignment build (the winning
     // (cid, v) row is the same whichever payload the max_by carries)
     val assigned = ivfAssigned(spark, dir).select(col("vec_id"), col("cid"))
@@ -557,9 +539,8 @@ object SimilarityQueries {
         // key (csim, -cid) keeps the max similarity and breaks exact ties
         // toward the smallest cid — same result as a row_number() window,
         // but the 10x-corpus assignment relation is combined map-side and
-        // never crosses an exchange (VERDICT r02 "What's wrong" #2). The
-        // struct-typed buffer makes Spark pick SortAggregate over
-        // HashAggregate; that sort is partition-LOCAL over the crossJoin's
+        // never crosses an exchange. The struct-typed buffer makes Spark
+        // pick SortAggregate over HashAggregate; that sort is partition-LOCAL over the crossJoin's
         // contiguous per-vector runs — the exchange itself carries one
         // slim row per vector, not ten embeddings.
         // The argmax ranks a pround-ed csim (9 digits, both engines), so
@@ -599,7 +580,7 @@ object SimilarityQueries {
       tier = "E"),
 
     // IVF with nprobe=2 — the standard recall knob sim_ivf_topk lacks
-    // (VERDICT r06 next-round #3): each probe searches its TWO nearest
+    //: each probe searches its TWO nearest
     // centroid cells instead of only its own. Scale shape is unchanged —
     // corpus assignment is the same broadcast-centroid max_by aggregate
     // (one narrow pass, map-side combined), and the probe side just
@@ -609,7 +590,7 @@ object SimilarityQueries {
     // duplicate across cells (each vector lives in exactly one cell).
     "sim_ivf_nprobe" -> QueryDef(
       (spark, dir) => {
-        val cents = ringCents(spark, dir, annRing(spark, dir))
+        val cents = ringCents(spark, dir, OracleRing)
         // corpus assignment shared with the IVF family ([[ivfAssigned]])
         val assigned = ivfAssigned(spark, dir)
         // probe → its 2 nearest cells: a bounded (#probes × K) relation;
@@ -659,11 +640,11 @@ object SimilarityQueries {
       },
       tier = "E"),
 
-    // PRODUCTION spread-ring IVF assignment, oracle-checked (VERDICT r14
-    // #1). The declared IVF keys pin `graft.ann.ring=oracle` in Verify/
-    // Bench, so CORRECTNESS never executed the √N fold path — its
-    // equivalence rested on GraphAnnSpec's fold≡aggregate pin. This key
-    // closes the loop THROUGH the DuckDB oracle: ring membership is the
+    // PRODUCTION spread-ring IVF assignment, oracle-checked. The other
+    // declared IVF keys run the oracle ring's aggregate form, so without
+    // this key the √N fold path's equivalence would rest solely on
+    // GraphAnnSpec's fold≡aggregate pin. This key closes the loop
+    // THROUGH the DuckDB oracle: ring membership is the
     // portable 60-bit md5 hash (hash(vec_id) % k == 0, k = round(√N),
     // both engines computing k from their own count), so DuckDB mirrors
     // the exact production ring and the fold-form assignment
@@ -724,7 +705,7 @@ object SimilarityQueries {
           .select(col("vec_id").as("cid"), col("v").as("cv"))
         // Argmax over a pround-ed csim (9 digits, both engines): the ranked
         // value is identical by construction, so a last-ulp fold divergence
-        // on a near-tie cannot flip an assignment (ADVICE r05 #2); within
+        // on a near-tie cannot flip an assignment; within
         // 1e-9 both engines tie and break on cid identically.
         def assign(cents: DataFrame): DataFrame =
           e.crossJoin(broadcast(cents))
@@ -853,13 +834,13 @@ object SimilarityQueries {
       },
       tier = "E"),
 
-    // PRODUCTION spread-ring SEMANTIC DEDUP, oracle-checked (VERDICT r15
-    // #1). `dedup_semantic` pins the declared 10-centroid oracle ring —
+    // PRODUCTION spread-ring SEMANTIC DEDUP, oracle-checked.
+    // `dedup_semantic` pins the declared 10-centroid oracle ring —
     // which is why it is the 100× board's most expensive key (cell
     // population ∝ N/10 makes the within-cell pair join quadratic in N)
     // — while the production path runs the √N ring where cells stay
     // ~√N and total pair work is ~N^1.5 (measured ~10× cheaper at 30×,
-    // SCALE.md round 14). sim_ivf_spread proved the portable-md5 ring
+    // SCALE.md). sim_ivf_spread proved the portable-md5 ring
     // recipe for the ASSIGNMENT; this key runs the full SemDeDup
     // pipeline on that ring — fold assignment (zero exchanges before
     // the cell stage), cid-keyed within-cell pair join, near-dup drop at
@@ -1333,8 +1314,8 @@ object SimilarityQueries {
       tier = "E"),
 
     // Graph ANN — join-based HNSW-lite (beam search over a bounded-degree
-    // kNN graph), the last classic ANN family (VERDICT r10 next-round
-    // #3; Malkov & Yashunin's HNSW re-expressed as dataflow). Index
+    // kNN graph), the last classic ANN family
+    // (Malkov & Yashunin's HNSW re-expressed as dataflow). Index
     // build: every vector keeps its k=8 nearest SAME-CELL neighbors —
     // cell-local exact kNN, the dedup_semantic/SemDeDup bound that keeps
     // the self-join quadratic in cell size, never corpus². Search:
@@ -1378,7 +1359,7 @@ object SimilarityQueries {
         // first hop immediately reaches the probe's 8 same-cell nearest
         // neighbors (the HNSW layer-0 neighborhood)
         val cents = assigned
-          .filter(ringPred(annRing(spark, dir)))
+          .filter(ringPred(OracleRing))
           .select(col("vec_id").as("cand"), col("v").as("cv0"), col("nv").as("cn0"))
         val cw = Window.partitionBy("probe").orderBy(col("ps").desc, col("cand"))
         val entry = probes.crossJoin(broadcast(cents))
@@ -1452,7 +1433,7 @@ object SimilarityQueries {
       tier = "E"),
 
     // HIERARCHICAL graph ANN — sim_graph_ann grown its second layer
-    // (VERDICT r11 missing #5; Malkov & Yashunin's multi-layer descent
+    // (Malkov & Yashunin's multi-layer descent
     // re-expressed as dataflow). Layer 1 is the deterministic 1/16
     // vertex sample (vec_id % 16 = 0 — the portable analog of HNSW's
     // geometric level draw) with its own cell-local kNN graph (deg 4);
@@ -1486,7 +1467,7 @@ object SimilarityQueries {
         val fw = Window.partitionBy("probe").orderBy(col("sim9").desc, col("cand"))
         // probe's 2 nearest cells (the sim_graph_ann entry knob)
         val cents = assigned
-          .filter(ringPred(annRing(spark, dir)))
+          .filter(ringPred(OracleRing))
           .select(col("vec_id").as("pcid"), col("v").as("cv0"), col("nv").as("cn0"))
         val cw = Window.partitionBy("probe").orderBy(col("ps").desc, col("pcid"))
         val pc = probes.crossJoin(broadcast(cents))
@@ -1737,7 +1718,7 @@ object SimilarityQueries {
     "sample_diverse_cells" -> QueryDef(
       (spark, dir) => {
         import org.apache.spark.sql.expressions.Window
-        val cents = ringCents(spark, dir, annRing(spark, dir))
+        val cents = ringCents(spark, dir, OracleRing)
         val scored = ivfAssigned(spark, dir)
           .join(broadcast(cents), Seq("cid"))
           .withColumn("csim", pround(gdot("v", "cv") / (col("nv") * col("cn")), 9))
@@ -1773,8 +1754,8 @@ object SimilarityQueries {
       },
       tier = "E"),
 
-    // PRODUCTION-ring diversity sampling, oracle-checked (VERDICT r16
-    // #2 — `dedup_semantic_spread` proved the full-pipeline spread
+    // PRODUCTION-ring diversity sampling, oracle-checked
+    // (`dedup_semantic_spread` proved the full-pipeline spread
     // recipe; this key applies it to the SELECTION half). Same
     // semantics as `sample_diverse_cells` but on the √N portable-md5
     // ring ([[portableRing]]), with DuckDB deriving k from its own
@@ -1825,7 +1806,7 @@ object SimilarityQueries {
       },
       tier = "E"),
 
-    // PRODUCTION-ring graph ANN, oracle-checked (VERDICT r16 #2): the
+    // PRODUCTION-ring graph ANN, oracle-checked: the
     // `sim_graph_ann` beam search — cell-local deg-8 kNN build, entry
     // at the probe's 2 nearest ring vertices + its own vertex, two
     // B=4 best-first hops, per-probe top-3 — run on the √N portable
@@ -1931,8 +1912,8 @@ object SimilarityQueries {
       },
       tier = "E"),
 
-    // PRODUCTION-ring hierarchical graph ANN, oracle-checked (VERDICT
-    // r16 #2): `sim_graph_hnsw`'s two-layer descent — deterministic
+    // PRODUCTION-ring hierarchical graph ANN, oracle-checked:
+    // `sim_graph_hnsw`'s two-layer descent — deterministic
     // 1/16 layer-1 sample with its own deg-4 cell-local graph, ≤8
     // per-cell delegates as the entry set, one coarse B=2 hop, drop to
     // layer 0 for two deg-8 hops at B=4 — on the √N portable ring,

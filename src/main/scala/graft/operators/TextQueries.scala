@@ -313,7 +313,7 @@ object TextQueries {
   // Shared machinery of the exact-Jaccard lane (dedup_jaccard_prefix)
   // and its ROUTED twin (dedup_jaccard_routed) — factored so the guard
   // decision, the candidate generators, and the exact verify kernel are
-  // the SAME code on both keys (VERDICT r16 #5).
+  // the SAME code on both keys.
   // ------------------------------------------------------------------
 
   /** Per-doc token-hash stream: (doc_id, h) with h = xxhash64(lang, word).
@@ -405,9 +405,7 @@ object TextQueries {
 
   /** Exact-lane candidate pairs off the prefix index: band equi-join +
     * the lossless size gate + distinct. ONE builder shared by
-    * dedup_jaccard_prefix, the routed lane's exact branch, and the
-    * stage profiler (ADVICE r17: a profiler with its own inline copy
-    * would silently measure a different plan than the shipped keys). */
+    * dedup_jaccard_prefix and the routed lane's exact branch. */
   private def jaccardExactCands(keyed: DataFrame, gen: Double): DataFrame =
     keyed.select(col("band"), col("doc_id").as("d1"), col("n").as("n1"))
       .join(keyed.select(col("band"), col("doc_id").as("d2"), col("n").as("n2")),
@@ -447,7 +445,7 @@ object TextQueries {
       .select("d1", "d2").distinct()
   }
 
-  /** Representative collapse for the routed lane (VERDICT r17 #3):
+  /** Representative collapse for the routed lane:
     * group docs by their token ARRAY — `toks` is canonical (distinct
     * tokens, rarity-then-hash sorted), so array equality ⟺ token-set
     * equality ⟺ pairwise jaccard 1.0, and every member of a group has
@@ -456,8 +454,8 @@ object TextQueries {
     * Returns (reps, mem, groups): one representative doc per distinct
     * set, the (rep, member) relation, and the persisted grouped
     * relation itself — the routed lane's saturation probe aggregates
-    * over `groups` directly (one narrow scan of the cached relation,
-    * ADVICE r18) instead of re-shuffling the exploded members. Empty-
+    * over `groups` directly (one narrow scan of the cached relation)
+    * instead of re-shuffling the exploded members. Empty-
     * token docs are dropped — they can never reach a candidate pair on
     * the exact lane (no prefix bands), and their jaccard is
     * undefined. */
@@ -469,62 +467,6 @@ object TextQueries {
     (groups.select(col("rep").as("doc_id"), col("toks")),
       groups.select(col("rep"), explode(col("members")).as("m")),
       groups)
-  }
-
-  /** Dev-only stage profile of the two jaccard lanes (graft.JaccProfile
-    * main): times each shared stage cold — the sorted-token build, the
-    * density probe, the LSH signature/band/candidate pass, the exact
-    * prefix candidate pass, and each lane's verify — so lane-cost claims
-    * in SCALE.md are per-stage measurements, not end-to-end guesses. */
-  private[graft] def jaccardStageProfile(spark: SparkSession, dir: String): Unit = {
-    val thr = 0.9
-    val gen = 0.89
-    val (bands, rows) = (16, 4)
-    def timed[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[jacc] $label ${(System.nanoTime() - t0) / 1e9}%.1fs")
-      r
-    }
-    val sorted = jaccardSorted(spark, dir)
-    timed("sorted_build")(sorted.count())
-    val keyed = jaccardPrefixKeyed(sorted, gen)
-    timed("probe")(jaccardLoadProbe(sorted, keyed))
-    graft.plans.MinHash64D.register(spark)
-    // signature forms compared: the shipped codegen projection vs the
-    // retired aggregate form (kept as the measured-against baseline)
-    timed("sig_minhash")(
-      sorted.select(col("doc_id"), size(col("toks")).cast("long").as("n"),
-        graft.plans.MinHash64D.minhash64(col("toks"), bands * rows).as("mh"))
-        .write.format("noop").mode("overwrite").save())
-    val sigAggCols = (0 until bands * rows).map(i =>
-      min(xxhash64(lit(i), col("h"))).as(s"m$i")) :+ count(lit(1)).as("n")
-    timed("sig_aggregate_form")(
-      jaccardTokens(spark, dir).groupBy("doc_id")
-        .agg(sigAggCols.head, sigAggCols.tail: _*)
-        .write.format("noop").mode("overwrite").save())
-    // every stage below is the SHIPPED builder (ADVICE r17): the routed
-    // key and this profiler call the same private helpers, so SCALE.md
-    // cost attributions are measurements of the real plan.
-    val (reps, mem, _) = jaccardRepGroups(sorted)
-    val nReps = timed("rep_collapse")(reps.count())
-    println(s"[jacc] distinct_token_sets $nReps")
-    timed("rep_members")(mem.write.format("noop").mode("overwrite").save())
-    val repCands = jaccardLshCands(spark, reps, gen, bands, rows)
-    val nRep = timed("rep_lsh_candidates")(repCands.count())
-    println(s"[jacc] rep_lsh_candidate_pairs $nRep")
-    timed("rep_verify")(jaccardVerifyPairs(spark, reps, repCands, thr)
-      .write.format("noop").mode("overwrite").save())
-    val lshCands = jaccardLshCands(spark, sorted, gen, bands, rows)
-    val nLsh = timed("lsh_candidates_uncollapsed")(lshCands.count())
-    println(s"[jacc] lsh_candidate_pairs $nLsh")
-    timed("lsh_verify_uncollapsed")(jaccardVerify(spark, sorted, lshCands, thr)
-      .write.format("noop").mode("overwrite").save())
-    val exCands = jaccardExactCands(keyed, gen)
-    val nEx = timed("exact_candidates")(exCands.count())
-    println(s"[jacc] exact_candidate_pairs $nEx")
-    timed("exact_verify")(jaccardVerify(spark, sorted, exCands, thr)
-      .write.format("noop").mode("overwrite").save())
   }
 
   /** The oracle both jaccard lanes share: the SAME exact pair relation,
@@ -901,7 +843,7 @@ object TextQueries {
     // (never all-pairs), and the two shingle-set lookups are SHUFFLE hash
     // joins on doc_id — the candidate-pair relation grows with corpus
     // size and near-dup density, so it is never broadcast (collecting it
-    // to the driver is the OOM scale-killer VERDICT r02 flagged).
+    // to the driver is an OOM at scale).
     "dedup_minhash_verified" -> QueryDef(
       (spark, dir) => {
         val (_, pairs) = verifiedShared(spark, dir)
@@ -1157,7 +1099,7 @@ object TextQueries {
              |GROUP BY h.lang ORDER BY h.lang""".stripMargin.replace("\n", " ")),
       tier = "E"),
 
-    // The END-TO-END curation pipeline (VERDICT r10 next-round #5) — the
+    // The END-TO-END curation pipeline — the
     // operator a 100 TB training-data user actually runs: the per-key
     // stages above composed into ONE dataflow, each applied to the
     // SURVIVORS of the previous one, emitting the per-stage survivor
@@ -1556,7 +1498,7 @@ object TextQueries {
     // pipeline.
     "dedup_incremental" -> QueryDef(
       (spark, dir) => if (java.lang.Boolean.getBoolean("graft.shared.pipeline")) {
-        // Harness sweeps (VERDICT r07 #3): the delta's signatures are the
+        // Harness sweeps: the delta's signatures are the
         // SAME computation the shared pipeline already materialized —
         // only the PAIRING differs. is_new ≡ doc_id >= 250, and the
         // shared candidate relation is band-identical (same shingles,
@@ -2006,7 +1948,7 @@ object TextQueries {
              |FROM documents ORDER BY doc_id LIMIT 300""".stripMargin.replace("\n", " ")),
       tier = "E"),
 
-    // Paragraph-level dedup — the CCNet/C4 operation (VERDICT r06 #4):
+    // Paragraph-level dedup — the CCNet/C4 operation:
     // drop duplicate paragraphs ACROSS the corpus, keep the first
     // occurrence (min (doc_id, pos)), report per-language kept fraction.
     // This corpus is newline-free, so "paragraph" = each run of 10 words
@@ -2052,7 +1994,7 @@ object TextQueries {
               |ORDER BY tot.lang""".stripMargin.replace("\n", " ")),
       tier = "E"),
 
-    // Exact substring-level dedup (VERDICT r07 #2) — the Lee et al.
+    // Exact substring-level dedup — the Lee et al.
     // "Deduplicating Training Data Makes Language Models Better"
     // operation: find runs of >= K tokens that occur verbatim in more
     // than one document. Winnowing (text_winnowing) SAMPLES shared runs;
@@ -2143,7 +2085,7 @@ object TextQueries {
               |ORDER BY docs.doc_id""".stripMargin.replace("\n", " ")),
       tier = "E"),
 
-    // Gopher-style quality-rule bundle (VERDICT r06 #5) — the standard
+    // Gopher-style quality-rule bundle — the standard
     // pretraining filter set alongside repetition/entropy: word count in
     // [20, 100k], mean word length in [3, 10], ≥80% purely-alphabetic
     // words, ≥2 stopwords. Every per-doc signal is INTEGER arithmetic
@@ -2189,7 +2131,7 @@ object TextQueries {
               |FROM s GROUP BY source ORDER BY source""".stripMargin.replace("\n", " ")),
       tier = "E"),
 
-    // fastText-style learned quality classifier (VERDICT r07 #4) — the
+    // fastText-style learned quality classifier — the
     // standard LEARNED filter beside the rule-based Gopher bundle: score
     // = dot(hashed-ngram feature vector, weight vector) + sign decision.
     // Features are a 32-bucket hashed bag of words (count/n per bucket —
@@ -2807,8 +2749,7 @@ object TextQueries {
         // similarity join and belongs on the approximate lane
         // (dedup_minhash_lsh).
         //
-        // ROUTING GUARD (VERDICT r13 #2 — the SCALE.md policy, now
-        // executable): before the pair join launches, measure the exact
+        // ROUTING GUARD (the SCALE.md policy, as code): before the pair join launches, measure the exact
         // candidate load the prefix index implies — Σ_band c·(c−1)/2,
         // i.e. the join's pre-distinct output — and REFUSE to run once it
         // exceeds `graft.jaccard.maxPairsPerDoc` candidate pairs per
@@ -2826,8 +2767,8 @@ object TextQueries {
         // `core.planOnly` (PlanAudit --explain scopes it): the guard's
         // two probe jobs are EAGER Spark jobs — a consumer that only
         // wants the logical/physical plan must not trigger real
-        // execution (ADVICE r14). Per-call-stack DynamicVariable, not a
-        // JVM-wide property (ADVICE r15): a concurrent thread building
+        // execution. Per-call-stack DynamicVariable, not a
+        // JVM-wide property: a concurrent thread building
         // this query still runs its guard. Execution paths
         // (Verify/Bench/tests) never set it, so the guard always runs
         // before a real pair join.
@@ -2835,18 +2776,13 @@ object TextQueries {
           val (docs, load, maxc) = jaccardLoadProbe(sorted, keyed)
           // hot = pairs each member of the HOTTEST band faces: the
           // corpus-average alone lets one pathological band hide inside
-          // an otherwise sparse corpus (ADVICE r14) — its member docs
+          // an otherwise sparse corpus — its member docs
           // still each face c−1 exact comparisons.
           val (avg, hot) = (load / docs, math.max(0L, maxc - 1))
-          // telemetry gauge (VERDICT r14 #6): how close the corpus sits
-          // to the routing threshold, visible on the HEALTHY path too.
-          // Emitted BOTH as the driver-local property (the sandbox
-          // harness surface) and as named Spark accumulators (VERDICT
-          // r15 #7) — on a real cluster the property is invisible to
-          // operators; the accumulators ride the listener bus / status
-          // APIs the UI reads.
-          System.setProperty("graft.jaccard.lastDensity",
-            s"avg=$avg hot=$hot docs=$docs candidates=$load cap=$capPerDoc")
+          // telemetry: how close the corpus sits to the routing
+          // threshold, visible on the HEALTHY path too. Named Spark
+          // accumulators ride the listener bus and status APIs, so an
+          // operator sees them on a real cluster.
           setGauge(spark, "graft.jaccard.density.avg", avg)
           setGauge(spark, "graft.jaccard.density.hot", hot)
           setGauge(spark, "graft.jaccard.density.docs", docs)
@@ -2872,7 +2808,7 @@ object TextQueries {
       tier = "E"),
 
     // The ROUTED outcome of the jaccard guard, hash-matched end-to-end
-    // (VERDICT r16 #5): dedup_jaccard_prefix's guard either runs exact
+    //: dedup_jaccard_prefix's guard either runs exact
     // or REFUSES — the production decision path's LSH branch had no
     // oracle row. This key declares the full routed pipeline: measure
     // the prefix-band density (the SAME [[jaccardLoadProbe]] the exact
@@ -2889,11 +2825,11 @@ object TextQueries {
     // brute-force SQL as the exact lane — the hash gate proves the
     // routed lane loses nothing on the declared corpora.
     //
-    // Scale shape (round 18 — representative collapse + saturation
-    // short-circuit, VERDICT r17 #3): the LSH branch first collapses
+    // Scale shape (representative collapse + saturation
+    // short-circuit): the LSH branch first collapses
     // docs with IDENTICAL token sets to one representative (one
     // groupBy on the canonical token array — exact, no digest). Two
-    // measured effects at 100× (SCALE.md round-18 stage profile):
+    // measured effects at 100× (SCALE.md stage profile):
     // (1) the collapse itself is MODEST on the ScaleGen corpus — its
     // dup clusters are near-dups, not exact dups, so 500k docs yield
     // 426.6k reps and candidates drop only 102M → 64.6M; (2) the
@@ -2942,10 +2878,9 @@ object TextQueries {
           setGauge(spark, "graft.jaccard.routed.budget", budget)
           val d = avg > budget || hot > budget
           // The decision rides the named-accumulator gauge path like
-          // every other routing signal (VERDICT r17 #5 — the old
-          // System.setProperty was JVM-global mutable state concurrent
-          // sessions would clobber, and invisible to cluster operators
-          // anyway): 1 = the LSH branch fired, 0 = exact.
+          // every other routing signal (a JVM-global property would be
+          // mutable state concurrent sessions clobber, and invisible to
+          // cluster operators): 1 = the LSH branch fired, 0 = exact.
           setGauge(spark, "graft.jaccard.routed.decision", if (d) 1L else 0L)
           d
         }
@@ -2960,8 +2895,7 @@ object TextQueries {
           // Distinct arrays differ as sets, so a cross (non-identical)
           // pair has ja ≤ 1 − 1/|union|, and pround to 4 places lifts
           // that to 1.0 only when ja ≥ 1 − 0.5·10⁻⁴, i.e. |union| ≥
-          // 20000 (ADVICE r18 — the old "≤ 0.9975" bound was wrong:
-          // that needs |union| ≤ 400). Since |union| ≤ 2·max_n, the
+          // 20000 (not ja ≤ 0.9975, which would need |union| ≤ 400). Since |union| ≤ 2·max_n, the
           // short-circuit below ENFORCES 2·max_n < 20000 rather than
           // assuming it: inside that guard the 1.0 tier is exactly the
           // intra pairs and every intra pair outranks every cross pair
@@ -2971,15 +2905,14 @@ object TextQueries {
             .filter(col("m1") < col("m2"))
             .select(col("m1").as("d1"), col("m2").as("d2"),
               lit(1.0).cast("double").as("ja"))
-          // Limit-aware saturation short-circuit (VERDICT r17 #3): when
+          // Limit-aware saturation short-circuit: when
           // the intra-group pair count alone covers the declared top-300
           // — Σ g·(g−1)/2 over the persisted groups, one cheap aggregate
           // — the whole answer is ja = 1.0 exact-duplicate pairs, and
           // enumerating near-duplicate candidates cannot contribute a
           // row. On the template-heavy corpus shape this lane routes on,
           // that is the common case (the 100× twin's top-300 saturates:
-          // candidates ≈ the ~10⁸ true near-dup pairs, SCALE.md
-          // round-18), and the lane degenerates to the LINEAR group
+          // candidates ≈ the ~10⁸ true near-dup pairs, SCALE.md), and the lane degenerates to the LINEAR group
           // relation: no banding, no candidate join, no verify. At the
           // declared oracle SFs where the head still holds sub-1.0 pairs
           // (97/300 ones at sf0.001, 115/300 at sf0.01), the count stays
@@ -2988,7 +2921,7 @@ object TextQueries {
           // branch this key exists to pin. planOnly declares the full
           // branch (the probe and the count are eager actions). The
           // probe is ONE aggregate over the persisted group relation
-          // (ADVICE r18 — no re-shuffle of the exploded members), and
+          // (no re-shuffle of the exploded members), and
           // it also reads max distinct-token count to enforce the
           // soundness guard: past 2·max_n ≥ 20000 a cross pair COULD
           // pround to 1.0 and displace intra pairs from the top-300,

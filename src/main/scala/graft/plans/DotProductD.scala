@@ -101,15 +101,24 @@ object DotProductD {
 }
 
 /** `SparkSessionExtensions` installer — the production path:
-  * `SparkSession.builder.withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.plans.GraftExtensions`.
+  * `withExtensions(new GraftExtensions)` on a session builder, or
+  * `spark.sql.extensions=graft.plans.GraftExtensions`. Sessions built
+  * without it (the harness, the perfbench board) install each function
+  * on demand through its object's `register`.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    e.injectFunction((DotProductD.ident, DotProductD.info, DotProductD.builder))
-    e.injectFunction((SimHash64D.ident, SimHash64D.info, SimHash64D.builder))
-    e.injectFunction((SortedIntersectD.ident, SortedIntersectD.info, SortedIntersectD.builder))
-    e.injectFunction((GroupArrayN.ident, GroupArrayN.info, GroupArrayN.builder))
-    e.injectFunction((RingArgmaxCid.ident, RingArgmaxCid.info, RingArgmaxCid.builder))
-  }
+  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach(e.injectFunction)
+}
+
+object GraftExtensions {
+  /** Every custom expression as its `(ident, info, builder)` triple. */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    (DotProductD.ident, DotProductD.info, DotProductD.builder),
+    (SimHash64D.ident, SimHash64D.info, SimHash64D.builder),
+    (SortedIntersectD.ident, SortedIntersectD.info, SortedIntersectD.builder),
+    (GroupArrayN.ident, GroupArrayN.info, GroupArrayN.builder),
+    (RingArgmaxCid.ident, RingArgmaxCid.info, RingArgmaxCid.builder),
+    (MinHash64D.ident, MinHash64D.info, MinHash64D.builder),
+    (UniqUpTo.ident, UniqUpTo.info, UniqUpTo.builder))
 }

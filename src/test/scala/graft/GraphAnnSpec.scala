@@ -92,9 +92,8 @@ class GraphAnnSpec extends SparkSpec {
 
   test("declared path IS the parameterized build at the oracle ring (VERDICT r13 #1)") {
     import graft.operators.SimilarityQueries
-    // the assignment the declared queries consume (prop pinned to
-    // "oracle" JVM-wide by SparkSpec) must be bit-equal to
-    // ivfAssignedAt(OracleRing) — the knob has ONE implementation
+    // the assignment the declared queries consume must be bit-equal to
+    // ivfAssignedAt(OracleRing) — the ring has ONE implementation
     val at = SimilarityQueries.ivfAssignedAt(spark, sf001, SimilarityQueries.OracleRing)
       .select("vec_id", "cid")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -105,6 +104,26 @@ class GraphAnnSpec extends SparkSpec {
     val atCells = at.groupBy(_._2).map { case (cid, m) => cid -> m.size.toLong }
     assert(atCells === declaredCells,
       "declared cell populations diverge from the parameterized build at the oracle point")
+  }
+
+  test("declared keys ignore a stray graft.ann.ring property") {
+    // the declared ring is a constant of the query, not a process
+    // switch: a JVM-global property left behind by some other caller
+    // must not move the rows the oracle grades
+    def rows(key: String): Seq[Seq[Any]] = {
+      val out = Registry.all.toMap.apply(key).fn(spark, sf001).collect().map(_.toSeq).toSeq
+      graft.core.releaseQueryCaches(spark)
+      out
+    }
+    val keys = Seq("sim_ivf_nprobe", "sim_graph_ann")
+    val clean = keys.map(rows)
+    System.setProperty("graft.ann.ring", "sqrt")
+    try {
+      keys.zip(clean).foreach { case (k, want) =>
+        assert(want.nonEmpty, s"$k must produce rows")
+        assert(rows(k) === want, s"$k moved under graft.ann.ring=sqrt")
+      }
+    } finally sys.props -= "graft.ann.ring"
   }
 
   test("spread ring (the √N production default) partitions the corpus and bounds degree") {

@@ -2,15 +2,24 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** The dedup_jaccard_prefix routing guard (VERDICT r13 #2): "corpus²
-  * loads belong on the LSH lane" as executable code, not prose. The
-  * guard measures the exact candidate load the prefix index implies
-  * (Σ_band c·(c−1)/2 per document) BEFORE the pair join launches and
-  * refuses past `graft.jaccard.maxPairsPerDoc` (default 4096).
+/** The dedup_jaccard_prefix routing guard: "corpus² loads belong on
+  * the LSH lane" as executable code, not prose. The guard measures the
+  * exact candidate load the prefix index implies (Σ_band c·(c−1)/2 per
+  * document) BEFORE the pair join launches and refuses past
+  * `graft.jaccard.maxPairsPerDoc` (default 4096). Each measurement is
+  * published on the `graft.jaccard.density.*` gauges.
   */
 class JaccardGuardSpec extends SparkSpec {
 
   private val fn = Registry.all.toMap.apply("dedup_jaccard_prefix").fn
+
+  private val densityGauges = Seq("avg", "hot", "docs", "candidates", "cap")
+  /** A value no measurement produces: a gauge still holding it was not set. */
+  private val Unset = -1L
+  private def resetDensity(): Unit =
+    densityGauges.foreach(n => graft.core.setGauge(spark, s"graft.jaccard.density.$n", Unset))
+  private def density(n: String): Long =
+    graft.core.gauge(spark, s"graft.jaccard.density.$n").value
 
   /** A boilerplate-degenerate corpus: `docs` identical documents of
     * `toks` distinct tokens each. Every prefix band is shared by every
@@ -31,7 +40,7 @@ class JaccardGuardSpec extends SparkSpec {
   test("guard trips on a dense corpus with an explicit route-to-LSH error") {
     // 400 identical docs × 300 tokens: plen = 300 − ⌈300·0.89⌉ + 1 = 34
     // shared bands → (399/2)·34 ≈ 6.8k candidate pairs/doc > 4096
-    sys.props -= "graft.jaccard.lastDensity"
+    resetDensity()
     val dir = denseFixture(docs = 400, toks = 300)
     val e = intercept[IllegalStateException] { fn(spark, dir) }
     graft.core.releaseQueryCaches(spark)
@@ -39,37 +48,29 @@ class JaccardGuardSpec extends SparkSpec {
       s"refusal must name the approximate lane: ${e.getMessage}")
     assert(e.getMessage.contains("graft.jaccard.maxPairsPerDoc"),
       s"refusal must name the budget knob: ${e.getMessage}")
-    // telemetry gauge set even on the refused path (VERDICT r14 #6)
-    val g = sys.props.get("graft.jaccard.lastDensity")
-    assert(g.exists(_.contains("avg=")) && g.exists(_.contains("hot=")),
-      s"density gauge must record the refused measurement: $g")
-    // and the cluster-visible surface (VERDICT r15 #7): the named
-    // accumulators carry the same refused measurement
-    assert(graft.core.gauge(spark, "graft.jaccard.density.avg").value > 4096,
-      "accumulator gauge must record the over-budget density")
-    assert(graft.core.gauge(spark, "graft.jaccard.density.cap").value === 4096L)
+    // the gauges record the measurement even on the refused path
+    assert(density("avg") > 4096, "avg gauge must record the over-budget density")
+    assert(density("hot") != Unset && density("hot") >= 0,
+      s"hot gauge must record the refused measurement: ${density("hot")}")
+    assert(density("docs") === 400L)
+    assert(density("cap") === 4096L)
   }
 
   test("guard stays silent on the declared corpus and leaves results intact") {
     // sf0.001 measures ~10² candidate pairs/doc — far inside the budget;
     // the declared key must build and produce its oracle-checked shape
-    sys.props -= "graft.jaccard.lastDensity"
+    resetDensity()
     val out = fn(spark, sf001).select("d1", "d2", "ja").collect()
     graft.core.releaseQueryCaches(spark)
     assert(out.nonEmpty, "declared query must still produce pairs")
     assert(out.forall(_.getDouble(2) >= 0.9))
     // telemetry on the HEALTHY path: operators see how close the corpus
     // sits to the routing threshold before it ever trips
-    val g = sys.props.get("graft.jaccard.lastDensity")
-    assert(g.exists(_.contains("avg=")) && g.exists(_.contains("cap=4096")),
-      s"density gauge must be readable on the healthy path: $g")
-    val avg = g.get.split(" ").find(_.startsWith("avg="))
-      .map(_.stripPrefix("avg=").toLong).get
+    assert(density("cap") === 4096L, "cap gauge must be readable on the healthy path")
+    val avg = density("avg")
     assert(avg >= 0 && avg <= 4096, s"declared corpus density out of range: $avg")
-    // the named accumulators mirror the healthy-path measurement — the
-    // surface a real cluster operator reads (VERDICT r15 #7)
-    assert(graft.core.gauge(spark, "graft.jaccard.density.avg").value === avg)
-    assert(graft.core.gauge(spark, "graft.jaccard.density.docs").value > 0)
+    assert(density("hot") >= 0 && density("candidates") >= 0)
+    assert(density("docs") > 0)
   }
 
   test("hot-band gate: one boilerplate band trips the guard past a sparse average") {
@@ -77,7 +78,7 @@ class JaccardGuardSpec extends SparkSpec {
     // comparisons) diluted by 1300 all-unique docs. Under cap=50 the
     // corpus AVERAGE stays inside budget (~44 pairs/doc) while the
     // hottest band's per-member load (59) exceeds it — the single-hot-
-    // band blind spot of an average-only gate (ADVICE r14).
+    // band blind spot of an average-only gate.
     val dir = java.nio.file.Files.createTempDirectory("jaccard_hot").toString
     val hotText = (0 until 300).map(i => s"tok$i").mkString(" ")
     import spark.implicits._
@@ -95,24 +96,22 @@ class JaccardGuardSpec extends SparkSpec {
       assert(e.getMessage.contains("hottest prefix band"),
         s"refusal must name the hot-band gate: ${e.getMessage}")
       assert(e.getMessage.contains("dedup_minhash_lsh"))
-      val g = sys.props.get("graft.jaccard.lastDensity").get
-      val avg = g.split(" ").find(_.startsWith("avg=")).get.stripPrefix("avg=").toLong
-      val hotG = g.split(" ").find(_.startsWith("hot=")).get.stripPrefix("hot=").toLong
-      assert(avg <= 50, s"fixture must keep the average inside budget: $g")
-      assert(hotG === 59, s"hottest band load must be the 60-doc clique: $g")
+      val (avg, hotG) = (density("avg"), density("hot"))
+      assert(avg >= 0 && avg <= 50, s"fixture must keep the average inside budget: $avg")
+      assert(hotG === 59, s"hottest band load must be the 60-doc clique: $hotG")
     } finally sys.props -= "graft.jaccard.maxPairsPerDoc"
   }
 
   test("core.planOnly suppresses the guard's eager probe jobs, scoped per call stack") {
     // PlanAudit --explain builds the DataFrame only to print its plan;
     // the guard must not launch real Spark jobs on that path. Proxy: the
-    // gauge (set by the probe) stays unset. The flag is a
-    // DynamicVariable (ADVICE r15): it cannot leak past withValue, and a
-    // concurrent thread sees its own (false) binding.
-    sys.props -= "graft.jaccard.lastDensity"
+    // gauges (set by the probe) keep a sentinel. The flag is a
+    // DynamicVariable: it cannot leak past withValue, and a concurrent
+    // thread sees its own (false) binding.
+    resetDensity()
     // an INDEPENDENT thread (created OUTSIDE the binding, like another
-    // harness worker already running) must see its own false binding —
-    // the process-global property failed exactly this (ADVICE r15).
+    // harness worker already running) must see its own false binding,
+    // which a process-global property would not give it.
     // (A thread spawned INSIDE the scope inherits it — DynamicVariable
     // is an InheritableThreadLocal — which is the right call-stack
     // semantic for helper threads the audited build itself forks.)
@@ -122,8 +121,9 @@ class JaccardGuardSpec extends SparkSpec {
       graft.core.planOnly.withValue(true) {
         val df = fn(spark, sf001) // builds the full plan, no guard jobs
         assert(df.schema.fieldNames.sameElements(Array("d1", "d2", "ja")))
-        assert(sys.props.get("graft.jaccard.lastDensity").isEmpty,
-          "plan-only build must not execute the density probe")
+        densityGauges.foreach { n =>
+          assert(density(n) === Unset, s"plan-only build must not execute the density probe ($n)")
+        }
         val other = pool.submit(new java.util.concurrent.Callable[Boolean] {
           def call(): Boolean = graft.core.planOnly.value
         }).get(5, java.util.concurrent.TimeUnit.SECONDS)
@@ -157,14 +157,14 @@ class JaccardGuardSpec extends SparkSpec {
   }
 
   test("routed twin: the decision fires the LSH branch on the declared corpus; both branches agree") {
-    // VERDICT r16 #5 — dedup_jaccard_routed IS the routed outcome: its
+    // dedup_jaccard_routed IS the routed outcome: its
     // budget (64 pairs/doc) sits below the declared corpora's measured
     // density, so the guard decision must come out "lsh" — and the LSH
     // candidates + exact verify must land on the exact lane's rows.
     val routedFn = Registry.all.toMap.apply("dedup_jaccard_routed").fn
     val viaLsh = routedFn(spark, sf001).collect().map(_.toSeq).toSeq
     graft.core.releaseQueryCaches(spark)
-    // the decision is a named-accumulator gauge (VERDICT r17 #5 — no
+    // the decision is a named-accumulator gauge (no
     // JVM-global property): 1 = LSH branch, 0 = exact
     assert(graft.core.gauge(spark, "graft.jaccard.routed.decision").value === 1L,
       "declared corpus density must route the twin onto the LSH branch")
@@ -213,7 +213,7 @@ class JaccardGuardSpec extends SparkSpec {
   }
 
   test("saturation short-circuit refuses huge-token corpora where pround could lift a cross pair to 1.0") {
-    // ADVICE r18: pround(ja, 4) rounds a NON-identical pair up to 1.0
+    // pround(ja, 4) rounds a NON-identical pair up to 1.0
     // once |union| ≥ 20000 (1 − 1/20000 = 0.99995 rounds to 1.0), so a
     // cross pair could displace intra pairs from the top-300 and the
     // intra-only short-circuit would be unsound. The guard is 2·max_n <

@@ -11,24 +11,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    // Declared-query suites grade against oracle-pinned values, so the
-    // test JVM pins the declared centroid ring ONCE before any query
-    // runs (the library default is the √N production ring). Knob-
-    // specific legs bypass the property via the explicit-Ring APIs
-    // (ivfAssignedAt/graphAnnEdges), so this stays constant JVM-wide —
-    // no property races across parallel suites.
-    System.setProperty("graft.ann.ring", "oracle")
-    mkSession
-  }
-
-  private def mkSession: SparkSession = SparkSession.builder()
+  lazy val session: SparkSession = SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
-    // same setting as the Bench/Verify harness sessions (measured r15:
-    // pagerank's runtime shuffle drops 49.1->20.0 MB / 4.35M->2.02M
-    // records at sf0.1 with cached-plan partitioning preserved).
+    // same setting as the harness session (Bench.session): pagerank's
+    // runtime shuffle at sf0.1 drops 49.1->20.0 MB / 4.35M->2.02M
+    // records with cached-plan partitioning preserved.
     .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false")
     .config("spark.ui.enabled", "false")
     .getOrCreate()

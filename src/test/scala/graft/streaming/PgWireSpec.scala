@@ -781,6 +781,9 @@ class PgWireSpec extends SparkSpec {
           password = Some("s3cret"), authMethod = "scram").run(0L))
       assert(e.getMessage.contains("source_auth=scram"),
         s"an authentication-skipping peer must be refused by name: ${e.getMessage}")
+      // the client can refuse on 'Z' before the stub thread records that
+      // it wrote its last frame: wait for the stub before reading the flag
+      t.join(5000)
       assert(served, "stub must have completed its frame sequence")
     } finally { server.close(); t.join(5000) }
   }
