@@ -453,9 +453,9 @@ object Bench {
     *    SPARK_GRAFT_SHUFFLE_PARTITIONS pins them for a sweep;
     *  - the memory-regime AQE coalesce wiring ([[aqeScaleConfigs]]);
     *  - UTC session time, the zone the DuckDB oracle compares in;
-    *  - `graft.shared.pipeline=true`: the minhash and graph consumers
-    *    reuse one materialized build per (session, sf), values
-    *    unchanged (TextQueries.verifiedSharedAll, JoinQueries).
+    *  - `spark.graft.shared.pipeline=true`: the minhash, graph and
+    *    index consumers reuse one materialized build per (session,
+    *    dataset), values unchanged ([[graft.core.shared]]).
     */
   def session(sfDir: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
@@ -463,11 +463,11 @@ object Bench {
       .getOrElse(autoShufflePartitions(sfDir, cpus))
     println(s"[session] local[$cpus] shuffle_partitions=$shufflePartitions " +
       (if (sys.env.contains("SPARK_GRAFT_SHUFFLE_PARTITIONS")) "(env)" else "(auto)"))
-    System.setProperty("graft.shared.pipeline", "true")
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
+      .config(graft.core.SharedPipeline.key, "true")
       // Iterative consumers join cached relations on their cached
       // layout: at the default (true) AQE may repartition a cached plan,
       // and every consumer re-exchanges it (graph_pagerank's runtime

@@ -102,8 +102,8 @@ object MinHash {
   /** [[simhash64]] through the single-pass codegen Expression
     * ([[graft.plans.SimHash64D]]): one primitive loop per document
     * instead of 64 array walks — bit-identical fingerprints. Needs
-    * `SimHash64D.register(spark)` on the session (the same contract as
-    * [[Similarity.fastDot]]).
+    * `GraftExtensions.install(spark)` on the session (the same contract
+    * as [[Similarity.fastDot]]).
     */
   def simhash64Fast(text: Column): Column =
     call_function("graft_simhash64", transform(split(text, " "), w => xxhash64(w)))
@@ -129,7 +129,7 @@ object MinHash {
                    maxBandSize: Int = Int.MaxValue): DataFrame = {
     val bits = 16
     val mask = (1L << bits) - 1
-    graft.plans.SimHash64D.register(docs.sparkSession)
+    graft.plans.GraftExtensions.install(docs.sparkSession)
     val d = docs.select(col(idCol).as("id"), simhash64Fast(col(textCol)).as("sh"))
     // shiftrightunsigned: band 3 covers the sign bit — an arithmetic shift
     // would sign-extend and leak bit 63 into every high band key.

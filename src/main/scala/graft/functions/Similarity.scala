@@ -47,7 +47,7 @@ object Similarity {
     * row_number per probe. Exact; O(|probes| · |candidates|).
     */
   def bruteForceTopK(probes: DataFrame, candidates: DataFrame, k: Int): DataFrame = {
-    graft.plans.DotProductD.register(probes.sparkSession)
+    graft.plans.GraftExtensions.install(probes.sparkSession)
     val w = Window.partitionBy("probe_id").orderBy(col("sim").desc, col("cand_id"))
     broadcast(probes.select(col("vec_id").as("probe_id"), col("embedding").as("pv")))
       .join(candidates.select(col("vec_id").as("cand_id"), col("embedding").as("cv")),
@@ -64,7 +64,7 @@ object Similarity {
     * with centroids + argmin distance instead of sign bits.
     */
   def lshBuckets(vectors: DataFrame, hyperplanes: DataFrame): DataFrame = {
-    graft.plans.DotProductD.register(vectors.sparkSession)
+    graft.plans.GraftExtensions.install(vectors.sparkSession)
     vectors
       .crossJoin(broadcast(hyperplanes.select(col("vec_id").as("hb"), col("embedding").as("hv"))))
       .withColumn("bit",

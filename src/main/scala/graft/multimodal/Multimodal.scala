@@ -221,7 +221,7 @@ object Multimodal {
                  probeMax: Long, k: Int): DataFrame = {
     import graft.core._
     import org.apache.spark.sql.expressions.Window
-    graft.plans.DotProductD.register(spark)
+    graft.plans.GraftExtensions.install(spark)
     def gdot(a: String, b: String) = expr(s"graft_dot($a, $b)")
     val probes = feats.filter(col("asset_id") < probeMax)
       .select(col("asset_id").as("probe"), col("features").as("pv"),

@@ -652,7 +652,6 @@ object AggQueries {
         // (first 10 event types by (ts, event_id)) bit-for-bit; the
         // result is partition-order-independent because "N smallest by a
         // unique key" is a pure function of the input set.
-        graft.plans.GroupArrayN.register(spark)
         t(spark, dir, "events")
           .groupBy("user_id")
           .agg(array_join(
@@ -1088,7 +1087,6 @@ object AggQueries {
     // least(count distinct, N+1) and DeterminismSpec re-partitions it).
     "agg_uniq_upto" -> QueryDef(
       (spark, dir) => {
-        graft.plans.UniqUpTo.register(spark)
         t(spark, dir, "events")
           .groupBy("event_type")
           .agg(expr("graft_uniq_upto(user_id, 10)").as("users_upto10"),

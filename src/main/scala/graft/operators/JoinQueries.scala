@@ -27,12 +27,12 @@ object JoinQueries {
   // times (bench warm-up + 2 measured passes). They walk DIFFERENT
   // graphs — pagerank the customer–supplier bipartite graph, triangle
   // count the part co-purchase graph — so what they share is the
-  // amortization: under `graft.shared.pipeline` (the harness session
-  // sets it) each build runs once per (session, partitions, sf) and is
-  // localCheckpoint'ed for the session's lifetime, bypassing the
-  // per-query cache registry. Un-shared (ScalaTest, PlanShapeSpec)
-  // every query builds its own scopedPersist plan — values identical by
-  // construction, the build IS the same expression chain.
+  // amortization: under `spark.graft.shared.pipeline` (the harness
+  // session sets it) each build is one session build
+  // ([[graft.core.shared]]), localCheckpoint'ed for the session's
+  // lifetime. Un-shared (ScalaTest, PlanShapeSpec) every query builds
+  // its own scopedPersist plan — values identical by construction, the
+  // build IS the same expression chain.
   //
   // The checkpoint carrier holds deserialized row blocks, the cheapest
   // to re-scan: it won the warm sweep at every scale measured (sf0.1
@@ -43,9 +43,6 @@ object JoinQueries {
   // scopedPersist path) and, on a multi-node cluster where the avoided
   // exchanges cross the network, would be the better shared carrier.
   // ------------------------------------------------------------------
-
-  private val graphCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String, String), (DataFrame, DataFrame)]
 
   /** Pagerank's co-partitioned relations: (deg, edgesDeg). */
   private def pagerankGraph(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
@@ -64,13 +61,10 @@ object JoinQueries {
         .select(col("src"), col("dst"), col("deg")))
       (deg, edgesDeg)
     }
-    if (!java.lang.Boolean.getBoolean("graft.shared.pipeline")) build(scopedPersist)
-    else graphCache.synchronized {
-      val key = (spark, dir + "#pr", spark.conf.get("spark.sql.shuffle.partitions", ""))
-      graphCache.getOrElseUpdate(key, {
-        val (deg, edgesDeg) = build(identity)
-        (deg.localCheckpoint(true), edgesDeg.localCheckpoint(true))
-      })
+    if (!setting(spark, SharedPipeline)) build(scopedPersist)
+    else shared(spark, dir, "graph.pagerank") {
+      val (deg, edgesDeg) = build(identity)
+      (deg.localCheckpoint(true), edgesDeg.localCheckpoint(true))
     }
   }
 
@@ -92,13 +86,8 @@ object JoinQueries {
         .filter(expr(keep))
         .distinct()
     }
-    if (!java.lang.Boolean.getBoolean("graft.shared.pipeline")) scopedPersist(build)
-    else graphCache.synchronized {
-      val key = (spark, dir + "#tri", spark.conf.get("spark.sql.shuffle.partitions", ""))
-      graphCache.getOrElseUpdate(key, {
-        val e = build.localCheckpoint(true); (e, e)
-      })._1
-    }
+    if (!setting(spark, SharedPipeline)) scopedPersist(build)
+    else shared(spark, dir, "graph.triangle")(build.localCheckpoint(true))
   }
 
   val defs: Seq[(String, QueryDef)] = Seq(
@@ -520,7 +509,7 @@ object JoinQueries {
       (spark, dir) => {
         import org.apache.spark.sql.types.DecimalType
         // graph build in [[pagerankGraph]] — shared across harness runs
-        // under graft.shared.pipeline, inline scopedPersist otherwise
+        // under spark.graft.shared.pipeline, inline scopedPersist otherwise
         val (deg, edgesDeg) = pagerankGraph(spark, dir)
         var ranks = deg.select(col("src").as("id"), lit(1.0).as("r"))
         for (_ <- 1 to 3) {
@@ -671,7 +660,7 @@ object JoinQueries {
     "graph_triangle_count" -> QueryDef(
       (spark, dir) => {
         // sampled edge build in [[triangleEdges]] — shared across harness
-        // runs under graft.shared.pipeline, inline scopedPersist otherwise
+        // runs under spark.graft.shared.pipeline, inline scopedPersist otherwise
         val edges = triangleEdges(spark, dir)
         val wedges = edges.as("e1")
           .join(edges.as("e2"), col("e1.y") === col("e2.x"))

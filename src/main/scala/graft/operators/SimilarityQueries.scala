@@ -33,78 +33,27 @@ object SimilarityQueries {
   /** Portably-rounded cosine for the oracle (core.proundSql semantics). */
   private val cosR = proundSql(cosDuck, 6)
 
-  private def vecs(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.DotProductD.register(spark)
+  private def vecs(spark: SparkSession, dir: String): DataFrame =
     t(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
-  }
 
   // ------------------------------------------------------------------
-  // Shared IVF/PQ index builds (the graph-build precedent): the IVF
-  // centroid assignment is built IDENTICALLY by sim_ivf_topk,
-  // sim_ivf_nprobe, and dedup_semantic (and sim_ann_rerank derives its
-  // cell map from it), and the PQ code table identically by sim_pq_adc
-  // and sim_ann_rerank — each a full corpus pass re-run per query per
-  // harness pass. Under `graft.shared.pipeline` each builds once per
-  // (session, partitions, sf) and is localCheckpoint'ed
-  // session-lifetime; un-shared every query keeps its inline
+  // Shared IVF/PQ index builds: the IVF centroid assignment is built
+  // IDENTICALLY by sim_ivf_topk, sim_ivf_nprobe and dedup_semantic (and
+  // sim_ann_rerank derives its cell map from it), the PQ code table
+  // identically by sim_pq_adc and sim_ann_rerank — each a full corpus
+  // pass. Under `spark.graft.shared.pipeline` each is one session build
+  // ([[graft.core.shared]]); unset, every query keeps its inline
   // scopedPersist plan. Values identical by construction — the build IS
-  // the expression chain the queries previously inlined.
+  // the expression chain the queries inline.
   // ------------------------------------------------------------------
-
-  private final case class SimKey(spark: SparkSession, dir: String,
-                                  fp: String, key: String, parts: String)
-  private val simCache =
-    scala.collection.mutable.Map.empty[SimKey, DataFrame]
-
-  /** Best-effort release of a localCheckpoint'ed DataFrame's blocks: the
-    * checkpointed RDD sits behind the LogicalRDD the checkpoint wrapped.
-    * A miss (plan shape change across Spark versions) just leaves the
-    * old contract — blocks live for the JVM lifetime. */
-  private def freeCheckpoint(df: DataFrame): Unit =
-    try df.queryExecution.logical.collectLeaves().foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
-      case _ => ()
-    } catch { case _: Throwable => () }
-
-  /** Test hook: live shared-pipeline cache fingerprints for `dir`. */
-  private[graft] def simCacheFps(dir: String): Seq[String] =
-    simCache.synchronized { simCache.keys.filter(_.dir == dir).map(_.fp).toSeq }
-
-  /** Test hook: drop and free EVERY shared entry for `dir` (a spec that
-    * exercised the shared pipeline must leave no cached blocks behind —
-    * DeterminismSpec's sweep-end zero-blocks pin runs later in the same
-    * session). */
-  private[graft] def evictSharedFor(dir: String): Unit =
-    simCache.synchronized {
-      simCache.keys.filter(_.dir == dir).toSeq
-        .foreach { k => simCache.remove(k).foreach(freeCheckpoint) }
-    }
 
   private[graft] def sharedOr(spark: SparkSession, key: String, dir: String)
                       (build: => DataFrame): DataFrame =
-    if (!java.lang.Boolean.getBoolean("graft.shared.pipeline")) scopedPersist(build)
-    else simCache.synchronized {
-      // key salted with the dataset fingerprint: a ScaleGen regeneration
-      // at the same dir mid-session gets a fresh build, not stale rows —
-      // and the superseded generation's checkpointed blocks
-      // are released on insert, so growth is per-LIVE-dataset, not
-      // per-regeneration. Entries still hold SparkSession refs for the
-      // JVM lifetime — the documented shared-pipeline contract
-      // (Bench/Verify sweeps own one session per JVM; a long-lived
-      // service embedding multiple sessions must leave the knob off).
-      val fp = embFingerprint(dir)
-      val k = SimKey(spark, dir, fp, key,
-        spark.conf.get("spark.sql.shuffle.partitions", ""))
-      if (!simCache.contains(k)) {
-        val stale = simCache.keys.filter(o => o.dir == dir && o.fp != fp).toSeq
-        stale.foreach { o => simCache.remove(o).foreach(freeCheckpoint) }
-      }
-      // right-sized by materialized bytes (core.ckptRightsized, round
-      // 19): consumers scan these relations ~15× per graph query, and
-      // the raw checkpoint would carry the initial shuffle-partition
-      // count into every one of those stages
-      simCache.getOrElseUpdate(k, ckptRightsized(build))
-    }
+    if (!setting(spark, SharedPipeline)) scopedPersist(build)
+    // right-sized by materialized bytes: consumers scan these relations
+    // ~15× per graph query, and the raw checkpoint would carry the
+    // initial shuffle-partition count into every one of those stages
+    else shared(spark, dir, key)(ckptRightsized(build))
 
   // ------------------------------------------------------------------
   // Centroid rings. The declared queries use the 10-vector ring
@@ -144,37 +93,16 @@ object SimilarityQueries {
 
   private val nCache = scala.collection.mutable.Map.empty[(String, String), Long]
 
-  /** Cheap dataset fingerprint of `dir/embeddings.parquet` — file count,
-    * total bytes, max NANOSECOND mtime (Files.getLastModifiedTime; the
-    * millisecond File.lastModified collapses to 1 s granularity on many
-    * filesystems, so a same-size regeneration within the same second
-    * could silently reuse a stale count). Keys [[nCache]]
-    * (and salts [[sharedOr]]'s key) so regenerating the dataset at a
-    * different scale IN THE SAME SESSION (ScaleGen → query)
-    * re-counts instead of sizing spread rings from a stale N. One
-    * filesystem stat pass, no Spark job.
-    */
-  private def embFingerprint(dir: String): String = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) Option(f.listFiles()).fold(Seq.empty[java.io.File])(_.toSeq.flatMap(walk))
-      else Seq(f)
-    val fs = walk(new java.io.File(s"$dir/embeddings.parquet"))
-    def mtimeNanos(f: java.io.File): Long =
-      try java.nio.file.Files.getLastModifiedTime(f.toPath)
-        .to(java.util.concurrent.TimeUnit.NANOSECONDS)
-      catch { case _: java.io.IOException => f.lastModified() * 1000000L }
-    s"${fs.size}:${fs.map(_.length()).sum}:${if (fs.isEmpty) 0L else fs.map(mtimeNanos).max}"
-  }
-
   /** Corpus row count — one parquet metadata-level count, cached per
-    * (dir, fingerprint): dataset-determined, so the map holds no
-    * SparkSession reference. Stale generations of the same dir are
-    * evicted on insert. Sizes the spread rings; never runs in oracle
-    * mode.
+    * (dir, [[graft.core.datasetFingerprint]]): dataset-determined, so
+    * the map holds no SparkSession reference, and a regeneration of the
+    * dir re-counts instead of sizing spread rings from a stale N. Stale
+    * generations of the same dir are evicted on insert. Sizes the spread
+    * rings; never runs in oracle mode.
     */
   private[graft] def corpusN(spark: SparkSession, dir: String): Long =
     nCache.synchronized {
-      val fp = embFingerprint(dir)
+      val fp = datasetFingerprint(dir)
       if (!nCache.contains((dir, fp)))
         nCache.keys.filter(k => k._1 == dir && k._2 != fp).toSeq
           .foreach(nCache.remove)
@@ -260,17 +188,14 @@ object SimilarityQueries {
     require(centsLocal.nonEmpty, s"empty centroid ring $ring")
     // Ring carrier: the typedLit form embeds the ring
     // in the plan/codegen constant pool — fine while small, but plan
-    // size would grow with √N. Past `graft.ring.broadcastBytes`
+    // size would grow with √N. Past `spark.graft.ring.broadcastBytes`
     // (default 4 MiB) the ring ships as an sc.broadcast instead and the
     // plan carries an O(1) handle; GraphAnnSpec pins both carriers
     // bit-equal. Broadcasts are cached per (dir, fingerprint, ring) and
-    // superseded generations unpersisted, mirroring [[sharedOr]].
+    // superseded generations unpersisted, as [[graft.core.shared]] does.
     val estBytes = centsLocal.iterator.map(c => 40L + 4L * c._2.length).sum
-    val bcFloor = sys.props.get("graft.ring.broadcastBytes")
-      .map(_.toLong).getOrElse(4L << 20)
-    if (estBytes > bcFloor) {
-      graft.plans.RingArgmaxCid.register(spark)
-      val fp = embFingerprint(dir)
+    if (estBytes > setting(spark, RingBroadcastBytes)) {
+      val fp = datasetFingerprint(dir)
       val key = s"$dir#$fp#$ring"
       graft.plans.RingArgmaxCid.evict(dir, liveFp = fp)
       graft.plans.RingArgmaxCid.getOrBroadcast(key) {
@@ -342,7 +267,7 @@ object SimilarityQueries {
   /** The full deg-8 layer-0 kNN graph — built identically by
     * sim_graph_ann and sim_graph_hnsw, so it rides the same
     * harness-level CSE seam as [[ivfAssigned]]: one build per
-    * (session, sf, ring) under `graft.shared.pipeline`, inline
+    * (session, sf, ring) under `spark.graft.shared.pipeline`, inline
     * scopedPersist otherwise. Values identical by construction either way.
     */
   private def graphEdges0(spark: SparkSession, dir: String): DataFrame =
@@ -1601,7 +1526,6 @@ object SimilarityQueries {
     "sim_knn_classify" -> QueryDef(
       (spark, dir) => {
         import org.apache.spark.sql.expressions.Window
-        graft.plans.DotProductD.register(spark)
         val all = t(spark, dir, "embeddings")
           .select(col("vec_id"), col("embedding"), col("label").cast("long").as("label"),
             sqrt(gdot("embedding", "embedding")).as("nv"))

@@ -21,7 +21,7 @@ import graft.core._
   */
 object TextQueries {
 
-  /** Scan-spread documents reader (core.tSpread, round 19) — applied
+  /** Scan-spread documents reader (core.tSpread) — applied
     * SURGICALLY to the handful of queries whose profile shows a heavy
     * single-task scan-side map (md5 minhash lanes, levenshtein, n-gram
     * explodes) and few downstream stages. A blanket application was
@@ -72,6 +72,29 @@ object TextQueries {
   private def simhashSpark: String = simhashSparkW(16)
   private def simhashDuck: String = simhashDuckW(16)
 
+  /** The 3-word shingles of a split-words column `w`, Spark SQL form. */
+  private val shingles3 = "transform(sequence(1, size(w) - 2), j -> concat_ws(' ', slice(w, j, 3)))"
+
+  /** Minhash lane `i` (0…7) of an array of md5 hex digests, one digest
+    * per shingle: the minimum over the 11-hex (44-bit) window at offset
+    * 1 + 3i. One md5 per shingle feeds all 8 lanes (offsets 1,4,…,22;
+    * 22+11-1 = 32 = md5 length, so no lane overflows) — 8× less hashing
+    * than salting md5 per lane, and engine-portable arithmetic that the
+    * DuckDB oracles mirror.
+    */
+  private def mhLane(digests: String, i: Int): Column =
+    expr(s"array_min(transform($digests, h -> cast(conv(substr(h, ${1 + 3 * i}, 11), 16, 10) as bigint)))")
+
+  /** `df` plus the 8 minhash lanes `mh0`…`mh7` of its `digests` column. */
+  private def withMhLanes(df: DataFrame, digests: String): DataFrame =
+    (0 until 8).foldLeft(df)((d, i) => d.withColumn(s"mh$i", mhLane(digests, i)))
+
+  /** The 4 LSH band keys over lanes `mh0`…`mh7`: band b is the md5 of
+    * "b-mh(2b)-mh(2b+1)". */
+  private val mhBandKeys: Seq[Column] = (0 until 4).map { b =>
+    md5(concat_ws("-", lit(b.toString), col(s"mh${2 * b}"), col(s"mh${2 * b + 1}")))
+  }
+
   /** Shared MinHash→LSH→exact-Jaccard pipeline behind the verified dedup
     * queries: returns (shingled docs, band relation, candidate pairs with
     * `ja`). Scale notes live on `dedup_minhash_verified` below.
@@ -81,19 +104,12 @@ object TextQueries {
     val base = t(spark, dir, "documents")
       .withColumn("w", split(col("text"), " "))
       .filter(size(col("w")) >= 3)
-      .withColumn("shingles",
-        expr("transform(sequence(1, size(w) - 2), j -> concat_ws(' ', slice(w, j, 3)))"))
+      .withColumn("shingles", expr(shingles3))
       .scopedPersist()
     val shs = base.select(col("doc_id"), array_distinct(col("shingles")).as("s"))
-    val withMh = (0 until 8).foldLeft(
-      base.withColumn("digests", expr("transform(shingles, s -> md5(s))"))) { (d, i) =>
-      d.withColumn(s"mh$i",
-        expr(s"array_min(transform(digests, h -> cast(conv(substr(h, ${1 + 3 * i}, 11), 16, 10) as bigint)))"))
-    }
-    val bandCols = (0 until 4).map { b =>
-      md5(concat_ws("-", lit(b.toString), col(s"mh${2 * b}"), col(s"mh${2 * b + 1}")))
-    }
-    val bands = withMh.select(col("doc_id"), explode(array(bandCols: _*)).as("k"))
+    val withMh = withMhLanes(
+      base.withColumn("digests", expr("transform(shingles, s -> md5(s))")), "digests")
+    val bands = withMh.select(col("doc_id"), explode(array(mhBandKeys: _*)).as("k"))
       .scopedPersist()
     // hot-band guard, same policy as dedup_minhash_lsh
     val capped = graft.functions.MinHash.capBands(bands, "k", 100)
@@ -130,58 +146,45 @@ object TextQueries {
     * `dedup_minhash_verified`, `dedup_keep_list`, and
     * `dedup_cluster_components` each re-run the identical ~N s shingle→
     * minhash→band→verify pipeline — redundant only ACROSS queries in one
-    * harness sweep, so sharing is opt-in via the `graft.shared.pipeline`
-    * system property (set by Bench and Verify, never by ScalaTest: the
-    * plan-shape and determinism suites must see each query's real
-    * un-memoized plan). When on, the pipeline runs ONCE per (session,
-    * shuffle-partitions, sf) and the two narrow results are
-    * `localCheckpoint`ed — RDD-level MEMORY_AND_DISK blocks with
-    * truncated lineage that survive the harness's per-query
-    * `spark.catalog.clearCache()` (a plain persist would silently
-    * recompute). Values are identical by pipeline determinism
-    * (DeterminismSpec pins it under 4-vs-13 shuffle partitions);
-    * CORRECTNESS hashes are unchanged by construction.
+    * harness sweep, so sharing is opt-in via `spark.graft.shared.pipeline`
+    * (set by the harness session, never by ScalaTest: the plan-shape and
+    * determinism suites must see each query's real un-memoized plan).
+    * When on, the pipeline is one session build ([[graft.core.shared]])
+    * and the narrow results are `localCheckpoint`ed — RDD-level
+    * MEMORY_AND_DISK blocks with truncated lineage that survive the
+    * harness's per-query `spark.catalog.clearCache()` (a plain persist
+    * would silently recompute). Values are identical by pipeline
+    * determinism (DeterminismSpec pins it under 4-vs-13 shuffle
+    * partitions); CORRECTNESS hashes are unchanged by construction.
     */
-  private val vpCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String, String),
-      (DataFrame, DataFrame, DataFrame)]
-
-  private def verifiedSharedAll(spark: SparkSession, dir: String)
+  private def verifiedShared(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) =
-    if (!java.lang.Boolean.getBoolean("graft.shared.pipeline")) {
+    if (!setting(spark, SharedPipeline)) {
       val (base, _, pairs, sigs) = buildVerifiedPipeline(spark, dir)
       (base.select(col("doc_id"), col("lang")), pairs, sigs)
-    } else vpCache.synchronized {
-      val key = (spark, dir, spark.conf.get("spark.sql.shuffle.partitions", ""))
-      vpCache.getOrElseUpdate(key, {
-        val (base, bands, pairs, sigs) = buildVerifiedPipeline(spark, dir)
-        val docs = ckptRightsized(base.select(col("doc_id"), col("lang")))
-        val p = ckptRightsized(pairs.select(col("d1"), col("d2"), col("ja"),
-          col("inter"), col("n1"), col("n2")))
-        // sigs are 8 longs per doc — checkpointed so dedup_minhash_est's
-        // estimator grades the SAME signatures the candidates came from
-        // without re-running the md5 minhash pass
-        val sg = ckptRightsized(sigs)
-        // the checkpoints are materialized — free the pipeline's own
-        // persisted intermediates instead of waiting for clearCache
-        base.unpersist(); bands.unpersist()
-        (docs, p, sg)
-      })
+    } else shared(spark, dir, "text.verified") {
+      val (base, bands, pairs, sigs) = buildVerifiedPipeline(spark, dir)
+      val docs = ckptRightsized(base.select(col("doc_id"), col("lang")))
+      val p = ckptRightsized(pairs.select(col("d1"), col("d2"), col("ja"),
+        col("inter"), col("n1"), col("n2")))
+      // sigs are 8 longs per doc — checkpointed so dedup_minhash_est's
+      // estimator grades the SAME signatures the candidates came from
+      // without re-running the md5 minhash pass
+      val sg = ckptRightsized(sigs)
+      // the checkpoints are materialized — free the pipeline's own
+      // persisted intermediates instead of waiting for clearCache
+      base.unpersist(); bands.unpersist()
+      (docs, p, sg)
     }
 
   /** Per-doc winnowed fingerprints `(doc_id, n_grams, fps)` — the md5
     * 3-gram hash + window-min pass both `text_winnowing` and
     * `dedup_winnowing_pairs` start from. Same opt-in sharing contract as
-    * vpCache: un-shared (ScalaTest) each query builds its own plan;
-    * under `graft.shared.pipeline` (Bench/Verify sweeps) the relation is
-    * built once per (session, partitions, sf) and localCheckpoint'ed so
-    * it survives the harness's per-query clearCache. Values identical by
-    * construction — the build is the exact expression chain both queries
-    * previously inlined.
+    * [[verifiedShared]]: un-shared (ScalaTest) each query builds its
+    * own plan; under `spark.graft.shared.pipeline` the relation is one
+    * checkpointed session build. Values identical by construction — the
+    * build is the exact expression chain both queries inline.
     */
-  private val winCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String, String), DataFrame]
-
   private def winnowedDocs(spark: SparkSession, dir: String): DataFrame = {
     def build = t(spark, dir, "documents")
       .withColumn("w", split(col("text"), " "))
@@ -192,22 +195,10 @@ object TextQueries {
       .select(col("doc_id"), size(col("gh")).as("n_grams"), expr(
         "array_distinct(transform(sequence(1, size(gh) - 3), i -> array_min(slice(gh, i, 4))))")
         .as("fps"))
-    if (!java.lang.Boolean.getBoolean("graft.shared.pipeline")) build
-    else winCache.synchronized {
-      val key = (spark, dir, spark.conf.get("spark.sql.shuffle.partitions", ""))
-      winCache.getOrElseUpdate(key, ckptRightsized(build))
-    }
+    if (!setting(spark, SharedPipeline)) build
+    else shared(spark, dir, "text.winnowed")(ckptRightsized(build))
   }
 
-  /** The curation pipelines' per-doc feature relation (gopher stats,
-    * content digest, distinct shingle set, 8 minhash lanes, distinct
-    * 5-grams, sampling hash) — ONE corpus text pass shared by
-    * `pipeline_curation_e2e` and `pipeline_incremental_e2e`. Every
-    * feature is PER-DOC (independent of the rest of the corpus), so the
-    * relation qualifies for the same opt-in session-shared
-    * localCheckpoint contract as [[vpCache]]/[[winCache]]; un-shared
-    * runs keep the real single-query plan (scopedPersist).
-    */
   /** The LSH band keys of a (doc_id, text)-shaped relation — the exact
     * signature pipeline of dedup_minhash_lsh (3-shingles → one md5 per
     * shingle → 8 11-hex-window minhash lanes → 4 two-lane band keys),
@@ -220,25 +211,22 @@ object TextQueries {
     val shingled = docs
       .withColumn("w", split(col("text"), " "))
       .filter(size(col("w")) >= 3)
-      .withColumn("dg", expr(
-        "transform(transform(sequence(1, size(w) - 2), j -> concat_ws(' ', slice(w, j, 3))), s -> md5(s))"))
-    val withMh = (0 until 8).foldLeft(shingled) { (d, i) =>
-      d.withColumn(s"mh$i",
-        expr(s"array_min(transform(dg, h -> cast(conv(substr(h, ${1 + 3 * i}, 11), 16, 10) as bigint)))"))
-    }
-    val bandCols = (0 until 4).map { b =>
-      md5(concat_ws("-", lit(b.toString), col(s"mh${2 * b}"), col(s"mh${2 * b + 1}")))
-    }
-    withMh.select(col("doc_id"), explode(array(bandCols: _*)).as("k"))
+      .withColumn("dg", expr(s"transform($shingles3, s -> md5(s))"))
+    val withMh = withMhLanes(shingled, "dg")
+    withMh.select(col("doc_id"), explode(array(mhBandKeys: _*)).as("k"))
   }
 
-  private val e2eCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String, String), DataFrame]
-
+  /** The curation pipelines' per-doc feature relation (gopher stats,
+    * content digest, distinct shingle set, 8 minhash lanes, distinct
+    * 5-grams, sampling hash) — ONE corpus text pass shared by
+    * `pipeline_curation_e2e` and `pipeline_incremental_e2e`. Every
+    * feature is PER-DOC (independent of the rest of the corpus), so the
+    * relation qualifies for the same opt-in session-shared
+    * localCheckpoint contract as [[verifiedShared]]; un-shared runs
+    * keep the real single-query plan (scopedPersist).
+    */
   private def e2eFeatures(spark: SparkSession, dir: String): DataFrame = {
     val stops = inList(Stopwords)
-    val shingled =
-      "transform(sequence(1, size(w) - 2), j -> concat_ws(' ', slice(w, j, 3)))"
     val gram5 =
       "transform(sequence(1, size(w) - 4), j -> concat_ws(' ', slice(w, j, 5)))"
     val featureCols: Seq[Column] =
@@ -248,13 +236,11 @@ object TextQueries {
         expr("cast(size(filter(w, x -> x rlike '^[a-z]+$')) as bigint)").as("alphac"),
         md5(col("text")).as("digest"),
         array_distinct(col("sh")).as("s")) ++
-      (0 until 8).map { i =>
-        expr(s"array_min(transform(dg, h -> cast(conv(substr(h, ${1 + 3 * i}, 11), 16, 10) as bigint)))").as(s"mh$i")
-      } ++ Seq(
+      (0 until 8).map(i => mhLane("dg", i).as(s"mh$i")) ++ Seq(
         when(col("nw") >= 5, array_distinct(expr(gram5)))
           .otherwise(expr("cast(array() as array<string>)")).as("g5"),
         expr(hx("cast(doc_id as string)")).as("h"))
-    // NOT scan-spread (round 19): this relation is checkpointed once and
+    // NOT scan-spread: this relation is checkpointed once and
     // then read by ~25 downstream stages per pipeline run — a 32-partition
     // checkpoint multiplies every one of those stages' task count for
     // kilobytes of per-stage data (measured: curation 7.9 s → 16.5 s wall
@@ -264,22 +250,12 @@ object TextQueries {
     def build = t(spark, dir, "documents")
       .withColumn("w", split(col("text"), " "))
       .withColumn("nw", size(col("w")).cast("long"))
-      .withColumn("sh", when(col("nw") >= 3, expr(shingled))
+      .withColumn("sh", when(col("nw") >= 3, expr(shingles3))
         .otherwise(expr("cast(array() as array<string>)")))
       .withColumn("dg", expr("transform(sh, s -> md5(s))"))
       .select(featureCols: _*)
-    if (!java.lang.Boolean.getBoolean("graft.shared.pipeline"))
-      scopedPersist(build)
-    else e2eCache.synchronized {
-      e2eCache.getOrElseUpdate(
-        (spark, dir, spark.conf.get("spark.sql.shuffle.partitions", "")),
-        ckptRightsized(build))
-    }
-  }
-
-  private def verifiedShared(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val (docs, pairs, _) = verifiedSharedAll(spark, dir)
-    (docs, pairs)
+    if (!setting(spark, SharedPipeline)) scopedPersist(build)
+    else shared(spark, dir, "text.e2e")(ckptRightsized(build))
   }
 
   /** Oracle twin of [[buildVerifiedPipeline]]: shared CTE prefix ending in a
@@ -380,7 +356,6 @@ object TextQueries {
     * expand to member pairs before the final top-300). */
   private def jaccardVerifyPairs(spark: SparkSession, sorted: DataFrame,
                                  pairs: DataFrame, thr: Double): DataFrame = {
-    graft.plans.SortedIntersectD.register(spark)
     pairs
       .join(sorted.select(col("doc_id").as("d1"), array_sort(col("toks")).as("t1"))
         .hint("shuffle_hash"), Seq("d1"))
@@ -426,7 +401,6 @@ object TextQueries {
     * lane and the stage profiler. */
   private def jaccardLshCands(spark: SparkSession, docs: DataFrame,
                               gen: Double, bands: Int, rows: Int): DataFrame = {
-    graft.plans.MinHash64D.register(spark)
     val sig = docs.select(col("doc_id"),
       size(col("toks")).cast("long").as("n"),
       graft.plans.MinHash64D.minhash64(col("toks"), bands * rows).as("mh"))
@@ -709,7 +683,7 @@ object TextQueries {
     // verification never touches all-pairs. Spark-optimized variant:
     // graft.functions.MinHash (xxhash64).
     "dedup_minhash_lsh" -> QueryDef(
-      (spark, dir) => if (java.lang.Boolean.getBoolean("graft.shared.pipeline")) {
+      (spark, dir) => if (setting(spark, SharedPipeline)) {
         // harness sweeps: the candidate relation IS the shared verified
         // pipeline's pairs relation (same shingles, bands, cap — one row
         // per distinct candidate pair), so count it instead of
@@ -717,29 +691,19 @@ object TextQueries {
         // proves the equality at every SF.
         verifiedShared(spark, dir)._2.agg(cnt("candidate_pairs"))
       } else {
-        // ONE md5 per shingle; the 8 minhash lanes are 11-hex (44-bit)
-        // windows at offsets 1,4,…,22 of that digest (22+11-1 = 32 = md5
-        // length, so no lane overflows) — 8× less hashing than salting md5
-        // per lane, still engine-portable arithmetic.
+        // ONE md5 per shingle feeds the 8 minhash lanes ([[mhLane]]).
         val docs = t(spark, dir, "documents")
           .withColumn("w", split(col("text"), " "))
           .filter(size(col("w")) >= 3)
-          .withColumn("shingles",
-            expr("transform(sequence(1, size(w) - 2), j -> concat_ws(' ', slice(w, j, 3)))"))
+          .withColumn("shingles", expr(shingles3))
           .withColumn("digests", expr("transform(shingles, s -> md5(s))"))
-        val withMh = (0 until 8).foldLeft(docs) { (d, i) =>
-          d.withColumn(s"mh$i",
-            expr(s"array_min(transform(digests, h -> cast(conv(substr(h, ${1 + 3 * i}, 11), 16, 10) as bigint)))"))
-        }
+        val withMh = withMhLanes(docs, "digests")
         // all 4 band keys in one pass (array + explode) - a union of four
         // selects would recompute the shingle/minhash pipeline per branch.
-        val bandCols = (0 until 4).map { b =>
-          md5(concat_ws("-", lit(b.toString), col(s"mh${2 * b}"), col(s"mh${2 * b + 1}")))
-        }
         // persist: the self-join below reads `bands` twice; without it the
         // md5-per-shingle signature pass executes once PER BRANCH — at
         // corpus scale that is two full scans instead of one.
-        val bands = withMh.select(col("doc_id"), explode(array(bandCols: _*)).as("k"))
+        val bands = withMh.select(col("doc_id"), explode(array(mhBandKeys: _*)).as("k"))
           .scopedPersist()
         // hot-band guard (graft.functions.MinHash.capBands): a bucket of B
         // docs emits B²/2 pairs, so one mega-bucket of boilerplate goes
@@ -790,7 +754,7 @@ object TextQueries {
     "dedup_band_admit" -> QueryDef(
       (spark, dir) => {
         import org.apache.spark.sql.expressions.Window
-        // round 19: the per-band owner is a window min over the SAME key
+        // the per-band owner is a window min over the SAME key
         // the old groupBy+shuffle_hash join used — one exchange by k
         // instead of two (guide §2.4: operations keyed the same way share
         // one exchange), and with a single consumer the band relation
@@ -846,7 +810,7 @@ object TextQueries {
     // to the driver is an OOM at scale).
     "dedup_minhash_verified" -> QueryDef(
       (spark, dir) => {
-        val (_, pairs) = verifiedShared(spark, dir)
+        val (_, pairs, _) = verifiedShared(spark, dir)
         pairs.agg(cnt("candidate_pairs"),
           sum(when(col("ja") >= 0.5, 1L).otherwise(0L)).cast("long").as("verified_pairs"))
       },
@@ -864,7 +828,7 @@ object TextQueries {
     // Defined over the shingled corpus (≥3 words), like the pipeline.
     "dedup_keep_list" -> QueryDef(
       (spark, dir) => {
-        val (docs, pairs) = verifiedShared(spark, dir)
+        val (docs, pairs, _) = verifiedShared(spark, dir)
         val dropped = pairs.filter(col("ja") >= 0.5).select(col("d2")).distinct()
         docs
           .join(dropped.hint("shuffle_hash"), col("doc_id") === col("d2"), "left")
@@ -892,7 +856,7 @@ object TextQueries {
     // near-dup graphs). Oracle: DuckDB recursive CTE transitive closure.
     "dedup_cluster_components" -> QueryDef(
       (spark, dir) => {
-        val (docs, pairs) = verifiedShared(spark, dir)
+        val (docs, pairs, _) = verifiedShared(spark, dir)
         val edges = pairs.filter(col("ja") >= 0.5).select(col("d1"), col("d2"))
         val comp = graft.functions.Graphs.connectedComponents(edges, "d1", "d2")
         docs
@@ -1138,12 +1102,12 @@ object TextQueries {
           col("chars") >= col("nw") * 3 && col("chars") <= col("nw") * 10 &&
           col("alphac") * 5 >= col("nw") * 4 && col("stopc") >= 2)
           .scopedCheckpoint()
-        // round 19: first-of-content = window min over digest — ONE
+        // first-of-content = window min over digest — ONE
         // exchange where the old groupBy(digest) + (digest, doc_id)
         // semi-join took two on different keys (guide §2.4). Same rows:
         // keep exactly the min-doc_id row of each digest group.
-        // g/e/bands are EAGER scoped checkpoints, not lazy persists
-        // (round 19): each has 2–3 downstream consumers that AQE
+        // g/e/bands are EAGER scoped checkpoints, not lazy persists:
+        // each has 2–3 downstream consumers that AQE
         // submits as concurrent query stages, and a lazy persist makes
         // every one of them recompute the whole g→e→bands lineage
         // before the cache lands (profile: two duplicate ~6 s-taskSum
@@ -1154,15 +1118,12 @@ object TextQueries {
             min(col("doc_id")).over(Window.partitionBy("digest")))
           .filter(col("doc_id") === col("mind")).drop("mind")
           .scopedCheckpoint()
-        val bandCols = (0 until 4).map { b =>
-          md5(concat_ws("-", lit(b.toString), col(s"mh${2 * b}"), col(s"mh${2 * b + 1}")))
-        }
         // band keys for exact-dedup survivors: the minhash lanes ride a
         // 9-long row through one doc_id-keyed semi join, never the text
         val bands = base
           .select((Seq(col("doc_id")) ++ (0 until 8).map(i => col(s"mh$i"))): _*)
           .join(e.select("doc_id").hint("shuffle_hash"), Seq("doc_id"), "left_semi")
-          .select(col("doc_id"), explode(array(bandCols: _*)).as("k"))
+          .select(col("doc_id"), explode(array(mhBandKeys: _*)).as("k"))
           .scopedCheckpoint()
         val capped = graft.functions.MinHash.capBands(bands, "k", 100)
         val cand = capped.as("a")
@@ -1307,7 +1268,7 @@ object TextQueries {
           .scopedCheckpoint()
         val gNew = g.join(existing.select("digest").distinct().hint("shuffle_hash"),
           Seq("digest"), "left_anti")
-        // round 19: first-of-content within the delta = window min over
+        // first-of-content within the delta = window min over
         // digest — one exchange for the old groupBy + semi-join pair
         // (same rewrite as pipeline_curation_e2e; identical rows)
         val e = gNew.withColumn("mind",
@@ -1321,13 +1282,10 @@ object TextQueries {
         val pool = existing.filter(col("nw") >= 3)
           .select(col("doc_id"), lit(false).as("isd"))
           .unionByName(e.select(col("doc_id"), lit(true).as("isd")))
-        val bandCols = (0 until 4).map { b =>
-          md5(concat_ws("-", lit(b.toString), col(s"mh${2 * b}"), col(s"mh${2 * b + 1}")))
-        }
         val bands = base
           .select((Seq(col("doc_id")) ++ (0 until 8).map(i => col(s"mh$i"))): _*)
           .join(pool.hint("shuffle_hash"), Seq("doc_id"))
-          .select(col("doc_id"), col("isd"), explode(array(bandCols: _*)).as("k"))
+          .select(col("doc_id"), col("isd"), explode(array(mhBandKeys: _*)).as("k"))
           .scopedCheckpoint()
         val capped = graft.functions.MinHash.capBands(bands, "k", 100)
         val cand = capped.hint("shuffle_hash").as("a")
@@ -1497,7 +1455,7 @@ object TextQueries {
     // hot-band cap bound the candidate volume exactly as in the full
     // pipeline.
     "dedup_incremental" -> QueryDef(
-      (spark, dir) => if (java.lang.Boolean.getBoolean("graft.shared.pipeline")) {
+      (spark, dir) => if (setting(spark, SharedPipeline)) {
         // Harness sweeps: the delta's signatures are the
         // SAME computation the shared pipeline already materialized —
         // only the PAIRING differs. is_new ≡ doc_id >= 250, and the
@@ -1509,7 +1467,7 @@ object TextQueries {
         // re-run from the checkpointed exact ingredients — NOT from the
         // pround'd ja, which can round across the boundary. Only the
         // one-digest-per-doc exact-dup join runs fresh.
-        val (docsShared, pairs, _) = verifiedSharedAll(spark, dir)
+        val (docsShared, pairs, _) = verifiedShared(spark, dir)
         val near = pairs
           .filter(col("d1") < 250 && col("d2") >= 250 &&
             col("inter") / (col("n1") + col("n2") - col("inter")) >= 0.5)
@@ -1529,19 +1487,12 @@ object TextQueries {
           .withColumn("is_new", col("doc_id") >= 250)
           .withColumn("w", split(col("text"), " "))
           .filter(size(col("w")) >= 3)
-          .withColumn("shingles",
-            expr("transform(sequence(1, size(w) - 2), j -> concat_ws(' ', slice(w, j, 3)))"))
+          .withColumn("shingles", expr(shingles3))
           .withColumn("digests", expr("transform(shingles, s -> md5(s))"))
           .scopedPersist()
-        val withMh = (0 until 8).foldLeft(docs) { (d, i) =>
-          d.withColumn(s"mh$i",
-            expr(s"array_min(transform(digests, h -> cast(conv(substr(h, ${1 + 3 * i}, 11), 16, 10) as bigint)))"))
-        }
-        val bandCols = (0 until 4).map { b =>
-          md5(concat_ws("-", lit(b.toString), col(s"mh${2 * b}"), col(s"mh${2 * b + 1}")))
-        }
+        val withMh = withMhLanes(docs, "digests")
         val bands = withMh.select(col("doc_id"), col("is_new"),
-          explode(array(bandCols: _*)).as("k"))
+          explode(array(mhBandKeys: _*)).as("k"))
           .scopedPersist()
         val capped = graft.functions.MinHash.capBands(bands, "k", 100)
         val cand = capped.filter(col("is_new")).as("a")
@@ -1722,8 +1673,7 @@ object TextQueries {
         val sh = t(spark, dir, "documents")
           .withColumn("w", split(col("text"), " "))
           .filter(size(col("w")) >= 3)
-          .withColumn("sh", expr(
-            "array_distinct(transform(sequence(1, size(w) - 2), j -> concat_ws(' ', slice(w, j, 3))))"))
+          .withColumn("sh", expr(s"array_distinct($shingles3)"))
           .select(col("doc_id"), col("lang"), col("sh"))
         val probes = sh.filter(col("doc_id") < 20)
           .select(col("doc_id").as("d1"), col("lang").as("l1"), col("sh").as("sh1"))
@@ -1766,8 +1716,7 @@ object TextQueries {
         val sh = t(spark, dir, "documents")
           .withColumn("w", split(col("text"), " "))
           .filter(size(col("w")) >= 3)
-          .withColumn("sh", expr(
-            "array_distinct(transform(sequence(1, size(w) - 2), j -> concat_ws(' ', slice(w, j, 3))))"))
+          .withColumn("sh", expr(s"array_distinct($shingles3)"))
           .select(col("doc_id"), col("lang"), col("sh"))
         val probes = sh.filter(col("doc_id") < 20)
           .select(col("doc_id").as("d1"), col("lang").as("l1"), col("sh").as("sh1"))
@@ -1802,7 +1751,7 @@ object TextQueries {
     // sort; at 100 TB the fingerprint INDEX (explode + digest groupBy)
     // reuses dedup_paragraphs' digest-only-shuffle shape. The per-doc
     // fingerprint relation is shared with dedup_winnowing_pairs under
-    // graft.shared.pipeline (winnowedDocs) — one md5 gram pass per sweep.
+    // spark.graft.shared.pipeline (winnowedDocs) — one md5 gram pass per sweep.
     "text_winnowing" -> QueryDef(
       (spark, dir) => {
         winnowedDocs(spark, dir)
@@ -2147,7 +2096,6 @@ object TextQueries {
     // decimals so the group mean is partition-order-independent.
     "text_quality_classifier" -> QueryDef(
       (spark, dir) => {
-        graft.plans.DotProductD.register(spark)
         val D = 32
         val wts = (0 until D).map(j => ((j * 37 % 19) - 9) / 10.0)
         val wlit = wts.mkString("array(", "D, ", "D)")
@@ -2201,12 +2149,12 @@ object TextQueries {
     // this is how you pick the band/row configuration: measure estimator
     // bias on a real candidate sample before committing to a threshold.
     "dedup_minhash_est" -> QueryDef(
-      (spark, dir) => if (java.lang.Boolean.getBoolean("graft.shared.pipeline")) {
+      (spark, dir) => if (setting(spark, SharedPipeline)) {
         // harness sweeps: candidates + exact ja + the signatures that
         // produced them all come from the ONE shared pipeline (the est
         // query's own construction below is identical by the oracle
         // hash-match); only the two signature joins run per sweep.
-        val (_, pairs, sigs) = verifiedSharedAll(spark, dir)
+        val (_, pairs, sigs) = verifiedShared(spark, dir)
         pairs.select(col("d1"), col("d2"), col("ja"))
           .hint("shuffle_hash")
           .join(sigs, col("d1") === col("doc_id"))
@@ -2223,21 +2171,15 @@ object TextQueries {
         val base = t(spark, dir, "documents")
           .withColumn("w", split(col("text"), " "))
           .filter(size(col("w")) >= 3)
-          .withColumn("shingles",
-            expr("transform(sequence(1, size(w) - 2), j -> concat_ws(' ', slice(w, j, 3)))"))
+          .withColumn("shingles", expr(shingles3))
           .scopedPersist()
         val shs = base.select(col("doc_id"), array_distinct(col("shingles")).as("s"))
-        val withMh = (0 until 8).foldLeft(
-          base.withColumn("digests", expr("transform(shingles, s -> md5(s))"))) { (d, i) =>
-          d.withColumn(s"mh$i",
-            expr(s"array_min(transform(digests, h -> cast(conv(substr(h, ${1 + 3 * i}, 11), 16, 10) as bigint)))"))
-        }.scopedPersist()
+        val withMh = withMhLanes(
+          base.withColumn("digests", expr("transform(shingles, s -> md5(s))")), "digests")
+          .scopedPersist()
         val sigs = withMh.select(col("doc_id"),
           array((0 until 8).map(i => col(s"mh$i")): _*).as("sig"))
-        val bandCols = (0 until 4).map { b =>
-          md5(concat_ws("-", lit(b.toString), col(s"mh${2 * b}"), col(s"mh${2 * b + 1}")))
-        }
-        val bands = withMh.select(col("doc_id"), explode(array(bandCols: _*)).as("k"))
+        val bands = withMh.select(col("doc_id"), explode(array(mhBandKeys: _*)).as("k"))
         val capped = graft.functions.MinHash.capBands(bands, "k", 100)
         val cand = capped.as("a")
           .join(capped.as("b"), col("a.k") === col("b.k") && col("a.doc_id") < col("b.doc_id"))
@@ -2616,7 +2558,7 @@ object TextQueries {
         // (Σ_w c(prev,w) = c(prev·)) instead of re-scanning the corpus
         // pair stream — the shuffle carries |distinct pairs| partials,
         // not |corpus pairs| rows; same for the scalar total from vocab.
-        // Round 19: the fold is a window sum over ph attached in place
+        // the fold is a window sum over ph attached in place
         // (one exchange by ph) instead of a groupBy(ph) + join back
         // (exchange + join) — guide §2.4; identical values.
         val gbc = gb.withColumn("cp", sum(col("cb"))
@@ -2752,7 +2694,7 @@ object TextQueries {
         // ROUTING GUARD (the SCALE.md policy, as code): before the pair join launches, measure the exact
         // candidate load the prefix index implies — Σ_band c·(c−1)/2,
         // i.e. the join's pre-distinct output — and REFUSE to run once it
-        // exceeds `graft.jaccard.maxPairsPerDoc` candidate pairs per
+        // exceeds `spark.graft.jaccard.maxPairsPerDoc` candidate pairs per
         // document (default 4096; 0 disables). The two guard jobs are
         // linear map-side aggregates over relations the query builds
         // anyway (`sorted` is persisted and reused by the verify join),
@@ -2762,8 +2704,7 @@ object TextQueries {
         // twins measure ~120–1250 pairs/doc (linear dup structure), well
         // inside the budget; a boilerplate-heavy corpus past it gets an
         // explicit route-to-LSH error instead of a runaway stage.
-        val capPerDoc = sys.props.get("graft.jaccard.maxPairsPerDoc")
-          .map(_.toLong).getOrElse(4096L)
+        val capPerDoc = setting(spark, JaccardMaxPairsPerDoc)
         // `core.planOnly` (PlanAudit --explain scopes it): the guard's
         // two probe jobs are EAGER Spark jobs — a consumer that only
         // wants the logical/physical plan must not trigger real
@@ -2791,13 +2732,13 @@ object TextQueries {
           if (avg > capPerDoc) throw new IllegalStateException(
             s"dedup_jaccard_prefix routed off the exact lane: prefix-band density " +
               s"$avg candidate pairs/doc (docs=$docs, candidates=$load) exceeds " +
-              s"graft.jaccard.maxPairsPerDoc=$capPerDoc. EXACT set-similarity join is " +
+              s"spark.graft.jaccard.maxPairsPerDoc=$capPerDoc. EXACT set-similarity join is " +
               s"quadratic in same-band density; run this corpus on the banded-LSH lane " +
               s"(dedup_minhash_lsh) or raise the budget explicitly.")
           if (hot > capPerDoc) throw new IllegalStateException(
             s"dedup_jaccard_prefix routed off the exact lane: the hottest prefix band " +
               s"holds $maxc documents, so each faces $hot exact comparisons — past " +
-              s"graft.jaccard.maxPairsPerDoc=$capPerDoc even though the corpus average " +
+              s"spark.graft.jaccard.maxPairsPerDoc=$capPerDoc even though the corpus average " +
               s"($avg pairs/doc) is inside budget. A single boilerplate-shared band is " +
               s"still a quadratic hot spot; run this corpus on the banded-LSH lane " +
               s"(dedup_minhash_lsh) or raise the budget explicitly.")
@@ -2813,7 +2754,7 @@ object TextQueries {
     // oracle row. This key declares the full routed pipeline: measure
     // the prefix-band density (the SAME [[jaccardLoadProbe]] the exact
     // lane routes on) against the routed budget
-    // (`graft.jaccard.routed.budget`, default 64 pairs/doc — pinned
+    // (`spark.graft.jaccard.routed.budget`, default 64 pairs/doc — pinned
     // BELOW the declared corpora's measured ~120–1250 pairs/doc so the
     // decision genuinely fires at every SF), then run the branch the
     // decision picks: banded MinHash-LSH candidate generation (B=16
@@ -2838,7 +2779,7 @@ object TextQueries {
     // they alone saturate the declared top-300 — the template-heavy
     // case this lane routes on — banding, candidate join and verify
     // are skipped entirely (routed 17.6 s vs exact 86.3 s at 100×,
-    // min-of-2; the r17 form LOST 126.8 vs 83.0). When the head is
+    // min-of-2; an earlier form LOST 126.8 vs 83.0). When the head is
     // unsaturated the full pipeline runs on the reps: signatures are
     // a map-side codegen projection off the persisted token arrays
     // (plans/MinHash64D — 64 lanes in one loop, no aggregate, no
@@ -2856,7 +2797,7 @@ object TextQueries {
         // template-heavy corpus: shared boilerplate vocabulary makes
         // many docs share their two minimal token hashes, so band
         // buckets reach ~1600 docs at 100× (2.16 G candidate pairs —
-        // measured, round 17) and the candidate join OOMs. R=4 requires
+        // measured) and the candidate join OOMs. R=4 requires
         // FOUR equal mins per band — bucket membership decays
         // multiplicatively in shared-vocab looseness — while a true
         // j ≥ 0.9 pair still collides in some band with
@@ -2864,8 +2805,7 @@ object TextQueries {
         // three oracle SFs hash-check it exactly).
         val (bands, rows) = (16, 4)
         val sorted = jaccardSorted(spark, dir)
-        val budget = sys.props.get("graft.jaccard.routed.budget")
-          .map(_.toLong).getOrElse(64L)
+        val budget = setting(spark, JaccardRoutedBudget)
         // The decision: the exact lane's density probe vs the routed
         // budget. planOnly skips the eager probe jobs and declares the
         // LSH branch (the branch this key exists to pin).
@@ -3385,21 +3325,17 @@ object TextQueries {
         // pipeline's checkpointed signatures (same shingles, same md5
         // windows) — reuse them instead of re-running the signature pass
         val withMh =
-          if (java.lang.Boolean.getBoolean("graft.shared.pipeline"))
-            (0 until 8).foldLeft(verifiedSharedAll(spark, dir)._3) { (d, i) =>
+          if (setting(spark, SharedPipeline))
+            (0 until 8).foldLeft(verifiedShared(spark, dir)._3) { (d, i) =>
               d.withColumn(s"mh$i", col("sig")(i))
             }
           else {
             val docs = t(spark, dir, "documents")
               .withColumn("w", split(col("text"), " "))
               .filter(size(col("w")) >= 3)
-              .withColumn("shingles",
-                expr("transform(sequence(1, size(w) - 2), j -> concat_ws(' ', slice(w, j, 3)))"))
+              .withColumn("shingles", expr(shingles3))
               .withColumn("digests", expr("transform(shingles, s -> md5(s))"))
-            (0 until 8).foldLeft(docs) { (d, i) =>
-              d.withColumn(s"mh$i",
-                expr(s"array_min(transform(digests, h -> cast(conv(substr(h, ${1 + 3 * i}, 11), 16, 10) as bigint)))"))
-            }
+            withMhLanes(docs, "digests")
           }
         def key(cfg: String, b: Int, lanes: Seq[Int]) =
           md5(concat_ws("-", lit(cfg) +: lit(b.toString) +: lanes.map(i => col(s"mh$i")): _*))

@@ -92,19 +92,13 @@ object DotProductD {
   val ident: FunctionIdentifier = FunctionIdentifier("graft_dot")
   val info: ExpressionInfo = new ExpressionInfo(classOf[DotProductD].getName, "graft_dot")
   val builder: Seq[Expression] => Expression = ch => DotProductD(ch(0), ch(1))
-
-  /** Idempotent per-session registration (for sessions the driver builds
-    * without extensions — Verify/Bench call sites go through this).
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
 }
 
 /** `SparkSessionExtensions` installer — the production path:
   * `withExtensions(new GraftExtensions)` on a session builder, or
   * `spark.sql.extensions=graft.plans.GraftExtensions`. Sessions built
-  * without it (the harness, the perfbench board) install each function
-  * on demand through its object's `register`.
+  * without it (the harness, the perfbench board) get the same functions
+  * from [[GraftExtensions.install]].
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit =
@@ -121,4 +115,17 @@ object GraftExtensions {
     (RingArgmaxCid.ident, RingArgmaxCid.info, RingArgmaxCid.builder),
     (MinHash64D.ident, MinHash64D.info, MinHash64D.builder),
     (UniqUpTo.ident, UniqUpTo.info, UniqUpTo.builder))
+
+  /** Registers every function `spark` does not have yet; a session that
+    * already has them (built with the extension, or installed before) is
+    * left as it is. `core.t` calls this, so every declared query finds
+    * the functions; library entry points that take a caller's DataFrame
+    * call it on that DataFrame's session.
+    */
+  def install(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    functions.foreach { case (ident, info, builder) =>
+      if (!registry.functionExists(ident)) registry.registerFunction(ident, info, builder)
+    }
+  }
 }

@@ -129,8 +129,4 @@ object GroupArrayN {
   val ident: FunctionIdentifier = FunctionIdentifier("graft_group_array_n")
   val info: ExpressionInfo = new ExpressionInfo(classOf[GroupArrayN].getName, "graft_group_array_n")
   val builder: Seq[Expression] => Expression = ch => GroupArrayN(ch(0), ch(1), ch(2), ch(3))
-
-  /** Idempotent per-session registration (Verify/Bench call sites). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
 }

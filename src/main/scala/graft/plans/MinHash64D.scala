@@ -108,7 +108,7 @@ object MinHash64D {
     new ExpressionInfo(classOf[MinHash64D].getName, "graft_minhash64")
   val builder: Seq[Expression] => Expression = { ch =>
     require(ch.length == 2, "graft_minhash64(tokenHashes, k)")
-    // Foldability is checked BEFORE eval (ADVICE r17): eval(null) on a
+    // Foldability is checked BEFORE eval: eval(null) on a
     // non-literal second argument (e.g. a column reference) throws an
     // opaque runtime exception from deep inside the expression instead
     // of the analysis-time message the caller can act on.
@@ -122,10 +122,6 @@ object MinHash64D {
     }
     MinHash64D(ch(0), k)
   }
-
-  /** Idempotent per-session registration (mirrors [[DotProductD.register]]). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
 
   /** Column-API form (the registered function must be installed first). */
   def minhash64(a: org.apache.spark.sql.Column, k: Int): org.apache.spark.sql.Column =

@@ -8,13 +8,12 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** Argmax-cosine centroid assignment against a BROADCAST ring — the
-  * O(1)-plan-size carrier for `ivfAssignedFold`'s collected ring
-  * (VERDICT r15 #6).
+  * O(1)-plan-size carrier for `ivfAssignedFold`'s collected ring.
   *
   * The typedLit carrier embeds ~√N×dim floats in the logical plan, the
   * serialized task binary and the codegen constant pool — bounded, but
   * the one plan in the repo whose SIZE grows with corpus scale (~25 MB
-  * at a 10¹⁰-vector corpus). Past `graft.ring.broadcastBytes` the ring
+  * at a 10¹⁰-vector corpus). Past `spark.graft.ring.broadcastBytes` the ring
   * ships as an `sc.broadcast` instead: the plan carries only this
   * expression holding the HANDLE (a few hundred bytes); executors fetch
   * the blocks once via torrent, exactly like a broadcast-hash-join side.
@@ -117,11 +116,11 @@ object RingArgmaxCid {
 
   /** Evict SUPERSEDED generations only: drops every `dir#…` entry whose
     * fingerprint component differs from `liveFp`, keeping ALL rings of
-    * the live generation (ADVICE r16 — the old keep-one-key form
-    * re-broadcast on every session↔spread ring switch, and its
-    * startsWith(keep) over-kept ring names that prefix another).
-    * Keys are `dir#fp#ring`; both delimiters are '#' and `fp` is
-    * `size:bytes:mtimeNanos` (never contains '#'), so the generation
+    * the live generation (keeping one key would re-broadcast on every
+    * switch between rings, and a startsWith(keep) test would over-keep
+    * ring names that prefix another). Keys are `dir#fp#ring`; both
+    * delimiters are '#' and `fp` ([[graft.core.datasetFingerprint]]) is
+    * `count:bytes:mtimeNanos` (never contains '#'), so the generation
     * prefix `dir#fp#` is unambiguous.
     */
   def evict(dir: String, liveFp: String): Unit = {
@@ -148,9 +147,6 @@ object RingArgmaxCid {
       "(register via RingArgmaxCid.getOrBroadcast before building the plan)")
     RingArgmaxCid(ch(1), ch(2), bc)
   }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
 
   def ringArgmax(key: String, emb: org.apache.spark.sql.Column,
                  nv: org.apache.spark.sql.Column): org.apache.spark.sql.Column =

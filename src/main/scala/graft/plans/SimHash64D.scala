@@ -111,8 +111,4 @@ object SimHash64D {
   val ident: FunctionIdentifier = FunctionIdentifier("graft_simhash64")
   val info: ExpressionInfo = new ExpressionInfo(classOf[SimHash64D].getName, "graft_simhash64")
   val builder: Seq[Expression] => Expression = ch => SimHash64D(ch(0))
-
-  /** Idempotent per-session registration (mirrors [[DotProductD.register]]). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
 }

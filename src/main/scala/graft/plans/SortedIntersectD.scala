@@ -90,12 +90,8 @@ object SortedIntersectD {
     new ExpressionInfo(classOf[SortedIntersectD].getName, "graft_sorted_intersect")
   val builder: Seq[Expression] => Expression = ch => SortedIntersectD(ch(0), ch(1))
 
-  /** Idempotent per-session registration (mirrors [[DotProductD.register]]). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-
-  /** Column-API form (the registered function must be installed first —
-    * [[register]] or GraftExtensions).
+  /** Column-API form (the function must be installed first — see
+    * [[GraftExtensions.install]]).
     */
   def sortedIntersect(a: org.apache.spark.sql.Column,
                       b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =

@@ -110,8 +110,4 @@ object UniqUpTo {
   val ident: FunctionIdentifier = FunctionIdentifier("graft_uniq_upto")
   val info: ExpressionInfo = new ExpressionInfo(classOf[UniqUpTo].getName, "graft_uniq_upto")
   val builder: Seq[Expression] => Expression = ch => UniqUpTo(ch(0), ch(1))
-
-  /** Idempotent per-session registration. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
 }

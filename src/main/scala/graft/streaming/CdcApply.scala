@@ -156,7 +156,4 @@ object CdcApply {
     */
   def dropReplayed(changes: DataFrame, frontier: Long): DataFrame =
     changes.filter(col("lsn") > frontier)
-
-  /** The LSN frontier after applying a batch (max commit LSN). */
-  def frontierOf(changes: DataFrame): Column = max(col("lsn"))
 }

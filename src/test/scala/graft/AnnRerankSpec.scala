@@ -18,7 +18,7 @@ class AnnRerankSpec extends SparkSpec {
   private def gdot(a: String, b: String) = expr(s"graft_dot($a, $b)")
 
   private def vecs: DataFrame = {
-    graft.plans.DotProductD.register(spark)
+    graft.plans.GraftExtensions.install(spark)
     t(spark, sf001, "embeddings").select(col("vec_id"), col("embedding"))
   }
 

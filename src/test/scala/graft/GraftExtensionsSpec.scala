@@ -1,11 +1,13 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import graft.plans._
 
 /** The custom Catalyst expressions' two install points: the session
   * extension (`spark.sql.extensions=graft.plans.GraftExtensions`) and
-  * each object's on-demand `register`. Both must cover all seven.
+  * `GraftExtensions.install` for sessions built without it. Both must
+  * cover all seven.
   */
 class GraftExtensionsSpec extends SparkSpec {
 
@@ -41,12 +43,19 @@ class GraftExtensionsSpec extends SparkSpec {
     }
   }
 
-  test("on-demand register installs each function in a session built without the extension") {
+  test("install registers all seven in a fresh session; a second call is a no-op") {
     val s = spark.newSession()
     names.foreach(n => assert(!s.catalog.functionExists(n), s"$n must start unregistered"))
-    Seq[SparkSession => Unit](DotProductD.register, SimHash64D.register,
-      SortedIntersectD.register, GroupArrayN.register, RingArgmaxCid.register,
-      MinHash64D.register, UniqUpTo.register).foreach(_(s))
+    GraftExtensions.install(s)
     names.foreach(n => assert(s.catalog.functionExists(n), s"$n must resolve"))
+    // a second install leaves what the session has untouched: a marker
+    // registration under one of the names survives it
+    val registry = s.sessionState.functionRegistry
+    val marker = new ExpressionInfo(classOf[UniqUpTo].getName, UniqUpTo.ident.funcName)
+    registry.registerFunction(UniqUpTo.ident, marker, UniqUpTo.builder)
+    GraftExtensions.install(s)
+    assert(registry.lookupFunction(UniqUpTo.ident).exists(_ eq marker),
+      "a second install must not re-register")
+    assert(s.sql("SELECT graft_uniq_upto(id, 3) FROM range(10)").head.getLong(0) === 4L)
   }
 }

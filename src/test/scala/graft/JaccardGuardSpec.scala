@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
   * the LSH lane" as executable code, not prose. The guard measures the
   * exact candidate load the prefix index implies (Σ_band c·(c−1)/2 per
   * document) BEFORE the pair join launches and refuses past
-  * `graft.jaccard.maxPairsPerDoc` (default 4096). Each measurement is
+  * `spark.graft.jaccard.maxPairsPerDoc` (default 4096). Each measurement is
   * published on the `graft.jaccard.density.*` gauges.
   */
 class JaccardGuardSpec extends SparkSpec {
@@ -46,7 +46,7 @@ class JaccardGuardSpec extends SparkSpec {
     graft.core.releaseQueryCaches(spark)
     assert(e.getMessage.contains("dedup_minhash_lsh"),
       s"refusal must name the approximate lane: ${e.getMessage}")
-    assert(e.getMessage.contains("graft.jaccard.maxPairsPerDoc"),
+    assert(e.getMessage.contains("spark.graft.jaccard.maxPairsPerDoc"),
       s"refusal must name the budget knob: ${e.getMessage}")
     // the gauges record the measurement even on the refused path
     assert(density("avg") > 4096, "avg gauge must record the over-budget density")
@@ -89,7 +89,7 @@ class JaccardGuardSpec extends SparkSpec {
       .map { case (id, txt) => (id, txt, "en", "synthetic", txt.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    System.setProperty("graft.jaccard.maxPairsPerDoc", "50")
+    spark.conf.set("spark.graft.jaccard.maxPairsPerDoc", "50")
     try {
       val e = intercept[IllegalStateException] { fn(spark, dir) }
       graft.core.releaseQueryCaches(spark)
@@ -99,7 +99,7 @@ class JaccardGuardSpec extends SparkSpec {
       val (avg, hotG) = (density("avg"), density("hot"))
       assert(avg >= 0 && avg <= 50, s"fixture must keep the average inside budget: $avg")
       assert(hotG === 59, s"hottest band load must be the 60-doc clique: $hotG")
-    } finally sys.props -= "graft.jaccard.maxPairsPerDoc"
+    } finally spark.conf.unset("spark.graft.jaccard.maxPairsPerDoc")
   }
 
   test("core.planOnly suppresses the guard's eager probe jobs, scoped per call stack") {
@@ -145,15 +145,15 @@ class JaccardGuardSpec extends SparkSpec {
     assert(pairs.length === 300, // limit(300) of 60·59/2 = 1770 ja=1.0 pairs
       s"moderately dense corpus must still run exactly: ${pairs.length}")
     // and the same corpus trips under a tightened budget…
-    System.setProperty("graft.jaccard.maxPairsPerDoc", "100")
+    spark.conf.set("spark.graft.jaccard.maxPairsPerDoc", "100")
     try {
       intercept[IllegalStateException] { fn(spark, dir) }
       graft.core.releaseQueryCaches(spark)
       // …while 0 disables the guard entirely
-      System.setProperty("graft.jaccard.maxPairsPerDoc", "0")
+      spark.conf.set("spark.graft.jaccard.maxPairsPerDoc", "0")
       assert(fn(spark, dir).limit(1).collect().nonEmpty)
       graft.core.releaseQueryCaches(spark)
-    } finally sys.props -= "graft.jaccard.maxPairsPerDoc"
+    } finally spark.conf.unset("spark.graft.jaccard.maxPairsPerDoc")
   }
 
   test("routed twin: the decision fires the LSH branch on the declared corpus; both branches agree") {
@@ -181,14 +181,14 @@ class JaccardGuardSpec extends SparkSpec {
       "LSH-routed pairs must equal the exact lane's pairs at j >= 0.9")
     // an explicit budget raise flips the decision to the exact branch —
     // same rows either way (the oracle cannot tell the branches apart)
-    System.setProperty("graft.jaccard.routed.budget", Long.MaxValue.toString)
+    spark.conf.set("spark.graft.jaccard.routed.budget", Long.MaxValue.toString)
     try {
       val viaExact = routedFn(spark, sf001).collect().map(_.toSeq).toSeq
       graft.core.releaseQueryCaches(spark)
       assert(graft.core.gauge(spark, "graft.jaccard.routed.decision").value === 0L,
         "a raised budget must flip the decision to the exact branch")
       assert(viaExact === viaLsh)
-    } finally sys.props -= "graft.jaccard.routed.budget"
+    } finally spark.conf.unset("spark.graft.jaccard.routed.budget")
   }
 
   test("saturation short-circuit: a limit-saturated corpus answers from the group relation alone") {
@@ -232,12 +232,12 @@ class JaccardGuardSpec extends SparkSpec {
     assert(viaRouted.length === 300 && viaRouted.forall(_.apply(2) === 1.0))
     // the exact lane needs its density budget raised on this fixture
     // ((29/2)·1101 shared-prefix pairs/doc > 4096) — same rows either way
-    System.setProperty("graft.jaccard.maxPairsPerDoc", "0")
+    spark.conf.set("spark.graft.jaccard.maxPairsPerDoc", "0")
     try {
       val exact = fn(spark, dir).collect().map(_.toSeq).toSeq
       graft.core.releaseQueryCaches(spark)
       assert(viaRouted === exact,
         "the guarded full pipeline must still equal the exact lane's rows")
-    } finally sys.props -= "graft.jaccard.maxPairsPerDoc"
+    } finally spark.conf.unset("spark.graft.jaccard.maxPairsPerDoc")
   }
 }

@@ -934,7 +934,7 @@ class PlanShapeSpec extends SparkSpec {
     // or xxhash64 form) bounds its relation at ~N/k = ~√N rows: the
     // similarity family's DECLARED ring carrier, broadcast by contract
     // (~25 MB at a 10¹⁰-vector corpus — the same bytes the fold path
-    // ships per executor as an sc.broadcast past graft.ring.broadcastBytes).
+    // ships per executor as an sc.broadcast past spark.graft.ring.broadcastBytes).
     // Only the ring shape qualifies: a remainder-of-hash-of-id comparison
     // to a literal; a plain fraction/modulo on a raw column still flags.
     def ringPredicateBound(p: LogicalPlan): Boolean = {

@@ -68,7 +68,7 @@ class ScaleGenSpec extends SparkSpec {
   }
 
   test("embeddings: rotation is an isometry (norms preserved, copies decorrelated)") {
-    graft.plans.DotProductD.register(spark)
+    graft.plans.GraftExtensions.install(spark)
     val base = spark.read.parquet(s"$sf001/embeddings.parquet")
     val big = spark.read.parquet(s"$out/embeddings.parquet")
     assert(big.filter(size(col("embedding")) =!= 64).count() === 0L)

@@ -105,7 +105,7 @@ class DedupFunctionsSpec extends SparkSpec {
   }
 
   test("codegen simhash64 is bit-identical to the 64-filter declarative form on real docs") {
-    graft.plans.SimHash64D.register(spark)
+    graft.plans.GraftExtensions.install(spark)
     val d = graft.core.t(spark, sf001, "documents")
     val diff = d.select(
         MinHash.simhash64(col("text")).as("slow"),
@@ -121,7 +121,7 @@ class DedupFunctionsSpec extends SparkSpec {
   }
 
   test("codegen minhash64 matches the aggregate min(xxhash64(i,h)) form lane-for-lane") {
-    graft.plans.MinHash64D.register(spark)
+    graft.plans.GraftExtensions.install(spark)
     val k = 8
     val toks = graft.core.t(spark, sf001, "documents")
       .select(col("doc_id"),
@@ -159,7 +159,7 @@ class DedupFunctionsSpec extends SparkSpec {
   }
 
   test("fastDot is bit-identical to the declarative fold on real embeddings") {
-    graft.plans.DotProductD.register(spark)
+    graft.plans.GraftExtensions.install(spark)
     val e = graft.core.t(spark, sf001, "embeddings")
     val diff = e.as("a").crossJoin(e.as("b"))
       .filter(col("a.vec_id") < 50 && col("b.vec_id") < 50)
@@ -247,7 +247,7 @@ class DedupFunctionsSpec extends SparkSpec {
   }
 
   test("sorted-intersect kernel equals array_intersect size on real sorted token sets") {
-    graft.plans.SortedIntersectD.register(spark)
+    graft.plans.GraftExtensions.install(spark)
     // the producer contract of dedup_jaccard_prefix: per-doc DISTINCT
     // token hashes, array_sort'd — compare the merge-walk kernel against
     // the built-in on every same-lang doc pair of the real table

@@ -7,7 +7,7 @@ object SimHashTiming {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.plans.SimHash64D.register(spark)
+    graft.plans.GraftExtensions.install(spark)
     val d = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
     def time(name: String, c: org.apache.spark.sql.Column): Unit = {
       val df = d.select(c.as("sh"))

@@ -14,7 +14,7 @@ class UniqUpToSpec extends SparkSpec {
   }
 
   test("graft_uniq_upto == least(count distinct, N+1) on random data") {
-    UniqUpTo.register(spark)
+    graft.plans.GraftExtensions.install(spark)
     import spark.implicits._
     val gen = Gen.nonEmptyListOf(
       Gen.zip(Gen.choose(0L, 4L), Gen.choose(0L, 30L)))
