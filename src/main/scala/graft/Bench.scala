@@ -298,10 +298,7 @@ object Bench {
     */
   private[graft] def autoShufflePartitions(sfDir: String, cpus: Int,
       heapBytes: Long = Runtime.getRuntime.maxMemory): Int = {
-    def size(f: java.io.File): Long =
-      if (f.isDirectory) Option(f.listFiles()).fold(0L)(_.map(size).sum)
-      else f.length()
-    val bytes = size(new java.io.File(sfDir))
+    val bytes = core.bytesUnder(sfDir)
     // Two regimes with a measured boundary: while a 16 MiB/partition
     // split still fits inside the core count the corpus is latency-
     // bound and MORE partitions only add task overhead (the 187 MB 10×

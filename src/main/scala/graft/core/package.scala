@@ -69,20 +69,31 @@ package object core {
     // knob for A/B sweeps (mirrors SPARK_GRAFT_AQE_ADVISORY=off)
     if (sys.env.get("SPARK_GRAFT_SCAN_SPREAD").contains("off")) return df
     val cores = spark.sparkContext.defaultParallelism
-    def size(f: java.io.File): Long =
-      if (f.isDirectory) Option(f.listFiles()).fold(0L)(_.map(size).sum)
-      else f.length()
-    val bytes = size(new java.io.File(s"$sfDir/$name.parquet"))
-    val maxSplit = {
-      val raw = try spark.conf.get("spark.sql.files.maxPartitionBytes")
-        catch { case _: Throwable => "" }
-      val digits = raw.takeWhile(_.isDigit)
-      if (digits.nonEmpty) digits.toLong else 128L << 20
-    }
+    val bytes = bytesUnder(s"$sfDir/$name.parquet")
+    val maxSplit = confBytes(spark, "spark.sql.files.maxPartitionBytes", 128L << 20)
     val splits = math.max(1L, (bytes + maxSplit - 1) / maxSplit)
     if (bytes >= (256L << 10) && splits * 2 <= cores)
       df.repartition(cores, col(key))
     else df
+  }
+
+  /** Every file under `path` (the path itself when it is a file). */
+  private[graft] def filesUnder(path: String): Seq[java.io.File] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles()).fold(Seq.empty[java.io.File])(_.toSeq.flatMap(walk))
+      else Seq(f)
+    walk(new java.io.File(path))
+  }
+
+  /** Total bytes of the files under `path`. */
+  private[graft] def bytesUnder(path: String): Long = filesUnder(path).map(_.length()).sum
+
+  /** A byte-size session conf as its leading digits — a unit suffix is
+    * not scaled — or `default` when it has none. */
+  private[graft] def confBytes(spark: SparkSession, key: String, default: Long): Long = {
+    val raw = try spark.conf.get(key) catch { case _: Throwable => "" }
+    val digits = raw.takeWhile(_.isDigit)
+    if (digits.nonEmpty) digits.toLong else default
   }
 
   /** Cast to exact decimal — the first step of every money aggregate. */
@@ -194,13 +205,8 @@ package object core {
     val bytes = rddId.flatMap(id =>
       spark.sparkContext.getRDDStorageInfo.find(_.id == id))
       .map(i => i.memSize + i.diskSize).getOrElse(0L)
-    val advisory = {
-      val raw = try spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-        catch { case _: Throwable => "" }
-      val digits = raw.takeWhile(_.isDigit)
-      val v = if (digits.nonEmpty) digits.toLong else 4L << 20
-      math.max(1L << 20, math.min(16L << 20, v))
-    }
+    val advisory = math.max(1L << 20, math.min(16L << 20,
+      confBytes(spark, "spark.sql.adaptive.advisoryPartitionSizeInBytes", 4L << 20)))
     val target = math.max(1L, math.min(parts.toLong,
       (bytes + advisory - 1) / advisory)).toInt
     if (2 * target <= parts) ck.coalesce(target) else ck
@@ -269,10 +275,7 @@ package object core {
     * same-size regeneration within the same second). One stat pass.
     */
   private[graft] def datasetFingerprint(dir: String): String = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) Option(f.listFiles()).fold(Seq.empty[java.io.File])(_.toSeq.flatMap(walk))
-      else Seq(f)
-    val fs = walk(new java.io.File(dir))
+    val fs = filesUnder(dir)
     def mtimeNanos(f: java.io.File): Long =
       try java.nio.file.Files.getLastModifiedTime(f.toPath)
         .to(java.util.concurrent.TimeUnit.NANOSECONDS)
@@ -288,6 +291,14 @@ package object core {
       if (!sharedBuilds.contains(k)) evictShared(o => o.dir == dir && o.fp != fp)
       sharedBuilds.getOrElseUpdate(k, build).asInstanceOf[A]
     }
+
+  /** A relation several queries scan: the session's shared build, right-
+    * sized by its materialized bytes ([[ckptRightsized]]), under
+    * [[SharedPipeline]]; otherwise the query's own plan, persisted for
+    * the query. Values identical either way. */
+  def sharedOr(spark: SparkSession, dir: String, name: String)(build: => DataFrame): DataFrame =
+    if (!setting(spark, SharedPipeline)) scopedPersist(build)
+    else shared(spark, dir, name)(ckptRightsized(build))
 
   private def evictShared(stale: SharedKey => Boolean): Unit = {
     def frames(v: Any): Iterator[DataFrame] = v match {

@@ -13,22 +13,16 @@ object TextAnalysis {
   /** Whitespace tokens. */
   def words(text: Column): Column = split(text, " ")
 
-  /** BPE-ish token estimate: ceil(chars / 4). */
-  def tokenEstimate(nChars: Column): Column = ceil(nChars / 4.0).cast("long")
-
-  /** Character n-grams of a string (language-ID features). */
-  def charNgrams(text: Column, n: Int): Column =
-    expr(s"transform(sequence(1, greatest(length(text) - ${n - 1}, 0)), i -> substr(text, i, $n))")
-
   /** Trigram-profile language score: fraction of the text's char trigrams
     * found in the language's profile set. Profiles are broadcast as a
     * literal array — at scale this is a map-side-only operator.
     */
   def trigramScore(text: Column, profile: Seq[String]): Column = {
     val prof = array(profile.map(lit): _*)
-    val grams = expr("transform(sequence(1, greatest(length(text) - 2, 0)), i -> substr(text, i, 3))")
-    size(array_intersect(array_distinct(grams), prof)).cast("double") /
-      greatest(size(array_distinct(grams)), lit(1)).cast("double")
+    val grams = array_distinct(
+      transform(sequence(lit(1), greatest(length(text) - 2, lit(0))), i => text.substr(i, lit(3))))
+    size(array_intersect(grams, prof)).cast("double") /
+      greatest(size(grams), lit(1)).cast("double")
   }
 
   /** Rolling hash fingerprint over word hashes — order sensitive, unlike
@@ -70,14 +64,5 @@ object TextAnalysis {
          |    cast(array() as array<bigint>),
          |    (acc, gh) -> transform(sequence(1, greatest(size(gh) - ${window - 1}, 1)),
          |                           i -> array_min(slice(gh, i, $window))))) end""".stripMargin)
-  }
-
-  /** Quality score: length norm + stopword ratio, both in [0, 1]. */
-  def qualityScore(text: Column, nChars: Column, stopwords: Seq[String]): Column = {
-    val w = words(text)
-    val stops = array(stopwords.map(lit): _*)
-    val stopRatio = size(array_intersect(w, stops)).cast("double") /
-      greatest(size(w), lit(1)).cast("double")
-    least(lit(1.0), nChars / 500.0) * 0.5 + stopRatio * 0.5
   }
 }

@@ -42,18 +42,13 @@ object SimilarityQueries {
   // sim_ann_rerank derives its cell map from it), the PQ code table
   // identically by sim_pq_adc and sim_ann_rerank — each a full corpus
   // pass. Under `spark.graft.shared.pipeline` each is one session build
-  // ([[graft.core.shared]]); unset, every query keeps its inline
+  // ([[graft.core.sharedOr]]), right-sized by materialized bytes:
+  // consumers scan these relations ~15× per graph query, and the raw
+  // checkpoint would carry the initial shuffle-partition count into
+  // every one of those stages. Unset, every query keeps its inline
   // scopedPersist plan. Values identical by construction — the build IS
   // the expression chain the queries inline.
   // ------------------------------------------------------------------
-
-  private[graft] def sharedOr(spark: SparkSession, key: String, dir: String)
-                      (build: => DataFrame): DataFrame =
-    if (!setting(spark, SharedPipeline)) scopedPersist(build)
-    // right-sized by materialized bytes: consumers scan these relations
-    // ~15× per graph query, and the raw checkpoint would carry the
-    // initial shuffle-partition count into every one of those stages
-    else shared(spark, dir, key)(ckptRightsized(build))
 
   // ------------------------------------------------------------------
   // Centroid rings. The declared queries use the 10-vector ring
@@ -229,13 +224,13 @@ object SimilarityQueries {
     * IVF family's entry point.
     */
   private def ivfAssigned(spark: SparkSession, dir: String): DataFrame =
-    sharedOr(spark, s"ivf@$OracleRing", dir) { ivfAssignedAt(spark, dir, OracleRing) }
+    sharedOr(spark, dir, s"ivf@$OracleRing") { ivfAssignedAt(spark, dir, OracleRing) }
 
   /** Corpus PQ code table `(vec_id, m, code)` — the broadcast-codebook
     * min_by aggregate shared by the ADC family.
     */
   private def pqCodes(spark: SparkSession, dir: String): DataFrame =
-    sharedOr(spark, "pq", dir) {
+    sharedOr(spark, dir, "pq") {
       val M = 4
       val sub = expr("slice(embedding, m * 16 + 1, 16)")
       val cb = vecs(spark, dir)
@@ -271,7 +266,7 @@ object SimilarityQueries {
     * scopedPersist otherwise. Values identical by construction either way.
     */
   private def graphEdges0(spark: SparkSession, dir: String): DataFrame =
-    sharedOr(spark, s"ged0@$OracleRing", dir) {
+    sharedOr(spark, dir, s"ged0@$OracleRing") {
       cellKnn(ivfAssigned(spark, dir), lit(true), 8)
     }
 
@@ -778,7 +773,7 @@ object SimilarityQueries {
         val n = corpusN(spark, dir)
         val k = math.max(1L, math.round(math.sqrt(n.toDouble)))
         val ring = PortableSpreadRing(k)
-        val assigned = sharedOr(spark, s"ivf@$ring", dir) {
+        val assigned = sharedOr(spark, dir, s"ivf@$ring") {
           ivfAssignedAt(spark, dir, ring)
         }
         val a = assigned.select(col("cid"), col("vec_id").as("v1"),
@@ -1694,7 +1689,7 @@ object SimilarityQueries {
     "sample_diverse_cells_spread" -> QueryDef(
       (spark, dir) => {
         val ring = portableRing(spark, dir)
-        val assigned = sharedOr(spark, s"ivf@$ring", dir) {
+        val assigned = sharedOr(spark, dir, s"ivf@$ring") {
           ivfAssignedAt(spark, dir, ring)
         }
         assigned.join(broadcast(ringCents(spark, dir, ring)), Seq("cid"))
@@ -1746,10 +1741,10 @@ object SimilarityQueries {
       (spark, dir) => {
         val B = 4
         val ring = portableRing(spark, dir)
-        val assigned = sharedOr(spark, s"ivf@$ring", dir) {
+        val assigned = sharedOr(spark, dir, s"ivf@$ring") {
           ivfAssignedAt(spark, dir, ring)
         }
-        val edges = sharedOr(spark, s"ged0@$ring", dir) {
+        val edges = sharedOr(spark, dir, s"ged0@$ring") {
           cellKnn(assigned, lit(true), 8)
         }
         val corpus = assigned.select(col("vec_id").as("cvid"),
@@ -1849,10 +1844,10 @@ object SimilarityQueries {
     "sim_graph_hnsw_spread" -> QueryDef(
       (spark, dir) => {
         val ring = portableRing(spark, dir)
-        val assigned = sharedOr(spark, s"ivf@$ring", dir) {
+        val assigned = sharedOr(spark, dir, s"ivf@$ring") {
           ivfAssignedAt(spark, dir, ring)
         }
-        val edges0 = sharedOr(spark, s"ged0@$ring", dir) {
+        val edges0 = sharedOr(spark, dir, s"ged0@$ring") {
           cellKnn(assigned, lit(true), 8)
         }
         val edges1 = cellKnn(assigned, col("vec_id") % 16 === 0, 4)

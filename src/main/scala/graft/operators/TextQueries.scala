@@ -72,8 +72,26 @@ object TextQueries {
   private def simhashSpark: String = simhashSparkW(16)
   private def simhashDuck: String = simhashDuckW(16)
 
+  // ------------------------------------------------------------------
+  // The MinHash-LSH dedup kernel. Every LSH consumer below reads these
+  // stages: 3-word shingles → one md5 per shingle → 8 minhash lanes →
+  // 4 two-lane band keys → hot-band cap → band self-join → exact-Jaccard
+  // verify. [[LshSql]] is the DuckDB twin, stage for stage.
+  // ------------------------------------------------------------------
+
   /** The 3-word shingles of a split-words column `w`, Spark SQL form. */
   private val shingles3 = "transform(sequence(1, size(w) - 2), j -> concat_ws(' ', slice(w, j, 3)))"
+
+  /** Docs of ≥ 3 words with their words `w` and 3-word `shingles`;
+    * shorter docs have no shingles and take no part in LSH. */
+  private def shingled(docs: DataFrame): DataFrame =
+    docs.withColumn("w", split(col("text"), " "))
+      .filter(size(col("w")) >= 3)
+      .withColumn("shingles", expr(shingles3))
+
+  /** Distinct shingle sets `(doc_id, s)`, the lookup side of [[verified]]. */
+  private def shingleSets(sh: DataFrame): DataFrame =
+    sh.select(col("doc_id"), array_distinct(col("shingles")).as("s"))
 
   /** Minhash lane `i` (0…7) of an array of md5 hex digests, one digest
     * per shingle: the minimum over the 11-hex (44-bit) window at offset
@@ -85,102 +103,184 @@ object TextQueries {
   private def mhLane(digests: String, i: Int): Column =
     expr(s"array_min(transform($digests, h -> cast(conv(substr(h, ${1 + 3 * i}, 11), 16, 10) as bigint)))")
 
-  /** `df` plus the 8 minhash lanes `mh0`…`mh7` of its `digests` column. */
-  private def withMhLanes(df: DataFrame, digests: String): DataFrame =
-    (0 until 8).foldLeft(df)((d, i) => d.withColumn(s"mh$i", mhLane(digests, i)))
+  /** `sh` plus its 8 minhash lanes `mh0`…`mh7`. */
+  private def signed(sh: DataFrame): DataFrame =
+    (0 until 8).foldLeft(sh.withColumn("digests", expr("transform(shingles, s -> md5(s))"))) {
+      (d, i) => d.withColumn(s"mh$i", mhLane("digests", i))
+    }
 
-  /** The 4 LSH band keys over lanes `mh0`…`mh7`: band b is the md5 of
-    * "b-mh(2b)-mh(2b+1)". */
-  private val mhBandKeys: Seq[Column] = (0 until 4).map { b =>
-    md5(concat_ws("-", lit(b.toString), col(s"mh${2 * b}"), col(s"mh${2 * b + 1}")))
+  /** Band key `b` over `lanes`: the md5 of "[cfg-]b-mh…-mh…". */
+  private def bandKey(b: Int, lanes: Seq[Int], cfg: Option[String] = None): Column =
+    md5(concat_ws("-", (cfg.toSeq :+ b.toString).map(lit) ++ lanes.map(i => col(s"mh$i")): _*))
+
+  /** `dedup_lsh_tuning`'s bands `(cfg, b, lanes)` over the same 8 lanes:
+    * b4r2 (the production split), b2r4 and b8r1. */
+  private val tuningBands: Seq[(String, Int, Seq[Int])] =
+    Seq(("b4r2", 4, 2), ("b2r4", 2, 4), ("b8r1", 8, 1)).flatMap { case (cfg, n, r) =>
+      (0 until n).map(b => (cfg, b, b * r until (b + 1) * r))
+    }
+
+  /** The band keys `(doc_id, extra…, k)` of a relation with lanes
+    * `mh0`…`mh7`: 4 bands of 2 lanes, all in one explode (a union of
+    * four selects would recompute the lanes per branch). */
+  private def bandKeys(lanes: DataFrame, extra: Column*): DataFrame =
+    lanes.select((col("doc_id") +: extra :+
+      explode(array((0 until 4).map(b => bandKey(b, Seq(2 * b, 2 * b + 1))): _*)).as("k")): _*)
+
+  /** Hot-band guard: a bucket of B docs emits B²/2 pairs, so one
+    * mega-bucket of boilerplate goes quadratic; buckets over 100 are
+    * skipped (the largest at sf0.1 holds 11 — the cap exists for the
+    * 100 TB corpus, not the test scale). */
+  private def capped(bands: DataFrame): DataFrame =
+    graft.functions.MinHash.capBands(bands, "k", 100)
+
+  /** Distinct candidate pairs `(keep…, d1, d2)`, d1 < d2, of docs that
+    * share a capped band key — the self-join is on band keys, never
+    * all-pairs. */
+  private def candidates(bands: DataFrame, keep: String*): DataFrame = {
+    val c = capped(bands)
+    c.as("a").join(c.as("b"), col("a.k") === col("b.k") && col("a.doc_id") < col("b.doc_id"))
+      .select(keep.map(k => col(s"a.$k").as(k)) ++
+        Seq(col("a.doc_id").as("d1"), col("b.doc_id").as("d2")): _*)
+      .distinct()
   }
 
-  /** Shared MinHash→LSH→exact-Jaccard pipeline behind the verified dedup
-    * queries: returns (shingled docs, band relation, candidate pairs with
-    * `ja`). Scale notes live on `dedup_minhash_verified` below.
+  /** Exact-Jaccard verify of candidate pairs `(d1, d2)` against the
+    * shingle sets `shs`: adds `inter`, the rounded `ja`, and the exact
+    * set sizes `n1`, `n2`. SHUFFLE_HASH pins a shuffled hash join (both
+    * sides partitioned by the doc_id key; candidate side builds) — no
+    * sort, and no planner fallback to broadcasting the unbounded
+    * candidate side. Consumers whose thresholds predate the rounding
+    * (dedup_incremental's raw inter/(n1+n2-inter) >= 0.5) must reproduce
+    * the SAME IEEE comparison from `inter`, `n1` and `n2`: pround'd ja
+    * can round a just-under value up across the boundary.
     */
-  private def buildVerifiedPipeline(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val base = t(spark, dir, "documents")
-      .withColumn("w", split(col("text"), " "))
-      .filter(size(col("w")) >= 3)
-      .withColumn("shingles", expr(shingles3))
-      .scopedPersist()
-    val shs = base.select(col("doc_id"), array_distinct(col("shingles")).as("s"))
-    val withMh = withMhLanes(
-      base.withColumn("digests", expr("transform(shingles, s -> md5(s))")), "digests")
-    val bands = withMh.select(col("doc_id"), explode(array(mhBandKeys: _*)).as("k"))
-      .scopedPersist()
-    // hot-band guard, same policy as dedup_minhash_lsh
-    val capped = graft.functions.MinHash.capBands(bands, "k", 100)
-    val cand = capped.as("a")
-      .join(capped.as("b"), col("a.k") === col("b.k") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-      .distinct()
-    // SHUFFLE_HASH pins a shuffled hash join (both sides partitioned by
-    // the doc_id key; candidate side builds) — no sort, and no planner
-    // fallback to broadcasting the unbounded candidate side.
-    val withS1 = cand.hint("shuffle_hash")
+  private def verified(cand: DataFrame, shs: DataFrame): DataFrame =
+    cand.hint("shuffle_hash")
       .join(shs, col("d1") === col("doc_id"))
       .select(col("d1"), col("d2"), col("s").as("s1"))
-    val pairs = withS1.hint("shuffle_hash")
+      .hint("shuffle_hash")
       .join(shs, col("d2") === col("doc_id"))
       .withColumn("inter", size(array_intersect(col("s1"), col("s"))).cast("double"))
       .withColumn("ja", pround(col("inter")
         / (size(col("s1")) + size(col("s")) - col("inter")), 4))
-      // exact ingredients alongside the rounded ja: consumers whose
-      // thresholds predate the rounding (dedup_incremental's raw
-      // inter/(n1+n2-inter) >= 0.5) must reproduce the SAME IEEE
-      // comparison, and pround'd ja can round a just-under value up
-      // across the boundary
       .withColumn("n1", size(col("s1")))
       .withColumn("n2", size(col("s")))
+
+  /** The whole kernel over `dir`'s documents: (shingled docs, band
+    * relation, verified pairs, signatures `(doc_id, sig)`). Scale notes
+    * live on `dedup_minhash_verified` below.
+    */
+  private def buildVerifiedPipeline(spark: SparkSession, dir: String)
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val base = shingled(t(spark, dir, "documents")).scopedPersist()
+    val withMh = signed(base)
+    val bands = bandKeys(withMh).scopedPersist()
+    val pairs = verified(candidates(bands), shingleSets(base))
     val sigs = withMh.select(col("doc_id"),
       array((0 until 8).map(i => col(s"mh$i")): _*).as("sig"))
     (base, bands, pairs, sigs)
   }
 
-  /** The two relations the verified-dedup consumers actually read:
-    * `docs(doc_id, lang)` and `pairs(d1, d2, ja)`.
-    *
-    * `dedup_minhash_verified`, `dedup_keep_list`, and
-    * `dedup_cluster_components` each re-run the identical ~N s shingle→
-    * minhash→band→verify pipeline — redundant only ACROSS queries in one
-    * harness sweep, so sharing is opt-in via `spark.graft.shared.pipeline`
-    * (set by the harness session, never by ScalaTest: the plan-shape and
-    * determinism suites must see each query's real un-memoized plan).
-    * When on, the pipeline is one session build ([[graft.core.shared]])
-    * and the narrow results are `localCheckpoint`ed — RDD-level
-    * MEMORY_AND_DISK blocks with truncated lineage that survive the
-    * harness's per-query `spark.catalog.clearCache()` (a plain persist
-    * would silently recompute). Values are identical by pipeline
-    * determinism (DeterminismSpec pins it under 4-vs-13 shuffle
-    * partitions); CORRECTNESS hashes are unchanged by construction.
+  /** The relations the verified-dedup consumers read: `docs(doc_id,
+    * lang)`, `pairs(d1, d2, ja, inter, n1, n2)` and `sigs(doc_id, sig)`. */
+  private final case class Verified(docs: DataFrame, pairs: DataFrame, sigs: DataFrame)
+
+  /** A kernel stage: `stored` of the session's shared build under
+    * `spark.graft.shared.pipeline`, else the query's own plan `planned`.
+    * This is the only place the dedup consumers (`dedup_minhash_lsh`,
+    * `_verified`, `dedup_keep_list`, `dedup_cluster_components`,
+    * `dedup_incremental`, `dedup_minhash_est`, `dedup_lsh_tuning`) read
+    * the switch. Each would re-run the identical shingle→minhash→band→
+    * verify pipeline — redundant only ACROSS queries in one harness
+    * sweep, so sharing is opt-in (set by the harness session, never by
+    * ScalaTest: the plan-shape and determinism suites must see each
+    * query's real un-memoized plan). The shared build is ONE session
+    * build ([[graft.core.shared]]) whose narrow results are
+    * `localCheckpoint`ed — RDD-level MEMORY_AND_DISK blocks with
+    * truncated lineage that survive the harness's per-query
+    * `spark.catalog.clearCache()` (a plain persist would silently
+    * recompute). Values are identical by pipeline determinism
+    * (DeterminismSpec pins it under 4-vs-13 shuffle partitions,
+    * SimCacheSpec pins shared ≡ unshared per consumer).
     */
-  private def verifiedShared(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame) =
-    if (!setting(spark, SharedPipeline)) {
-      val (base, _, pairs, sigs) = buildVerifiedPipeline(spark, dir)
-      (base.select(col("doc_id"), col("lang")), pairs, sigs)
-    } else shared(spark, dir, "text.verified") {
+  private def lshStage[A](spark: SparkSession, dir: String)(stored: Verified => A)(planned: => A): A =
+    if (!setting(spark, SharedPipeline)) planned
+    else stored(shared(spark, dir, "text.verified") {
       val (base, bands, pairs, sigs) = buildVerifiedPipeline(spark, dir)
-      val docs = ckptRightsized(base.select(col("doc_id"), col("lang")))
-      val p = ckptRightsized(pairs.select(col("d1"), col("d2"), col("ja"),
-        col("inter"), col("n1"), col("n2")))
-      // sigs are 8 longs per doc — checkpointed so dedup_minhash_est's
-      // estimator grades the SAME signatures the candidates came from
-      // without re-running the md5 minhash pass
-      val sg = ckptRightsized(sigs)
+      val v = Verified(
+        ckptRightsized(base.select(col("doc_id"), col("lang"))),
+        ckptRightsized(pairs.select(col("d1"), col("d2"), col("ja"),
+          col("inter"), col("n1"), col("n2"))),
+        // checkpointed so dedup_minhash_est grades the SAME signatures
+        // the candidates came from without re-running the md5 pass
+        ckptRightsized(sigs))
       // the checkpoints are materialized — free the pipeline's own
       // persisted intermediates instead of waiting for clearCache
       base.unpersist(); bands.unpersist()
-      (docs, p, sg)
+      v
+    })
+
+  /** The docs, verified pairs and signatures of the whole corpus. */
+  private def lshVerified(spark: SparkSession, dir: String): Verified =
+    lshStage(spark, dir)(identity) {
+      val (base, _, pairs, sigs) = buildVerifiedPipeline(spark, dir)
+      Verified(base.select(col("doc_id"), col("lang")), pairs, sigs)
     }
+
+  /** Distinct candidate pairs `(d1, d2)` of the whole corpus. Shared,
+    * these are the stored pairs: same shingles, bands and cap, one row
+    * per distinct candidate. Unshared, the band relation is persisted —
+    * the self-join reads it twice, and without it the md5 signature pass
+    * runs once per join side. */
+  private def lshCandidates(spark: SparkSession, dir: String): DataFrame =
+    lshStage(spark, dir)(_.pairs.select(col("d1"), col("d2"))) {
+      candidates(bandKeys(signed(shingled(t(spark, dir, "documents")))).scopedPersist())
+    }
+
+  /** Docs with their 8 minhash lanes `mh0`…`mh7`; shared, the lanes are
+    * read back from the stored signatures. */
+  private def lshLanes(spark: SparkSession, dir: String): DataFrame =
+    lshStage(spark, dir) { v =>
+      (0 until 8).foldLeft(v.sigs)((d, i) => d.withColumn(s"mh$i", col("sig")(i)))
+    }(signed(shingled(t(spark, dir, "documents"))))
+
+  /** Delta docs (doc_id ≥ 250) with an existing near-duplicate (raw
+    * Jaccard ≥ 0.5), as one column `d2`. Shared, they are the stored
+    * pairs with d1 < 250 ≤ d2: band partners always straddle the id
+    * split in (min, max) order, and the raw Jaccard re-runs from the
+    * exact ingredients. Unshared, the band join is restricted to
+    * delta×existing (never delta×delta or existing×existing) — the
+    * ingest shape, where the corpus side is touched once per batch.
+    */
+  private def deltaNearDups(spark: SparkSession, dir: String): DataFrame = {
+    val near = col("inter") / (col("n1") + col("n2") - col("inter")) >= 0.5
+    lshStage(spark, dir) {
+      _.pairs.filter(col("d1") < 250 && col("d2") >= 250 && near).select(col("d2")).distinct()
+    } {
+      val base = shingled(t(spark, dir, "documents")).scopedPersist()
+      val bands = bandKeys(signed(base), (col("doc_id") >= 250).as("is_new")).scopedPersist()
+      val c = capped(bands)
+      val cand = c.filter(!col("is_new")).as("a")
+        .join(c.filter(col("is_new")).as("b"), col("a.k") === col("b.k"))
+        .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
+        .distinct()
+      verified(cand, shingleSets(base)).filter(near).select(col("d2")).distinct()
+    }
+  }
+
+  /** The LSH band keys of a (doc_id, text)-shaped relation, so the
+    * BATCH admission operator (dedup_band_admit) and the STREAMING
+    * incremental twin (StreamBench band_admit_restart) derive bands with
+    * the kernel's definition. One map pass; nothing shuffles.
+    */
+  private[graft] def minhashBands(docs: DataFrame): DataFrame =
+    bandKeys(signed(shingled(docs)))
 
   /** Per-doc winnowed fingerprints `(doc_id, n_grams, fps)` — the md5
     * 3-gram hash + window-min pass both `text_winnowing` and
     * `dedup_winnowing_pairs` start from. Same opt-in sharing contract as
-    * [[verifiedShared]]: un-shared (ScalaTest) each query builds its
+    * [[lshStage]]: un-shared (ScalaTest) each query builds its
     * own plan; under `spark.graft.shared.pipeline` the relation is one
     * checkpointed session build. Values identical by construction — the
     * build is the exact expression chain both queries inline.
@@ -199,30 +299,13 @@ object TextQueries {
     else shared(spark, dir, "text.winnowed")(ckptRightsized(build))
   }
 
-  /** The LSH band keys of a (doc_id, text)-shaped relation — the exact
-    * signature pipeline of dedup_minhash_lsh (3-shingles → one md5 per
-    * shingle → 8 11-hex-window minhash lanes → 4 two-lane band keys),
-    * factored so the BATCH admission operator (dedup_band_admit) and
-    * the STREAMING incremental twin (StreamBench band_admit_restart)
-    * derive bands with one shared definition. Docs under 3 words have
-    * no shingles and emit no bands. One map pass; nothing shuffles.
-    */
-  private[graft] def minhashBands(docs: DataFrame): DataFrame = {
-    val shingled = docs
-      .withColumn("w", split(col("text"), " "))
-      .filter(size(col("w")) >= 3)
-      .withColumn("dg", expr(s"transform($shingles3, s -> md5(s))"))
-    val withMh = withMhLanes(shingled, "dg")
-    withMh.select(col("doc_id"), explode(array(mhBandKeys: _*)).as("k"))
-  }
-
   /** The curation pipelines' per-doc feature relation (gopher stats,
     * content digest, distinct shingle set, 8 minhash lanes, distinct
     * 5-grams, sampling hash) — ONE corpus text pass shared by
     * `pipeline_curation_e2e` and `pipeline_incremental_e2e`. Every
     * feature is PER-DOC (independent of the rest of the corpus), so the
     * relation qualifies for the same opt-in session-shared
-    * localCheckpoint contract as [[verifiedShared]]; un-shared runs
+    * localCheckpoint contract as [[lshStage]]; un-shared runs
     * keep the real single-query plan (scopedPersist).
     */
   private def e2eFeatures(spark: SparkSession, dir: String): DataFrame = {
@@ -254,36 +337,57 @@ object TextQueries {
         .otherwise(expr("cast(array() as array<string>)")))
       .withColumn("dg", expr("transform(sh, s -> md5(s))"))
       .select(featureCols: _*)
-    if (!setting(spark, SharedPipeline)) scopedPersist(build)
-    else shared(spark, dir, "text.e2e")(ckptRightsized(build))
+    sharedOr(spark, dir, "text.e2e")(build)
+  }
+
+  /** DuckDB twin of the LSH kernel, one CTE per stage. `x` is the list
+    * of extra columns a consumer carries through the stages (e.g.
+    * "isd, "). */
+  private object LshSql {
+    /** 3-word shingles of the word list `w`. */
+    def shingles(w: String): String =
+      s"list_transform(range(1, len($w) - 1), j -> $w[j] || ' ' || $w[j+1] || ' ' || $w[j+2])"
+    /** `docs`: the ≥ 3-word documents with `cols` before their words `w`. */
+    def docs(cols: String = ""): String =
+      s"docs AS (SELECT doc_id, ${cols}string_split(text, ' ') AS w FROM documents " +
+        "WHERE len(string_split(text, ' ')) >= 3)"
+    def sh(src: String, x: String = ""): String =
+      s"sh AS (SELECT doc_id, $x${shingles("w")} AS shingles FROM $src)"
+    def shs(src: String = "sh"): String =
+      s"shs AS (SELECT doc_id, list_distinct(shingles) AS s FROM $src)"
+    /** The 8 minhash lanes of a `shingles` list ([[mhLane]]). */
+    val mhCols: String = (0 until 8).map { i =>
+      s"list_min(list_transform(shingles, s -> CAST('0x' || substr(md5(s), ${1 + 3 * i}, 11) AS BIGINT))) AS mh$i"
+    }.mkString(", ")
+    def mh(src: String = "sh", x: String = ""): String = s"mh AS (SELECT doc_id, $x$mhCols FROM $src)"
+    def bandKey(b: Int, lanes: Seq[Int], cfg: Option[String] = None): String =
+      s"md5(${((cfg.toSeq :+ b.toString).map(v => s"'$v'") ++ lanes.map(i => s"mh$i")).mkString(" || '-' || ")})"
+    def bandSelect(x: String, key: String): String = s"SELECT doc_id, $x$key AS k FROM mh"
+    def bands(x: String = ""): String =
+      "bands AS (" + (0 until 4).map(b => bandSelect(x, bandKey(b, Seq(2 * b, 2 * b + 1))))
+        .mkString(" UNION ALL ") + ")"
+    def capped(x: String = ""): String =
+      s"bandsc AS (SELECT doc_id, ${x}k FROM (SELECT doc_id, ${x}k, " +
+        "count(*) OVER (PARTITION BY k) AS c FROM bands) WHERE c <= 100)"
+    /** The band self-join under `on`, distinct over `sel`. */
+    def pairing(sel: String = "a.doc_id AS d1, b.doc_id AS d2",
+                on: String = "a.doc_id < b.doc_id"): String =
+      s"SELECT DISTINCT $sel FROM bandsc a JOIN bandsc b ON a.k = b.k AND $on"
+    val cand: String = s"cand AS (${pairing()})"
+    /** Exact Jaccard of the shingle sets `s1.s`, `s2.s`. */
+    val jaccard: String = "CAST(len(list_intersect(s1.s, s2.s)) AS DOUBLE) / " +
+      "(len(s1.s) + len(s2.s) - CAST(len(list_intersect(s1.s, s2.s)) AS DOUBLE))"
+    val pairs: String = s"pairs AS (SELECT cand.d1, cand.d2, ${proundSql(jaccard, 4)} AS ja FROM cand " +
+      "JOIN shs s1 ON s1.doc_id = cand.d1 JOIN shs s2 ON s2.doc_id = cand.d2)"
+    /** From shingled `src` to verified `pairs(d1, d2, ja)`. */
+    def verified(src: String): String =
+      Seq(sh(src), shs(), mh(), bands(), capped(), cand, pairs).mkString(", ")
   }
 
   /** Oracle twin of [[buildVerifiedPipeline]]: shared CTE prefix ending in a
     * `pairs(d1, d2, ja)` relation (no trailing SELECT — callers append).
     */
-  private val verifiedCtes: String = {
-    val mhCols = (0 until 8).map { i =>
-      s"list_min(list_transform(shingles, s -> CAST('0x' || substr(md5(s), ${1 + 3 * i}, 11) AS BIGINT))) AS mh$i"
-    }.mkString(", ")
-    val bandSelects = (0 until 4).map { b =>
-      s"SELECT doc_id, md5('$b' || '-' || mh${2 * b} || '-' || mh${2 * b + 1}) AS k FROM mh"
-    }.mkString(" UNION ALL ")
-    val ja = proundSql("""CAST(len(list_intersect(s1.s, s2.s)) AS DOUBLE)
-      | / (len(s1.s) + len(s2.s) - CAST(len(list_intersect(s1.s, s2.s)) AS DOUBLE))""".stripMargin.replace("\n", ""), 4)
-    s"""WITH docs AS (SELECT doc_id, lang, string_split(text, ' ') AS w FROM documents
-       |WHERE len(string_split(text, ' ')) >= 3),
-       |sh AS (SELECT doc_id, list_transform(range(1, len(w) - 1),
-       |j -> w[j] || ' ' || w[j+1] || ' ' || w[j+2]) AS shingles FROM docs),
-       |shs AS (SELECT doc_id, list_distinct(shingles) AS s FROM sh),
-       |mh AS (SELECT doc_id, $mhCols FROM sh),
-       |bands AS ($bandSelects),
-       |bandsc AS (SELECT doc_id, k FROM (SELECT doc_id, k,
-       |count(*) OVER (PARTITION BY k) AS c FROM bands) WHERE c <= 100),
-       |cand AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2 FROM bandsc a JOIN bandsc b
-       |ON a.k = b.k AND a.doc_id < b.doc_id),
-       |pairs AS (SELECT cand.d1, cand.d2, $ja AS ja FROM cand
-       |JOIN shs s1 ON s1.doc_id = cand.d1 JOIN shs s2 ON s2.doc_id = cand.d2)""".stripMargin.replace("\n", " ")
-  }
+  private val verifiedCtes: String = s"WITH ${LshSql.docs("lang, ")}, ${LshSql.verified("docs")}"
 
   // ------------------------------------------------------------------
   // Shared machinery of the exact-Jaccard lane (dedup_jaccard_prefix)
@@ -683,59 +787,10 @@ object TextQueries {
     // verification never touches all-pairs. Spark-optimized variant:
     // graft.functions.MinHash (xxhash64).
     "dedup_minhash_lsh" -> QueryDef(
-      (spark, dir) => if (setting(spark, SharedPipeline)) {
-        // harness sweeps: the candidate relation IS the shared verified
-        // pipeline's pairs relation (same shingles, bands, cap — one row
-        // per distinct candidate pair), so count it instead of
-        // recomputing the identical band join; the oracle hash-match
-        // proves the equality at every SF.
-        verifiedShared(spark, dir)._2.agg(cnt("candidate_pairs"))
-      } else {
-        // ONE md5 per shingle feeds the 8 minhash lanes ([[mhLane]]).
-        val docs = t(spark, dir, "documents")
-          .withColumn("w", split(col("text"), " "))
-          .filter(size(col("w")) >= 3)
-          .withColumn("shingles", expr(shingles3))
-          .withColumn("digests", expr("transform(shingles, s -> md5(s))"))
-        val withMh = withMhLanes(docs, "digests")
-        // all 4 band keys in one pass (array + explode) - a union of four
-        // selects would recompute the shingle/minhash pipeline per branch.
-        // persist: the self-join below reads `bands` twice; without it the
-        // md5-per-shingle signature pass executes once PER BRANCH — at
-        // corpus scale that is two full scans instead of one.
-        val bands = withMh.select(col("doc_id"), explode(array(mhBandKeys: _*)).as("k"))
-          .scopedPersist()
-        // hot-band guard (graft.functions.MinHash.capBands): a bucket of B
-        // docs emits B²/2 pairs, so one mega-bucket of boilerplate goes
-        // quadratic; buckets over 100 are skipped (max observed bucket at
-        // sf0.1 is 11 — the cap never binds at test scale, it exists for
-        // the 100 TB corpus).
-        val capped = graft.functions.MinHash.capBands(bands, "k", 100)
-        val a = capped.as("a"); val b = capped.as("b")
-        a.join(b, col("a.k") === col("b.k") && col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-          .distinct()
-          .agg(cnt("candidate_pairs"))
-      },
-      Some {
-        val mhCols = (0 until 8).map { i =>
-          s"list_min(list_transform(shingles, s -> CAST('0x' || substr(md5(s), ${1 + 3 * i}, 11) AS BIGINT))) AS mh$i"
-        }.mkString(", ")
-        val bandSelects = (0 until 4).map { b =>
-          s"SELECT doc_id, md5('$b' || '-' || mh${2 * b} || '-' || mh${2 * b + 1}) AS k FROM mh"
-        }.mkString(" UNION ALL ")
-        s"""WITH docs AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents
-           |WHERE len(string_split(text, ' ')) >= 3),
-           |sh AS (SELECT doc_id, list_transform(range(1, len(w) - 1),
-           |j -> w[j] || ' ' || w[j+1] || ' ' || w[j+2]) AS shingles FROM docs),
-           |mh AS (SELECT doc_id, $mhCols FROM sh),
-           |bands AS ($bandSelects),
-           |bandsc AS (SELECT doc_id, k FROM (SELECT doc_id, k,
-           |count(*) OVER (PARTITION BY k) AS c FROM bands) WHERE c <= 100)
-           |SELECT CAST(count(*) AS BIGINT) AS candidate_pairs FROM (
-           |SELECT DISTINCT a.doc_id, b.doc_id FROM bandsc a JOIN bandsc b
-           |ON a.k = b.k AND a.doc_id < b.doc_id)""".stripMargin.replace("\n", " ")
-      },
+      (spark, dir) => lshCandidates(spark, dir).agg(cnt("candidate_pairs")),
+      Some(Seq("WITH " + LshSql.docs(), LshSql.sh("docs"), LshSql.mh(), LshSql.bands(),
+        LshSql.capped() + " SELECT CAST(count(*) AS BIGINT) AS candidate_pairs FROM ( " +
+          LshSql.pairing("a.doc_id, b.doc_id") + ")").mkString(", ")),
       tier = "E"),
 
     // GREEDY band-owner admission — the BATCH form of streaming
@@ -777,18 +832,7 @@ object TextQueries {
           .orderBy(col("lang"))
       },
       Some {
-        val mhCols = (0 until 8).map { i =>
-          s"list_min(list_transform(shingles, s -> CAST('0x' || substr(md5(s), ${1 + 3 * i}, 11) AS BIGINT))) AS mh$i"
-        }.mkString(", ")
-        val bandSelects = (0 until 4).map { b =>
-          s"SELECT doc_id, md5('$b' || '-' || mh${2 * b} || '-' || mh${2 * b + 1}) AS k FROM mh"
-        }.mkString(" UNION ALL ")
-        s"""WITH docs AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents
-           |WHERE len(string_split(text, ' ')) >= 3),
-           |sh AS (SELECT doc_id, list_transform(range(1, len(w) - 1),
-           |j -> w[j] || ' ' || w[j+1] || ' ' || w[j+2]) AS shingles FROM docs),
-           |mh AS (SELECT doc_id, $mhCols FROM sh),
-           |bands AS ($bandSelects),
+        s"""WITH ${LshSql.docs()}, ${LshSql.sh("docs")}, ${LshSql.mh()}, ${LshSql.bands()},
            |own AS (SELECT k, min(doc_id) AS owner FROM bands GROUP BY k),
            |adm AS (SELECT b.doc_id,
            |max(CASE WHEN own.owner < b.doc_id THEN 1 ELSE 0 END) AS rej
@@ -810,7 +854,7 @@ object TextQueries {
     // to the driver is an OOM at scale).
     "dedup_minhash_verified" -> QueryDef(
       (spark, dir) => {
-        val (_, pairs, _) = verifiedShared(spark, dir)
+        val Verified(_, pairs, _) = lshVerified(spark, dir)
         pairs.agg(cnt("candidate_pairs"),
           sum(when(col("ja") >= 0.5, 1L).otherwise(0L)).cast("long").as("verified_pairs"))
       },
@@ -828,7 +872,7 @@ object TextQueries {
     // Defined over the shingled corpus (≥3 words), like the pipeline.
     "dedup_keep_list" -> QueryDef(
       (spark, dir) => {
-        val (docs, pairs, _) = verifiedShared(spark, dir)
+        val Verified(docs, pairs, _) = lshVerified(spark, dir)
         val dropped = pairs.filter(col("ja") >= 0.5).select(col("d2")).distinct()
         docs
           .join(dropped.hint("shuffle_hash"), col("doc_id") === col("d2"), "left")
@@ -856,7 +900,7 @@ object TextQueries {
     // near-dup graphs). Oracle: DuckDB recursive CTE transitive closure.
     "dedup_cluster_components" -> QueryDef(
       (spark, dir) => {
-        val (docs, pairs, _) = verifiedShared(spark, dir)
+        val Verified(docs, pairs, _) = lshVerified(spark, dir)
         val edges = pairs.filter(col("ja") >= 0.5).select(col("d1"), col("d2"))
         val comp = graft.functions.Graphs.connectedComponents(edges, "d1", "d2")
         docs
@@ -1120,27 +1164,14 @@ object TextQueries {
           .scopedCheckpoint()
         // band keys for exact-dedup survivors: the minhash lanes ride a
         // 9-long row through one doc_id-keyed semi join, never the text
-        val bands = base
+        val bands = bandKeys(base
           .select((Seq(col("doc_id")) ++ (0 until 8).map(i => col(s"mh$i"))): _*)
-          .join(e.select("doc_id").hint("shuffle_hash"), Seq("doc_id"), "left_semi")
-          .select(col("doc_id"), explode(array(mhBandKeys: _*)).as("k"))
+          .join(e.select("doc_id").hint("shuffle_hash"), Seq("doc_id"), "left_semi"))
           .scopedCheckpoint()
-        val capped = graft.functions.MinHash.capBands(bands, "k", 100)
-        val cand = capped.as("a")
-          .join(capped.as("b"), col("a.k") === col("b.k") && col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2")).distinct()
         // the ONE array-bearing exchange lane: distinct shingle sets
         // shuffle by doc_id into the verification joins (candidates are
         // all e members by construction, so no survivor scoping needed)
-        val shs = base.select(col("doc_id"), col("s"))
-        val pairs = cand.hint("shuffle_hash")
-          .join(shs, col("d1") === col("doc_id"))
-          .select(col("d1"), col("d2"), col("s").as("s1"))
-          .hint("shuffle_hash")
-          .join(shs, col("d2") === col("doc_id"))
-          .withColumn("inter", size(array_intersect(col("s1"), col("s"))).cast("double"))
-          .withColumn("ja", pround(col("inter")
-            / (size(col("s1")) + size(col("s")) - col("inter")), 4))
+        val pairs = verified(candidates(bands), base.select(col("doc_id"), col("s")))
         val drop4 = pairs.filter(col("ja") >= 0.5).select(col("d2").as("doc_id")).distinct()
         val nd = e.join(drop4.hint("shuffle_hash"), Seq("doc_id"), "left_anti")
           .scopedPersist()
@@ -1175,14 +1206,6 @@ object TextQueries {
           .orderBy(col("stage"))
       },
       Some {
-        val mhCols = (0 until 8).map { i =>
-          s"list_min(list_transform(shingles, s -> CAST('0x' || substr(md5(s), ${1 + 3 * i}, 11) AS BIGINT))) AS mh$i"
-        }.mkString(", ")
-        val bandSelects = (0 until 4).map { b =>
-          s"SELECT doc_id, md5('$b' || '-' || mh${2 * b} || '-' || mh${2 * b + 1}) AS k FROM mh"
-        }.mkString(" UNION ALL ")
-        val ja = proundSql("""CAST(len(list_intersect(s1.s, s2.s)) AS DOUBLE)
-          | / (len(s1.s) + len(s2.s) - CAST(len(list_intersect(s1.s, s2.s)) AS DOUBLE))""".stripMargin.replace("\n", ""), 4)
         val g5 = "list_distinct(list_transform(range(1, len(w) - 3), " +
           "j -> w[j] || ' ' || w[j+1] || ' ' || w[j+2] || ' ' || w[j+3] || ' ' || w[j+4]))"
         def cnt2(src: String, nm: String) =
@@ -1201,17 +1224,7 @@ object TextQueries {
            |AND alphac * 5 >= nw * 4 AND stopc >= 2),
            |k3 AS (SELECT digest, min(doc_id) AS doc_id FROM g GROUP BY digest),
            |e AS (SELECT g.* FROM g JOIN k3 ON g.digest = k3.digest AND g.doc_id = k3.doc_id),
-           |sh AS (SELECT doc_id, list_transform(range(1, len(w) - 1),
-           |j -> w[j] || ' ' || w[j+1] || ' ' || w[j+2]) AS shingles FROM e),
-           |shs AS (SELECT doc_id, list_distinct(shingles) AS s FROM sh),
-           |mh AS (SELECT doc_id, $mhCols FROM sh),
-           |bands AS ($bandSelects),
-           |bandsc AS (SELECT doc_id, k FROM (SELECT doc_id, k,
-           |count(*) OVER (PARTITION BY k) AS c FROM bands) WHERE c <= 100),
-           |cand AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2 FROM bandsc a JOIN bandsc b
-           |ON a.k = b.k AND a.doc_id < b.doc_id),
-           |pairs AS (SELECT cand.d1, cand.d2, $ja AS ja FROM cand
-           |JOIN shs s1 ON s1.doc_id = cand.d1 JOIN shs s2 ON s2.doc_id = cand.d2),
+           |${LshSql.verified("e")},
            |drop4 AS (SELECT DISTINCT d2 FROM pairs WHERE ja >= 0.5),
            |nd AS (SELECT e.* FROM e LEFT JOIN drop4 ON e.doc_id = drop4.d2 WHERE drop4.d2 IS NULL),
            |evg AS (SELECT DISTINCT unnest($g5) AS gram FROM f WHERE doc_id < 10 AND nw >= 5),
@@ -1282,26 +1295,17 @@ object TextQueries {
         val pool = existing.filter(col("nw") >= 3)
           .select(col("doc_id"), lit(false).as("isd"))
           .unionByName(e.select(col("doc_id"), lit(true).as("isd")))
-        val bands = base
+        val bands = bandKeys(base
           .select((Seq(col("doc_id")) ++ (0 until 8).map(i => col(s"mh$i"))): _*)
-          .join(pool.hint("shuffle_hash"), Seq("doc_id"))
-          .select(col("doc_id"), col("isd"), explode(array(mhBandKeys: _*)).as("k"))
+          .join(pool.hint("shuffle_hash"), Seq("doc_id")), col("isd"))
           .scopedCheckpoint()
-        val capped = graft.functions.MinHash.capBands(bands, "k", 100)
-        val cand = capped.hint("shuffle_hash").as("a")
-          .join(capped.as("b"), col("a.k") === col("b.k") && col("a.isd") &&
+        val c = capped(bands)
+        val cand = c.hint("shuffle_hash").as("a")
+          .join(c.as("b"), col("a.k") === col("b.k") && col("a.isd") &&
             (!col("b.isd") || col("b.doc_id") < col("a.doc_id")) &&
             col("a.doc_id") =!= col("b.doc_id"))
           .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2")).distinct()
-        val shs = base.select(col("doc_id"), col("s"))
-        val pairs = cand.hint("shuffle_hash")
-          .join(shs, col("d1") === col("doc_id"))
-          .select(col("d1"), col("d2"), col("s").as("s1"))
-          .hint("shuffle_hash")
-          .join(shs, col("d2") === col("doc_id"))
-          .withColumn("inter", size(array_intersect(col("s1"), col("s"))).cast("double"))
-          .withColumn("ja", pround(col("inter")
-            / (size(col("s1")) + size(col("s")) - col("inter")), 4))
+        val pairs = verified(cand, base.select(col("doc_id"), col("s")))
         val drop4 = pairs.filter(col("ja") >= 0.5).select(col("d1").as("doc_id")).distinct()
         val nd = e.join(drop4.hint("shuffle_hash"), Seq("doc_id"), "left_anti")
           .scopedPersist()
@@ -1325,14 +1329,6 @@ object TextQueries {
           .orderBy(col("stage"))
       },
       Some {
-        val mhCols = (0 until 8).map { i =>
-          s"list_min(list_transform(shingles, s -> CAST('0x' || substr(md5(s), ${1 + 3 * i}, 11) AS BIGINT))) AS mh$i"
-        }.mkString(", ")
-        val bandSelects = (0 until 4).map { b =>
-          s"SELECT doc_id, isd, md5('$b' || '-' || mh${2 * b} || '-' || mh${2 * b + 1}) AS k FROM mh"
-        }.mkString(" UNION ALL ")
-        val ja = proundSql("""CAST(len(list_intersect(s1.s, s2.s)) AS DOUBLE)
-          | / (len(s1.s) + len(s2.s) - CAST(len(list_intersect(s1.s, s2.s)) AS DOUBLE))""".stripMargin.replace("\n", ""), 4)
         val g5 = "list_distinct(list_transform(range(1, len(w) - 3), " +
           "j -> w[j] || ' ' || w[j+1] || ' ' || w[j+2] || ' ' || w[j+3] || ' ' || w[j+4]))"
         def cnt2(src: String, nm: String) =
@@ -1356,19 +1352,12 @@ object TextQueries {
            |e AS (SELECT gnc.* FROM gnc JOIN k3 ON gnc.digest = k3.digest AND gnc.doc_id = k3.doc_id),
            |pool AS (SELECT doc_id, FALSE AS isd FROM ex WHERE nw >= 3
            |UNION ALL SELECT doc_id, TRUE AS isd FROM e),
-           |shp AS (SELECT pool.doc_id, pool.isd, list_transform(range(1, len(f.w) - 1),
-           |j -> f.w[j] || ' ' || f.w[j+1] || ' ' || f.w[j+2]) AS shingles
+           |shp AS (SELECT pool.doc_id, pool.isd, ${LshSql.shingles("f.w")} AS shingles
            |FROM pool JOIN f ON pool.doc_id = f.doc_id),
-           |shs AS (SELECT doc_id, list_distinct(shingles) AS s FROM shp),
-           |mh AS (SELECT doc_id, isd, $mhCols FROM shp),
-           |bands AS ($bandSelects),
-           |bandsc AS (SELECT doc_id, isd, k FROM (SELECT doc_id, isd, k,
-           |count(*) OVER (PARTITION BY k) AS c FROM bands) WHERE c <= 100),
-           |cand AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2 FROM bandsc a JOIN bandsc b
-           |ON a.k = b.k AND a.isd AND (NOT b.isd OR b.doc_id < a.doc_id)
-           |AND a.doc_id <> b.doc_id),
-           |pairs AS (SELECT cand.d1, cand.d2, $ja AS ja FROM cand
-           |JOIN shs s1 ON s1.doc_id = cand.d1 JOIN shs s2 ON s2.doc_id = cand.d2),
+           |${LshSql.shs("shp")}, ${LshSql.mh("shp", "isd, ")}, ${LshSql.bands("isd, ")},
+           |${LshSql.capped("isd, ")}, cand AS (${LshSql.pairing(
+             on = "a.isd AND (NOT b.isd OR b.doc_id < a.doc_id) AND a.doc_id <> b.doc_id")}),
+           |${LshSql.pairs},
            |drop4 AS (SELECT DISTINCT d1 FROM pairs WHERE ja >= 0.5),
            |nd AS (SELECT e.* FROM e LEFT JOIN drop4 ON e.doc_id = drop4.d1 WHERE drop4.d1 IS NULL),
            |evg AS (SELECT DISTINCT unnest($g5) AS gram FROM f WHERE doc_id < 10 AND nw >= 5),
@@ -1455,23 +1444,8 @@ object TextQueries {
     // hot-band cap bound the candidate volume exactly as in the full
     // pipeline.
     "dedup_incremental" -> QueryDef(
-      (spark, dir) => if (setting(spark, SharedPipeline)) {
-        // Harness sweeps: the delta's signatures are the
-        // SAME computation the shared pipeline already materialized —
-        // only the PAIRING differs. is_new ≡ doc_id >= 250, and the
-        // shared candidate relation is band-identical (same shingles,
-        // lanes, band keys, and hot-band cap over the same corpus), so
-        // delta×existing candidates are exactly the shared pairs with
-        // d1 < 250 <= d2 (band partners always straddle the id split in
-        // (min, max) order). The raw inter/(n1+n2-inter) >= 0.5 test is
-        // re-run from the checkpointed exact ingredients — NOT from the
-        // pround'd ja, which can round across the boundary. Only the
-        // one-digest-per-doc exact-dup join runs fresh.
-        val (docsShared, pairs, _) = verifiedShared(spark, dir)
-        val near = pairs
-          .filter(col("d1") < 250 && col("d2") >= 250 &&
-            col("inter") / (col("n1") + col("n2") - col("inter")) >= 0.5)
-          .select(col("d2")).distinct()
+      (spark, dir) => {
+        // only the one-digest-per-doc exact-dup join is not a kernel stage
         val base = t(spark, dir, "documents")
           .filter(size(split(col("text"), " ")) >= 3)
         val exact = base.filter(col("doc_id") >= 250)
@@ -1479,67 +1453,18 @@ object TextQueries {
           .join(base.filter(col("doc_id") < 250)
             .select(md5(col("text")).as("h")).distinct(), "h")
           .select(col("dn")).distinct()
-        docsShared.filter(col("doc_id") >= 250).agg(cnt("delta_docs"))
+        lshVerified(spark, dir).docs.filter(col("doc_id") >= 250).agg(cnt("delta_docs"))
           .crossJoin(exact.agg(cnt("exact_dups")))
-          .crossJoin(near.agg(cnt("near_dups")))
-      } else {
-        val docs = t(spark, dir, "documents")
-          .withColumn("is_new", col("doc_id") >= 250)
-          .withColumn("w", split(col("text"), " "))
-          .filter(size(col("w")) >= 3)
-          .withColumn("shingles", expr(shingles3))
-          .withColumn("digests", expr("transform(shingles, s -> md5(s))"))
-          .scopedPersist()
-        val withMh = withMhLanes(docs, "digests")
-        val bands = withMh.select(col("doc_id"), col("is_new"),
-          explode(array(mhBandKeys: _*)).as("k"))
-          .scopedPersist()
-        val capped = graft.functions.MinHash.capBands(bands, "k", 100)
-        val cand = capped.filter(col("is_new")).as("a")
-          .join(capped.filter(!col("is_new")).as("b"), col("a.k") === col("b.k"))
-          .select(col("a.doc_id").as("dn"), col("b.doc_id").as("de"))
-          .distinct()
-        val shs = docs.select(col("doc_id"), array_distinct(col("shingles")).as("s"))
-        val near = cand.hint("shuffle_hash")
-          .join(shs, col("dn") === col("doc_id"))
-          .select(col("dn"), col("de"), col("s").as("s1"))
-          .hint("shuffle_hash")
-          .join(shs, col("de") === col("doc_id"))
-          .withColumn("inter", size(array_intersect(col("s1"), col("s"))).cast("double"))
-          .filter(col("inter") / (size(col("s1")) + size(col("s")) - col("inter")) >= 0.5)
-          .select(col("dn")).distinct()
-        val exact = docs.filter(col("is_new"))
-          .select(col("doc_id").as("dn"), md5(col("text")).as("h"))
-          .join(docs.filter(!col("is_new")).select(md5(col("text")).as("h")).distinct(), "h")
-          .select(col("dn")).distinct()
-        docs.filter(col("is_new")).agg(cnt("delta_docs"))
-          .crossJoin(exact.agg(cnt("exact_dups")))
-          .crossJoin(near.agg(cnt("near_dups")))
+          .crossJoin(deltaNearDups(spark, dir).agg(cnt("near_dups")))
       },
       Some {
-        val mhCols = (0 until 8).map { i =>
-          s"list_min(list_transform(shingles, s -> CAST('0x' || substr(md5(s), ${1 + 3 * i}, 11) AS BIGINT))) AS mh$i"
-        }.mkString(", ")
-        val bandSelects = (0 until 4).map { b =>
-          s"SELECT doc_id, is_new, md5('$b' || '-' || mh${2 * b} || '-' || mh${2 * b + 1}) AS k FROM mh"
-        }.mkString(" UNION ALL ")
-        val ja = """CAST(len(list_intersect(s1.s, s2.s)) AS DOUBLE)
-          | / (len(s1.s) + len(s2.s) - CAST(len(list_intersect(s1.s, s2.s)) AS DOUBLE))""".stripMargin.replace("\n", "")
-        s"""WITH docs AS (SELECT doc_id, doc_id >= 250 AS is_new, text,
-           |string_split(text, ' ') AS w FROM documents
-           |WHERE len(string_split(text, ' ')) >= 3),
-           |sh AS (SELECT doc_id, is_new, list_transform(range(1, len(w) - 1),
-           |j -> w[j] || ' ' || w[j+1] || ' ' || w[j+2]) AS shingles FROM docs),
-           |shs AS (SELECT doc_id, list_distinct(shingles) AS s FROM sh),
-           |mh AS (SELECT doc_id, is_new, $mhCols FROM sh),
-           |bands AS ($bandSelects),
-           |bandsc AS (SELECT doc_id, is_new, k FROM (SELECT doc_id, is_new, k,
-           |count(*) OVER (PARTITION BY k) AS c FROM bands) WHERE c <= 100),
-           |cand AS (SELECT DISTINCT a.doc_id AS dn, b.doc_id AS de
-           |FROM bandsc a JOIN bandsc b ON a.k = b.k AND a.is_new AND NOT b.is_new),
+        val x = "is_new, "
+        s"""WITH ${LshSql.docs("doc_id >= 250 AS is_new, text, ")}, ${LshSql.sh("docs", x)},
+           |${LshSql.shs()}, ${LshSql.mh(x = x)}, ${LshSql.bands(x)}, ${LshSql.capped(x)},
+           |cand AS (${LshSql.pairing("a.doc_id AS dn, b.doc_id AS de", "a.is_new AND NOT b.is_new")}),
            |near AS (SELECT DISTINCT cand.dn FROM cand
            |JOIN shs s1 ON s1.doc_id = cand.dn JOIN shs s2 ON s2.doc_id = cand.de
-           |WHERE $ja >= 0.5),
+           |WHERE ${LshSql.jaccard} >= 0.5),
            |ex AS (SELECT DISTINCT d.doc_id FROM docs d JOIN docs e
            |ON d.is_new AND NOT e.is_new AND md5(d.text) = md5(e.text))
            |SELECT (SELECT CAST(count(*) AS BIGINT) FROM docs WHERE is_new) AS delta_docs,
@@ -2149,86 +2074,28 @@ object TextQueries {
     // this is how you pick the band/row configuration: measure estimator
     // bias on a real candidate sample before committing to a threshold.
     "dedup_minhash_est" -> QueryDef(
-      (spark, dir) => if (setting(spark, SharedPipeline)) {
-        // harness sweeps: candidates + exact ja + the signatures that
-        // produced them all come from the ONE shared pipeline (the est
-        // query's own construction below is identical by the oracle
-        // hash-match); only the two signature joins run per sweep.
-        val (_, pairs, sigs) = verifiedShared(spark, dir)
-        pairs.select(col("d1"), col("d2"), col("ja"))
+      (spark, dir) => {
+        val v = lshVerified(spark, dir)
+        v.pairs.select(col("d1"), col("d2"), col("ja"))
           .hint("shuffle_hash")
-          .join(sigs, col("d1") === col("doc_id"))
+          .join(v.sigs, col("d1") === col("doc_id"))
           .select(col("d1"), col("d2"), col("ja"), col("sig").as("g1"))
           .hint("shuffle_hash")
-          .join(sigs, col("d2") === col("doc_id"))
+          .join(v.sigs, col("d2") === col("doc_id"))
           .withColumn("est",
             expr("cast(size(filter(zip_with(g1, sig, (x, y) -> x = y), m -> m)) as double) / 8.0"))
           .select(col("d1"), col("d2"), col("ja"),
             pround(col("est"), 4).as("est_r"),
             pround(abs(col("est") - col("ja")), 4).as("err_r"))
           .orderBy(col("d1"), col("d2")).limit(500)
-      } else {
-        val base = t(spark, dir, "documents")
-          .withColumn("w", split(col("text"), " "))
-          .filter(size(col("w")) >= 3)
-          .withColumn("shingles", expr(shingles3))
-          .scopedPersist()
-        val shs = base.select(col("doc_id"), array_distinct(col("shingles")).as("s"))
-        val withMh = withMhLanes(
-          base.withColumn("digests", expr("transform(shingles, s -> md5(s))")), "digests")
-          .scopedPersist()
-        val sigs = withMh.select(col("doc_id"),
-          array((0 until 8).map(i => col(s"mh$i")): _*).as("sig"))
-        val bands = withMh.select(col("doc_id"), explode(array(mhBandKeys: _*)).as("k"))
-        val capped = graft.functions.MinHash.capBands(bands, "k", 100)
-        val cand = capped.as("a")
-          .join(capped.as("b"), col("a.k") === col("b.k") && col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-          .distinct()
-        val est = cand.hint("shuffle_hash")
-          .join(sigs, col("d1") === col("doc_id"))
-          .select(col("d1"), col("d2"), col("sig").as("g1"))
-          .hint("shuffle_hash")
-          .join(sigs, col("d2") === col("doc_id"))
-          .withColumn("est",
-            expr("cast(size(filter(zip_with(g1, sig, (x, y) -> x = y), m -> m)) as double) / 8.0"))
-          .select(col("d1"), col("d2"), col("est"))
-        val out = est.hint("shuffle_hash")
-          .join(shs, col("d1") === col("doc_id"))
-          .select(col("d1"), col("d2"), col("est"), col("s").as("s1"))
-          .hint("shuffle_hash")
-          .join(shs, col("d2") === col("doc_id"))
-          .withColumn("inter", size(array_intersect(col("s1"), col("s"))).cast("double"))
-          .withColumn("ja", pround(col("inter")
-            / (size(col("s1")) + size(col("s")) - col("inter")), 4))
-          .select(col("d1"), col("d2"), col("ja"),
-            pround(col("est"), 4).as("est_r"),
-            pround(abs(col("est") - col("ja")), 4).as("err_r"))
-        out.orderBy(col("d1"), col("d2")).limit(500)
       },
       Some {
-        val mhCols = (0 until 8).map { i =>
-          s"list_min(list_transform(shingles, s -> CAST('0x' || substr(md5(s), ${1 + 3 * i}, 11) AS BIGINT))) AS mh$i"
-        }.mkString(", ")
-        val bandSelects = (0 until 4).map { b =>
-          s"SELECT doc_id, md5('$b' || '-' || mh${2 * b} || '-' || mh${2 * b + 1}) AS k FROM mh"
-        }.mkString(" UNION ALL ")
         val lanesEq = (0 until 8).map { i =>
           s"CASE WHEN m1.mh$i = m2.mh$i THEN 1 ELSE 0 END"
         }.mkString(" + ")
-        val ja = proundSql("""CAST(len(list_intersect(s1.s, s2.s)) AS DOUBLE)
-          | / (len(s1.s) + len(s2.s) - CAST(len(list_intersect(s1.s, s2.s)) AS DOUBLE))""".stripMargin.replace("\n", ""), 4)
-        s"""WITH docs AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents
-           |WHERE len(string_split(text, ' ')) >= 3),
-           |sh AS (SELECT doc_id, list_transform(range(1, len(w) - 1),
-           |j -> w[j] || ' ' || w[j+1] || ' ' || w[j+2]) AS shingles FROM docs),
-           |shs AS (SELECT doc_id, list_distinct(shingles) AS s FROM sh),
-           |mh AS (SELECT doc_id, $mhCols FROM sh),
-           |bands AS ($bandSelects),
-           |bandsc AS (SELECT doc_id, k FROM (SELECT doc_id, k,
-           |count(*) OVER (PARTITION BY k) AS c FROM bands) WHERE c <= 100),
-           |cand AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2 FROM bandsc a JOIN bandsc b
-           |ON a.k = b.k AND a.doc_id < b.doc_id),
+        val ja = proundSql(LshSql.jaccard, 4)
+        s"""WITH ${LshSql.docs()}, ${LshSql.sh("docs")}, ${LshSql.shs()}, ${LshSql.mh()},
+           |${LshSql.bands()}, ${LshSql.capped()}, ${LshSql.cand},
            |est AS (SELECT cand.d1, cand.d2,
            |CAST($lanesEq AS DOUBLE) / 8.0 AS est FROM cand
            |JOIN mh m1 ON m1.doc_id = cand.d1 JOIN mh m2 ON m2.doc_id = cand.d2)
@@ -3321,38 +3188,14 @@ object TextQueries {
     // exactly as in production.
     "dedup_lsh_tuning" -> QueryDef(
       (spark, dir) => {
-        // harness sweeps: the 8 minhash lanes are EXACTLY the verified
-        // pipeline's checkpointed signatures (same shingles, same md5
-        // windows) — reuse them instead of re-running the signature pass
-        val withMh =
-          if (setting(spark, SharedPipeline))
-            (0 until 8).foldLeft(verifiedShared(spark, dir)._3) { (d, i) =>
-              d.withColumn(s"mh$i", col("sig")(i))
-            }
-          else {
-            val docs = t(spark, dir, "documents")
-              .withColumn("w", split(col("text"), " "))
-              .filter(size(col("w")) >= 3)
-              .withColumn("shingles", expr(shingles3))
-              .withColumn("digests", expr("transform(shingles, s -> md5(s))"))
-            withMhLanes(docs, "digests")
-          }
-        def key(cfg: String, b: Int, lanes: Seq[Int]) =
-          md5(concat_ws("-", lit(cfg) +: lit(b.toString) +: lanes.map(i => col(s"mh$i")): _*))
-        val bandCols =
-          (0 until 4).map(b => struct(lit("b4r2").as("cfg"), key("b4r2", b, Seq(2 * b, 2 * b + 1)).as("k"))) ++
-          (0 until 2).map(b => struct(lit("b2r4").as("cfg"), key("b2r4", b, (4 * b until 4 * b + 4)).as("k"))) ++
-          (0 until 8).map(b => struct(lit("b8r1").as("cfg"), key("b8r1", b, Seq(b)).as("k")))
-        val bands = withMh
+        val bandCols = tuningBands.map { case (cfg, b, lanes) =>
+          struct(lit(cfg).as("cfg"), bandKey(b, lanes, Some(cfg)).as("k"))
+        }
+        val bands = lshLanes(spark, dir)
           .select(col("doc_id"), explode(array(bandCols: _*)).as("bk"))
           .select(col("doc_id"), col("bk.cfg").as("cfg"), col("bk.k").as("k"))
           .scopedPersist()
-        val capped = graft.functions.MinHash.capBands(bands, "k", 100)
-        val pairs = capped.as("a")
-          .join(capped.as("b"), col("a.k") === col("b.k") && col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.cfg").as("cfg"), col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-          .distinct()
-          .groupBy("cfg").agg(cnt("candidate_pairs"))
+        val pairs = candidates(bands, "cfg").groupBy("cfg").agg(cnt("candidate_pairs"))
         val meta = Seq(("b2r4", 2L, 4L, 0.8408964152537145),
           ("b4r2", 4L, 2L, 0.5), ("b8r1", 8L, 1L, 0.125))
         import spark.implicits._
@@ -3364,28 +3207,13 @@ object TextQueries {
           .orderBy(col("cfg"))
       },
       Some {
-        val mhCols = (0 until 8).map { i =>
-          s"list_min(list_transform(shingles, s -> CAST('0x' || substr(md5(s), ${1 + 3 * i}, 11) AS BIGINT))) AS mh$i"
-        }.mkString(", ")
-        def keySql(cfg: String, b: Int, lanes: Seq[Int]) =
-          s"md5('$cfg' || '-' || '$b' || '-' || " +
-            lanes.map(i => s"mh$i").mkString(" || '-' || ") + ")"
-        val bandSelects =
-          ((0 until 4).map(b => s"SELECT doc_id, 'b4r2' AS cfg, ${keySql("b4r2", b, Seq(2 * b, 2 * b + 1))} AS k FROM mh") ++
-            (0 until 2).map(b => s"SELECT doc_id, 'b2r4' AS cfg, ${keySql("b2r4", b, (4 * b until 4 * b + 4))} AS k FROM mh") ++
-            (0 until 8).map(b => s"SELECT doc_id, 'b8r1' AS cfg, ${keySql("b8r1", b, Seq(b))} AS k FROM mh"))
-            .mkString(" UNION ALL ")
-        s"""WITH docs AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents
-           |WHERE len(string_split(text, ' ')) >= 3),
-           |sh AS (SELECT doc_id, list_transform(range(1, len(w) - 1),
-           |j -> w[j] || ' ' || w[j+1] || ' ' || w[j+2]) AS shingles FROM docs),
-           |mh AS (SELECT doc_id, $mhCols FROM sh),
-           |bands AS ($bandSelects),
-           |bandsc AS (SELECT doc_id, cfg, k FROM (SELECT doc_id, cfg, k,
-           |count(*) OVER (PARTITION BY k) AS c FROM bands) WHERE c <= 100),
+        val bandSelects = tuningBands.map { case (cfg, b, lanes) =>
+          LshSql.bandSelect(s"'$cfg' AS cfg, ", LshSql.bandKey(b, lanes, Some(cfg)))
+        }.mkString(" UNION ALL ")
+        s"""WITH ${LshSql.docs()}, ${LshSql.sh("docs")}, ${LshSql.mh()},
+           |bands AS ($bandSelects), ${LshSql.capped("cfg, ")},
            |p AS (SELECT cfg, CAST(count(*) AS BIGINT) AS candidate_pairs FROM (
-           |SELECT DISTINCT a.cfg, a.doc_id AS d1, b.doc_id AS d2
-           |FROM bandsc a JOIN bandsc b ON a.k = b.k AND a.doc_id < b.doc_id)
+           |${LshSql.pairing("a.cfg, a.doc_id AS d1, b.doc_id AS d2")})
            |GROUP BY cfg),
            |meta AS (SELECT * FROM (VALUES
            |('b2r4', CAST(2 AS BIGINT), CAST(4 AS BIGINT), CAST(0.8408964152537145 AS DOUBLE)),

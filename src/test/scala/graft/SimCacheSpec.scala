@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{SharedPipeline, datasetFingerprint, evictSharedFor, releaseQueryCaches, sharedFps}
+import graft.core.{SharedPipeline, datasetFingerprint, evictSharedFor, releaseQueryCaches, sharedFps, sharedOr}
 import graft.operators.SimilarityQueries
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.LogicalRDD
@@ -49,7 +49,7 @@ class SimCacheSpec extends SparkSpec {
     spark.conf.set(SharedPipeline.key, "true")
     try {
       val before = persistedCount
-      val a = SimilarityQueries.sharedOr(spark, "spec", dir) {
+      val a = sharedOr(spark, dir, "spec") {
         spark.read.parquet(s"$dir/embeddings.parquet").select("vec_id")
       }
       val na = a.count() // before regen: eviction truncates a's lineage
@@ -58,7 +58,7 @@ class SimCacheSpec extends SparkSpec {
       assert(persistedCount === before + 1,
         "the shared build must be checkpoint-persisted")
       regen(dir, 2)
-      val b = SimilarityQueries.sharedOr(spark, "spec", dir) {
+      val b = sharedOr(spark, dir, "spec") {
         spark.read.parquet(s"$dir/embeddings.parquet").select("vec_id")
       }
       assert(b.count() === na * 2, "stale shared build served after regeneration")
@@ -78,8 +78,11 @@ class SimCacheSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_simcache_tg").toString
     // text_winnowing's top-300 rows all come from the base copy, so
     // dedup_minhash_lsh's corpus-wide count (the verified pipeline's
-    // pairs) is what shows a stale text build
-    val keys = Seq("text_winnowing", "dedup_minhash_lsh", "graph_triangle_count")
+    // pairs) is what shows a stale text build; every LSH kernel
+    // consumer is also compared shared against unshared
+    val keys = Seq("text_winnowing", "dedup_minhash_lsh", "dedup_minhash_verified",
+      "dedup_keep_list", "dedup_cluster_components", "dedup_incremental",
+      "dedup_minhash_est", "dedup_lsh_tuning", "graph_triangle_count")
     val s = sharedSession()
     try {
       regen(dir, 1)

@@ -208,6 +208,12 @@ class DedupFunctionsSpec extends SparkSpec {
     assert(byId(0L)._2 === byId(3L)._2, "identical docs → identical fingerprint")
     assert(byId(0L)._2 !== byId(1L)._2, "order-sensitive fingerprint differs on near-dup")
     assert(byId(0L)._1 > byId(2L)._1, "'the quick' text scores higher on its trigrams")
+    // the score reads its argument, not a column that happens to be named `text`
+    val viaBody = docs.select(col("doc_id"), col("text").as("body"))
+      .select(col("doc_id"),
+        TextAnalysis.trigramScore(col("body"), Seq("the", "he ", "qui")).as("s")).collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(viaBody === byId.map { case (id, (s, _)) => id -> s })
   }
 
   test("winnowing: shared >= gram+window-1 word runs guarantee a shared fingerprint") {
