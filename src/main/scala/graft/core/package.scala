@@ -88,13 +88,10 @@ package object core {
   /** Total bytes of the files under `path`. */
   private[graft] def bytesUnder(path: String): Long = filesUnder(path).map(_.length()).sum
 
-  /** A byte-size session conf as its leading digits — a unit suffix is
-    * not scaled — or `default` when it has none. */
-  private[graft] def confBytes(spark: SparkSession, key: String, default: Long): Long = {
-    val raw = try spark.conf.get(key) catch { case _: Throwable => "" }
-    val digits = raw.takeWhile(_.isDigit)
-    if (digits.nonEmpty) digits.toLong else default
-  }
+  /** A byte-size session conf in bytes, read as Spark reads it ("64m",
+    * "134217728b", a plain byte count), or `default` when it is unset. */
+  private[graft] def confBytes(spark: SparkSession, key: String, default: Long): Long =
+    spark.conf.getOption(key).fold(default)(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
 
   /** Cast to exact decimal — the first step of every money aggregate. */
   def dec(c: Column, p: Int = 18, s: Int = 2): Column = c.cast(DecimalType(p, s))

@@ -74,6 +74,17 @@ class SimCacheSpec extends SparkSpec {
     }
   }
 
+  test("confBytes reads a byte conf with or without a unit suffix") {
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    try {
+      Seq("64m" -> (64L << 20), "134217728b" -> (128L << 20), "4194304" -> (4L << 20))
+        .foreach { case (raw, bytes) =>
+          spark.conf.set(key, raw)
+          assert(graft.core.confBytes(spark, key, 1L) === bytes, raw)
+        }
+    } finally spark.conf.unset(key)
+  }
+
   test("shared text and graph builds follow a regeneration of their dir") {
     val dir = java.nio.file.Files.createTempDirectory("graft_simcache_tg").toString
     // text_winnowing's top-300 rows all come from the base copy, so
