@@ -105,17 +105,18 @@ object ScaleGen {
   * ring, so the prescription is a measurement of the shipping path.
   *
   * Usage: `runMain graft.ScaleKnob <sfDir> <ring>` where ring is
-  * `oracle` (the declared [480,490) ring), `sqrt` (⌈√N⌉ centroids), or
+  * `oracle` (the declared [480,490) ring), `sqrt` (round(√N) centroids,
+  * the k of `portableRing`), or
   * an integer target centroid count.
   */
 object ScaleKnob {
-  import graft.operators.SimilarityQueries.{OracleRing, Ring, SpreadRing, corpusN, graphAnnEdges}
+  import graft.operators.SimilarityQueries.{OracleRing, Ring, SpreadRing, corpusN, graphAnnEdges, portableRing}
 
   /** The ring a ScaleKnob argument names; spread rings are sized from
     * the corpus count of `dir`. */
   private def parseRing(spark: SparkSession, dir: String, arg: String): Ring = arg match {
     case "oracle" => OracleRing
-    case "sqrt" => SpreadRing(math.max(1L, math.round(math.sqrt(corpusN(spark, dir).toDouble))))
+    case "sqrt" => SpreadRing(portableRing(spark, dir).k)
     case n if n.nonEmpty && n.forall(_.isDigit) =>
       SpreadRing(math.max(1L, corpusN(spark, dir) / math.max(1L, n.toLong)))
     case other => throw new IllegalArgumentException(

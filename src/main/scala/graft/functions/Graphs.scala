@@ -9,8 +9,7 @@ import org.apache.spark.sql.functions._
   * near-dup similarity is not transitive (A~B, B~C without A~C), so the
   * keep/drop decision must be made per connected COMPONENT of the
   * verified-pair graph, keeping one representative per cluster — pairwise
-  * greedy drops can orphan or double-drop chain members (VERDICT r03
-  * item 6).
+  * greedy drops can orphan or double-drop chain members.
   */
 object Graphs {
 
@@ -48,8 +47,8 @@ object Graphs {
     // every checkpoint goes through the query-scoped registry
     // (core.scopedCheckpoint) so the harness's releaseQueryCaches frees
     // the blocks — checkpoint RDDs survive catalog.clearCache() and
-    // previously leaked once per call in a long-lived session (VERDICT
-    // r07 #5). Superseded rounds are ALSO freed eagerly below, so peak
+    // would otherwise leak once per call in a long-lived session.
+    // Superseded rounds are ALSO freed eagerly below, so peak
     // block count stays O(1) in the round count, not O(diameter).
     val sym = graft.core.scopedCheckpoint(
       e.union(e.select(col("d").as("s"), col("s").as("d"))).distinct())

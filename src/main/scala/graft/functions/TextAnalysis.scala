@@ -52,7 +52,7 @@ object TextAnalysis {
     // Texts shorter than gram + window − 1 words have no full window and
     // must yield NO fingerprints — the greatest(…, 1) clamps would
     // otherwise emit junk hashes of partial grams, breaking the MOSS
-    // density/guarantee contract (ADVICE r07; the declared text_winnowing
+    // density/guarantee contract (the declared text_winnowing
     // query already filters size ≥ gram+window−1).
     expr(
       s"""case when size(split($textCol, ' ')) < ${gram + window - 1}

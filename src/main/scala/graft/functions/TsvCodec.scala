@@ -26,7 +26,7 @@ object TsvCodec {
     * A bare CR left unescaped would corrupt twice over: Hadoop's line
     * reader treats lone \r as a row terminator (a CR-containing cell
     * splits into extra rows on read-back), and unescape would leave the
-    * two characters `\` `r` in parsed data (ADVICE r07).
+    * two characters `\` `r` in parsed data.
     */
   private val ctl: Seq[(String, String)] = Seq(
     "\t" -> "\\t", "\n" -> "\\n", "\r" -> "\\r",

@@ -284,7 +284,7 @@ object AggQueries {
           .select(col("event_type"), col("value"), y.as("y"))
           // rows with missing/non-numeric k must leave n too, not just the
           // sums — else covp/corr mix moments over different populations
-          // (ADVICE r07: consistent moments, actual correlation)
+          // (consistent moments give an actual correlation)
           .filter(col("y").isNotNull)
           .groupBy("event_type")
           .agg(cnt("n"),
@@ -644,7 +644,7 @@ object AggQueries {
     // are unambiguous.
     "agg_group_array" -> QueryDef(
       (spark, dir) => {
-        // CAPPED accumulation (VERDICT r09 #7): graft_group_array_n is a
+        // CAPPED accumulation: graft_group_array_n is a
         // TypedImperativeAggregate whose buffer is a size-10 max-heap —
         // per-key state is bounded BEFORE any sort, CH groupArray(N)
         // semantics, instead of collect_list materializing the whole

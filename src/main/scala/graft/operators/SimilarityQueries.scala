@@ -26,20 +26,17 @@ object SimilarityQueries {
     */
   private def gdot(a: String, b: String): Column = expr(s"graft_dot($a, $b)")
 
-  /** DuckDB twin of [[cos]] — same fold order, same division shape. */
-  private val cosDuck =
-    "list_dot_product(a.v, b.v) / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v)))"
-
-  /** Portably-rounded cosine for the oracle (core.proundSql semantics). */
-  private val cosR = proundSql(cosDuck, 6)
+  /** Portably-rounded cosine of `a.v`, `b.v` for the oracle. */
+  private val cosR = IvfSql.cos("a.v", "b.v", 6)
 
   private def vecs(spark: SparkSession, dir: String): DataFrame =
     t(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
 
   // ------------------------------------------------------------------
-  // Shared IVF/PQ index builds: the IVF centroid assignment is built
-  // IDENTICALLY by sim_ivf_topk, sim_ivf_nprobe and dedup_semantic (and
-  // sim_ann_rerank derives its cell map from it), the PQ code table
+  // Shared IVF/PQ index builds: the IVF centroid assignment at a ring is
+  // built IDENTICALLY by every query at that ring (sim_ivf_topk,
+  // sim_ivf_nprobe, sim_ann_rerank's cell map and the ring family), the
+  // graph family's layer-0 kNN edges likewise, and the PQ code table
   // identically by sim_pq_adc and sim_ann_rerank — each a full corpus
   // pass. Under `spark.graft.shared.pipeline` each is one session build
   // ([[graft.core.sharedOr]]), right-sized by materialized bytes:
@@ -51,14 +48,20 @@ object SimilarityQueries {
   // ------------------------------------------------------------------
 
   // ------------------------------------------------------------------
-  // Centroid rings. The declared queries use the 10-vector ring
-  // vec_id ∈ [480,490) ([[OracleRing]]) — the constant every oracle SQL
-  // reproduces. A FIXED ring does not survive corpus growth: cell
-  // population grows ∝ N/|ring|, so the cell-local self-join in
-  // [[cellKnn]] does (N/|ring|)² work per cell (×49.6 wall at ×30 data,
-  // SCALE.md). Spread rings grow ~√N instead (12× wall at 30× data):
-  // the `*_spread` keys run [[PortableSpreadRing]], which DuckDB
-  // mirrors, and ScaleKnob measures [[SpreadRing]] at any size. Spread
+  // Centroid rings. Every ring-family query (dedup_semantic,
+  // sample_diverse_cells, sim_graph_ann, sim_graph_hnsw) has ONE body
+  // that takes its ring, and the registry declares it twice:
+  //  - at the 10-vector ring vec_id ∈ [480,490) ([[OracleRing]]), the
+  //    correctness anchor: a constant every oracle SQL reproduces and
+  //    every plan pin was written against;
+  //  - as `<key>_spread` at the √N [[portableRing]], the production
+  //    path, hash-checked end to end because DuckDB sizes k from its
+  //    own count. A FIXED ring does not survive corpus growth: cell
+  //    population grows ∝ N/|ring|, so the cell-local self-join in
+  //    [[cellKnn]] does (N/|ring|)² work per cell (×49.6 wall at ×30
+  //    data, SCALE.md); a √N ring keeps cells ~√N (12× wall at 30×
+  //    data, SemDeDup ~10× cheaper than the oracle ring at 30×).
+  // ScaleKnob measures the xxhash [[SpreadRing]] at any size. Spread
   // rings select members by hash(vec_id) % k == 0: one narrow
   // deterministic predicate — no sampling pass, stable under
   // repartition/retry — so ring membership is computable on BOTH the
@@ -107,20 +110,107 @@ object SimilarityQueries {
   /** The production-sized PORTABLE ring for `dir`: k = round(√N) members
     * selected by the 60-bit-md5 predicate — the ring every `*_spread`
     * oracle key runs, with DuckDB deriving k from its own count so both
-    * engines size it independently (sim_ivf_spread proved the recipe).
+    * engines size it independently. The one √N sizing: ScaleKnob's
+    * `sqrt` ring takes its k.
     */
-  private def portableRing(spark: SparkSession, dir: String): PortableSpreadRing =
+  private[graft] def portableRing(spark: SparkSession, dir: String): PortableSpreadRing =
     PortableSpreadRing(math.max(1L,
       math.round(math.sqrt(corpusN(spark, dir).toDouble))))
 
-  /** DuckDB CTE pair mirroring [[portableRing]] over an `e(vec_id, v)`
-    * relation: k from its own count, membership by the same md5 hash.
-    * Splice as `WITH e AS (…), $spreadRingSql, …` — yields `c(cid, cv)`.
+  /** A declared key's ring on both engines: the Spark ring for a dataset
+    * and the DuckDB CTEs that yield the same `c(cid, cv)`. */
+  private final case class KeyRing(at: (SparkSession, String) => Ring, sql: String)
+  private val atOracle = KeyRing((_, _) => OracleRing, IvfSql.oracleRing())
+  private val atSqrtN = KeyRing(portableRing, IvfSql.sqrtNRing)
+
+  /** The DuckDB twin of the IVF lane, CTE for CTE, over
+    * `e(vec_id, v)`: every oracle of the family splices these pieces.
     */
-  private val spreadRingSql =
-    "k AS (SELECT CAST(round(sqrt(count(*))) AS BIGINT) AS kk FROM e), " +
-      "c AS (SELECT vec_id AS cid, v AS cv FROM e, k " +
-      "WHERE CAST('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15) AS BIGINT) % kk = 0)"
+  private object IvfSql {
+    val e = "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)"
+
+    /** Cosine of the list expressions `a` and `b` — the [[gdot]] fold
+      * order and division shape — pround-ed to `digits`. */
+    def cos(a: String, b: String, digits: Int): String = proundSql(
+      s"list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b)))",
+      digits)
+
+    /** [[OracleRing]]'s members, also the PQ codebook's rows. */
+    val oracleIds = "vec_id >= 480 AND vec_id < 490"
+
+    def oracleRing(name: String = "c"): String =
+      s"$name AS (SELECT vec_id AS cid, v AS cv FROM e WHERE $oracleIds)"
+
+    /** [[portableRing]]: k from DuckDB's own count, membership by the
+      * same md5 hash. */
+    val sqrtNRing: String =
+      "k AS (SELECT CAST(round(sqrt(count(*))) AS BIGINT) AS kk FROM e), " +
+        "c AS (SELECT vec_id AS cid, v AS cv FROM e, k " +
+        "WHERE CAST('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15) AS BIGINT) % kk = 0)"
+
+    /** Every `e` row at its max-cosine centroid of `cents` (alias `c`),
+      * smallest cid on a tie — [[ivfAssignedAgg]]'s argmax. */
+    def asg(withV: Boolean = true, name: String = "asg", cents: String = "c",
+            rn: String = "arn"): String = {
+      val (v, ev) = if (withV) (", v", ", e.v") else ("", "")
+      s"$name AS (SELECT vec_id, cid$v FROM ( SELECT e.vec_id, c.cid$ev, " +
+        s"row_number() OVER (PARTITION BY e.vec_id ORDER BY ${cos("e.v", "c.cv", 9)} DESC, c.cid) AS $rn " +
+        s"FROM e CROSS JOIN $cents) WHERE $rn = 1)"
+    }
+
+    /** [[cellKnn]]: each `src` row's `deg` nearest cell-mates. */
+    def edges(name: String, src: String, deg: Int): String =
+      s"$name AS (SELECT src, dst FROM ( SELECT a.vec_id AS src, b.vec_id AS dst, " +
+        s"row_number() OVER (PARTITION BY a.vec_id ORDER BY ${cos("a.v", "b.v", 9)} DESC, b.vec_id) AS ern " +
+        s"FROM $src a JOIN $src b ON b.cid = a.cid AND b.vec_id <> a.vec_id) WHERE ern <= $deg)"
+
+    /** [[GraphBeam]]'s probes and their 2 nearest ring vertices as `pc(probe, <as>)`. */
+    def probeCells(as: String): String =
+      "p AS (SELECT vec_id AS probe, v AS pv FROM e WHERE vec_id < 10), " +
+        s"pc AS (SELECT probe, $as FROM ( SELECT p.probe, c.cid AS $as, " +
+        s"row_number() OVER (PARTITION BY p.probe ORDER BY ${cos("p.pv", "c.cv", 9)} DESC, c.cid) AS crn " +
+        "FROM p CROSS JOIN c) WHERE crn <= 2)"
+
+    /** Visited set `v<i>` scored as `s<i>`. */
+    private def visit(i: Int, v: String): String =
+      s"v$i AS ($v), s$i AS (SELECT v$i.probe, v$i.cand, ${cos("p.pv", "e.v", 9)} AS sim9 " +
+        s"FROM v$i JOIN e ON e.vec_id = v$i.cand JOIN p ON p.probe = v$i.probe)"
+
+    /** Best-first search from the visited set `v0`: hop i keeps the
+      * `width` best of `s<i>` as `f<i>` and visits their out-neighbours
+      * on `edges` (plus `more`); the answer is the per-probe top-3 of
+      * everything visited. */
+    def beam(v0: String, hops: (String, Int, String)*): String =
+      (visit(0, v0) +: hops.zipWithIndex.map { case ((ed, width, more), i) =>
+        s"f$i AS (SELECT probe, cand FROM (SELECT probe, cand, " +
+          s"row_number() OVER (PARTITION BY probe ORDER BY sim9 DESC, cand) AS rn FROM s$i) WHERE rn <= $width), " +
+          visit(i + 1, s"SELECT probe, cand FROM v$i UNION " +
+            s"SELECT f$i.probe, $ed.dst AS cand FROM f$i JOIN $ed ON $ed.src = f$i.cand$more")
+      }).mkString(", ") +
+        s" SELECT probe, cand, sim FROM ( SELECT probe, cand, ${proundSql("sim9", 6)} AS sim, " +
+        "row_number() OVER (PARTITION BY probe ORDER BY sim9 DESC, cand) AS rn " +
+        s"FROM s${hops.size} WHERE cand <> probe) WHERE rn <= 3 ORDER BY probe, sim DESC, cand"
+
+    /** PQ subspaces `ms`, sub-vectors `ev(vec_id, m, sub)` and the
+      * 40-row codebook `cb(<id>, m, csub, cc)` — [[pqCodebook]]. */
+    def pq(id: String): String =
+      "ms AS (SELECT unnest([0, 1, 2, 3]) AS m), " +
+        "ev AS (SELECT vec_id, m, list_slice(v, m * 16 + 1, m * 16 + 16) AS sub FROM e CROSS JOIN ms), " +
+        s"cb AS (SELECT vec_id AS $id, m, sub AS csub, list_dot_product(sub, sub) AS cc FROM ev WHERE $oracleIds)"
+
+    /** Squared distance of a corpus sub-vector to a codebook entry,
+      * pround-ed to 9 digits as the Spark side ranks it. */
+    val dist: String = proundSql(
+      "list_dot_product(ev.sub, ev.sub) - 2 * list_dot_product(ev.sub, cb.csub) + cb.cc", 9)
+
+    /** [[pqLut]]: probe sub-vectors `q` and their partial distances `lut`. */
+    def lut(probes: Int, id: String): String =
+      "q AS (SELECT vec_id AS probe, m, sub AS qsub, " +
+        s"list_dot_product(sub, sub) AS qq FROM ev WHERE vec_id < $probes), " +
+        s"lut AS (SELECT q.probe, q.m, cb.$id AS code, " +
+        s"CAST(${proundSql("q.qq - 2 * list_dot_product(q.qsub, cb.csub) + cb.cc", 9)} AS DECIMAL(18,9)) AS ld " +
+        "FROM q JOIN cb ON q.m = cb.m)"
+  }
 
   /** The ring as a bounded `(cid, cv, cn)` relation — always broadcast
     * by its consumers (~√N rows even at the production default, i.e.
@@ -220,29 +310,51 @@ object SimilarityQueries {
     }
   }
 
-  /** [[ivfAssignedAt]] at the declared ring, shared/persisted — the
-    * IVF family's entry point.
+  /** [[ivfAssignedAt]] at a declared ring, shared/persisted — the IVF
+    * family's entry point.
     */
-  private def ivfAssigned(spark: SparkSession, dir: String): DataFrame =
-    sharedOr(spark, dir, s"ivf@$OracleRing") { ivfAssignedAt(spark, dir, OracleRing) }
+  private def ivfAssigned(spark: SparkSession, dir: String, ring: Ring): DataFrame =
+    sharedOr(spark, dir, s"ivf@$ring") { ivfAssignedAt(spark, dir, ring) }
+
+  /** Product quantization: M = 4 subspaces of 16 dims; `pqM` explodes a
+    * row into its subspaces `m`, `pqSub` is its slice in subspace `m`. */
+  private def pqM: Column = explode(array((0 until 4).map(lit(_)): _*))
+  private def pqSub: Column = expr("slice(embedding, m * 16 + 1, 16)")
+
+  /** The 40-row PQ codebook `(<id>, m, csub, cc)`: the oracle ring's
+    * sub-vectors in each subspace (K = 10 codes per subspace).
+    */
+  private def pqCodebook(spark: SparkSession, dir: String, id: String): DataFrame =
+    vecs(spark, dir)
+      .filter(ringPred(OracleRing))
+      .withColumn("m", pqM)
+      .select(col("vec_id").as(id), col("m"), pqSub.as("csub"))
+      .withColumn("cc", gdot("csub", "csub"))
+
+  /** Per-probe ADC lookup table `(probe, m, code, ld)` for the probes
+    * vec_id < `probes`: |probes|·M·K partial distances as DECIMAL(18,9).
+    */
+  private def pqLut(spark: SparkSession, dir: String, probes: Int, id: String): DataFrame =
+    vecs(spark, dir)
+      .filter(col("vec_id") < probes)
+      .withColumn("m", pqM)
+      .select(col("vec_id").as("probe"), col("m"), pqSub.as("qsub"))
+      .withColumn("qq", gdot("qsub", "qsub"))
+      .join(pqCodebook(spark, dir, id), Seq("m"))
+      .select(col("probe"), col("m"), col(id).as("code"),
+        pround(col("qq") - lit(2.0) * gdot("qsub", "csub") + col("cc"), 9)
+          .cast(org.apache.spark.sql.types.DecimalType(18, 9)).as("ld"))
 
   /** Corpus PQ code table `(vec_id, m, code)` — the broadcast-codebook
     * min_by aggregate shared by the ADC family.
     */
   private def pqCodes(spark: SparkSession, dir: String): DataFrame =
     sharedOr(spark, dir, "pq") {
-      val M = 4
-      val sub = expr("slice(embedding, m * 16 + 1, 16)")
-      val cb = vecs(spark, dir)
-        .filter(col("vec_id") >= 480 && col("vec_id") < 490)
-        .withColumn("m", explode(array((0 until M).map(lit(_)): _*)))
-        .select(col("vec_id").as("ccid"), col("m"), sub.as("csub"))
-        .withColumn("cc", gdot("csub", "csub"))
       vecs(spark, dir)
-        .withColumn("m", explode(array((0 until M).map(lit(_)): _*)))
-        .withColumn("sub", sub)
+        .withColumn("m", pqM)
+        .withColumn("sub", pqSub)
         .withColumn("ss", gdot("sub", "sub"))
-        .join(broadcast(cb), Seq("m"))
+        .join(broadcast(pqCodebook(spark, dir, "ccid")), Seq("m"))
         .withColumn("pd", pround(
           col("ss") - lit(2.0) * gdot("sub", "csub") + col("cc"), 9))
         .groupBy("vec_id", "m")
@@ -265,9 +377,9 @@ object SimilarityQueries {
     * (session, sf, ring) under `spark.graft.shared.pipeline`, inline
     * scopedPersist otherwise. Values identical by construction either way.
     */
-  private def graphEdges0(spark: SparkSession, dir: String): DataFrame =
-    sharedOr(spark, dir, s"ged0@$OracleRing") {
-      cellKnn(ivfAssigned(spark, dir), lit(true), 8)
+  private def graphEdges0(spark: SparkSession, dir: String, ring: Ring): DataFrame =
+    sharedOr(spark, dir, s"ged0@$ring") {
+      cellKnn(ivfAssigned(spark, dir, ring), lit(true), 8)
     }
 
   /** Cell-local bounded-degree kNN edges over an `ivfAssigned`-shaped
@@ -326,6 +438,23 @@ object SimilarityQueries {
       .select(col("probe"), col("vec_id").as("cand"), col("sim"))
   }
 
+  /** `(probe, pv, pn, pcid)`: each probe's (vec_id < 10) nprobe = 2
+    * nearest oracle-ring cells — a bounded |probes|×|ring| rank
+    * partitioned by probe (pround(9)'d csim, cid tie-break — the
+    * assignment argmax's portability argument).
+    */
+  private def nearestOracleCells(spark: SparkSession, dir: String): DataFrame = {
+    val cw = Window.partitionBy("probe").orderBy(col("csim").desc, col("cid"))
+    vecs(spark, dir).filter(col("vec_id") < 10)
+      .select(col("vec_id").as("probe"), col("embedding").as("pv"),
+        sqrt(gdot("embedding", "embedding")).as("pn"))
+      .crossJoin(broadcast(ringCents(spark, dir, OracleRing)))
+      .withColumn("csim", pround(gdot("pv", "cv") / (col("pn") * col("cn")), 9))
+      .withColumn("crn", row_number().over(cw))
+      .filter(col("crn") <= 2)
+      .select(col("probe"), col("pv"), col("pn"), col("cid").as("pcid"))
+  }
+
   /** IVF+ADC retrieval stage shared by `sim_ann_rerank` (which re-ranks
     * its output exactly) and the recall grade in AnnRerankSpec (which
     * compares the ADC-only shortlist against brute-force truth).
@@ -347,44 +476,18 @@ object SimilarityQueries {
     * probe over probe-bounded relations.
     */
   private[graft] def adcShortlist(spark: SparkSession, dir: String, topR: Int): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    val M = 4
-    val sub = expr("slice(embedding, m * 16 + 1, 16)")
-    val cents = ringCents(spark, dir, OracleRing)
     // (1) IVF cell per vector — the shared assignment build (the winning
     // (cid, v) row is the same whichever payload the max_by carries)
-    val assigned = ivfAssigned(spark, dir).select(col("vec_id"), col("cid"))
-    // (2) PQ codes per (vector, subspace) — the shared code table; the
-    // codebook rebuilds inline (40 bounded rows) for the LUT below
-    val cb = vecs(spark, dir)
-      .filter(col("vec_id") >= 480 && col("vec_id") < 490)
-      .withColumn("m", explode(array((0 until M).map(lit(_)): _*)))
-      .select(col("vec_id").as("ccid"), col("m"), sub.as("csub"))
-      .withColumn("cc", gdot("csub", "csub"))
+    val assigned = ivfAssigned(spark, dir, OracleRing).select(col("vec_id"), col("cid"))
+    // (2) PQ codes per (vector, subspace) — the shared code table
     val codes = pqCodes(spark, dir)
     // cell id + codes in one narrow corpus relation; both inputs are
     // aggregates already hashed by vec_id, so this join adds no exchange
     val enc = codes.join(assigned, Seq("vec_id"))
     // (3) nprobe=2 cells per probe — bounded 10×10 rank
-    val cw = Window.partitionBy("probe").orderBy(col("csim").desc, col("cid"))
-    val probeCells = vecs(spark, dir).filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe"), col("embedding").as("pv"),
-        sqrt(gdot("embedding", "embedding")).as("pn"))
-      .crossJoin(broadcast(cents))
-      .withColumn("csim", pround(gdot("pv", "cv") / (col("pn") * col("cn")), 9))
-      .withColumn("crn", row_number().over(cw))
-      .filter(col("crn") <= 2)
-      .select(col("probe"), col("cid").as("pcid"))
+    val probeCells = nearestOracleCells(spark, dir).select(col("probe"), col("pcid"))
     // (4) per-probe LUT: |probes|·M·K = 400 decimal partial distances
-    val lut = vecs(spark, dir)
-      .filter(col("vec_id") < 10)
-      .withColumn("m", explode(array((0 until M).map(lit(_)): _*)))
-      .select(col("vec_id").as("probe"), col("m"), sub.as("qsub"))
-      .withColumn("qq", gdot("qsub", "qsub"))
-      .join(cb, Seq("m"))
-      .select(col("probe"), col("m"), col("ccid").as("code"),
-        pround(col("qq") - lit(2.0) * gdot("qsub", "csub") + col("cc"), 9)
-          .cast(DecimalType(18, 9)).as("ld"))
+    val lut = pqLut(spark, dir, 10, "ccid")
     // (5) ADC over the probed cells only, decimal-exact 4-term sum
     val w = Window.partitionBy("probe").orderBy(col("adist"), col("cand"))
     enc.join(broadcast(probeCells), col("cid") === col("pcid"))
@@ -397,6 +500,243 @@ object SimilarityQueries {
       .filter(col("rn") <= topR)
       .select(col("probe"), col("cand"), col("adist"))
   }
+
+  // ------------------------------------------------------------------
+  // The ring family: one body per query, declared at both rings (see
+  // "Centroid rings" above). At the oracle ring the assignment is the
+  // broadcast-centroid max_by aggregate; at √N it is the zero-exchange
+  // fold ([[ivfAssignedAt]]).
+  // ------------------------------------------------------------------
+
+  /** SemDeDup (semantic dedup, Abbas et al. 2023): cluster the
+    * embeddings, then search for near-duplicate pairs ONLY inside each
+    * cluster — the cluster bound is what makes embedding-level dedup
+    * tractable (quadratic within a cell, never corpus×corpus). Drop the
+    * higher vec_id of any within-cell pair with cosine ≥ 0.4 (fixture-
+    * calibrated: these synthetic embeddings are near-uniform, so real-
+    * corpus thresholds like 0.95 select nothing; the PIPELINE is the
+    * contract, the constant is data). Scale shape: one narrow corpus
+    * pass for assignment; the self-join keys on cid so each cell's
+    * members co-locate once; drops rejoin on vec_id.
+    */
+  private def dedupSemantic(r: KeyRing): QueryDef = QueryDef(
+    (spark, dir) => {
+      val assigned = ivfAssigned(spark, dir, r.at(spark, dir))
+      val a = assigned.select(col("cid"), col("vec_id").as("v1"),
+        col("v").as("e1"), col("nv").as("n1"))
+      val b = assigned.select(col("cid"), col("vec_id").as("v2"),
+        col("v").as("e2"), col("nv").as("n2"))
+      val dropped = a.join(b, Seq("cid"))
+        .filter(col("v1") < col("v2"))
+        .withColumn("sim", pround(gdot("e1", "e2") / (col("n1") * col("n2")), 6))
+        .filter(col("sim") >= 0.4)
+        .select(col("v2").as("dropped_id")).distinct()
+      assigned
+        .join(dropped, col("vec_id") === col("dropped_id"), "left")
+        .groupBy("cid")
+        .agg(cnt("members"),
+          sum(when(col("dropped_id").isNotNull, 1L).otherwise(0L))
+            .cast("long").as("dropped"))
+        .withColumn("kept", col("members") - col("dropped"))
+        .orderBy(col("cid"))
+    },
+    Some(s"""WITH ${IvfSql.e}, ${r.sql}, ${IvfSql.asg()},
+            |drp AS (SELECT DISTINCT b.vec_id AS dropped_id
+            |FROM asg a JOIN asg b ON a.cid = b.cid AND a.vec_id < b.vec_id
+            |WHERE $cosR >= 0.4)
+            |SELECT cid, CAST(count(*) AS BIGINT) AS members,
+            |CAST(sum(CASE WHEN dropped_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS dropped,
+            |CAST(count(*) - sum(CASE WHEN dropped_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS kept
+            |FROM asg LEFT JOIN drp ON asg.vec_id = drp.dropped_id
+            |GROUP BY cid ORDER BY cid""".stripMargin.replace("\n", " ")),
+    tier = "E")
+
+  /** Diversity sampling by cell representative — the selection HALF of
+    * SemDeDup-style curation: instead of dropping near-duplicates, KEEP
+    * exactly one representative per embedding-space cell (the vector
+    * closest to its centroid, min-id tie-break) — a coreset that covers
+    * the space with |cells| points. The pick is one partial+final
+    * max_by aggregate ((csim, −vec_id) struct ordering: the oracle's
+    * rank window, csim DESC then vec_id ASC) fused with the census, so
+    * the key is ONE aggregate over the assignment and its output is
+    * |ring| rows.
+    */
+  private def sampleDiverseCells(r: KeyRing): QueryDef = QueryDef(
+    (spark, dir) => {
+      val ring = r.at(spark, dir)
+      ivfAssigned(spark, dir, ring)
+        .join(broadcast(ringCents(spark, dir, ring)), Seq("cid"))
+        .withColumn("csim", pround(gdot("v", "cv") / (col("nv") * col("cn")), 9))
+        .groupBy("cid")
+        .agg(cnt("members"),
+          max_by(struct(col("vec_id"), col("csim")),
+            struct(col("csim"), (-col("vec_id")).as("nvid"))).as("m"))
+        .select(col("cid"), col("members"), col("m.vec_id").as("rep_vec"),
+          col("m.csim").as("rep_sim"))
+        .orderBy(col("cid"))
+    },
+    Some(s"""WITH ${IvfSql.e}, ${r.sql}, ${IvfSql.asg()},
+            |scored AS (SELECT a.cid, a.vec_id, ${IvfSql.cos("a.v", "c2.cv", 9)} AS csim
+            |FROM asg a JOIN c c2 ON a.cid = c2.cid),
+            |rep AS (SELECT cid, vec_id AS rep_vec, csim AS rep_sim FROM (
+            |SELECT cid, vec_id, csim,
+            |row_number() OVER (PARTITION BY cid ORDER BY csim DESC, vec_id) AS rn
+            |FROM scored) WHERE rn = 1),
+            |m AS (SELECT cid, CAST(count(*) AS BIGINT) AS members FROM asg GROUP BY cid)
+            |SELECT rep.cid, members, rep_vec, rep_sim
+            |FROM rep JOIN m ON rep.cid = m.cid ORDER BY rep.cid""".stripMargin.replace("\n", " ")),
+    tier = "E")
+
+  /** The probe side of a graph-ANN beam search over `ring`'s assignment:
+    * the probes (vec_id < 10), exact scoring of a bounded (probe, cand)
+    * set, the entry step, the best-first window and the answer.
+    * Internal ranks order a pround(9) cosine (the assignment-argmax
+    * portability argument).
+    */
+  private final class GraphBeam(spark: SparkSession, dir: String, ring: Ring) {
+    val assigned: DataFrame = ivfAssigned(spark, dir, ring)
+    val edges0: DataFrame = graphEdges0(spark, dir, ring)
+    private val corpus = assigned.select(col("vec_id").as("cvid"),
+      col("v").as("cv2"), col("nv").as("cn2"))
+    private val probes = assigned.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("probe"), col("v").as("pv"), col("nv").as("pn"))
+    private val fw = Window.partitionBy("probe").orderBy(col("sim9").desc, col("cand"))
+
+    /** Each probe's own vertex as a candidate. */
+    def self: DataFrame = probes.select(col("probe"), col("probe").as("cand"))
+
+    /** Exact cosine for a bounded (probe, cand) set: candidates and
+      * probes broadcast, the narrow corpus relation streams past them. */
+    def score(c: DataFrame): DataFrame =
+      corpus.join(broadcast(c), col("cand") === col("cvid"))
+        .join(broadcast(probes), Seq("probe"))
+        .select(col("probe"), col("cand"),
+          pround(gdot("pv", "cv2") / (col("pn") * col("cn2")), 9).as("sim9"))
+
+    /** `(probe, <as>)`: each probe's 2 NEAREST ring vertices (the
+      * sim_ivf_nprobe knob), picked by a bounded |probes|×|ring| cross. */
+    def nearestCells(as: String): DataFrame = {
+      val cents = assigned
+        .filter(ringPred(ring))
+        .select(col("vec_id").as(as), col("v").as("cv0"), col("nv").as("cn0"))
+      val cw = Window.partitionBy("probe").orderBy(col("ps").desc, col(as))
+      probes.crossJoin(broadcast(cents))
+        .withColumn("ps", pround(gdot("pv", "cv0") / (col("pn") * col("cn0")), 9))
+        .withColumn("crn", row_number().over(cw))
+        .filter(col("crn") <= 2)
+        .select("probe", as)
+    }
+
+    /** The `width` best visited candidates per probe. */
+    def best(visited: DataFrame, width: Int): DataFrame =
+      visited.withColumn("frn", row_number().over(fw))
+        .filter(col("frn") <= width).select("probe", "cand")
+
+    /** `visited` plus the scored `reached` set. */
+    def visit(visited: DataFrame, reached: DataFrame): DataFrame =
+      scopedCheckpoint(visited.unionByName(score(reached)))
+
+    /** The answer: per-probe top-3 of everything visited but the probe. */
+    def top3(visited: DataFrame): DataFrame =
+      visited.filter(col("cand") =!= col("probe"))
+        .withColumn("rn", row_number().over(fw))
+        .filter(col("rn") <= 3)
+        .select(col("probe"), col("cand"), pround(col("sim9"), 6).as("sim"))
+        .orderBy(col("probe"), col("sim").desc, col("cand"))
+  }
+
+  /** Graph ANN — join-based HNSW-lite (beam search over a bounded-degree
+    * kNN graph, Malkov & Yashunin's HNSW re-expressed as dataflow). Index
+    * build: every vector keeps its k=8 nearest SAME-CELL neighbors —
+    * cell-local exact kNN, the SemDeDup bound that keeps the self-join
+    * quadratic in cell size, never corpus². Search: probes enter at
+    * their 2 NEAREST ring vertices (5× fewer scored entries than the
+    * full 10-centroid ring at equal recall, GraphAnnSpec grades it) plus
+    * their OWN vertex — probes are corpus members, so the first hop
+    * reaches the probe's layer-0 neighborhood — and run 2 unrolled
+    * best-first hops: each expands the per-probe beam (B=4 best visited
+    * so far) along graph edges, scores ONLY newly-reached vertices with
+    * exact cosine, and merges them into the visited set. Scale shape:
+    * the edge relation shuffles narrow (src, dst) pairs once at build
+    * and is persisted across hops; probes, beams, and expansions are
+    * probe-bounded (≤ |probes|·B·deg rows) and BROADCAST, so each hop's
+    * scoring streams the corpus past them with zero corpus shuffle;
+    * every window partitions by src or probe.
+    */
+  private def simGraphAnn(r: KeyRing): QueryDef = QueryDef(
+    (spark, dir) => {
+      val g = new GraphBeam(spark, dir, r.at(spark, dir))
+      var visited = scopedCheckpoint(g.score(g.nearestCells("cand").unionByName(g.self)))
+      (1 to 2).foreach { _ =>
+        val reached = g.best(visited, 4).join(g.edges0, col("cand") === col("src"))
+          .select(col("probe"), col("dst").as("cand")).distinct()
+          .join(visited.select("probe", "cand"), Seq("probe", "cand"), "left_anti")
+        visited = g.visit(visited, reached)
+      }
+      g.top3(visited)
+    },
+    Some(s"WITH ${IvfSql.e}, ${r.sql}, ${IvfSql.asg()}, ${IvfSql.edges("ed", "asg", 8)}, " +
+      IvfSql.probeCells("cand") + ", " +
+      IvfSql.beam("SELECT probe, cand FROM pc UNION SELECT probe, probe AS cand FROM p",
+        ("ed", 4, ""), ("ed", 4, ""))),
+    tier = "E")
+
+  /** HIERARCHICAL graph ANN — [[simGraphAnn]] grown its second layer
+    * (Malkov & Yashunin's multi-layer descent). Layer 1 is the
+    * deterministic 1/16 vertex sample (vec_id % 16 = 0 — the portable
+    * analog of HNSW's geometric level draw) with its own cell-local kNN
+    * graph (deg 4); layer 0 is the full deg-8 graph. Search descends:
+    * enter at ≤8 per-cell layer-1 DELEGATES of the probe's 2 nearest
+    * cells (the delegate cap keeps the entry set bounded BY
+    * CONSTRUCTION — cell growth cannot widen it), one beam hop on the
+    * coarse layer-1 graph (B=2), then drop the 2 best layer-1 vertices
+    * into layer 0 (plus the probe's own vertex) for two deg-8 hops
+    * (B=4). Scale shape: both edge relations are the cell-local build
+    * (layer 1 is 256× cheaper); every beam/visited/probe-cell relation
+    * is probe-bounded BY CONSTRUCTION (≤ |probes|·B·deg rows) and
+    * broadcast explicitly, so the corpus-scaled edge relations stream
+    * past them and never sort; every window partitions by src, cid, or
+    * probe. GraphAnnSpec grades the descent's recall and its
+    * scored-candidate budget vs the flat single-layer beam.
+    */
+  private def simGraphHnsw(r: KeyRing): QueryDef = QueryDef(
+    (spark, dir) => {
+      val g = new GraphBeam(spark, dir, r.at(spark, dir))
+      val edges1 = cellKnn(g.assigned, col("vec_id") % 16 === 0, 4)
+      // ≤8 layer-1 delegates per cell, by vec_id — bounded entry set
+      val dw = Window.partitionBy("cid").orderBy("vec_id")
+      val delegates = g.assigned.filter(col("vec_id") % 16 === 0)
+        .select(col("cid"), col("vec_id"))
+        .withColumn("drn", row_number().over(dw))
+        .filter(col("drn") <= 8)
+        .select(col("cid"), col("vec_id").as("cand"))
+      val entry = delegates.join(broadcast(g.nearestCells("pcid")), col("pcid") === col("cid"))
+        .select("probe", "cand").distinct()
+      // one hop: the `width` best visited vertices expand along `edges`;
+      // beam and visited set are broadcast explicitly, so the
+      // corpus-scaled edge relation streams past them and never sorts
+      def hop(visited: DataFrame, edges: DataFrame, width: Int,
+              withSelf: Boolean = false): DataFrame = {
+        val out = edges.join(broadcast(g.best(visited, width)), col("cand") === col("src"))
+          .select(col("probe"), col("dst").as("cand"))
+        val reached = (if (withSelf) out.unionByName(g.self) else out).distinct()
+          .join(broadcast(visited.select("probe", "cand")), Seq("probe", "cand"), "left_anti")
+        g.visit(visited, reached)
+      }
+      // one coarse B=2 hop on layer 1, then descend: the 2 best layer-1
+      // vertices + the probe's own vertex enter layer 0 for two hops
+      val layer1 = hop(scopedCheckpoint(g.score(entry)), edges1, 2)
+      g.top3(hop(hop(layer1, g.edges0, 2, withSelf = true), g.edges0, 4))
+    },
+    Some(s"WITH ${IvfSql.e}, ${r.sql}, ${IvfSql.asg()}, ${IvfSql.edges("ed0", "asg", 8)}, " +
+      "l1 AS (SELECT vec_id, cid, v FROM asg WHERE vec_id % 16 = 0), " +
+      IvfSql.edges("ed1", "l1", 4) + ", " +
+      "dl AS (SELECT cid, vec_id AS cand FROM ( SELECT cid, vec_id, " +
+      "row_number() OVER (PARTITION BY cid ORDER BY vec_id) AS drn FROM l1) WHERE drn <= 8), " +
+      IvfSql.probeCells("pcid") + ", " +
+      IvfSql.beam("SELECT DISTINCT pc.probe, dl.cand FROM pc JOIN dl ON dl.cid = pc.pcid",
+        ("ed1", 2, ""), ("ed0", 2, " UNION SELECT probe, probe AS cand FROM p"), ("ed0", 4, ""))),
+    tier = "E")
 
   val defs: Seq[(String, QueryDef)] = Seq(
 
@@ -469,7 +809,7 @@ object SimilarityQueries {
         // near-tie cannot flip the assignment, because within 1e-9 the
         // two sides see the SAME rounded value and break the tie on cid.
         // (Build shared with the IVF family via [[ivfAssigned]].)
-        val assigned = ivfAssigned(spark, dir)
+        val assigned = ivfAssigned(spark, dir, OracleRing)
         val probes = assigned.filter(col("vec_id") < 10)
           .select(col("vec_id").as("probe"), col("cid").as("pcid"),
             col("v").as("pv"), col("nv").as("pn"))
@@ -482,26 +822,17 @@ object SimilarityQueries {
           .select(col("probe"), col("vec_id").as("cand"), col("sim"))
           .orderBy(col("probe"), col("sim").desc, col("cand"))
       },
-      Some {
-        val csim = proundSql(
-          "list_dot_product(e.v, c.cv) / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv)))", 9)
-        s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-           |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id >= 480 AND vec_id < 490),
-           |asg AS (SELECT vec_id, cid, v FROM (
-           |SELECT e.vec_id, c.cid, e.v,
-           |row_number() OVER (PARTITION BY e.vec_id ORDER BY $csim DESC, c.cid) AS arn
-           |FROM e CROSS JOIN c) WHERE arn = 1)
-           |SELECT probe, cand, sim FROM (
-           |SELECT a.vec_id AS probe, b.vec_id AS cand, $cosR AS sim,
-           |row_number() OVER (PARTITION BY a.vec_id ORDER BY $cosR DESC, b.vec_id) AS rn
-           |FROM asg a JOIN asg b ON a.vec_id < 10 AND b.cid = a.cid AND b.vec_id <> a.vec_id)
-           |WHERE rn <= 3 ORDER BY probe, sim DESC, cand""".stripMargin.replace("\n", " ")
-      },
+      Some(s"""WITH ${IvfSql.e}, ${IvfSql.oracleRing()}, ${IvfSql.asg()}
+              |SELECT probe, cand, sim FROM (
+              |SELECT a.vec_id AS probe, b.vec_id AS cand, $cosR AS sim,
+              |row_number() OVER (PARTITION BY a.vec_id ORDER BY $cosR DESC, b.vec_id) AS rn
+              |FROM asg a JOIN asg b ON a.vec_id < 10 AND b.cid = a.cid AND b.vec_id <> a.vec_id)
+              |WHERE rn <= 3 ORDER BY probe, sim DESC, cand""".stripMargin.replace("\n", " ")),
       tier = "E"),
 
-    // IVF with nprobe=2 — the standard recall knob sim_ivf_topk lacks
-    //: each probe searches its TWO nearest
-    // centroid cells instead of only its own. Scale shape is unchanged —
+    // IVF with nprobe=2 — the standard recall knob sim_ivf_topk lacks:
+    // each probe searches its TWO nearest centroid cells instead of only
+    // its own. Scale shape is unchanged —
     // corpus assignment is the same broadcast-centroid max_by aggregate
     // (one narrow pass, map-side combined), and the probe side just
     // explodes ×nprobe before the bounded join on centroid id; the only
@@ -510,21 +841,9 @@ object SimilarityQueries {
     // duplicate across cells (each vector lives in exactly one cell).
     "sim_ivf_nprobe" -> QueryDef(
       (spark, dir) => {
-        val cents = ringCents(spark, dir, OracleRing)
         // corpus assignment shared with the IVF family ([[ivfAssigned]])
-        val assigned = ivfAssigned(spark, dir)
-        // probe → its 2 nearest cells: a bounded (#probes × K) relation;
-        // the rank window partitions by probe (pround(9)'d csim, cid
-        // tie-break — same portability argument as the assignment argmax).
-        val cw = Window.partitionBy("probe").orderBy(col("csim").desc, col("cid"))
-        val probeCells = vecs(spark, dir).filter(col("vec_id") < 10)
-          .select(col("vec_id").as("probe"), col("embedding").as("pv"),
-            sqrt(gdot("embedding", "embedding")).as("pn"))
-          .crossJoin(broadcast(cents))
-          .withColumn("csim", pround(gdot("pv", "cv") / (col("pn") * col("cn")), 9))
-          .withColumn("crn", row_number().over(cw))
-          .filter(col("crn") <= 2)
-          .select(col("probe"), col("pv"), col("pn"), col("cid").as("pcid"))
+        val assigned = ivfAssigned(spark, dir, OracleRing)
+        val probeCells = nearestOracleCells(spark, dir)
         val w = Window.partitionBy("probe").orderBy(col("sim").desc, col("vec_id"))
         broadcast(probeCells)
           .join(assigned, col("pcid") === col("cid") && col("vec_id") =!= col("probe"))
@@ -535,22 +854,12 @@ object SimilarityQueries {
           .orderBy(col("probe"), col("sim").desc, col("cand"))
       },
       Some {
-        val csim = proundSql(
-          "list_dot_product(e.v, c.cv) / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv)))", 9)
-        val psim = proundSql(
-          "list_dot_product(p.v, c.cv) / (sqrt(list_dot_product(p.v, p.v)) * sqrt(list_dot_product(c.cv, c.cv)))", 9)
-        val sim = proundSql(
-          "list_dot_product(pc.pv, b.v) / (sqrt(list_dot_product(pc.pv, pc.pv)) * sqrt(list_dot_product(b.v, b.v)))", 6)
-        s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-           |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id >= 480 AND vec_id < 490),
-           |asg AS (SELECT vec_id, cid, v FROM (
-           |SELECT e.vec_id, c.cid, e.v,
-           |row_number() OVER (PARTITION BY e.vec_id ORDER BY $csim DESC, c.cid) AS arn
-           |FROM e CROSS JOIN c) WHERE arn = 1),
+        val sim = IvfSql.cos("pc.pv", "b.v", 6)
+        s"""WITH ${IvfSql.e}, ${IvfSql.oracleRing()}, ${IvfSql.asg()},
            |p AS (SELECT vec_id, v FROM e WHERE vec_id < 10),
            |pc AS (SELECT probe, pv, pcid FROM (
            |SELECT p.vec_id AS probe, p.v AS pv, c.cid AS pcid,
-           |row_number() OVER (PARTITION BY p.vec_id ORDER BY $psim DESC, c.cid) AS crn
+           |row_number() OVER (PARTITION BY p.vec_id ORDER BY ${IvfSql.cos("p.v", "c.cv", 9)} DESC, c.cid) AS crn
            |FROM p CROSS JOIN c) WHERE crn <= 2)
            |SELECT probe, cand, sim FROM (
            |SELECT pc.probe, b.vec_id AS cand, $sim AS sim,
@@ -577,30 +886,17 @@ object SimilarityQueries {
     // (~25 MB at a 10¹⁰-vector corpus) collected once.
     "sim_ivf_spread" -> QueryDef(
       (spark, dir) => {
-        val n = corpusN(spark, dir)
-        val k = math.max(1L, math.round(math.sqrt(n.toDouble)))
-        ivfAssignedAt(spark, dir, PortableSpreadRing(k))
+        ivfAssignedAt(spark, dir, portableRing(spark, dir))
           .groupBy(col("cid"))
           .agg(cnt("members"), sum(col("vec_id")).cast("long").as("sum_vid"),
             min(col("vec_id")).as("min_vid"), max(col("vec_id")).as("max_vid"))
           .orderBy(col("cid"))
       },
-      Some {
-        val csim = proundSql(
-          "list_dot_product(e.v, c.cv) / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv)))", 9)
-        s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-           |k AS (SELECT CAST(round(sqrt(count(*))) AS BIGINT) AS kk FROM e),
-           |c AS (SELECT vec_id AS cid, v AS cv FROM e, k
-           |WHERE CAST('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15) AS BIGINT) % kk = 0),
-           |asg AS (SELECT vec_id, cid FROM (
-           |SELECT e.vec_id, c.cid,
-           |row_number() OVER (PARTITION BY e.vec_id ORDER BY $csim DESC, c.cid) AS arn
-           |FROM e CROSS JOIN c) WHERE arn = 1)
-           |SELECT cid, CAST(count(*) AS BIGINT) AS members,
-           |CAST(sum(vec_id) AS BIGINT) AS sum_vid,
-           |min(vec_id) AS min_vid, max(vec_id) AS max_vid
-           |FROM asg GROUP BY cid ORDER BY cid""".stripMargin.replace("\n", " ")
-      },
+      Some(s"""WITH ${IvfSql.e}, ${IvfSql.sqrtNRing}, ${IvfSql.asg(withV = false)}
+              |SELECT cid, CAST(count(*) AS BIGINT) AS members,
+              |CAST(sum(vec_id) AS BIGINT) AS sum_vid,
+              |min(vec_id) AS min_vid, max(vec_id) AS max_vid
+              |FROM asg GROUP BY cid ORDER BY cid""".stripMargin.replace("\n", " ")),
       tier = "E"),
 
     // K-means over embeddings (one Lloyd iteration) — the clustering
@@ -621,7 +917,7 @@ object SimilarityQueries {
         val e = vecs(spark, dir)
           .select(col("vec_id"), expr("transform(embedding, x -> cast(x as double))").as("v"))
           .scopedPersist()
-        val c0 = e.filter(col("vec_id") >= 480 && col("vec_id") < 490)
+        val c0 = e.filter(ringPred(OracleRing))
           .select(col("vec_id").as("cid"), col("v").as("cv"))
         // Argmax over a pround-ed csim (9 digits, both engines): the ranked
         // value is identical by construction, so a last-ulp fold divergence
@@ -648,28 +944,17 @@ object SimilarityQueries {
           .select(col("cid"), col("n"), pround(sqrt(gdot("cv", "cv")), 6).as("cnorm"))
           .orderBy(col("cid"))
       },
-      Some {
-        val csim = proundSql(
-          "list_dot_product(e.v, c.cv) / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv)))", 9)
-        s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-           |c0 AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id >= 480 AND vec_id < 490),
-           |a1 AS (SELECT vec_id, cid, v FROM (
-           |SELECT e.vec_id, c.cid, e.v,
-           |row_number() OVER (PARTITION BY e.vec_id ORDER BY $csim DESC, c.cid) AS rn
-           |FROM e CROSS JOIN c0 c) WHERE rn = 1),
-           |ex AS (SELECT cid, unnest(range(1, len(v) + 1)) AS dim, unnest(v) AS x FROM a1),
-           |d1 AS (SELECT cid, dim, CAST(sum(CAST(x AS DECIMAL(27,12))) AS DOUBLE)
-           | / CAST(count(*) AS DOUBLE) AS m FROM ex GROUP BY cid, dim),
-           |c1 AS (SELECT cid, list(m ORDER BY dim) AS cv FROM d1 GROUP BY cid),
-           |a2 AS (SELECT vec_id, cid FROM (
-           |SELECT e.vec_id, c.cid,
-           |row_number() OVER (PARTITION BY e.vec_id ORDER BY $csim DESC, c.cid) AS rn
-           |FROM e CROSS JOIN c1 c) WHERE rn = 1)
-           |SELECT a2.cid, CAST(count(*) AS BIGINT) AS n,
-           |${proundSql("sqrt(list_dot_product(c1.cv, c1.cv))", 6)} AS cnorm
-           |FROM a2 JOIN c1 ON a2.cid = c1.cid
-           |GROUP BY a2.cid, c1.cv ORDER BY a2.cid""".stripMargin.replace("\n", " ")
-      },
+      Some(s"""WITH ${IvfSql.e}, ${IvfSql.oracleRing("c0")},
+              |${IvfSql.asg(name = "a1", cents = "c0 c", rn = "rn")},
+              |ex AS (SELECT cid, unnest(range(1, len(v) + 1)) AS dim, unnest(v) AS x FROM a1),
+              |d1 AS (SELECT cid, dim, CAST(sum(CAST(x AS DECIMAL(27,12))) AS DOUBLE)
+              | / CAST(count(*) AS DOUBLE) AS m FROM ex GROUP BY cid, dim),
+              |c1 AS (SELECT cid, list(m ORDER BY dim) AS cv FROM d1 GROUP BY cid),
+              |${IvfSql.asg(withV = false, name = "a2", cents = "c1 c", rn = "rn")}
+              |SELECT a2.cid, CAST(count(*) AS BIGINT) AS n,
+              |${proundSql("sqrt(list_dot_product(c1.cv, c1.cv))", 6)} AS cnorm
+              |FROM a2 JOIN c1 ON a2.cid = c1.cid
+              |GROUP BY a2.cid, c1.cv ORDER BY a2.cid""".stripMargin.replace("\n", " ")),
       tier = "E"),
 
     // Embedding near-dup: bounded candidate set, cosine threshold.
@@ -697,126 +982,8 @@ object SimilarityQueries {
               |WHERE sim >= 0.3 ORDER BY sim DESC, v1, v2 LIMIT 500""".stripMargin.replace("\n", " ")),
       tier = "E"),
 
-    // SemDeDup (semantic dedup, Abbas et al. 2023): cluster the
-    // embeddings, then search for near-duplicate pairs ONLY inside each
-    // cluster — the cluster bound is what makes embedding-level dedup
-    // tractable (quadratic within a cell, never corpus×corpus; in
-    // production k grows with N so cell sizes stay bounded, and the
-    // fixture's 10 fixed centroids model that bound). Drop the higher
-    // vec_id of any within-cell pair with cosine ≥ 0.4 (fixture-
-    // calibrated: these synthetic embeddings are near-uniform, so real-
-    // corpus thresholds like 0.95 select nothing; the PIPELINE is the
-    // contract, the constant is data). Scale shape: assignment is the
-    // proven broadcast-centroid max_by aggregate (one narrow pass, no
-    // window over the corpus); the self-join keys on cid so each cell's
-    // members co-locate once; drops rejoin on vec_id.
-    "dedup_semantic" -> QueryDef(
-      (spark, dir) => {
-        // corpus assignment shared with the IVF family ([[ivfAssigned]])
-        val assigned = ivfAssigned(spark, dir)
-        val a = assigned.select(col("cid"), col("vec_id").as("v1"),
-          col("v").as("e1"), col("nv").as("n1"))
-        val b = assigned.select(col("cid"), col("vec_id").as("v2"),
-          col("v").as("e2"), col("nv").as("n2"))
-        val dropped = a.join(b, Seq("cid"))
-          .filter(col("v1") < col("v2"))
-          .withColumn("sim", pround(gdot("e1", "e2") / (col("n1") * col("n2")), 6))
-          .filter(col("sim") >= 0.4)
-          .select(col("v2").as("dropped_id")).distinct()
-        assigned
-          .join(dropped, col("vec_id") === col("dropped_id"), "left")
-          .groupBy("cid")
-          .agg(cnt("members"),
-            sum(when(col("dropped_id").isNotNull, 1L).otherwise(0L))
-              .cast("long").as("dropped"))
-          .withColumn("kept", col("members") - col("dropped"))
-          .orderBy(col("cid"))
-      },
-      Some {
-        val csim = proundSql(
-          "list_dot_product(e.v, c.cv) / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv)))", 9)
-        val psim = proundSql(
-          "list_dot_product(a.v, b.v) / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v)))", 6)
-        s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-           |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id >= 480 AND vec_id < 490),
-           |asg AS (SELECT vec_id, cid, v FROM (
-           |SELECT e.vec_id, c.cid, e.v,
-           |row_number() OVER (PARTITION BY e.vec_id ORDER BY $csim DESC, c.cid) AS arn
-           |FROM e CROSS JOIN c) WHERE arn = 1),
-           |drp AS (SELECT DISTINCT b.vec_id AS dropped_id
-           |FROM asg a JOIN asg b ON a.cid = b.cid AND a.vec_id < b.vec_id
-           |WHERE $psim >= 0.4)
-           |SELECT cid, CAST(count(*) AS BIGINT) AS members,
-           |CAST(sum(CASE WHEN dropped_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS dropped,
-           |CAST(count(*) - sum(CASE WHEN dropped_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS kept
-           |FROM asg LEFT JOIN drp ON asg.vec_id = drp.dropped_id
-           |GROUP BY cid ORDER BY cid""".stripMargin.replace("\n", " ")
-      },
-      tier = "E"),
-
-    // PRODUCTION spread-ring SEMANTIC DEDUP, oracle-checked.
-    // `dedup_semantic` pins the declared 10-centroid oracle ring —
-    // which is why it is the 100× board's most expensive key (cell
-    // population ∝ N/10 makes the within-cell pair join quadratic in N)
-    // — while the production path runs the √N ring where cells stay
-    // ~√N and total pair work is ~N^1.5 (measured ~10× cheaper at 30×,
-    // SCALE.md). sim_ivf_spread proved the portable-md5 ring
-    // recipe for the ASSIGNMENT; this key runs the full SemDeDup
-    // pipeline on that ring — fold assignment (zero exchanges before
-    // the cell stage), cid-keyed within-cell pair join, near-dup drop at
-    // cosine ≥ 0.4 — and hash-checks the per-cell census against DuckDB
-    // deriving k = round(√N) from its own count. Scale shape: one
-    // narrow corpus pass for assignment; the pair join keys on cid so
-    // each ~√N-member cell co-locates once; drops rejoin on vec_id.
-    "dedup_semantic_spread" -> QueryDef(
-      (spark, dir) => {
-        val n = corpusN(spark, dir)
-        val k = math.max(1L, math.round(math.sqrt(n.toDouble)))
-        val ring = PortableSpreadRing(k)
-        val assigned = sharedOr(spark, dir, s"ivf@$ring") {
-          ivfAssignedAt(spark, dir, ring)
-        }
-        val a = assigned.select(col("cid"), col("vec_id").as("v1"),
-          col("v").as("e1"), col("nv").as("n1"))
-        val b = assigned.select(col("cid"), col("vec_id").as("v2"),
-          col("v").as("e2"), col("nv").as("n2"))
-        val dropped = a.join(b, Seq("cid"))
-          .filter(col("v1") < col("v2"))
-          .withColumn("sim", pround(gdot("e1", "e2") / (col("n1") * col("n2")), 6))
-          .filter(col("sim") >= 0.4)
-          .select(col("v2").as("dropped_id")).distinct()
-        assigned
-          .join(dropped, col("vec_id") === col("dropped_id"), "left")
-          .groupBy("cid")
-          .agg(cnt("members"),
-            sum(when(col("dropped_id").isNotNull, 1L).otherwise(0L))
-              .cast("long").as("dropped"))
-          .withColumn("kept", col("members") - col("dropped"))
-          .orderBy(col("cid"))
-      },
-      Some {
-        val csim = proundSql(
-          "list_dot_product(e.v, c.cv) / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv)))", 9)
-        val psim = proundSql(
-          "list_dot_product(a.v, b.v) / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v)))", 6)
-        s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-           |k AS (SELECT CAST(round(sqrt(count(*))) AS BIGINT) AS kk FROM e),
-           |c AS (SELECT vec_id AS cid, v AS cv FROM e, k
-           |WHERE CAST('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15) AS BIGINT) % kk = 0),
-           |asg AS (SELECT vec_id, cid, v FROM (
-           |SELECT e.vec_id, c.cid, e.v,
-           |row_number() OVER (PARTITION BY e.vec_id ORDER BY $csim DESC, c.cid) AS arn
-           |FROM e CROSS JOIN c) WHERE arn = 1),
-           |drp AS (SELECT DISTINCT b.vec_id AS dropped_id
-           |FROM asg a JOIN asg b ON a.cid = b.cid AND a.vec_id < b.vec_id
-           |WHERE $psim >= 0.4)
-           |SELECT cid, CAST(count(*) AS BIGINT) AS members,
-           |CAST(sum(CASE WHEN dropped_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS dropped,
-           |CAST(count(*) - sum(CASE WHEN dropped_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS kept
-           |FROM asg LEFT JOIN drp ON asg.vec_id = drp.dropped_id
-           |GROUP BY cid ORDER BY cid""".stripMargin.replace("\n", " ")
-      },
-      tier = "E"),
+    "dedup_semantic" -> dedupSemantic(atOracle),
+    "dedup_semantic_spread" -> dedupSemantic(atSqrtN),
 
     // HLL++ approximate distinct — engine-specific sketch, no oracle
     // (SURVEY §2.B): Spark's built-in replaces a custom HLL aggregate.
@@ -955,20 +1122,13 @@ object SimilarityQueries {
     // the end.
     "sim_pq_codes" -> QueryDef(
       (spark, dir) => {
-        val M = 4
-        val sub = expr("slice(embedding, m * 16 + 1, 16)")
         val withM = vecs(spark, dir)
-          .withColumn("m", explode(array((0 until M).map(lit(_)): _*)))
-          .withColumn("sub", sub)
+          .withColumn("m", pqM)
+          .withColumn("sub", pqSub)
           .withColumn("ss", gdot("sub", "sub"))
-        val cb = vecs(spark, dir)
-          .filter(col("vec_id") >= 480 && col("vec_id") < 490)
-          .withColumn("m", explode(array((0 until M).map(lit(_)): _*)))
-          .select(col("vec_id").as("cid"), col("m"), sub.as("csub"))
-          .withColumn("cc", gdot("csub", "csub"))
         // ||s - c||² = ss - 2·sc + cc, evaluated in this exact IEEE order
         // on both engines; one fold per (vec, m, code) pair.
-        val d = withM.join(broadcast(cb), Seq("m"))
+        val d = withM.join(broadcast(pqCodebook(spark, dir, "cid")), Seq("m"))
           .withColumn("pd", pround(
             col("ss") - lit(2.0) * gdot("sub", "csub") + col("cc"), 9))
         d.groupBy("vec_id", "m")
@@ -983,22 +1143,15 @@ object SimilarityQueries {
               .as("mean_err"))
           .orderBy(col("m"), col("code"))
       },
-      Some {
-        val dist = "list_dot_product(ev.sub, ev.sub) - 2 * list_dot_product(ev.sub, cb.csub) + cb.cc"
-        s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-           |ms AS (SELECT unnest([0, 1, 2, 3]) AS m),
-           |ev AS (SELECT vec_id, m, list_slice(v, m * 16 + 1, m * 16 + 16) AS sub FROM e CROSS JOIN ms),
-           |cb AS (SELECT vec_id AS cid, m, sub AS csub, list_dot_product(sub, sub) AS cc
-           |FROM ev WHERE vec_id >= 480 AND vec_id < 490),
-           |d AS (SELECT ev.vec_id, ev.m, cb.cid, ${proundSql(dist, 9)} AS pd
-           |FROM ev JOIN cb ON ev.m = cb.m),
-           |asg AS (SELECT vec_id, m, cid, pd FROM (
-           |SELECT vec_id, m, cid, pd,
-           |row_number() OVER (PARTITION BY vec_id, m ORDER BY pd, cid) AS rn FROM d) WHERE rn = 1)
-           |SELECT m, cid AS code, CAST(count(*) AS BIGINT) AS members,
-           |${proundSql("CAST(sum(CAST(" + proundSql("pd", 6) + " AS DECIMAL(28,6))) AS DOUBLE) / CAST(count(*) AS DOUBLE)", 6)} AS mean_err
-           |FROM asg GROUP BY m, cid ORDER BY m, code""".stripMargin.replace("\n", " ")
-      },
+      Some(s"""WITH ${IvfSql.e}, ${IvfSql.pq("cid")},
+              |d AS (SELECT ev.vec_id, ev.m, cb.cid, ${IvfSql.dist} AS pd
+              |FROM ev JOIN cb ON ev.m = cb.m),
+              |asg AS (SELECT vec_id, m, cid, pd FROM (
+              |SELECT vec_id, m, cid, pd,
+              |row_number() OVER (PARTITION BY vec_id, m ORDER BY pd, cid) AS rn FROM d) WHERE rn = 1)
+              |SELECT m, cid AS code, CAST(count(*) AS BIGINT) AS members,
+              |${proundSql("CAST(sum(CAST(" + proundSql("pd", 6) + " AS DECIMAL(28,6))) AS DOUBLE) / CAST(count(*) AS DOUBLE)", 6)} AS mean_err
+              |FROM asg GROUP BY m, cid ORDER BY m, code""".stripMargin.replace("\n", " ")),
       tier = "E"),
 
     // PQ ASYMMETRIC DISTANCE search (Jégou et al., PAMI'11) — the query
@@ -1020,26 +1173,9 @@ object SimilarityQueries {
     // vec_id tie-break.
     "sim_pq_adc" -> QueryDef(
       (spark, dir) => {
-        import org.apache.spark.sql.types.DecimalType
-        val M = 4
-        val sub = expr("slice(embedding, m * 16 + 1, 16)")
-        // corpus code table shared with sim_ann_rerank ([[pqCodes]]);
-        // the 40-row codebook rebuilds inline for the LUT
-        val cb = vecs(spark, dir)
-          .filter(col("vec_id") >= 480 && col("vec_id") < 490)
-          .withColumn("m", explode(array((0 until M).map(lit(_)): _*)))
-          .select(col("vec_id").as("cid"), col("m"), sub.as("csub"))
-          .withColumn("cc", gdot("csub", "csub"))
+        // corpus code table shared with sim_ann_rerank ([[pqCodes]])
         val codes = pqCodes(spark, dir)
-        val lut = vecs(spark, dir)
-          .filter(col("vec_id") < 5)
-          .withColumn("m", explode(array((0 until M).map(lit(_)): _*)))
-          .select(col("vec_id").as("probe"), col("m"), sub.as("qsub"))
-          .withColumn("qq", gdot("qsub", "qsub"))
-          .join(cb, Seq("m"))
-          .select(col("probe"), col("m"), col("cid").as("code"),
-            pround(col("qq") - lit(2.0) * gdot("qsub", "csub") + col("cc"), 9)
-              .cast(DecimalType(18, 9)).as("ld"))
+        val lut = pqLut(spark, dir, 5, "cid")
         val w = Window.partitionBy("probe").orderBy(col("adist"), col("cand"))
         codes.join(broadcast(lut), Seq("m", "code"))
           .groupBy(col("probe"), col("vec_id").as("cand"))
@@ -1051,33 +1187,21 @@ object SimilarityQueries {
           .select(col("probe"), col("cand"), col("adist"))
           .orderBy(col("probe"), col("adist"), col("cand"))
       },
-      Some {
-        val dist = "list_dot_product(ev.sub, ev.sub) - 2 * list_dot_product(ev.sub, cb.csub) + cb.cc"
-        val qdist = "q.qq - 2 * list_dot_product(q.qsub, cb.csub) + cb.cc"
-        s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-           |ms AS (SELECT unnest([0, 1, 2, 3]) AS m),
-           |ev AS (SELECT vec_id, m, list_slice(v, m * 16 + 1, m * 16 + 16) AS sub FROM e CROSS JOIN ms),
-           |cb AS (SELECT vec_id AS cid, m, sub AS csub, list_dot_product(sub, sub) AS cc
-           |FROM ev WHERE vec_id >= 480 AND vec_id < 490),
-           |asg AS (SELECT vec_id, m, cid AS code FROM (
-           |SELECT ev.vec_id, ev.m, cb.cid, ${proundSql(dist, 9)} AS pd,
-           |row_number() OVER (PARTITION BY ev.vec_id, ev.m
-           |ORDER BY ${proundSql(dist, 9)}, cb.cid) AS rn
-           |FROM ev JOIN cb ON ev.m = cb.m) WHERE rn = 1),
-           |q AS (SELECT vec_id AS probe, m, sub AS qsub,
-           |list_dot_product(sub, sub) AS qq FROM ev WHERE vec_id < 5),
-           |lut AS (SELECT q.probe, q.m, cb.cid AS code,
-           |CAST(${proundSql(qdist, 9)} AS DECIMAL(18,9)) AS ld
-           |FROM q JOIN cb ON q.m = cb.m),
-           |adc AS (SELECT probe, asg.vec_id AS cand, CAST(sum(ld) AS DOUBLE) AS adist
-           |FROM asg JOIN lut ON asg.m = lut.m AND asg.code = lut.code
-           |GROUP BY probe, asg.vec_id)
-           |SELECT probe, cand, adist FROM (
-           |SELECT probe, cand, adist,
-           |row_number() OVER (PARTITION BY probe ORDER BY adist, cand) AS rn
-           |FROM adc WHERE probe <> cand) WHERE rn <= 3
-           |ORDER BY probe, adist, cand""".stripMargin.replace("\n", " ")
-      },
+      Some(s"""WITH ${IvfSql.e}, ${IvfSql.pq("cid")},
+              |asg AS (SELECT vec_id, m, cid AS code FROM (
+              |SELECT ev.vec_id, ev.m, cb.cid, ${IvfSql.dist} AS pd,
+              |row_number() OVER (PARTITION BY ev.vec_id, ev.m
+              |ORDER BY ${IvfSql.dist}, cb.cid) AS rn
+              |FROM ev JOIN cb ON ev.m = cb.m) WHERE rn = 1),
+              |${IvfSql.lut(5, "cid")},
+              |adc AS (SELECT probe, asg.vec_id AS cand, CAST(sum(ld) AS DOUBLE) AS adist
+              |FROM asg JOIN lut ON asg.m = lut.m AND asg.code = lut.code
+              |GROUP BY probe, asg.vec_id)
+              |SELECT probe, cand, adist FROM (
+              |SELECT probe, cand, adist,
+              |row_number() OVER (PARTITION BY probe ORDER BY adist, cand) AS rn
+              |FROM adc WHERE probe <> cand) WHERE rn <= 3
+              |ORDER BY probe, adist, cand""".stripMargin.replace("\n", " ")),
       tier = "E"),
 
     // Maximum-inner-product search via the augmented-vector reduction
@@ -1182,41 +1306,22 @@ object SimilarityQueries {
           .orderBy(col("probe"), col("sim").desc, col("cand"))
       },
       Some {
-        val dist = "list_dot_product(ev.sub, ev.sub) - 2 * list_dot_product(ev.sub, cb.csub) + cb.cc"
-        val qdist = "q.qq - 2 * list_dot_product(q.qsub, cb.csub) + cb.cc"
-        val csim = proundSql(
-          "list_dot_product(e.v, c.cv) / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv)))", 9)
-        val psim = proundSql(
-          "list_dot_product(p.v, c.cv) / (sqrt(list_dot_product(p.v, p.v)) * sqrt(list_dot_product(c.cv, c.cv)))", 9)
-        val rsim = proundSql(
-          "list_dot_product(pe.v, ce.v) / (sqrt(list_dot_product(pe.v, pe.v)) * sqrt(list_dot_product(ce.v, ce.v)))", 6)
-        s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-           |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id >= 480 AND vec_id < 490),
-           |asg AS (SELECT vec_id, cid FROM (
-           |SELECT e.vec_id, c.cid,
-           |row_number() OVER (PARTITION BY e.vec_id ORDER BY $csim DESC, c.cid) AS arn
-           |FROM e CROSS JOIN c) WHERE arn = 1),
-           |ms AS (SELECT unnest([0, 1, 2, 3]) AS m),
-           |ev AS (SELECT vec_id, m, list_slice(v, m * 16 + 1, m * 16 + 16) AS sub FROM e CROSS JOIN ms),
-           |cb AS (SELECT vec_id AS ccid, m, sub AS csub, list_dot_product(sub, sub) AS cc
-           |FROM ev WHERE vec_id >= 480 AND vec_id < 490),
+        val rsim = IvfSql.cos("pe.v", "ce.v", 6)
+        s"""WITH ${IvfSql.e}, ${IvfSql.oracleRing()}, ${IvfSql.asg(withV = false)},
+           |${IvfSql.pq("ccid")},
            |codes AS (SELECT vec_id, m, ccid AS code FROM (
            |SELECT ev.vec_id, ev.m, cb.ccid,
            |row_number() OVER (PARTITION BY ev.vec_id, ev.m
-           |ORDER BY ${proundSql(dist, 9)}, cb.ccid) AS rn
+           |ORDER BY ${IvfSql.dist}, cb.ccid) AS rn
            |FROM ev JOIN cb ON ev.m = cb.m) WHERE rn = 1),
            |enc AS (SELECT codes.vec_id, codes.m, codes.code, asg.cid
            |FROM codes JOIN asg ON codes.vec_id = asg.vec_id),
            |p AS (SELECT vec_id, v FROM e WHERE vec_id < 10),
            |pc AS (SELECT probe, pcid FROM (
            |SELECT p.vec_id AS probe, c.cid AS pcid,
-           |row_number() OVER (PARTITION BY p.vec_id ORDER BY $psim DESC, c.cid) AS crn
+           |row_number() OVER (PARTITION BY p.vec_id ORDER BY ${IvfSql.cos("p.v", "c.cv", 9)} DESC, c.cid) AS crn
            |FROM p CROSS JOIN c) WHERE crn <= 2),
-           |q AS (SELECT vec_id AS probe, m, sub AS qsub,
-           |list_dot_product(sub, sub) AS qq FROM ev WHERE vec_id < 10),
-           |lut AS (SELECT q.probe, q.m, cb.ccid AS code,
-           |CAST(${proundSql(qdist, 9)} AS DECIMAL(18,9)) AS ld
-           |FROM q JOIN cb ON q.m = cb.m),
+           |${IvfSql.lut(10, "ccid")},
            |adc AS (SELECT pc.probe, enc.vec_id AS cand, CAST(sum(lut.ld) AS DOUBLE) AS adist
            |FROM enc JOIN pc ON enc.cid = pc.pcid
            |JOIN lut ON lut.probe = pc.probe AND lut.m = enc.m AND lut.code = enc.code
@@ -1233,278 +1338,8 @@ object SimilarityQueries {
       },
       tier = "E"),
 
-    // Graph ANN — join-based HNSW-lite (beam search over a bounded-degree
-    // kNN graph), the last classic ANN family
-    // (Malkov & Yashunin's HNSW re-expressed as dataflow). Index
-    // build: every vector keeps its k=8 nearest SAME-CELL neighbors —
-    // cell-local exact kNN, the dedup_semantic/SemDeDup bound that keeps
-    // the self-join quadratic in cell size, never corpus². Search:
-    // probes enter at their 2 NEAREST centroid vectors (the
-    // sim_ivf_nprobe knob — 5× fewer scored entries than the full
-    // 10-centroid ring at equal recall, GraphAnnSpec grades it) and run
-    // 2 unrolled best-first hops (the graph_pagerank unrolled-iteration
-    // pattern):
-    // each hop expands the per-probe beam (B=4 best visited so far)
-    // along graph edges, scores ONLY newly-reached vertices with exact
-    // cosine, and merges them into the visited set; the answer is the
-    // per-probe top-3 of everything visited. Scale shape: the edge
-    // relation shuffles narrow (src, dst) pairs once at build and is
-    // persisted across hops; probes, beams, and expansions are
-    // probe-bounded (≤ |probes|·B·deg rows) and BROADCAST, so each
-    // hop's scoring streams the corpus past them with zero corpus
-    // shuffle; every window partitions by src or probe. Internal ranks
-    // order a pround(9) cosine (assignment-argmax portability argument);
-    // GraphAnnSpec grades beam recall@3 vs brute-force truth.
-    "sim_graph_ann" -> QueryDef(
-      (spark, dir) => {
-        val B = 4
-        val assigned = ivfAssigned(spark, dir) // shared (vec_id, cid, v, nv)
-        val edges = graphEdges0(spark, dir)
-        val corpus = assigned.select(col("vec_id").as("cvid"),
-          col("v").as("cv2"), col("nv").as("cn2"))
-        val probes = assigned.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("probe"), col("v").as("pv"), col("nv").as("pn"))
-        // exact cosine for a bounded (probe, cand) set: candidates and
-        // probes broadcast, the narrow corpus relation streams past them
-        def score(c: DataFrame): DataFrame =
-          corpus.join(broadcast(c), col("cand") === col("cvid"))
-            .join(broadcast(probes), Seq("probe"))
-            .select(col("probe"), col("cand"),
-              pround(gdot("pv", "cv2") / (col("pn") * col("cn2")), 9).as("sim9"))
-        val fw = Window.partitionBy("probe").orderBy(col("sim9").desc, col("cand"))
-        // entry set: the probe's 2 NEAREST centroid vectors (the
-        // sim_ivf_nprobe knob — a 10×10 bounded cross picks them, scored
-        // entries drop from 10 to 2 per probe at equal recall) plus the
-        // probe's OWN vertex — probes are corpus members here, so the
-        // first hop immediately reaches the probe's 8 same-cell nearest
-        // neighbors (the HNSW layer-0 neighborhood)
-        val cents = assigned
-          .filter(ringPred(OracleRing))
-          .select(col("vec_id").as("cand"), col("v").as("cv0"), col("nv").as("cn0"))
-        val cw = Window.partitionBy("probe").orderBy(col("ps").desc, col("cand"))
-        val entry = probes.crossJoin(broadcast(cents))
-          .withColumn("ps", pround(gdot("pv", "cv0") / (col("pn") * col("cn0")), 9))
-          .withColumn("crn", row_number().over(cw))
-          .filter(col("crn") <= 2)
-          .select("probe", "cand")
-          .unionByName(probes.select(col("probe"), col("probe").as("cand")))
-        var visited = scopedCheckpoint(score(entry))
-        (1 to 2).foreach { _ =>
-          val beam = visited.withColumn("frn", row_number().over(fw))
-            .filter(col("frn") <= B).select("probe", "cand")
-          val reached = beam.join(edges, col("cand") === col("src"))
-            .select(col("probe"), col("dst").as("cand")).distinct()
-            .join(visited.select("probe", "cand"), Seq("probe", "cand"), "left_anti")
-          visited = scopedCheckpoint(visited.unionByName(score(reached)))
-        }
-        visited.filter(col("cand") =!= col("probe"))
-          .withColumn("rn", row_number().over(fw))
-          .filter(col("rn") <= 3)
-          .select(col("probe"), col("cand"), pround(col("sim9"), 6).as("sim"))
-          .orderBy(col("probe"), col("sim").desc, col("cand"))
-      },
-      Some {
-        val csim = proundSql(
-          "list_dot_product(e.v, c.cv) / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv)))", 9)
-        val esim = proundSql(
-          "list_dot_product(a.v, b.v) / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v)))", 9)
-        val sim9 = proundSql(
-          "list_dot_product(p.pv, e.v) / (sqrt(list_dot_product(p.pv, p.pv)) * sqrt(list_dot_product(e.v, e.v)))", 9)
-        s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-           |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id >= 480 AND vec_id < 490),
-           |asg AS (SELECT vec_id, cid, v FROM (
-           |SELECT e.vec_id, c.cid, e.v,
-           |row_number() OVER (PARTITION BY e.vec_id ORDER BY $csim DESC, c.cid) AS arn
-           |FROM e CROSS JOIN c) WHERE arn = 1),
-           |ed AS (SELECT src, dst FROM (
-           |SELECT a.vec_id AS src, b.vec_id AS dst,
-           |row_number() OVER (PARTITION BY a.vec_id ORDER BY $esim DESC, b.vec_id) AS ern
-           |FROM asg a JOIN asg b ON b.cid = a.cid AND b.vec_id <> a.vec_id) WHERE ern <= 8),
-           |p AS (SELECT vec_id AS probe, v AS pv FROM e WHERE vec_id < 10),
-           |pc AS (SELECT probe, cand FROM (
-           |SELECT p.probe, c.cid AS cand,
-           |row_number() OVER (PARTITION BY p.probe ORDER BY ${proundSql(
-        "list_dot_product(p.pv, c.cv) / (sqrt(list_dot_product(p.pv, p.pv)) * sqrt(list_dot_product(c.cv, c.cv)))", 9)} DESC, c.cid) AS crn
-           |FROM p CROSS JOIN c) WHERE crn <= 2),
-           |v0 AS (SELECT probe, cand FROM pc
-           |UNION SELECT probe, probe AS cand FROM p),
-           |s0 AS (SELECT v0.probe, v0.cand, $sim9 AS sim9
-           |FROM v0 JOIN e ON e.vec_id = v0.cand JOIN p ON p.probe = v0.probe),
-           |f0 AS (SELECT probe, cand FROM (SELECT probe, cand,
-           |row_number() OVER (PARTITION BY probe ORDER BY sim9 DESC, cand) AS rn
-           |FROM s0) WHERE rn <= 4),
-           |v1 AS (SELECT probe, cand FROM v0 UNION
-           |SELECT f0.probe, ed.dst AS cand FROM f0 JOIN ed ON ed.src = f0.cand),
-           |s1 AS (SELECT v1.probe, v1.cand, $sim9 AS sim9
-           |FROM v1 JOIN e ON e.vec_id = v1.cand JOIN p ON p.probe = v1.probe),
-           |f1 AS (SELECT probe, cand FROM (SELECT probe, cand,
-           |row_number() OVER (PARTITION BY probe ORDER BY sim9 DESC, cand) AS rn
-           |FROM s1) WHERE rn <= 4),
-           |v2 AS (SELECT probe, cand FROM v1 UNION
-           |SELECT f1.probe, ed.dst AS cand FROM f1 JOIN ed ON ed.src = f1.cand),
-           |s2 AS (SELECT v2.probe, v2.cand, $sim9 AS sim9
-           |FROM v2 JOIN e ON e.vec_id = v2.cand JOIN p ON p.probe = v2.probe)
-           |SELECT probe, cand, sim FROM (
-           |SELECT probe, cand, ${proundSql("sim9", 6)} AS sim,
-           |row_number() OVER (PARTITION BY probe ORDER BY sim9 DESC, cand) AS rn
-           |FROM s2 WHERE cand <> probe) WHERE rn <= 3
-           |ORDER BY probe, sim DESC, cand""".stripMargin.replace("\n", " ")
-      },
-      tier = "E"),
-
-    // HIERARCHICAL graph ANN — sim_graph_ann grown its second layer
-    // (Malkov & Yashunin's multi-layer descent
-    // re-expressed as dataflow). Layer 1 is the deterministic 1/16
-    // vertex sample (vec_id % 16 = 0 — the portable analog of HNSW's
-    // geometric level draw) with its own cell-local kNN graph (deg 4);
-    // layer 0 is the full deg-8 graph. Search descends: enter at ≤8
-    // per-cell layer-1 DELEGATES of the probe's 2 nearest cells (the
-    // delegate cap keeps the entry set bounded BY CONSTRUCTION — cell
-    // growth cannot widen it), one beam hop on the coarse layer-1
-    // graph (B=2), then drop the 2 best layer-1 vertices into layer 0
-    // (plus the probe's own vertex) for two deg-8 hops (B=4); answer =
-    // per-probe top-3 of everything visited. Scale shape: both edge
-    // relations are the cell-local build (layer 1 is 256× cheaper);
-    // probes/beams/expansions are probe-bounded and broadcast; corpus
-    // streams past them with zero corpus shuffle; every window
-    // partitions by src, cid, or probe. GraphAnnSpec grades the
-    // descent's recall and its scored-candidate budget vs the flat
-    // single-layer beam.
-    "sim_graph_hnsw" -> QueryDef(
-      (spark, dir) => {
-        val assigned = ivfAssigned(spark, dir)
-        val edges0 = graphEdges0(spark, dir)
-        val edges1 = cellKnn(assigned, col("vec_id") % 16 === 0, 4)
-        val corpus = assigned.select(col("vec_id").as("cvid"),
-          col("v").as("cv2"), col("nv").as("cn2"))
-        val probes = assigned.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("probe"), col("v").as("pv"), col("nv").as("pn"))
-        def score(c: DataFrame): DataFrame =
-          corpus.join(broadcast(c), col("cand") === col("cvid"))
-            .join(broadcast(probes), Seq("probe"))
-            .select(col("probe"), col("cand"),
-              pround(gdot("pv", "cv2") / (col("pn") * col("cn2")), 9).as("sim9"))
-        val fw = Window.partitionBy("probe").orderBy(col("sim9").desc, col("cand"))
-        // probe's 2 nearest cells (the sim_graph_ann entry knob)
-        val cents = assigned
-          .filter(ringPred(OracleRing))
-          .select(col("vec_id").as("pcid"), col("v").as("cv0"), col("nv").as("cn0"))
-        val cw = Window.partitionBy("probe").orderBy(col("ps").desc, col("pcid"))
-        val pc = probes.crossJoin(broadcast(cents))
-          .withColumn("ps", pround(gdot("pv", "cv0") / (col("pn") * col("cn0")), 9))
-          .withColumn("crn", row_number().over(cw))
-          .filter(col("crn") <= 2)
-          .select("probe", "pcid")
-        // ≤8 layer-1 delegates per cell, by vec_id — bounded entry set
-        val dw = Window.partitionBy("cid").orderBy("vec_id")
-        val delegates = assigned.filter(col("vec_id") % 16 === 0)
-          .select(col("cid"), col("vec_id"))
-          .withColumn("drn", row_number().over(dw))
-          .filter(col("drn") <= 8)
-          .select(col("cid"), col("vec_id").as("cand"))
-        // every beam/visited/probe-cell relation below is probe-bounded
-        // BY CONSTRUCTION (≤ |probes|·B·deg rows) and broadcast
-        // explicitly: the corpus-scaled edge relations stream past them,
-        // never sort — the declared plan, not an AQE rescue
-        val entry = delegates.join(broadcast(pc), col("pcid") === col("cid"))
-          .select("probe", "cand").distinct()
-        var visited = scopedCheckpoint(score(entry))
-        // one coarse hop on the layer-1 graph (B=2)
-        val beam1 = visited.withColumn("frn", row_number().over(fw))
-          .filter(col("frn") <= 2).select("probe", "cand")
-        val reach1 = edges1.join(broadcast(beam1), col("cand") === col("src"))
-          .select(col("probe"), col("dst").as("cand")).distinct()
-          .join(broadcast(visited.select("probe", "cand")),
-            Seq("probe", "cand"), "left_anti")
-        visited = scopedCheckpoint(visited.unionByName(score(reach1)))
-        // descend: the 2 best layer-1 vertices + the probe's own vertex
-        // enter layer 0, then two deg-8 hops at B=4
-        val drop = visited.withColumn("frn", row_number().over(fw))
-          .filter(col("frn") <= 2).select("probe", "cand")
-        val reach2 = edges0.join(broadcast(drop), col("cand") === col("src"))
-          .select(col("probe"), col("dst").as("cand"))
-          .unionByName(probes.select(col("probe"), col("probe").as("cand")))
-          .distinct()
-          .join(broadcast(visited.select("probe", "cand")),
-            Seq("probe", "cand"), "left_anti")
-        visited = scopedCheckpoint(visited.unionByName(score(reach2)))
-        val beam0 = visited.withColumn("frn", row_number().over(fw))
-          .filter(col("frn") <= 4).select("probe", "cand")
-        val reach3 = edges0.join(broadcast(beam0), col("cand") === col("src"))
-          .select(col("probe"), col("dst").as("cand")).distinct()
-          .join(broadcast(visited.select("probe", "cand")),
-            Seq("probe", "cand"), "left_anti")
-        visited = scopedCheckpoint(visited.unionByName(score(reach3)))
-        visited.filter(col("cand") =!= col("probe"))
-          .withColumn("rn", row_number().over(fw))
-          .filter(col("rn") <= 3)
-          .select(col("probe"), col("cand"), pround(col("sim9"), 6).as("sim"))
-          .orderBy(col("probe"), col("sim").desc, col("cand"))
-      },
-      Some {
-        val csim = proundSql(
-          "list_dot_product(e.v, c.cv) / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv)))", 9)
-        val esim = proundSql(
-          "list_dot_product(a.v, b.v) / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v)))", 9)
-        val psim = proundSql(
-          "list_dot_product(p.pv, c.cv) / (sqrt(list_dot_product(p.pv, p.pv)) * sqrt(list_dot_product(c.cv, c.cv)))", 9)
-        val sim9 = proundSql(
-          "list_dot_product(p.pv, e.v) / (sqrt(list_dot_product(p.pv, p.pv)) * sqrt(list_dot_product(e.v, e.v)))", 9)
-        s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-           |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id >= 480 AND vec_id < 490),
-           |asg AS (SELECT vec_id, cid, v FROM (
-           |SELECT e.vec_id, c.cid, e.v,
-           |row_number() OVER (PARTITION BY e.vec_id ORDER BY $csim DESC, c.cid) AS arn
-           |FROM e CROSS JOIN c) WHERE arn = 1),
-           |ed0 AS (SELECT src, dst FROM (
-           |SELECT a.vec_id AS src, b.vec_id AS dst,
-           |row_number() OVER (PARTITION BY a.vec_id ORDER BY $esim DESC, b.vec_id) AS ern
-           |FROM asg a JOIN asg b ON b.cid = a.cid AND b.vec_id <> a.vec_id) WHERE ern <= 8),
-           |l1 AS (SELECT vec_id, cid, v FROM asg WHERE vec_id % 16 = 0),
-           |ed1 AS (SELECT src, dst FROM (
-           |SELECT a.vec_id AS src, b.vec_id AS dst,
-           |row_number() OVER (PARTITION BY a.vec_id ORDER BY $esim DESC, b.vec_id) AS ern
-           |FROM l1 a JOIN l1 b ON b.cid = a.cid AND b.vec_id <> a.vec_id) WHERE ern <= 4),
-           |dl AS (SELECT cid, vec_id AS cand FROM (
-           |SELECT cid, vec_id, row_number() OVER (PARTITION BY cid ORDER BY vec_id) AS drn
-           |FROM l1) WHERE drn <= 8),
-           |p AS (SELECT vec_id AS probe, v AS pv FROM e WHERE vec_id < 10),
-           |pc AS (SELECT probe, pcid FROM (
-           |SELECT p.probe, c.cid AS pcid,
-           |row_number() OVER (PARTITION BY p.probe ORDER BY $psim DESC, c.cid) AS crn
-           |FROM p CROSS JOIN c) WHERE crn <= 2),
-           |v0 AS (SELECT DISTINCT pc.probe, dl.cand FROM pc JOIN dl ON dl.cid = pc.pcid),
-           |s0 AS (SELECT v0.probe, v0.cand, $sim9 AS sim9
-           |FROM v0 JOIN e ON e.vec_id = v0.cand JOIN p ON p.probe = v0.probe),
-           |f0 AS (SELECT probe, cand FROM (SELECT probe, cand,
-           |row_number() OVER (PARTITION BY probe ORDER BY sim9 DESC, cand) AS rn
-           |FROM s0) WHERE rn <= 2),
-           |v1 AS (SELECT probe, cand FROM v0 UNION
-           |SELECT f0.probe, ed1.dst AS cand FROM f0 JOIN ed1 ON ed1.src = f0.cand),
-           |s1 AS (SELECT v1.probe, v1.cand, $sim9 AS sim9
-           |FROM v1 JOIN e ON e.vec_id = v1.cand JOIN p ON p.probe = v1.probe),
-           |f1 AS (SELECT probe, cand FROM (SELECT probe, cand,
-           |row_number() OVER (PARTITION BY probe ORDER BY sim9 DESC, cand) AS rn
-           |FROM s1) WHERE rn <= 2),
-           |v2 AS (SELECT probe, cand FROM v1
-           |UNION SELECT f1.probe, ed0.dst AS cand FROM f1 JOIN ed0 ON ed0.src = f1.cand
-           |UNION SELECT probe, probe AS cand FROM p),
-           |s2 AS (SELECT v2.probe, v2.cand, $sim9 AS sim9
-           |FROM v2 JOIN e ON e.vec_id = v2.cand JOIN p ON p.probe = v2.probe),
-           |f2 AS (SELECT probe, cand FROM (SELECT probe, cand,
-           |row_number() OVER (PARTITION BY probe ORDER BY sim9 DESC, cand) AS rn
-           |FROM s2) WHERE rn <= 4),
-           |v3 AS (SELECT probe, cand FROM v2 UNION
-           |SELECT f2.probe, ed0.dst AS cand FROM f2 JOIN ed0 ON ed0.src = f2.cand),
-           |s3 AS (SELECT v3.probe, v3.cand, $sim9 AS sim9
-           |FROM v3 JOIN e ON e.vec_id = v3.cand JOIN p ON p.probe = v3.probe)
-           |SELECT probe, cand, sim FROM (
-           |SELECT probe, cand, ${proundSql("sim9", 6)} AS sim,
-           |row_number() OVER (PARTITION BY probe ORDER BY sim9 DESC, cand) AS rn
-           |FROM s3 WHERE cand <> probe) WHERE rn <= 3
-           |ORDER BY probe, sim DESC, cand""".stripMargin.replace("\n", " ")
-      },
-      tier = "E"),
+    "sim_graph_ann" -> simGraphAnn(atOracle),
+    "sim_graph_hnsw" -> simGraphHnsw(atOracle),
 
     // kNN label-vote classification — the data-curation use of the ANN
     // lane (label propagation / weak supervision): each unlabeled probe
@@ -1543,8 +1378,7 @@ object SimilarityQueries {
           .orderBy(col("probe"))
       },
       Some {
-        val sim = proundSql(
-          "list_dot_product(p.v, c.v) / (sqrt(list_dot_product(p.v, p.v)) * sqrt(list_dot_product(c.v, c.v)))", 6)
+        val sim = IvfSql.cos("p.v", "c.v", 6)
         s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
            |CAST(label AS BIGINT) AS label FROM embeddings),
            |p AS (SELECT vec_id AS probe, v, label AS true_label FROM e WHERE vec_id < 20),
@@ -1624,352 +1458,8 @@ object SimilarityQueries {
       },
       tier = "E"),
 
-    // Diversity sampling by cell representative — the selection HALF of
-    // SemDeDup-style curation: instead of dropping near-duplicates, KEEP
-    // exactly one representative per embedding-space cell (the vector
-    // closest to its centroid, min-id tie-break) — a coreset that covers
-    // the space with |cells| points. Scale shape: the cell assignment is
-    // the shared broadcast-centroid aggregate ([[ivfAssigned]]); the
-    // representative pick is a per-cell rank window over ≤|cell| rows;
-    // the declared output is |cells| rows. Grows to any corpus by
-    // growing k (cells stay bounded in size) — the same bound SemDeDup
-    // relies on.
-    "sample_diverse_cells" -> QueryDef(
-      (spark, dir) => {
-        import org.apache.spark.sql.expressions.Window
-        val cents = ringCents(spark, dir, OracleRing)
-        val scored = ivfAssigned(spark, dir)
-          .join(broadcast(cents), Seq("cid"))
-          .withColumn("csim", pround(gdot("v", "cv") / (col("nv") * col("cn")), 9))
-        val w = Window.partitionBy("cid").orderBy(col("csim").desc, col("vec_id"))
-        scored.withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1)
-          .select(col("cid"), col("vec_id").as("rep_vec"), col("csim").as("rep_sim"))
-          .join(broadcast(ivfAssigned(spark, dir).groupBy("cid").agg(cnt("members"))),
-            Seq("cid"))
-          .select(col("cid"), col("members"), col("rep_vec"), col("rep_sim"))
-          .orderBy(col("cid"))
-      },
-      Some {
-        val csim = proundSql(
-          "list_dot_product(e.v, c.cv) / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv)))", 9)
-        val rsim = proundSql(
-          "list_dot_product(a.v, c2.cv) / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(c2.cv, c2.cv)))", 9)
-        s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-           |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id >= 480 AND vec_id < 490),
-           |asg AS (SELECT vec_id, cid, v FROM (
-           |SELECT e.vec_id, c.cid, e.v,
-           |row_number() OVER (PARTITION BY e.vec_id ORDER BY $csim DESC, c.cid) AS arn
-           |FROM e CROSS JOIN c) WHERE arn = 1),
-           |scored AS (SELECT a.cid, a.vec_id, $rsim AS csim
-           |FROM asg a JOIN c c2 ON a.cid = c2.cid),
-           |rep AS (SELECT cid, vec_id AS rep_vec, csim AS rep_sim FROM (
-           |SELECT cid, vec_id, csim,
-           |row_number() OVER (PARTITION BY cid ORDER BY csim DESC, vec_id) AS rn
-           |FROM scored) WHERE rn = 1),
-           |m AS (SELECT cid, CAST(count(*) AS BIGINT) AS members FROM asg GROUP BY cid)
-           |SELECT rep.cid, members, rep_vec, rep_sim
-           |FROM rep JOIN m ON rep.cid = m.cid ORDER BY rep.cid""".stripMargin.replace("\n", " ")
-      },
-      tier = "E"),
-
-    // PRODUCTION-ring diversity sampling, oracle-checked
-    // (`dedup_semantic_spread` proved the full-pipeline spread
-    // recipe; this key applies it to the SELECTION half). Same
-    // semantics as `sample_diverse_cells` but on the √N portable-md5
-    // ring ([[portableRing]]), with DuckDB deriving k from its own
-    // count — so the production coreset path (fold assignment → per-
-    // cell representative) is hash-matched end-to-end instead of
-    // resting on GraphAnnSpec's ring pins. The representative pick is
-    // a single partial+final max_by aggregate (csim DESC, vec_id ASC
-    // via the (csim, −vec_id) struct ordering — identical to the
-    // declared key's rank window) fused with the census, so the whole
-    // key is ONE aggregate over the zero-exchange fold assignment:
-    // cells stay ~√N members and the output is ~√N rows at any N.
-    "sample_diverse_cells_spread" -> QueryDef(
-      (spark, dir) => {
-        val ring = portableRing(spark, dir)
-        val assigned = sharedOr(spark, dir, s"ivf@$ring") {
-          ivfAssignedAt(spark, dir, ring)
-        }
-        assigned.join(broadcast(ringCents(spark, dir, ring)), Seq("cid"))
-          .withColumn("csim", pround(gdot("v", "cv") / (col("nv") * col("cn")), 9))
-          .groupBy("cid")
-          .agg(cnt("members"),
-            max_by(struct(col("vec_id"), col("csim")),
-              struct(col("csim"), (-col("vec_id")).as("nvid"))).as("m"))
-          .select(col("cid"), col("members"), col("m.vec_id").as("rep_vec"),
-            col("m.csim").as("rep_sim"))
-          .orderBy(col("cid"))
-      },
-      Some {
-        val csim = proundSql(
-          "list_dot_product(e.v, c.cv) / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv)))", 9)
-        val rsim = proundSql(
-          "list_dot_product(a.v, c2.cv) / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(c2.cv, c2.cv)))", 9)
-        s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-           |$spreadRingSql,
-           |asg AS (SELECT vec_id, cid, v FROM (
-           |SELECT e.vec_id, c.cid, e.v,
-           |row_number() OVER (PARTITION BY e.vec_id ORDER BY $csim DESC, c.cid) AS arn
-           |FROM e CROSS JOIN c) WHERE arn = 1),
-           |scored AS (SELECT a.cid, a.vec_id, $rsim AS csim
-           |FROM asg a JOIN c c2 ON a.cid = c2.cid),
-           |rep AS (SELECT cid, vec_id AS rep_vec, csim AS rep_sim FROM (
-           |SELECT cid, vec_id, csim,
-           |row_number() OVER (PARTITION BY cid ORDER BY csim DESC, vec_id) AS rn
-           |FROM scored) WHERE rn = 1),
-           |m AS (SELECT cid, CAST(count(*) AS BIGINT) AS members FROM asg GROUP BY cid)
-           |SELECT rep.cid, members, rep_vec, rep_sim
-           |FROM rep JOIN m ON rep.cid = m.cid ORDER BY rep.cid""".stripMargin.replace("\n", " ")
-      },
-      tier = "E"),
-
-    // PRODUCTION-ring graph ANN, oracle-checked: the
-    // `sim_graph_ann` beam search — cell-local deg-8 kNN build, entry
-    // at the probe's 2 nearest ring vertices + its own vertex, two
-    // B=4 best-first hops, per-probe top-3 — run on the √N portable
-    // ring instead of the 10-centroid oracle constant, with DuckDB
-    // sizing the ring from its own count. Closes the family's last
-    // declared-vs-production gap THROUGH the hash gate: the fold
-    // assignment, the ~√N-member cell kNN self-join, and the beam all
-    // execute the exact plan the ScaleKnob sweeps measure. Scale
-    // shape: identical to sim_graph_ann (probe-bounded broadcast
-    // beams, zero corpus shuffle per hop) except cell population stays
-    // ~√N, so the edge build does ~N^1.5 pair work instead of N²/10.
-    "sim_graph_ann_spread" -> QueryDef(
-      (spark, dir) => {
-        val B = 4
-        val ring = portableRing(spark, dir)
-        val assigned = sharedOr(spark, dir, s"ivf@$ring") {
-          ivfAssignedAt(spark, dir, ring)
-        }
-        val edges = sharedOr(spark, dir, s"ged0@$ring") {
-          cellKnn(assigned, lit(true), 8)
-        }
-        val corpus = assigned.select(col("vec_id").as("cvid"),
-          col("v").as("cv2"), col("nv").as("cn2"))
-        val probes = assigned.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("probe"), col("v").as("pv"), col("nv").as("pn"))
-        def score(c: DataFrame): DataFrame =
-          corpus.join(broadcast(c), col("cand") === col("cvid"))
-            .join(broadcast(probes), Seq("probe"))
-            .select(col("probe"), col("cand"),
-              pround(gdot("pv", "cv2") / (col("pn") * col("cn2")), 9).as("sim9"))
-        val fw = Window.partitionBy("probe").orderBy(col("sim9").desc, col("cand"))
-        val cents = assigned
-          .filter(ringPred(ring))
-          .select(col("vec_id").as("cand"), col("v").as("cv0"), col("nv").as("cn0"))
-        val cw = Window.partitionBy("probe").orderBy(col("ps").desc, col("cand"))
-        val entry = probes.crossJoin(broadcast(cents))
-          .withColumn("ps", pround(gdot("pv", "cv0") / (col("pn") * col("cn0")), 9))
-          .withColumn("crn", row_number().over(cw))
-          .filter(col("crn") <= 2)
-          .select("probe", "cand")
-          .unionByName(probes.select(col("probe"), col("probe").as("cand")))
-        var visited = scopedCheckpoint(score(entry))
-        (1 to 2).foreach { _ =>
-          val beam = visited.withColumn("frn", row_number().over(fw))
-            .filter(col("frn") <= B).select("probe", "cand")
-          val reached = beam.join(edges, col("cand") === col("src"))
-            .select(col("probe"), col("dst").as("cand")).distinct()
-            .join(visited.select("probe", "cand"), Seq("probe", "cand"), "left_anti")
-          visited = scopedCheckpoint(visited.unionByName(score(reached)))
-        }
-        visited.filter(col("cand") =!= col("probe"))
-          .withColumn("rn", row_number().over(fw))
-          .filter(col("rn") <= 3)
-          .select(col("probe"), col("cand"), pround(col("sim9"), 6).as("sim"))
-          .orderBy(col("probe"), col("sim").desc, col("cand"))
-      },
-      Some {
-        val csim = proundSql(
-          "list_dot_product(e.v, c.cv) / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv)))", 9)
-        val esim = proundSql(
-          "list_dot_product(a.v, b.v) / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v)))", 9)
-        val sim9 = proundSql(
-          "list_dot_product(p.pv, e.v) / (sqrt(list_dot_product(p.pv, p.pv)) * sqrt(list_dot_product(e.v, e.v)))", 9)
-        s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-           |$spreadRingSql,
-           |asg AS (SELECT vec_id, cid, v FROM (
-           |SELECT e.vec_id, c.cid, e.v,
-           |row_number() OVER (PARTITION BY e.vec_id ORDER BY $csim DESC, c.cid) AS arn
-           |FROM e CROSS JOIN c) WHERE arn = 1),
-           |ed AS (SELECT src, dst FROM (
-           |SELECT a.vec_id AS src, b.vec_id AS dst,
-           |row_number() OVER (PARTITION BY a.vec_id ORDER BY $esim DESC, b.vec_id) AS ern
-           |FROM asg a JOIN asg b ON b.cid = a.cid AND b.vec_id <> a.vec_id) WHERE ern <= 8),
-           |p AS (SELECT vec_id AS probe, v AS pv FROM e WHERE vec_id < 10),
-           |pc AS (SELECT probe, cand FROM (
-           |SELECT p.probe, c.cid AS cand,
-           |row_number() OVER (PARTITION BY p.probe ORDER BY ${proundSql(
-        "list_dot_product(p.pv, c.cv) / (sqrt(list_dot_product(p.pv, p.pv)) * sqrt(list_dot_product(c.cv, c.cv)))", 9)} DESC, c.cid) AS crn
-           |FROM p CROSS JOIN c) WHERE crn <= 2),
-           |v0 AS (SELECT probe, cand FROM pc
-           |UNION SELECT probe, probe AS cand FROM p),
-           |s0 AS (SELECT v0.probe, v0.cand, $sim9 AS sim9
-           |FROM v0 JOIN e ON e.vec_id = v0.cand JOIN p ON p.probe = v0.probe),
-           |f0 AS (SELECT probe, cand FROM (SELECT probe, cand,
-           |row_number() OVER (PARTITION BY probe ORDER BY sim9 DESC, cand) AS rn
-           |FROM s0) WHERE rn <= 4),
-           |v1 AS (SELECT probe, cand FROM v0 UNION
-           |SELECT f0.probe, ed.dst AS cand FROM f0 JOIN ed ON ed.src = f0.cand),
-           |s1 AS (SELECT v1.probe, v1.cand, $sim9 AS sim9
-           |FROM v1 JOIN e ON e.vec_id = v1.cand JOIN p ON p.probe = v1.probe),
-           |f1 AS (SELECT probe, cand FROM (SELECT probe, cand,
-           |row_number() OVER (PARTITION BY probe ORDER BY sim9 DESC, cand) AS rn
-           |FROM s1) WHERE rn <= 4),
-           |v2 AS (SELECT probe, cand FROM v1 UNION
-           |SELECT f1.probe, ed.dst AS cand FROM f1 JOIN ed ON ed.src = f1.cand),
-           |s2 AS (SELECT v2.probe, v2.cand, $sim9 AS sim9
-           |FROM v2 JOIN e ON e.vec_id = v2.cand JOIN p ON p.probe = v2.probe)
-           |SELECT probe, cand, sim FROM (
-           |SELECT probe, cand, ${proundSql("sim9", 6)} AS sim,
-           |row_number() OVER (PARTITION BY probe ORDER BY sim9 DESC, cand) AS rn
-           |FROM s2 WHERE cand <> probe) WHERE rn <= 3
-           |ORDER BY probe, sim DESC, cand""".stripMargin.replace("\n", " ")
-      },
-      tier = "E"),
-
-    // PRODUCTION-ring hierarchical graph ANN, oracle-checked:
-    // `sim_graph_hnsw`'s two-layer descent — deterministic
-    // 1/16 layer-1 sample with its own deg-4 cell-local graph, ≤8
-    // per-cell delegates as the entry set, one coarse B=2 hop, drop to
-    // layer 0 for two deg-8 hops at B=4 — on the √N portable ring,
-    // DuckDB sizing the ring from its own count. With this key all
-    // three graph-ANN family members hash-match their production ring;
-    // the 10-centroid originals stay as the declared correctness
-    // anchors. Scale shape: identical to sim_graph_hnsw, with both
-    // edge builds on ~√N cells (layer 1 is 256× cheaper than layer 0).
-    "sim_graph_hnsw_spread" -> QueryDef(
-      (spark, dir) => {
-        val ring = portableRing(spark, dir)
-        val assigned = sharedOr(spark, dir, s"ivf@$ring") {
-          ivfAssignedAt(spark, dir, ring)
-        }
-        val edges0 = sharedOr(spark, dir, s"ged0@$ring") {
-          cellKnn(assigned, lit(true), 8)
-        }
-        val edges1 = cellKnn(assigned, col("vec_id") % 16 === 0, 4)
-        val corpus = assigned.select(col("vec_id").as("cvid"),
-          col("v").as("cv2"), col("nv").as("cn2"))
-        val probes = assigned.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("probe"), col("v").as("pv"), col("nv").as("pn"))
-        def score(c: DataFrame): DataFrame =
-          corpus.join(broadcast(c), col("cand") === col("cvid"))
-            .join(broadcast(probes), Seq("probe"))
-            .select(col("probe"), col("cand"),
-              pround(gdot("pv", "cv2") / (col("pn") * col("cn2")), 9).as("sim9"))
-        val fw = Window.partitionBy("probe").orderBy(col("sim9").desc, col("cand"))
-        val cents = assigned
-          .filter(ringPred(ring))
-          .select(col("vec_id").as("pcid"), col("v").as("cv0"), col("nv").as("cn0"))
-        val cw = Window.partitionBy("probe").orderBy(col("ps").desc, col("pcid"))
-        val pc = probes.crossJoin(broadcast(cents))
-          .withColumn("ps", pround(gdot("pv", "cv0") / (col("pn") * col("cn0")), 9))
-          .withColumn("crn", row_number().over(cw))
-          .filter(col("crn") <= 2)
-          .select("probe", "pcid")
-        val dw = Window.partitionBy("cid").orderBy("vec_id")
-        val delegates = assigned.filter(col("vec_id") % 16 === 0)
-          .select(col("cid"), col("vec_id"))
-          .withColumn("drn", row_number().over(dw))
-          .filter(col("drn") <= 8)
-          .select(col("cid"), col("vec_id").as("cand"))
-        val entry = delegates.join(broadcast(pc), col("pcid") === col("cid"))
-          .select("probe", "cand").distinct()
-        var visited = scopedCheckpoint(score(entry))
-        val beam1 = visited.withColumn("frn", row_number().over(fw))
-          .filter(col("frn") <= 2).select("probe", "cand")
-        val reach1 = edges1.join(broadcast(beam1), col("cand") === col("src"))
-          .select(col("probe"), col("dst").as("cand")).distinct()
-          .join(broadcast(visited.select("probe", "cand")),
-            Seq("probe", "cand"), "left_anti")
-        visited = scopedCheckpoint(visited.unionByName(score(reach1)))
-        val drop = visited.withColumn("frn", row_number().over(fw))
-          .filter(col("frn") <= 2).select("probe", "cand")
-        val reach2 = edges0.join(broadcast(drop), col("cand") === col("src"))
-          .select(col("probe"), col("dst").as("cand"))
-          .unionByName(probes.select(col("probe"), col("probe").as("cand")))
-          .distinct()
-          .join(broadcast(visited.select("probe", "cand")),
-            Seq("probe", "cand"), "left_anti")
-        visited = scopedCheckpoint(visited.unionByName(score(reach2)))
-        val beam0 = visited.withColumn("frn", row_number().over(fw))
-          .filter(col("frn") <= 4).select("probe", "cand")
-        val reach3 = edges0.join(broadcast(beam0), col("cand") === col("src"))
-          .select(col("probe"), col("dst").as("cand")).distinct()
-          .join(broadcast(visited.select("probe", "cand")),
-            Seq("probe", "cand"), "left_anti")
-        visited = scopedCheckpoint(visited.unionByName(score(reach3)))
-        visited.filter(col("cand") =!= col("probe"))
-          .withColumn("rn", row_number().over(fw))
-          .filter(col("rn") <= 3)
-          .select(col("probe"), col("cand"), pround(col("sim9"), 6).as("sim"))
-          .orderBy(col("probe"), col("sim").desc, col("cand"))
-      },
-      Some {
-        val csim = proundSql(
-          "list_dot_product(e.v, c.cv) / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv)))", 9)
-        val esim = proundSql(
-          "list_dot_product(a.v, b.v) / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v)))", 9)
-        val psim = proundSql(
-          "list_dot_product(p.pv, c.cv) / (sqrt(list_dot_product(p.pv, p.pv)) * sqrt(list_dot_product(c.cv, c.cv)))", 9)
-        val sim9 = proundSql(
-          "list_dot_product(p.pv, e.v) / (sqrt(list_dot_product(p.pv, p.pv)) * sqrt(list_dot_product(e.v, e.v)))", 9)
-        s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-           |$spreadRingSql,
-           |asg AS (SELECT vec_id, cid, v FROM (
-           |SELECT e.vec_id, c.cid, e.v,
-           |row_number() OVER (PARTITION BY e.vec_id ORDER BY $csim DESC, c.cid) AS arn
-           |FROM e CROSS JOIN c) WHERE arn = 1),
-           |ed0 AS (SELECT src, dst FROM (
-           |SELECT a.vec_id AS src, b.vec_id AS dst,
-           |row_number() OVER (PARTITION BY a.vec_id ORDER BY $esim DESC, b.vec_id) AS ern
-           |FROM asg a JOIN asg b ON b.cid = a.cid AND b.vec_id <> a.vec_id) WHERE ern <= 8),
-           |l1 AS (SELECT vec_id, cid, v FROM asg WHERE vec_id % 16 = 0),
-           |ed1 AS (SELECT src, dst FROM (
-           |SELECT a.vec_id AS src, b.vec_id AS dst,
-           |row_number() OVER (PARTITION BY a.vec_id ORDER BY $esim DESC, b.vec_id) AS ern
-           |FROM l1 a JOIN l1 b ON b.cid = a.cid AND b.vec_id <> a.vec_id) WHERE ern <= 4),
-           |dl AS (SELECT cid, vec_id AS cand FROM (
-           |SELECT cid, vec_id, row_number() OVER (PARTITION BY cid ORDER BY vec_id) AS drn
-           |FROM l1) WHERE drn <= 8),
-           |p AS (SELECT vec_id AS probe, v AS pv FROM e WHERE vec_id < 10),
-           |pc AS (SELECT probe, pcid FROM (
-           |SELECT p.probe, c.cid AS pcid,
-           |row_number() OVER (PARTITION BY p.probe ORDER BY $psim DESC, c.cid) AS crn
-           |FROM p CROSS JOIN c) WHERE crn <= 2),
-           |v0 AS (SELECT DISTINCT pc.probe, dl.cand FROM pc JOIN dl ON dl.cid = pc.pcid),
-           |s0 AS (SELECT v0.probe, v0.cand, $sim9 AS sim9
-           |FROM v0 JOIN e ON e.vec_id = v0.cand JOIN p ON p.probe = v0.probe),
-           |f0 AS (SELECT probe, cand FROM (SELECT probe, cand,
-           |row_number() OVER (PARTITION BY probe ORDER BY sim9 DESC, cand) AS rn
-           |FROM s0) WHERE rn <= 2),
-           |v1 AS (SELECT probe, cand FROM v0 UNION
-           |SELECT f0.probe, ed1.dst AS cand FROM f0 JOIN ed1 ON ed1.src = f0.cand),
-           |s1 AS (SELECT v1.probe, v1.cand, $sim9 AS sim9
-           |FROM v1 JOIN e ON e.vec_id = v1.cand JOIN p ON p.probe = v1.probe),
-           |f1 AS (SELECT probe, cand FROM (SELECT probe, cand,
-           |row_number() OVER (PARTITION BY probe ORDER BY sim9 DESC, cand) AS rn
-           |FROM s1) WHERE rn <= 2),
-           |v2 AS (SELECT probe, cand FROM v1
-           |UNION SELECT f1.probe, ed0.dst AS cand FROM f1 JOIN ed0 ON ed0.src = f1.cand
-           |UNION SELECT probe, probe AS cand FROM p),
-           |s2 AS (SELECT v2.probe, v2.cand, $sim9 AS sim9
-           |FROM v2 JOIN e ON e.vec_id = v2.cand JOIN p ON p.probe = v2.probe),
-           |f2 AS (SELECT probe, cand FROM (SELECT probe, cand,
-           |row_number() OVER (PARTITION BY probe ORDER BY sim9 DESC, cand) AS rn
-           |FROM s2) WHERE rn <= 4),
-           |v3 AS (SELECT probe, cand FROM v2 UNION
-           |SELECT f2.probe, ed0.dst AS cand FROM f2 JOIN ed0 ON ed0.src = f2.cand),
-           |s3 AS (SELECT v3.probe, v3.cand, $sim9 AS sim9
-           |FROM v3 JOIN e ON e.vec_id = v3.cand JOIN p ON p.probe = v3.probe)
-           |SELECT probe, cand, sim FROM (
-           |SELECT probe, cand, ${proundSql("sim9", 6)} AS sim,
-           |row_number() OVER (PARTITION BY probe ORDER BY sim9 DESC, cand) AS rn
-           |FROM s3 WHERE cand <> probe) WHERE rn <= 3
-           |ORDER BY probe, sim DESC, cand""".stripMargin.replace("\n", " ")
-      },
-      tier = "E"))
+    "sample_diverse_cells" -> sampleDiverseCells(atOracle),
+    "sample_diverse_cells_spread" -> sampleDiverseCells(atSqrtN),
+    "sim_graph_ann_spread" -> simGraphAnn(atSqrtN),
+    "sim_graph_hnsw_spread" -> simGraphHnsw(atSqrtN))
 }

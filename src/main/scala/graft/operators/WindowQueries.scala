@@ -132,7 +132,8 @@ object WindowQueries {
              |ORDER BY event_id LIMIT 500""".stripMargin.replace("\n", " ")),
       tier = "E"),
 
-    // Exact NTILE(4) without a single-partition window (VERDICT r06 #1).
+    // Exact NTILE(4) without a single-partition window, which would
+    // funnel the whole table through one task.
     // Parallel global ranking: range-partition on the sort key (partition
     // i's rows all order before partition i+1's — the full key is unique,
     // so the range boundaries induce a total order), per-partition

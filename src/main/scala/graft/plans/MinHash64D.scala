@@ -21,7 +21,7 @@ import org.apache.spark.sql.types._
   * allocation beyond the k-long output — turning the routed-dedup
   * signature pass from the corpus-wide aggregate into a map-side
   * projection off the persisted token relation (measured at 100×:
-  * see SCALE.md round-17).
+  * SCALE.md, "the routed jaccard lane, profiled to stages").
   *
   * Null handling: null array → null (UnaryExpression). Null ELEMENTS
   * are skipped (token-hash arrays never contain them by construction);

@@ -20,8 +20,8 @@ import graft.streaming.StateFs
   * parallel inserts exactly like a fleet of pg2ch writers. The request
   * body STREAMS from the row iterator over chunked transfer encoding —
   * a partition is never materialized as one executor-heap String, so a
-  * skewed multi-GB partition ships in constant memory (VERDICT r03
-  * "What's wrong" #2).
+  * skewed multi-GB partition ships in constant memory instead of
+  * exhausting one executor's heap.
   *
   * Exactly-once: two layers, both modeled on the real systems.
   *  - Client side, pg2ch's persisted-LSN skip: a local manifest of shipped

@@ -125,7 +125,7 @@ object GraftConfig {
       sourcePassword = top.get("source_password"),
       sourceUser = top.getOrElse("source_user", "graft"),
       sourceSsl = {
-        // fail-fast (ADVICE r13): an invalid sslmode or a verify-* mode
+        // fail-fast: an invalid sslmode or a verify-* mode
         // without its trust store should fail at CONFIG LOAD, not when
         // the replication client first connects hours later
         val mode = top.getOrElse("source_ssl", "disable")

@@ -146,7 +146,7 @@ object PgWire {
       }
       else if (alg.contains("SHA384")) "SHA-384"
       else if (alg.contains("SHA512")) "SHA-512"
-      // ADVICE r15: PostgreSQL only REMAPS MD5/SHA-1 to SHA-256; every
+      // PostgreSQL only REMAPS MD5/SHA-1 to SHA-256; every
       // other signature digest resolves via EVP_get_digestbynid, which
       // supports SHA-224 — a SHA-224-signed cert channel-binds fine
       // with libpq, so this client must hash with SHA-224 too (the JDK
@@ -326,7 +326,7 @@ final class PgWireClient(host: String, port: Int, feedDir: String,
 
   require(Set("disable", "require", "verify-ca", "verify-full")(sslMode),
     s"unsupported sslmode '$sslMode' (disable|require|verify-ca|verify-full)")
-  // source_auth (ADVICE r13): which password-auth requests this client
+  // source_auth: which password-auth requests this client
   // will answer. Default "any" matches libpq; "scram" refuses the silent
   // MD5 downgrade an on-path attacker can request on a plaintext socket
   // (libpq's require_auth=scram-sha-256 analogue), "md5" pins legacy.
@@ -343,14 +343,14 @@ final class PgWireClient(host: String, port: Int, feedDir: String,
   // instance tag for landed-file names: random UUID (truncated) — nanoTime
   // is an arbitrary-origin monotonic clock (often time-since-boot), so it
   // can REPEAT across JVM restarts; a tag collision would make the
-  // ATOMIC_MOVE landing throw FileAlreadyExistsException (ADVICE r11)
+  // ATOMIC_MOVE landing throw FileAlreadyExistsException
   private val instanceTag =
     java.util.UUID.randomUUID().toString.replace("-", "").take(16)
 
   def lastFlushed: Long = flushedLsn
 
   /** Stop the loop AND close the live socket: a blocked read unblocks
-    * immediately instead of waiting out the 30 s soTimeout (ADVICE r11).
+    * immediately instead of waiting out the 30 s soTimeout.
     */
   def stop(): Unit = {
     stopped = true
@@ -453,7 +453,7 @@ final class PgWireClient(host: String, port: Int, feedDir: String,
         s"server refused SSL ('N') but sslmode=$sslMode demands encryption")
       case 'E' =>
         // some older servers / poolers answer SSLRequest with an
-        // ErrorResponse instead of 'N' (ADVICE r13): the type byte is
+        // ErrorResponse instead of 'N': the type byte is
         // consumed, so read the pending frame (int32 len + fields) and
         // surface the server's own message instead of a bare code
         val elen = in.readInt()
@@ -491,7 +491,7 @@ final class PgWireClient(host: String, port: Int, feedDir: String,
       //    anything else gets a loud failure, not a hang
       var ready = false
       var scram: Scram.Client = null
-      // MUTUAL-auth gate (ADVICE r12): once a SASL exchange starts, the
+      // MUTUAL-auth gate: once a SASL exchange starts, the
       // ONLY acceptable path to AuthenticationOk runs through a VERIFIED
       // AuthenticationSASLFinal (code 12). A hostile/MITM peer that
       // collects the client proof and then short-circuits with R(0)
@@ -501,7 +501,7 @@ final class PgWireClient(host: String, port: Int, feedDir: String,
         require(scram == null || saslVerified,
           s"server skipped SCRAM mutual authentication ($at before a " +
             "verified AuthenticationSASLFinal) — refusing an unproven peer")
-        // ADVICE r15: the scram METHOD pin must hold on EVERY path to
+        // The scram METHOD pin must hold on EVERY path to
         // readiness, not just the AuthenticationOk handler — a hostile
         // peer can skip the Authentication message family entirely and
         // go straight to ParameterStatus/BackendKeyData/ReadyForQuery,
@@ -612,10 +612,10 @@ final class PgWireClient(host: String, port: Int, feedDir: String,
       }
       while (!stopped && !copyDone && idle < idleKeepalivesToStop) {
         // an alive-but-silent peer (no byte of any frame inside
-        // soTimeout) is IDLE, not dead (ADVICE r11): report our position
+        // soTimeout) is IDLE, not dead: report our position
         // and keep listening. A timeout MID-frame, by contrast, leaves
         // the stream desynchronized — readTypedIdleAware raises
-        // IOException there (ADVICE r12), and runWithReconnect's
+        // IOException there, and runWithReconnect's
         // resume-from-acked-LSN makes the teardown loss-free.
         val msg = PgWire.readTypedIdleAware(in) match {
           case None => flushAndAck(); ack(); idle += 1; None

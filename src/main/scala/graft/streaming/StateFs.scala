@@ -15,7 +15,7 @@ import org.apache.spark.sql.SparkSession
   * state path in [[BufferedSink]], [[StreamRunner]], and the CH sinks
   * resolves through this object, so a `RunnerConfig.outputDir` of
   * `hdfs://…` or `s3a://…` works exactly like the local paths the tests
-  * use (VERDICT r04 "What's missing" #2).
+  * use, on a cluster whose nodes share no local disk.
   *
   * Two deliberate choices for object-store compatibility:
   *  - NO appends. HDFS append is optional and S3 has none, so batch

@@ -217,7 +217,7 @@ object StreamTwins {
     * LSN-monotone by contract, same as every CDC consumer in this module.
     */
   /** SCD Type-2 history as TRUE streaming state (batch twin:
-    * `cdc_scd2_history`, VERDICT r07 #6): per-key state is ONE struct —
+    * `cdc_scd2_history`): per-key state is ONE struct —
     * the currently-OPEN validity interval. Each arriving change CLOSES
     * it (emits [valid_from, valid_to) with the old row's attributes) and
     * opens a new one. Append mode emits exactly the batch query's
@@ -495,7 +495,7 @@ object StreamTwins {
       .toDF("event_type", "day", "h", "sec_id", "pc", "cents")
   }
 
-  /** agg_sequence_match's streaming form (VERDICT r09 #6) — the CH
+  /** agg_sequence_match's streaming form — the CH
     * sequenceMatch '(?1).*(?2)' (view … purchase, any gap) and the
     * adjacent variant, as TWO BITS of per-user state plus the previous
     * event type: seenView = some view occurred strictly before the

@@ -89,11 +89,14 @@ class SimCacheSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_simcache_tg").toString
     // text_winnowing's top-300 rows all come from the base copy, so
     // dedup_minhash_lsh's corpus-wide count (the verified pipeline's
-    // pairs) is what shows a stale text build; every LSH kernel
-    // consumer is also compared shared against unshared
+    // pairs) is what shows a stale text build; every LSH kernel and
+    // ring-family consumer is also compared shared against unshared
     val keys = Seq("text_winnowing", "dedup_minhash_lsh", "dedup_minhash_verified",
       "dedup_keep_list", "dedup_cluster_components", "dedup_incremental",
-      "dedup_minhash_est", "dedup_lsh_tuning", "graph_triangle_count")
+      "dedup_minhash_est", "dedup_lsh_tuning", "graph_triangle_count",
+      "dedup_semantic", "dedup_semantic_spread", "sample_diverse_cells",
+      "sample_diverse_cells_spread", "sim_graph_ann", "sim_graph_ann_spread",
+      "sim_graph_hnsw", "sim_graph_hnsw_spread", "sim_ann_rerank")
     val s = sharedSession()
     try {
       regen(dir, 1)
