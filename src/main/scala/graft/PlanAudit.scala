@@ -11,7 +11,8 @@ import org.apache.spark.sql.execution.ExplainMode
   * pipelines built inside it); run 2 is warm, the regime Bench scores.
   * For each run it prints the wall, a per-stage table (stage wall,
   * summed task run time, tasks, input, shuffle read and write) and the
-  * run's shuffle-write total in bytes and records. `--explain` first
+  * run's shuffle-write total in bytes and records, with its stage and
+  * job counts. `--explain` first
   * prints the formatted physical plan, built without the eager guard
   * probes (`core.planOnly`).
   *
@@ -32,9 +33,15 @@ object PlanAudit {
     def wallS: Double = if (completedNs > 0) (completedNs - submittedNs) / 1e9 else -1.0
   }
 
-  /** Records every stage submitted since the last [[reset]]. */
+  /** Records every job started and stage submitted since the last [[reset]]. */
   final class StageRecorder extends SparkListener {
     private val stages = new ConcurrentHashMap[Int, StageStats]()
+    private val jobCount = new java.util.concurrent.atomic.AtomicInteger()
+
+    /** Jobs started since the last [[reset]]; read after [[drain]]. */
+    def jobs: Int = jobCount.get
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = { jobCount.incrementAndGet(); () }
 
     override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
       val info = e.stageInfo
@@ -55,7 +62,7 @@ object PlanAudit {
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
       Option(stages.get(e.stageInfo.stageId)).foreach(_.completedNs = System.nanoTime())
 
-    def reset(): Unit = stages.clear()
+    def reset(): Unit = { stages.clear(); jobCount.set(0) }
 
     /** The recorded stages in id order, once the asynchronous listener
       * bus has caught up: every recorded stage completed and the task
@@ -109,7 +116,7 @@ object PlanAudit {
           f"  s${st.id} ${st.name.take(60)}")
       }
       println(s"$tag shuffle_write bytes=${stages.map(_.writeBytes).sum} " +
-        s"records=${stages.map(_.writeRecords).sum} stages=${stages.size}")
+        s"records=${stages.map(_.writeRecords).sum} stages=${stages.size} jobs=${recorder.jobs}")
     }
     spark.stop()
   }

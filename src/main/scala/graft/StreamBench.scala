@@ -261,8 +261,6 @@ object StreamBench {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outPath = if (args.length > 1) args(1) else "STREAMBENCH.json"
     val spark = Bench.session(sfDir)
-    // the staged feeds below read events.parquet (TIMESTAMP(NANOS)) raw
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     import graft.streaming.{ChangeRelation, StreamTwins}
 
     def batch(key: String): Array[Row] = {
@@ -286,7 +284,7 @@ object StreamBench {
     // feeds below keep their LSN (event_id) split: a replication log
     // arrives in LSN order by definition, whatever the event times say.
     val stage = Files.createTempDirectory("graft_sb_stage")
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
+    val raw = graft.core.t(spark, sfDir, "events")
     val rawN = normalize(raw)
     val maxId = raw.agg(max("event_id")).head.getLong(0)
     val cuts = Seq(maxId / 3, 2 * maxId / 3)
@@ -345,7 +343,7 @@ object StreamBench {
     val chSchema = spark.read.parquet(repParts.head.toString).schema
     // documents + a constant ts (all in one watermark horizon): streaming
     // exact dedup across the two chunk boundaries
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = graft.core.t(spark, sfDir, "documents")
       .withColumn("ts", lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))
     val maxDoc = docs.agg(max("doc_id")).head.getLong(0)
     val docParts = Seq(docs.filter(col("doc_id") <= maxDoc / 2),
@@ -392,7 +390,7 @@ object StreamBench {
       val s = rows.map(r => r.getLong(0) -> r.getLong(1)).toMap
       val b = batch("stream_session_window").map(r => r.getLong(0) -> r.getLong(1)).toMap
       val total = rows.map(_.getLong(2)).sum
-      val n = spark.read.parquet(s"$sfDir/events.parquet").count()
+      val n = graft.core.t(spark, sfDir, "events").count()
       if (s != b) Left(s"session counts differ")
       else if (total != n) Left(s"sessions do not partition events: $total != $n")
       else Right(s"users=${b.size} events=$n")
@@ -426,7 +424,7 @@ object StreamBench {
       // NEVER collected; filtered and digested engine-side
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      val sess = normalize(spark.read.parquet(s"$sfDir/events.parquet"))
+      val sess = normalize(graft.core.t(spark, sfDir, "events"))
         .withColumn("es", unix_timestamp(col("ts")))
         .withColumn("gap_s", col("es") - lag(col("es"), 1).over(w))
         .withColumn("flag",
@@ -480,7 +478,7 @@ object StreamBench {
       // conserve every row (stream_late_data's complement)
       val total = events("ontime", "complete")(StreamTwins.onTimeCounts(_))
         .map(_.getLong(1)).sum
-      val n = spark.read.parquet(s"$sfDir/events.parquet").count()
+      val n = graft.core.t(spark, sfDir, "events").count()
       if (total == n) Right(s"rows=$n conserved") else Left(s"lost rows: $total != $n")
     }
 
@@ -500,7 +498,7 @@ object StreamBench {
       // build the unlimited relation inline, same lead() arithmetic)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("user_id").orderBy("event_id")
-      val inv = normalize(spark.read.parquet(s"$sfDir/events.parquet"))
+      val inv = normalize(graft.core.t(spark, sfDir, "events"))
         .select(col("user_id"), col("event_id").as("valid_from"),
           lead(col("event_id"), 1).over(w).as("valid_to"),
           col("event_type"), graft.core.pround(col("value"), 2).as("value_r"))
@@ -660,7 +658,7 @@ object StreamBench {
     run("doc_dedup") {
       val n = runTwin(spark, docParts, docSchema, "dedup", "append")(
         StreamTwins.dedupStream(_)).length.toLong
-      val b = spark.read.parquet(s"$sfDir/documents.parquet")
+      val b = graft.core.t(spark, sfDir, "documents")
         .select(md5(col("text"))).distinct().count()
       if (n == b) Right(s"distinct=$b") else Left(s"survivors $n != distinct digests $b")
     }
@@ -708,7 +706,7 @@ object StreamBench {
       stageOne(dup, dupPart)
       val n = restartTwin(spark, docParts :+ dupPart, docSchema, "dedupr", "append",
         downArrivals = 1)(StreamTwins.dedupStream(_)).length.toLong
-      val b = spark.read.parquet(s"$sfDir/documents.parquet")
+      val b = graft.core.t(spark, sfDir, "documents")
         .select(md5(col("text"))).distinct().count()
       if (n == b) Right(s"distinct=$b restarted=true")
       else Left(s"survivors $n != distinct digests $b after restart")

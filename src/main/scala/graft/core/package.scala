@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, StructType}
 import graft.plans.GraftExtensions
 
 /** Core helpers shared by every operator in the engine.
@@ -34,17 +34,51 @@ package object core {
     *
     * Every declared query reads through here, so this is also where the
     * custom Catalyst expressions are installed in the session.
+    *
+    * Schema inference runs one footer-reading Spark job, so each table's
+    * schema is inferred once per session and dataset generation
+    * ([[tableSchemas]]): a read whose path still has the stored
+    * [[datasetFingerprint]] is given the stored schema, and a rewritten
+    * table is inferred again. Every read still plans its own relation.
     */
-  def t(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+  def t(spark: SparkSession, sfDir: String, name: String): DataFrame = read(spark, sfDir, name)._1
+
+  /** [[t]] plus the table's total bytes, from the same stat pass. */
+  private def read(spark: SparkSession, sfDir: String, name: String): (DataFrame, Long) = {
     GraftExtensions.install(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
-    df.schema.fields.foldLeft(df) { (d, f) =>
+    val path = s"$sfDir/$name.parquet"
+    val (fp, bytes) = stat(path)
+    val known = tableSchemas.synchronized {
+      Option(tableSchemas.get(spark)).flatMap(m => Option(m.get(path)))
+    }.filter(_.fp == fp)
+    val df = known.fold {
+      val inferred = spark.read.parquet(path)
+      tableSchemas.synchronized {
+        tableSchemas.computeIfAbsent(spark, _ => new java.util.HashMap())
+          .put(path, TableSchema(fp, inferred.schema))
+      }
+      inferred
+    }(e => spark.read.schema(e.schema).parquet(path))
+    (df.schema.fields.foldLeft(df) { (d, f) =>
       if (f.name == "ts" && f.dataType == org.apache.spark.sql.types.LongType)
         d.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       else d
-    }
+    }, bytes)
   }
+
+  /** One table's inferred schema and the generation it was inferred from. */
+  private final case class TableSchema(fp: String, schema: StructType)
+
+  /** Per-session store of inferred table schemas, keyed by table path.
+    * Inference depends on session conf (`inferTimestampNTZ.enabled`,
+    * `binaryAsString`, `nanosAsLong`), hence one map per session; the
+    * weak key lets a dropped session go. It holds schemas, not
+    * DataFrames: a cached Dataset would hand two reads of one table the
+    * same attribute ids and break their self-joins.
+    */
+  private val tableSchemas =
+    new java.util.WeakHashMap[SparkSession, java.util.HashMap[String, TableSchema]]()
 
   /** Scale-adaptive scan spread ("input skew: one huge unsplittable
     * file … repartition immediately after the read").
@@ -65,11 +99,10 @@ package object core {
     * rule is derived from input size, not tuned to a core count.
     */
   def tSpread(spark: SparkSession, sfDir: String, name: String, key: String): DataFrame = {
-    val df = t(spark, sfDir, name)
+    val (df, bytes) = read(spark, sfDir, name)
     // knob for A/B sweeps (mirrors SPARK_GRAFT_AQE_ADVISORY=off)
     if (sys.env.get("SPARK_GRAFT_SCAN_SPREAD").contains("off")) return df
     val cores = spark.sparkContext.defaultParallelism
-    val bytes = bytesUnder(s"$sfDir/$name.parquet")
     val maxSplit = confBytes(spark, "spark.sql.files.maxPartitionBytes", 128L << 20)
     val splits = math.max(1L, (bytes + maxSplit - 1) / maxSplit)
     if (bytes >= (256L << 10) && splits * 2 <= cores)
@@ -271,13 +304,17 @@ package object core {
     * File.lastModified collapses to 1 s on many filesystems, hiding a
     * same-size regeneration within the same second). One stat pass.
     */
-  private[graft] def datasetFingerprint(dir: String): String = {
-    val fs = filesUnder(dir)
+  private[graft] def datasetFingerprint(dir: String): String = stat(dir)._1
+
+  /** [[datasetFingerprint]] of `path` and its total bytes, from one stat pass. */
+  private def stat(path: String): (String, Long) = {
+    val fs = filesUnder(path)
     def mtimeNanos(f: java.io.File): Long =
       try java.nio.file.Files.getLastModifiedTime(f.toPath)
         .to(java.util.concurrent.TimeUnit.NANOSECONDS)
       catch { case _: java.io.IOException => f.lastModified() * 1000000L }
-    s"${fs.size}:${fs.map(_.length()).sum}:${if (fs.isEmpty) 0L else fs.map(mtimeNanos).max}"
+    val bytes = fs.map(_.length()).sum
+    (s"${fs.size}:$bytes:${if (fs.isEmpty) 0L else fs.map(mtimeNanos).max}", bytes)
   }
 
   /** The session's build `name` over the current generation of `dir`. */
