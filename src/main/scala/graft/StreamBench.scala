@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, Path, StandardCopyOption}
 
@@ -74,22 +75,29 @@ object StreamBench {
     }
   }
 
-  /** Run one twin: drop the staged files into a fresh watched directory
-    * one at a time (a real micro-batch per arrival), collect the memory
-    * sink's rows.
+  /** Drive one twin: its query over a fresh watched directory, wired
+    * to its sink by `sink`, gets the staged files one at a time (a real
+    * micro-batch per arrival); its state is recorded before it stops.
     */
-  private def runTwin(spark: SparkSession, parts: Seq[Path], schema: StructType,
-                      name: String, mode: String)
-                     (build: DataFrame => DataFrame): Array[Row] = {
+  private def arrivals(spark: SparkSession, parts: Seq[Path], schema: StructType, name: String)
+                      (build: DataFrame => DataFrame)
+                      (sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit = {
     val dir = Files.createTempDirectory(s"graft_sb_$name")
-    val q = build(spark.readStream.schema(schema).parquet(dir.toString))
-      .writeStream.format("memory").queryName(s"sb_$name").outputMode(mode).start()
+    val q = sink(build(spark.readStream.schema(schema).parquet(dir.toString)).writeStream).start()
     parts.zipWithIndex.foreach { case (p, i) =>
       arrive(p, dir, f"arrival_$i%03d.parquet")
       q.processAllAvailable()
     }
     recordState(name, q)
     q.stop()
+  }
+
+  /** Run one twin through [[arrivals]] and collect the memory sink's rows. */
+  private def runTwin(spark: SparkSession, parts: Seq[Path], schema: StructType,
+                      name: String, mode: String)
+                     (build: DataFrame => DataFrame): Array[Row] = {
+    arrivals(spark, parts, schema, name)(build)(
+      _.format("memory").queryName(s"sb_$name").outputMode(mode))
     spark.table(s"sb_$name").collect()
   }
 
@@ -123,22 +131,13 @@ object StreamBench {
                               name: String)
                              (build: DataFrame => DataFrame)
                              (reduce: DataFrame => Array[Row]): Array[Row] = {
-    val dir = Files.createTempDirectory(s"graft_sb_$name")
     val last = new java.util.concurrent.atomic.AtomicReference[(Long, Array[Row])](
       (-1L, Array.empty[Row]))
-    val q = build(spark.readStream.schema(schema).parquet(dir.toString))
-      .writeStream.outputMode("complete")
+    arrivals(spark, parts, schema, name)(build)(_.outputMode("complete")
       .foreachBatch { (df: DataFrame, id: Long) =>
         val r = reduce(df)
         last.updateAndGet(cur => if (id >= cur._1) (id, r) else cur); ()
-      }
-      .start()
-    parts.zipWithIndex.foreach { case (p, i) =>
-      arrive(p, dir, f"arrival_$i%03d.parquet")
-      q.processAllAvailable()
-    }
-    recordState(name, q)
-    q.stop()
+      })
     last.get()._2
   }
 
@@ -158,24 +157,15 @@ object StreamBench {
     // the complete case)
     require(mode == "append",
       s"runTwinGrouped sums across triggers — '$mode' would double-count")
-    val dir = Files.createTempDirectory(s"graft_sb_$name")
     val acc = new java.util.concurrent.ConcurrentHashMap[Long, Map[Seq[Any], Long]]()
-    val q = build(spark.readStream.schema(schema).parquet(dir.toString))
-      .writeStream.outputMode(mode)
+    arrivals(spark, parts, schema, name)(build)(_.outputMode(mode)
       .foreachBatch { (df: DataFrame, id: Long) =>
         val m = df.groupBy(groupCols.map(col): _*).agg(count(lit(1)).cast("long").as("c"))
           .collect()
           .map(r => (groupCols.indices.map(r.get).toList: Seq[Any]) -> r.getLong(groupCols.length))
           .toMap
         acc.put(id, m); ()
-      }
-      .start()
-    parts.zipWithIndex.foreach { case (p, i) =>
-      arrive(p, dir, f"arrival_$i%03d.parquet")
-      q.processAllAvailable()
-    }
-    recordState(name, q)
-    q.stop()
+      })
     import scala.jdk.CollectionConverters._
     acc.values.asScala.foldLeft(Map.empty[Seq[Any], Long]) { (z, m) =>
       m.foldLeft(z) { case (z2, (k, v)) => z2.updated(k, z2.getOrElse(k, 0L) + v) }
@@ -193,20 +183,9 @@ object StreamBench {
   private def runTwinDigest(spark: SparkSession, parts: Seq[Path], schema: StructType,
                             name: String, mode: String, cols: Seq[String])
                            (build: DataFrame => DataFrame): (Long, java.math.BigDecimal) = {
-    val dir = Files.createTempDirectory(s"graft_sb_$name")
     val acc = new java.util.concurrent.ConcurrentHashMap[Long, (Long, java.math.BigDecimal)]()
-    val q = build(spark.readStream.schema(schema).parquet(dir.toString))
-      .writeStream.outputMode(mode)
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        acc.put(id, digestOf(df, cols)); ()
-      }
-      .start()
-    parts.zipWithIndex.foreach { case (p, i) =>
-      arrive(p, dir, f"arrival_$i%03d.parquet")
-      q.processAllAvailable()
-    }
-    recordState(name, q)
-    q.stop()
+    arrivals(spark, parts, schema, name)(build)(_.outputMode(mode)
+      .foreachBatch { (df: DataFrame, id: Long) => acc.put(id, digestOf(df, cols)); () })
     import scala.jdk.CollectionConverters._
     acc.values.asScala.foldLeft((0L, java.math.BigDecimal.ZERO)) {
       case ((c, h), (c2, h2)) => (c + c2, h.add(h2))

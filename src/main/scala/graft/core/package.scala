@@ -18,8 +18,7 @@ package object core {
     */
   final case class QueryDef(
       fn: (SparkSession, String) => DataFrame,
-      oracle: Option[String],
-      tier: String = "C")
+      oracle: Option[String])
 
   /** Parquet table reader — the only input path the engine uses.
     * Explicit schemas come from the files themselves (parquet is
@@ -155,6 +154,15 @@ package object core {
     val p = "1" + ("0" * n) + ".0"
     s"floor(($x) * $p + 0.5) / $p"
   }
+
+  /** Portable 60-bit hash of the Spark SQL expression `s`: the first 15
+    * hex digits of its md5 as a BIGINT. Engines disagree on built-in
+    * `hash()` (Murmur3 vs DuckDB's), so every hash an oracle must
+    * reproduce is this one — bit-identical on both sides. */
+  def hx(s: String): String = s"cast(conv(substr(md5($s), 1, 15), 16, 10) as bigint)"
+
+  /** DuckDB twin of [[hx]]. */
+  def hxSql(s: String): String = s"CAST('0x' || substr(md5($s), 1, 15) AS BIGINT)"
 
   // --------------------------------------------------------------------
   // Query-scoped cache registry.

@@ -69,8 +69,7 @@ object AggQueries {
              |coalesce(o_orderstatus, 'ALL') AS s,
              |CAST(count(*) AS BIGINT) AS c
              |FROM orders GROUP BY GROUPING SETS ((o_orderpriority), (o_orderstatus), ())
-             |ORDER BY p, s""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |ORDER BY p, s""".stripMargin.replace("\n", " "))),
 
     "agg_rollup" -> QueryDef(
       (spark, dir) => {
@@ -92,8 +91,7 @@ object AggQueries {
              |CAST(count(*) AS BIGINT) AS customers
              |FROM customer JOIN nation ON c_nationkey = n_nationkey
              |JOIN region ON n_regionkey = r_regionkey
-             |GROUP BY ROLLUP (r_name, n_name) ORDER BY r, n""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |GROUP BY ROLLUP (r_name, n_name) ORDER BY r, n""".stripMargin.replace("\n", " "))),
 
     "agg_cube" -> QueryDef(
       (spark, dir) => {
@@ -108,8 +106,7 @@ object AggQueries {
              |coalesce(o_orderpriority, 'ALL') AS p,
              |CAST(count(*) AS BIGINT) AS c
              |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
-             |ORDER BY s, p""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |ORDER BY s, p""".stripMargin.replace("\n", " "))),
 
     // Per-group top-k: window row_number inside each brand partition —
     // shuffles once on the group key; never a global sort.
@@ -127,8 +124,7 @@ object AggQueries {
       Some("""SELECT p_brand, rnk, p_partkey, retail FROM (SELECT p_brand,
              |CAST(row_number() OVER (PARTITION BY p_brand ORDER BY p_retailprice DESC, p_partkey) AS BIGINT) AS rnk,
              |p_partkey, CAST(CAST(p_retailprice AS DECIMAL(12,2)) AS DOUBLE) AS retail
-             |FROM part) WHERE rnk <= 3 ORDER BY p_brand, rnk""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |FROM part) WHERE rnk <= 3 ORDER BY p_brand, rnk""".stripMargin.replace("\n", " "))),
 
     // Exact interpolated percentiles: both engines compute
     // rank = p·(n−1) over the sorted values and linearly interpolate
@@ -150,8 +146,7 @@ object AggQueries {
              |${proundSql("quantile_cont(value, 0.25)", 2)} AS q1_v,
              |${proundSql("quantile_cont(value, 0.9)", 2)} AS p90_v,
              |CAST(count(*) AS BIGINT) AS cnt
-             |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin.replace("\n", " "))),
 
     // Pivot/reshape: wide per-user value sums over the 5 known event
     // types. Spark `pivot` with an EXPLICIT value list stays a single
@@ -174,8 +169,7 @@ object AggQueries {
         }.mkString(", ")
         s"""SELECT user_id, $cols FROM events
            |GROUP BY user_id ORDER BY user_id LIMIT 200""".stripMargin.replace("\n", " ")
-      },
-      tier = "E"),
+      }),
 
     // Conversion funnel (view → later purchase, ordered by event_id) —
     // the classic event-analytics shape. Two chained hash aggregates,
@@ -201,8 +195,7 @@ object AggQueries {
              |FROM (SELECT user_id,
              |min(CASE WHEN event_type = 'view' THEN event_id END) AS fv,
              |min(CASE WHEN event_type = 'purchase' THEN event_id END) AS fp
-             |FROM events GROUP BY user_id)""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |FROM events GROUP BY user_id)""".stripMargin.replace("\n", " "))),
 
     // Numeric histogram (width_bucket shape with fixed-width bins).
     // Bucket assignment is ONE double division by a constant + floor —
@@ -222,8 +215,7 @@ object AggQueries {
       Some("""SELECT CAST(floor(o_totalprice / 25000.0) AS BIGINT) AS bucket,
              |CAST(count(*) AS BIGINT) AS cnt,
              |CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,2))), 2) AS DOUBLE) AS sum_price
-             |FROM orders GROUP BY 1 ORDER BY bucket""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |FROM orders GROUP BY 1 ORDER BY bucket""".stripMargin.replace("\n", " "))),
 
     // Portable exact variance/stddev: engines disagree on incremental
     // variance (Welford vs two-pass vs naive accumulate in double), so
@@ -264,8 +256,7 @@ object AggQueries {
            |sum(CAST(value AS DECIMAL(14,2)) * CAST(value AS DECIMAL(14,2))) AS m2
            |FROM events GROUP BY event_type)
            |ORDER BY event_type""".stripMargin.replace("\n", " ")
-      },
-      tier = "E"),
+      }),
 
     // Portable covariance/correlation between two event columns (value ×
     // the JSON payload's k) — same moments discipline as
@@ -324,8 +315,7 @@ object AggQueries {
            |FROM events WHERE CAST(json_extract_string(props, '$$.k') AS BIGINT) IS NOT NULL
            |GROUP BY event_type)
            |ORDER BY event_type""".stripMargin.replace("\n", " ")
-      },
-      tier = "E"),
+      }),
 
     // Training-mix diversity: Gini impurity of each source's language
     // distribution, 1 − Σ pᵢ² — the balance metric a curation pipeline
@@ -358,8 +348,7 @@ object AggQueries {
              |FROM (SELECT source, lang, CAST(count(*) AS BIGINT) AS n
              |FROM documents GROUP BY source, lang) GROUP BY source)
              |ORDER BY source""".stripMargin.replace("\n", " ")
-      ),
-      tier = "E"),
+      )),
 
     // Cohort retention matrix -- the classic event-analytics consumer of
     // an append stream: users grouped by first-seen week, tracked by how
@@ -390,8 +379,7 @@ object AggQueries {
              |SELECT w0 AS cohort_week, w - w0 AS offset_w,
              |CAST(count(DISTINCT ev.user_id) AS BIGINT) AS users
              |FROM ev JOIN first ON ev.user_id = first.user_id
-             |GROUP BY 1, 2 ORDER BY cohort_week, offset_w""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |GROUP BY 1, 2 ORDER BY cohort_week, offset_w""".stripMargin.replace("\n", " "))),
 
     // ClickHouse windowFunnel(window)(ts, cond1, cond2, cond3) — the
     // funnel-depth aggregate CH users reach for first: how far down
@@ -448,8 +436,7 @@ object AggQueries {
              |FROM s2 GROUP BY user_id)
              |SELECT CAST(l1 + l2 + l3 AS BIGINT) AS level,
              |CAST(count(*) AS BIGINT) AS users
-             |FROM s3 GROUP BY 1 ORDER BY level""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |FROM s3 GROUP BY 1 ORDER BY level""".stripMargin.replace("\n", " "))),
 
     // ClickHouse sequenceMatch — event-pattern predicates per user:
     // '(?1).*(?2)' (a view somewhere before a purchase) and '(?1)(?2)'
@@ -494,8 +481,7 @@ object AggQueries {
              |SELECT CAST(count(*) AS BIGINT) AS users_total,
              |CAST(sum(m_any) AS BIGINT) AS matched_any_gap,
              |CAST(sum(m_adj) AS BIGINT) AS matched_adjacent
-             |FROM u""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |FROM u""".stripMargin.replace("\n", " "))),
 
     // ClickHouse retention(cond1, cond2, …) — the stepwise cohort
     // aggregate: per user, flag[0] = anchor condition ever true (viewed
@@ -546,8 +532,7 @@ object AggQueries {
              |CAST(sum(f0) AS BIGINT) AS r0,
              |CAST(sum(f0 * f1) AS BIGINT) AS r1,
              |CAST(sum(f0 * f2) AS BIGINT) AS r2
-             |FROM u""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |FROM u""".stripMargin.replace("\n", " "))),
 
     // ClickHouse sequenceCount('(?1).*(?2)')(ts, view, purchase) — how
     // many NON-OVERLAPPING view→purchase chains each user completes
@@ -590,8 +575,7 @@ object AggQueries {
              |CAST(sum(m) AS BIGINT) AS seq_count_total,
              |CAST(sum(CASE WHEN m > 0 THEN 1 ELSE 0 END) AS BIGINT) AS users_matched,
              |CAST(max(m) AS BIGINT) AS max_per_user
-             |FROM u""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |FROM u""".stripMargin.replace("\n", " "))),
 
     // ClickHouse deltaSum — the monotone-increase accumulator for
     // counter-style series (how much did the value RISE, ignoring
@@ -627,8 +611,7 @@ object AggQueries {
              |CAST(round(sum(CASE WHEN d > 0 THEN d ELSE CAST(0 AS DECIMAL(14,2)) END), 2) AS DOUBLE) AS delta_sum,
              |CAST(sum(CASE WHEN d > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_rises,
              |CAST(count(*) AS BIGINT) AS n_rows
-             |FROM s GROUP BY event_type ORDER BY event_type""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |FROM s GROUP BY event_type ORDER BY event_type""".stripMargin.replace("\n", " "))),
 
     // ClickHouse groupArray — ordered array aggregation. collect_list is
     // documented non-deterministic under parallel merge, so the declared
@@ -663,8 +646,7 @@ object AggQueries {
       Some("""SELECT user_id, array_to_string(types[1:10], ',') AS first_types FROM (
              |SELECT user_id, list(event_type ORDER BY ts, event_id) AS types
              |FROM events GROUP BY user_id)
-             |ORDER BY user_id LIMIT 200""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |ORDER BY user_id LIMIT 200""".stripMargin.replace("\n", " "))),
 
     // ClickHouse ORDER BY … WITH FILL — gap filling for a sparse time
     // series: daily counts of a rare event band, with MISSING days
@@ -695,8 +677,7 @@ object AggQueries {
              |(SELECT min(day) FROM d), (SELECT max(day) FROM d), INTERVAL 1 DAY)) AS DATE) AS day)
              |SELECT cal.day AS day, CAST(coalesce(d.n, 0) AS BIGINT) AS n
              |FROM cal LEFT JOIN d ON cal.day = d.day
-             |ORDER BY day""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |ORDER BY day""".stripMargin.replace("\n", " "))),
 
     // ClickHouse quantileExactWeighted — exact weighted median per group
     // (weight = event_id % 7 + 1, the deterministic stand-in for a
@@ -737,8 +718,7 @@ object AggQueries {
              |FROM g)
              |SELECT event_type, min(value) AS wmedian FROM c
              |WHERE 2 * cum >= tot GROUP BY event_type
-             |ORDER BY event_type""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |ORDER BY event_type""".stripMargin.replace("\n", " "))),
 
     // Approximate percentiles from a FIXED-SIZE sketch — the third
     // portable sketch beside HLL (rows-only) and count-min
@@ -819,8 +799,7 @@ object AggQueries {
              |${proundSql("mn + ((mx - mn) / 256) * (CAST(b50 AS DOUBLE) + 0.5)", 2)} AS approx_p50, exact_p50,
              |${proundSql("mn + ((mx - mn) / 256) * (CAST(b90 AS DOUBLE) + 0.5)", 2)} AS approx_p90, exact_p90
              |FROM est JOIN st ON est.event_type = st.event_type
-             |ORDER BY st.event_type""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |ORDER BY st.event_type""".stripMargin.replace("\n", " "))),
 
     // CH argMin/argMax signatures: the companion-column value at each
     // group's extremum. Native min_by/max_by (and DuckDB arg_min/arg_max)
@@ -853,8 +832,7 @@ object AggQueries {
              |min(CASE WHEN e.value = ex.max_v THEN e.user_id END) AS argmax_user
              |FROM events e JOIN ex ON e.event_type = ex.event_type
              |GROUP BY e.event_type, ex.min_v, ex.max_v
-             |ORDER BY e.event_type""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |ORDER BY e.event_type""".stripMargin.replace("\n", " "))),
 
     // CH simpleLinearRegression / ANSI regr_slope+regr_intercept, in the
     // moments discipline of agg_corr_stats: the five power sums
@@ -903,8 +881,7 @@ object AggQueries {
            |sum(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_extendedprice AS DECIMAL(12,2))) AS sxy
            |FROM lineitem GROUP BY l_returnflag)
            |ORDER BY l_returnflag""".stripMargin.replace("\n", " ")
-      },
-      tier = "E"),
+      }),
 
     // CH skewPop/kurtPop: population skewness and excess kurtosis from
     // EXACT third/fourth power sums. The higher powers are staged through
@@ -960,8 +937,7 @@ object AggQueries {
            |sum(CAST(CAST(value AS DECIMAL(14,2)) * CAST(value AS DECIMAL(14,2)) AS DECIMAL(19,4)) * CAST(CAST(value AS DECIMAL(14,2)) * CAST(value AS DECIMAL(14,2)) AS DECIMAL(19,4))) AS s4
            |FROM events GROUP BY event_type)
            |ORDER BY event_type""".stripMargin.replace("\n", " ")
-      },
-      tier = "E"),
+      }),
 
     // CH sumMap / the -Map combinator family: rows carry PARALLEL
     // key/value arrays and the aggregate sums values per key within the
@@ -987,8 +963,7 @@ object AggQueries {
       Some("""SELECT user_id, k, CAST(count(*) AS BIGINT) AS n,
              |CAST(round(sum(CAST(value AS DECIMAL(14,2))), 2) AS DOUBLE) AS val_sum
              |FROM (SELECT user_id, unnest([event_type, 'all']) AS k, value FROM events)
-             |GROUP BY user_id, k ORDER BY user_id, k""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |GROUP BY user_id, k ORDER BY user_id, k""".stripMargin.replace("\n", " "))),
 
     // CH maxIntersections: the peak number of simultaneously-open
     // intervals — classic sweep-line as dataflow. Each event opens a
@@ -1026,8 +1001,7 @@ object AggQueries {
              |FROM pts),
              |pk AS (SELECT user_id, CAST(max(live) AS BIGINT) AS peak FROM liv GROUP BY user_id)
              |SELECT peak, CAST(count(*) AS BIGINT) AS users FROM pk
-             |GROUP BY peak ORDER BY peak""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |GROUP BY peak ORDER BY peak""".stripMargin.replace("\n", " "))),
 
     // CH groupBitmapAnd/Or-style audience-overlap analytics: for every
     // pair of event types, how many users did BOTH (∩), EITHER (∪), and
@@ -1072,8 +1046,7 @@ object AggQueries {
              |${proundSql("CAST(n_and AS DOUBLE) / CAST(ta.n + tb.n - n_and AS DOUBLE)", 6)} AS jaccard
              |FROM p JOIN tot ta ON p.type_a = ta.event_type
              |JOIN tot tb ON p.type_b = tb.event_type
-             |ORDER BY type_a, type_b""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |ORDER BY type_a, type_b""".stripMargin.replace("\n", " "))),
 
     // CH uniqUpTo(N): the exact distinct count while ≤ N, saturating at
     // N+1 ("more than N") — the cardinality-guard aggregate. The declared
@@ -1100,8 +1073,7 @@ object AggQueries {
              |CAST(least(count(DISTINCT user_id % 4), 11) AS BIGINT) AS lanes_upto10,
              |CAST(count(*) AS BIGINT) AS cnt,
              |least(count(DISTINCT user_id), 11) > 10 AS over_10
-             |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin.replace("\n", " "))),
 
     // The CH -If combinator family (countIf/sumIf/avgIf/minIf/maxIf):
     // conditional aggregates fused into ONE pass — the idiom that
@@ -1140,8 +1112,7 @@ object AggQueries {
              |min(CASE WHEN value >= 100.0 THEN value END) AS min_if,
              |max(CASE WHEN value >= 100.0 THEN value END) AS max_if
              |FROM events GROUP BY event_type)
-             |ORDER BY event_type""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |ORDER BY event_type""".stripMargin.replace("\n", " "))),
 
     // Time-to-convert — the product-analytics latency funnel: per user,
     // the gap between the FIRST view and the first purchase AT OR AFTER
@@ -1188,8 +1159,7 @@ object AggQueries {
              |CAST(sum(CASE WHEN lat IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS converted,
              |${proundSql("quantile_cont(lat, 0.5)", 2)} AS p50_s,
              |${proundSql("quantile_cont(lat, 0.9)", 2)} AS p90_s,
-             |max(lat) AS max_s FROM lat""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |max(lat) AS max_s FROM lat""".stripMargin.replace("\n", " "))),
 
     // First-order behavioral transition matrix — P(next = b | current = a)
     // over each user's event sequence: the Markov model behind "what do
@@ -1225,8 +1195,7 @@ object AggQueries {
              |SELECT p.from_t, to_t, n,
              |${proundSql("CAST(n AS DOUBLE) / CAST(row_n AS DOUBLE)", 6)} AS p
              |FROM p JOIN t ON p.from_t = t.from_t
-             |ORDER BY p.from_t, to_t""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |ORDER BY p.from_t, to_t""".stripMargin.replace("\n", " "))),
 
     // Time-decayed sum (CH exponentialTimeDecayedSum signature, half-life
     // form): recent activity counts more, weight halves per day of age.
@@ -1270,8 +1239,7 @@ object AggQueries {
              |FROM ev CROSS JOIN f)
              |SELECT event_type, CAST(count(*) AS BIGINT) AS cnt,
              |${proundSql("CAST(sum(term) AS DOUBLE) / 1099511627776.0 / 100.0", 4)} AS decayed_sum_halflife_1d
-             |FROM tm GROUP BY event_type ORDER BY event_type""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |FROM tm GROUP BY event_type ORDER BY event_type""".stripMargin.replace("\n", " "))),
 
     // Cohort lifetime value — the revenue companion to
     // agg_retention_cohorts: users cohort by FIRST-purchase week, and
@@ -1317,8 +1285,7 @@ object AggQueries {
              |floor(CAST(sum(CAST(revenue AS DECIMAL(18,2)))
              |OVER (PARTITION BY cw ORDER BY age_w
              |ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) * 100.0 + 0.5) / 100.0 AS cum_revenue
-             |FROM cells ORDER BY cw, age_w""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |FROM cells ORDER BY cw, age_w""".stripMargin.replace("\n", " "))),
 
     // Z-score outlier gate — the monitoring/data-validation aggregate:
     // count (and bound-check) events more than 3σ from their type's
@@ -1362,8 +1329,7 @@ object AggQueries {
            |${proundSql("max(abs(value - mu) / sigma)", 4)} AS max_z
            |FROM events e JOIN st ON e.event_type = st.event_type
            |GROUP BY e.event_type ORDER BY e.event_type""".stripMargin.replace("\n", " ")
-      },
-      tier = "E"),
+      }),
 
     // Seasonality heatmap — hour-of-day × day-of-week activity profile,
     // the bounded (24×7) relation every monitoring dashboard draws.
@@ -1382,8 +1348,7 @@ object AggQueries {
              |CAST(hour(ts) AS BIGINT) AS hod,
              |CAST(count(*) AS BIGINT) AS events,
              |CAST(round(sum(CAST(value AS DECIMAL(18,2))), 2) AS DOUBLE) AS value_sum
-             |FROM events GROUP BY 1, 2 ORDER BY dow, hod""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |FROM events GROUP BY 1, 2 ORDER BY dow, hod""".stripMargin.replace("\n", " "))),
 
     // Revenue concentration — "how much of the value comes from the top
     // decile of users": the whale-watching / source-concentration metric.
@@ -1424,6 +1389,5 @@ object AggQueries {
              |CAST(sum(CASE WHEN CAST(cents AS DOUBLE) >= p90 THEN 1 ELSE 0 END) AS BIGINT) AS top_users,
              |${proundSql("CAST(sum(CASE WHEN CAST(cents AS DOUBLE) >= p90 THEN cents ELSE 0 END) AS DOUBLE) / CAST(max(total_cents) AS DOUBLE)", 6)} AS top_share,
              |${proundSql("CAST(max(total_cents) AS DOUBLE) / 100.0", 2)} AS total_revenue
-             |FROM pu CROSS JOIN th""".stripMargin.replace("\n", " ")),
-      tier = "E"))
+             |FROM pu CROSS JOIN th""".stripMargin.replace("\n", " "))))
 }

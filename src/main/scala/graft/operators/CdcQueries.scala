@@ -137,8 +137,7 @@ object CdcQueries {
              |CAST(sum(CASE WHEN event_id <= cut.cut THEN 1 ELSE 0 END) AS BIGINT) AS consistent_rows,
              |CAST(sum(CASE WHEN event_id > cut.cut THEN 1 ELSE 0 END) AS BIGINT) AS in_flight
              |FROM events CROSS JOIN cut GROUP BY event_type
-             |ORDER BY event_type""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |ORDER BY event_type""".stripMargin.replace("\n", " "))),
 
     // A9: truncate frontier — the declared-surface twin of
     // CdcApply.dropTruncated, with the frontier keyed by USER here (one
@@ -512,8 +511,7 @@ object CdcQueries {
              |CAST(round(sum(CASE WHEN day >= c.cutoff THEN CAST(value AS DECIMAL(14,2))
              |ELSE CAST(0 AS DECIMAL(14,2)) END), 2) AS DOUBLE) AS kept_value_sum
              |FROM ev CROSS JOIN c GROUP BY event_type
-             |ORDER BY event_type""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |ORDER BY event_type""".stripMargin.replace("\n", " "))),
 
     // Bloom-filter granule index (ClickHouse `INDEX ... TYPE
     // bloom_filter` — the point-predicate companion to
@@ -533,8 +531,8 @@ object CdcQueries {
     // evaluated on metadata relations, never a second corpus scan.
     "cdc_bloom_prune" -> QueryDef(
       (spark, dir) => {
-        val hxU = "cast(conv(substr(md5(cast(user_id as string)), 1, 15), 16, 10) as bigint)"
-        val hxP = "cast(conv(substr(md5(cast(probe as string)), 1, 15), 16, 10) as bigint)"
+        val hxU = hx("cast(user_id as string)")
+        val hxP = hx("cast(probe as string)")
         val posArr = "transform(sequence(0, 2), j -> (shiftright(h, j * 10) & 1023))"
         val ev = t(spark, dir, "events")
           .select(col("event_type"), col("user_id"),
@@ -580,8 +578,8 @@ object CdcQueries {
           .orderBy(col("event_type"), col("probe"))
       },
       Some {
-        val hxU = "CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15) AS BIGINT)"
-        val hxP = "CAST('0x' || substr(md5(CAST(probe AS VARCHAR)), 1, 15) AS BIGINT)"
+        val hxU = hxSql("CAST(user_id AS VARCHAR)")
+        val hxP = hxSql("CAST(probe AS VARCHAR)")
         s"""WITH ev AS (SELECT event_type, user_id,
            |CAST(datediff('day', DATE '1995-01-01', CAST(ts AS DATE)) AS BIGINT) AS day
            |FROM events),
@@ -621,8 +619,7 @@ object CdcQueries {
            |FROM tot CROSS JOIN pr
            |LEFT JOIN pp ON tot.event_type = pp.event_type AND pr.probe = pp.probe
            |ORDER BY tot.event_type, pr.probe""".stripMargin.replace("\n", " ")
-      },
-      tier = "E"),
+      }),
 
     // Compaction planning (lakehouse OPTIMIZE / MergeTree background
     // merges): small adjacent granules should merge into ~target-size

@@ -71,8 +71,7 @@ object JoinQueries {
   /** Triangle counting's sampled canonical edge relation (x < y). */
   private def triangleEdges(spark: SparkSession, dir: String): DataFrame = {
     def build: DataFrame = {
-      val keep = "cast(conv(substr(md5(concat(cast(x as string), ':', " +
-        "cast(y as string))), 1, 15), 16, 10) as bigint) % 8 = 0"
+      val keep = s"${hx("concat(cast(x as string), ':', cast(y as string))")} % 8 = 0"
       val po = t(spark, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey")).distinct()
       po.as("a").join(po.as("b"),
@@ -170,8 +169,7 @@ object JoinQueries {
              |coalesce(c.cust_acctbal, 0.0) AS cust_acctbal,
              |coalesce(s.suppliers, 0) AS suppliers
              |FROM c FULL OUTER JOIN s ON c.r_name = s.r_name AND c.n_name = s.n_name
-             |ORDER BY r_name, n_name""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |ORDER BY r_name, n_name""".stripMargin.replace("\n", " "))),
 
     "join_left_outer" -> QueryDef(
       (spark, dir) => {
@@ -244,8 +242,7 @@ object JoinQueries {
              |SELECT coalesce(e.user_id, s.user_id) AS user_id,
              |coalesce(e.errors, 0) AS errors, coalesce(s.signups, 0) AS signups
              |FROM e FULL JOIN s ON e.user_id = s.user_id
-             |ORDER BY user_id""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |ORDER BY user_id""".stripMargin.replace("\n", " "))),
 
     // Equi-join with a theta residual: Catalyst keys the shuffle on the
     // equi part and evaluates the range predicate as a post-join filter —
@@ -263,8 +260,7 @@ object JoinQueries {
              |CAST(count(*) AS BIGINT) AS cnt
              |FROM orders JOIN lineitem
              |ON o_orderkey = l_orderkey AND l_shipdate > o_orderdate
-             |GROUP BY 1 ORDER BY m""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |GROUP BY 1 ORDER BY m""".stripMargin.replace("\n", " "))),
 
     // AS-OF join (latest prior-or-equal view per purchase). Spark has no
     // native ASOF join; a running conditional max over the per-user stream
@@ -288,8 +284,7 @@ object JoinQueries {
              |OVER (PARTITION BY user_id ORDER BY event_id
              |ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS last_view
              |FROM events) WHERE event_type = 'purchase'
-             |ORDER BY event_id LIMIT 500""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |ORDER BY event_id LIMIT 500""".stripMargin.replace("\n", " "))),
 
     // AS-OF join with bounded staleness (tolerance): the production form —
     // a match older than the tolerance horizon is no match (a quote from
@@ -316,8 +311,7 @@ object JoinQueries {
              |OVER (PARTITION BY user_id ORDER BY event_id
              |RANGE BETWEEN 100 PRECEDING AND CURRENT ROW) AS last_view
              |FROM events) WHERE event_type = 'purchase'
-             |ORDER BY event_id LIMIT 500""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |ORDER BY event_id LIMIT 500""".stripMargin.replace("\n", " "))),
 
     // TPC-H Q3 shape: broadcast the filtered customer dim, shuffle join the
     // two fact tables on orderkey, aggregate, global top-10 (TakeOrdered).
@@ -343,8 +337,7 @@ object JoinQueries {
              |JOIN lineitem ON l_orderkey = o_orderkey
              |WHERE c_mktsegment = 'BUILDING'
              |AND o_orderdate < DATE '1995-03-15' AND l_shipdate > DATE '1995-03-15'
-             |GROUP BY o_orderkey ORDER BY rev DESC, o_orderkey LIMIT 10""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |GROUP BY o_orderkey ORDER BY rev DESC, o_orderkey LIMIT 10""".stripMargin.replace("\n", " "))),
 
     // TPC-H Q5 shape: the full snowflake — region→nation prune the
     // customer AND supplier sides, two fact-fact shuffles, revenue per
@@ -394,8 +387,7 @@ object JoinQueries {
              |JOIN region ON n_regionkey = r_regionkey
              |WHERE r_name = 'ASIA'
              |AND o_orderdate >= DATE '1996-01-01' AND o_orderdate < DATE '1997-01-01'
-             |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin.replace("\n", " "))),
 
     // Skew-salted equi-join, declared: the fact side joins the dim
     // through Skew.saltedJoin (deterministic content salt on the big
@@ -419,8 +411,7 @@ object JoinQueries {
       Some("""SELECT c_mktsegment AS segment, CAST(count(*) AS BIGINT) AS n_orders,
              |CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,2))), 2) AS DOUBLE) AS rev_r
              |FROM orders JOIN customer ON o_custkey = c_custkey
-             |GROUP BY 1 ORDER BY segment""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |GROUP BY 1 ORDER BY segment""".stripMargin.replace("\n", " "))),
 
     // Runtime Bloom-filter join reduction — Spark's
     // spark.sql.optimizer.runtime.bloomFilter re-expressed as an explicit
@@ -480,8 +471,7 @@ object JoinQueries {
              |CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,2))), 2) AS DOUBLE) AS rev_r
              |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
              |WHERE o_orderdate >= DATE '1995-03-01' AND o_orderdate < DATE '1995-04-01'
-             |GROUP BY 1 ORDER BY priority""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |GROUP BY 1 ORDER BY priority""".stripMargin.replace("\n", " "))),
 
     // PageRank, 3 unrolled iterations over the customer<->supplier
     // bipartite graph (an edge per distinct trading pair, symmetrized so
@@ -562,8 +552,7 @@ object JoinQueries {
         .replace("PRDIV1", proundSql("r1.r / CAST(deg.deg AS DOUBLE)", 9))
         .replace("PRDIV2", proundSql("r2.r / CAST(deg.deg AS DOUBLE)", 9))
         .replace("PRDAMP", proundSql(
-          "CAST(0.15 AS DOUBLE) + CAST(0.85 AS DOUBLE) * CAST(coalesce(s, 0) AS DOUBLE)", 9))),
-      tier = "E"),
+          "CAST(0.15 AS DOUBLE) + CAST(0.85 AS DOUBLE) * CAST(coalesce(s, 0) AS DOUBLE)", 9)))),
 
     // AS-OF join, NEAREST variant — completes the as-of family (latest =
     // backward, tolerance = bounded backward, this = nearest in EITHER
@@ -609,8 +598,7 @@ object JoinQueries {
              |ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS fwd
              |FROM events))
              |WHERE event_type = 'purchase'
-             |ORDER BY event_id LIMIT 500""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |ORDER BY event_id LIMIT 500""".stripMargin.replace("\n", " "))),
 
     // AS-OF join, FORWARD variant — the fourth family member ("the next
     // view AFTER each purchase": the follow-up-attribution direction;
@@ -639,8 +627,7 @@ object JoinQueries {
              |ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS next_view
              |FROM events)
              |WHERE event_type = 'purchase'
-             |ORDER BY event_id LIMIT 500""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |ORDER BY event_id LIMIT 500""".stripMargin.replace("\n", " "))),
 
     // Triangle counting over the part co-purchase graph (parts appearing
     // in the same order are connected), with Doulion-style deterministic
@@ -674,21 +661,19 @@ object JoinQueries {
           .select(col("n_edges"), col("n_triangles"),
             (col("n_triangles") * 512L).cast("long").as("est_triangles"))
       },
-      Some("""WITH po AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+      Some(s"""WITH po AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
              |cp AS (SELECT DISTINCT a.l_partkey AS x, b.l_partkey AS y
              |FROM po a JOIN po b ON a.l_orderkey = b.l_orderkey
              |AND a.l_partkey < b.l_partkey),
              |e AS (SELECT x, y FROM cp
-             |WHERE CAST('0x' || substr(md5(CAST(x AS VARCHAR) || ':' ||
-             |CAST(y AS VARCHAR)), 1, 15) AS BIGINT) % 8 = 0),
+             |WHERE ${hxSql("CAST(x AS VARCHAR) || ':' || CAST(y AS VARCHAR)")} % 8 = 0),
              |w AS (SELECT e1.x AS a, e1.y AS b, e2.y AS c
              |FROM e e1 JOIN e e2 ON e1.y = e2.x),
              |tr AS (SELECT a FROM w JOIN e e3 ON w.a = e3.x AND w.c = e3.y)
              |SELECT (SELECT CAST(count(*) AS BIGINT) FROM e) AS n_edges,
              |CAST(count(*) AS BIGINT) AS n_triangles,
              |CAST(count(*) * 512 AS BIGINT) AS est_triangles
-             |FROM tr""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |FROM tr""".stripMargin.replace("\n", " "))),
 
     // Interval-overlap join via TEMPORAL BUCKETING — the scale answer to
     // "find every pair of overlapping intervals". A naive overlap join is
@@ -727,8 +712,7 @@ object JoinQueries {
              |FROM iv a JOIN iv b ON a.user_id = b.user_id
              |AND a.event_type = 'view' AND b.event_type = 'purchase'
              |AND a.s < b.e AND b.s < a.e
-             |GROUP BY a.user_id ORDER BY a.user_id""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |GROUP BY a.user_id ORDER BY a.user_id""".stripMargin.replace("\n", " "))),
 
     // Label propagation communities (Raghavan et al. 2007) — the third
     // graph lane beside centrality (pagerank) and cohesion (triangles):
@@ -780,13 +764,12 @@ object JoinQueries {
           .orderBy(col("csize").desc, col("label")).limit(20)
           .select(col("label").as("community"), col("csize"))
       },
-      Some("""WITH po AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+      Some(s"""WITH po AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
              |cp AS (SELECT DISTINCT a.l_partkey AS x, b.l_partkey AS y
              |FROM po a JOIN po b ON a.l_orderkey = b.l_orderkey
              |AND a.l_partkey < b.l_partkey),
              |e AS (SELECT x, y FROM cp
-             |WHERE CAST('0x' || substr(md5(CAST(x AS VARCHAR) || ':' ||
-             |CAST(y AS VARCHAR)), 1, 15) AS BIGINT) % 8 = 0),
+             |WHERE ${hxSql("CAST(x AS VARCHAR) || ':' || CAST(y AS VARCHAR)")} % 8 = 0),
              |und AS (SELECT x AS src, y AS dst FROM e
              |UNION ALL SELECT y AS src, x AS dst FROM e),
              |l0 AS (SELECT DISTINCT src AS node, src AS label FROM und),
@@ -808,6 +791,5 @@ object JoinQueries {
              |FROM v2) WHERE rn = 1)
              |SELECT label AS community, CAST(count(*) AS BIGINT) AS csize
              |FROM l2 GROUP BY label
-             |ORDER BY csize DESC, label LIMIT 20""".stripMargin.replace("\n", " ")),
-      tier = "E"))
+             |ORDER BY csize DESC, label LIMIT 20""".stripMargin.replace("\n", " "))))
 }

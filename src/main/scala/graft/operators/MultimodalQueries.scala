@@ -35,8 +35,7 @@ object MultimodalQueries {
              |CAST('0x' || substr(md5(text), 1, 4) AS BIGINT) % 1024 AS width,
              |CAST('0x' || substr(md5(text), 5, 4) AS BIGINT) % 1024 AS height,
              |CAST('0x' || substr(md5(text), 9, 6) AS BIGINT) % 600000 AS duration_ms
-             |FROM documents ORDER BY asset_id LIMIT 300""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |FROM documents ORDER BY asset_id LIMIT 300""".stripMargin.replace("\n", " "))),
 
     // Frame sampling: every 4th frame index of each asset via posexplode
     // (a Generator — zero shuffle). n_frames is the stub decode's
@@ -58,8 +57,7 @@ object MultimodalQueries {
              |CAST(floor(octet_length(CAST(text AS BLOB)) / 256.0) + 1 AS BIGINT) AS n_frames,
              |unnest(range(0, CAST(floor(octet_length(CAST(text AS BLOB)) / 256.0) + 1 AS BIGINT))) AS frame_idx
              |FROM documents)
-             |WHERE frame_idx % 4 = 0 ORDER BY asset_id, frame_idx LIMIT 500""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |WHERE frame_idx % 4 = 0 ORDER BY asset_id, frame_idx LIMIT 500""".stripMargin.replace("\n", " "))),
 
     // Multimodal -> ANN integration: stub feature extraction (the batch
     // shape a real vision/audio encoder emits — one fixed-dim float array
@@ -93,8 +91,7 @@ object MultimodalQueries {
            |row_number() OVER (PARTITION BY a.asset_id ORDER BY $cosR DESC, b.asset_id) AS rn
            |FROM f a JOIN f b ON a.asset_id < 5 AND b.asset_id <> a.asset_id)
            |WHERE rn <= 3 ORDER BY probe, sim DESC, cand""".stripMargin.replace("\n", " ")
-      },
-      tier = "E"),
+      }),
 
     // Perceptual-hash near-dup over the media lane — the image/video
     // dedup step every multimodal corpus runs (pHash-style): binarize
@@ -150,8 +147,7 @@ object MultimodalQueries {
            |CAST(count(*) AS BIGINT) AS n_pairs
            |FROM pairs WHERE bit_count(xor(f1, f2)) <= 4
            |GROUP BY 1 ORDER BY d""".stripMargin.replace("\n", " ")
-      },
-      tier = "E"),
+      }),
 
     // Audio VAD (voice-activity detection) segmentation — the audio-lane
     // preprocessing every speech corpus needs: per-frame energy →
@@ -213,8 +209,7 @@ object MultimodalQueries {
              |COALESCE(n_segments, 0) AS n_segments,
              |COALESCE(longest_seg, 0) AS longest_seg
              |FROM a LEFT JOIN agg ON a.asset_id = agg.asset_id
-             |ORDER BY a.asset_id LIMIT 300""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |ORDER BY a.asset_id LIMIT 300""".stripMargin.replace("\n", " "))),
 
     // Video scene-cut detection — the video twin of the VAD shape: a cut
     // is a frame whose feature distance to the PREVIOUS frame exceeds a
@@ -276,6 +271,5 @@ object MultimodalQueries {
              |agg AS (SELECT asset_id, n_frames, CAST(count(*) AS BIGINT) AS scenes,
              |max(shot_len) AS longest_shot FROM sl GROUP BY 1, 2)
              |SELECT asset_id, n_frames, scenes - 1 AS cuts, scenes, longest_shot
-             |FROM agg ORDER BY asset_id LIMIT 300""".stripMargin.replace("\n", " ")),
-      tier = "E"))
+             |FROM agg ORDER BY asset_id LIMIT 300""".stripMargin.replace("\n", " "))))
 }

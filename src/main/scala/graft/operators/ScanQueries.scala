@@ -119,8 +119,7 @@ object ScanQueries {
              |CAST(EXTRACT(month FROM o_orderdate) AS BIGINT) AS m,
              |CAST(date_trunc('month', o_orderdate) AS DATE) AS mon,
              |CAST(date_diff('day', CAST(o_orderdate AS DATE), DATE '1998-12-31') AS BIGINT) AS dd
-             |FROM orders ORDER BY o_orderkey LIMIT 200""".stripMargin.replace("\n", " ")),
-      tier = "C"),
+             |FROM orders ORDER BY o_orderkey LIMIT 200""".stripMargin.replace("\n", " "))),
 
     // Second string tier: pad/translate/reverse/split_part — all codegen'd
     // built-ins with byte-identical semantics in both engines.
@@ -142,8 +141,7 @@ object ScanQueries {
              |translate(p_name, 'aeiou', 'AEIOU') AS tr,
              |reverse(substr(p_name, 1, 8)) AS rev,
              |split_part(p_name, ' ', 2) AS w2
-             |FROM part ORDER BY p_partkey LIMIT 200""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |FROM part ORDER BY p_partkey LIMIT 200""".stripMargin.replace("\n", " "))),
 
     // Second date tier: interval arithmetic, month-end clamping, ISO
     // day-of-week (Spark weekday is Monday=0; DuckDB isodow is Monday=1).
@@ -165,8 +163,7 @@ object ScanQueries {
              |CAST(CAST(o_orderdate AS DATE) + INTERVAL 3 MONTH AS DATE) AS m3,
              |last_day(CAST(o_orderdate AS DATE)) AS eom,
              |CAST(isodow(CAST(o_orderdate AS DATE)) AS BIGINT) AS isodow
-             |FROM orders ORDER BY o_orderkey LIMIT 200""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |FROM orders ORDER BY o_orderkey LIMIT 200""".stripMargin.replace("\n", " "))),
 
     "math_funcs" -> QueryDef(
       (spark, dir) => {
@@ -187,8 +184,7 @@ object ScanQueries {
              |CAST(ceil(p_retailprice - 500.0) AS BIGINT) AS ce,
              |${proundSql("abs(p_retailprice - 1000.0)", 2)} AS ab,
              |${proundSql("sqrt(p_retailprice)", 6)} AS sq
-             |FROM part ORDER BY p_partkey LIMIT 200""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |FROM part ORDER BY p_partkey LIMIT 200""".stripMargin.replace("\n", " "))),
 
     // Semi-structured extraction — pg2ch passes json/jsonb through as
     // String (SURVEY §1.2); analytics over it uses get_json_object.
@@ -222,8 +218,7 @@ object ScanQueries {
       },
       Some(s"""SELECT vec_id, CAST(len(embedding) AS BIGINT) AS dim,
              |${proundSql("sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x)))", 4)} AS norm
-             |FROM embeddings ORDER BY vec_id LIMIT 200""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |FROM embeddings ORDER BY vec_id LIMIT 200""".stripMargin.replace("\n", " "))),
 
     // JSON generation + extraction round-trip: serialize row fields with
     // to_json, extract them back. Comparing EXTRACTED values (not the
@@ -244,8 +239,7 @@ object ScanQueries {
              |json_extract_string(j, '$.event_type') AS rt_type
              |FROM (SELECT event_id,
              |to_json(struct_pack(event_id := event_id, event_type := event_type)) AS j
-             |FROM events) ORDER BY event_id LIMIT 200""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |FROM events) ORDER BY event_id LIMIT 200""".stripMargin.replace("\n", " "))),
 
     // Second array tier: min/max, slicing, reverse, sort — element access
     // is 1-based in both engines; floats widen to DOUBLE before pround.
@@ -269,8 +263,7 @@ object ScanQueries {
              |CAST(len(embedding[1:3]) AS BIGINT) AS s3,
              |${proundSql("CAST(list_reverse(embedding)[1] AS DOUBLE)", 4)} AS last_e,
              |${proundSql("CAST(list_sort(embedding)[2] AS DOUBLE)", 4)} AS sorted2
-             |FROM embeddings ORDER BY vec_id LIMIT 200""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |FROM embeddings ORDER BY vec_id LIMIT 200""".stripMargin.replace("\n", " "))),
 
     "sort_multi_key_limit" -> QueryDef(
       (spark, dir) => {
@@ -308,8 +301,7 @@ object ScanQueries {
              |FROM (SELECT o_custkey, o_orderkey, o_orderstatus, o_totalprice,
              |row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderkey) AS rn
              |FROM orders) WHERE rn <= 2
-             |ORDER BY o_custkey, o_orderkey LIMIT 400""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |ORDER BY o_custkey, o_orderkey LIMIT 400""".stripMargin.replace("\n", " "))),
 
     "topk_global" -> QueryDef(
       (spark, dir) => {
@@ -336,8 +328,7 @@ object ScanQueries {
       Some("""SELECT
              |CAST((SELECT count(*) FROM (SELECT o_custkey FROM orders WHERE o_orderstatus = 'O' UNION SELECT o_custkey FROM orders WHERE o_orderstatus = 'F')) AS BIGINT) AS union_n,
              |CAST((SELECT count(*) FROM (SELECT o_custkey FROM orders WHERE o_orderstatus = 'O' INTERSECT SELECT o_custkey FROM orders WHERE o_orderstatus = 'F')) AS BIGINT) AS intersect_n,
-             |CAST((SELECT count(*) FROM (SELECT o_custkey FROM orders WHERE o_orderstatus = 'O' EXCEPT SELECT o_custkey FROM orders WHERE o_orderstatus = 'F')) AS BIGINT) AS except_n""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |CAST((SELECT count(*) FROM (SELECT o_custkey FROM orders WHERE o_orderstatus = 'O' EXCEPT SELECT o_custkey FROM orders WHERE o_orderstatus = 'F')) AS BIGINT) AS except_n""".stripMargin.replace("\n", " "))),
 
     // Bag-semantics set ops (EXCEPT ALL / INTERSECT ALL): duplicates
     // count, so these are NOT the distinct variants above — Spark's
@@ -354,8 +345,7 @@ object ScanQueries {
       Some("""SELECT
              |CAST((SELECT count(*) FROM (SELECT user_id FROM events WHERE event_type = 'view' EXCEPT ALL SELECT user_id FROM events WHERE event_type = 'click')) AS BIGINT) AS except_all_n,
              |CAST((SELECT count(*) FROM (SELECT user_id FROM events WHERE event_type = 'view' INTERSECT ALL SELECT user_id FROM events WHERE event_type = 'click')) AS BIGINT) AS intersect_all_n,
-             |CAST((SELECT count(*) FROM (SELECT user_id FROM events WHERE event_type = 'view' UNION ALL SELECT user_id FROM events WHERE event_type = 'click')) AS BIGINT) AS union_all_n""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |CAST((SELECT count(*) FROM (SELECT user_id FROM events WHERE event_type = 'view' UNION ALL SELECT user_id FROM events WHERE event_type = 'click')) AS BIGINT) AS union_all_n""".stripMargin.replace("\n", " "))),
 
     // Correlated scalar subquery through the spark.sql TEXT entry path —
     // the SQL parser + Catalyst decorrelation (rewritten to an aggregate
@@ -376,8 +366,7 @@ object ScanQueries {
       Some("""SELECT c_custkey,
              |CAST((SELECT count(*) FROM orders o WHERE o.o_custkey = c.c_custkey) AS BIGINT) AS n_orders,
              |(SELECT max(o_totalprice) FROM orders o WHERE o.o_custkey = c.c_custkey) IS NOT NULL AS has_orders
-             |FROM customer c ORDER BY c_custkey LIMIT 200""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |FROM customer c ORDER BY c_custkey LIMIT 200""".stripMargin.replace("\n", " "))),
 
     // Z-order (Morton) clustering key — the lakehouse OPTIMIZE ZORDER
     // primitive: interleave the bits of two bounded dimensions so rows
@@ -425,6 +414,5 @@ object ScanQueries {
            |min(ub) AS ub_min, max(ub) AS ub_max,
            |max(day) - min(day) AS day_span, max(ub) - min(ub) AS ub_span
            |FROM zv GROUP BY 1 ORDER BY granule""".stripMargin.replace("\n", " ")
-      },
-      tier = "E"))
+      }))
 }

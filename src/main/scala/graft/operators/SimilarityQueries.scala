@@ -79,9 +79,8 @@ object SimilarityQueries {
     * GraphAnnSpec's fold≡aggregate pin. */
   private[graft] final case class PortableSpreadRing(k: Long) extends Ring
 
-  /** Spark-side portable 60-bit hash of vec_id (TextQueries' hx trick). */
-  private val vidHash =
-    "cast(conv(substr(md5(cast(vec_id as string)), 1, 15), 16, 10) as bigint)"
+  /** Spark-side portable 60-bit hash of vec_id ([[graft.core.hx]]). */
+  private val vidHash = hx("cast(vec_id as string)")
 
   private[graft] def ringPred(r: Ring): Column = r match {
     case OracleRing            => col("vec_id") >= 480 && col("vec_id") < 490
@@ -146,7 +145,7 @@ object SimilarityQueries {
     val sqrtNRing: String =
       "k AS (SELECT CAST(round(sqrt(count(*))) AS BIGINT) AS kk FROM e), " +
         "c AS (SELECT vec_id AS cid, v AS cv FROM e, k " +
-        "WHERE CAST('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15) AS BIGINT) % kk = 0)"
+        s"WHERE ${hxSql("CAST(vec_id AS VARCHAR)")} % kk = 0)"
 
     /** Every `e` row at its max-cosine centroid of `cents` (alias `c`),
       * smallest cid on a tie — [[ivfAssignedAgg]]'s argmax. */
@@ -548,8 +547,7 @@ object SimilarityQueries {
             |CAST(sum(CASE WHEN dropped_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS dropped,
             |CAST(count(*) - sum(CASE WHEN dropped_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS kept
             |FROM asg LEFT JOIN drp ON asg.vec_id = drp.dropped_id
-            |GROUP BY cid ORDER BY cid""".stripMargin.replace("\n", " ")),
-    tier = "E")
+            |GROUP BY cid ORDER BY cid""".stripMargin.replace("\n", " ")))
 
   /** Diversity sampling by cell representative — the selection HALF of
     * SemDeDup-style curation: instead of dropping near-duplicates, KEEP
@@ -584,8 +582,7 @@ object SimilarityQueries {
             |FROM scored) WHERE rn = 1),
             |m AS (SELECT cid, CAST(count(*) AS BIGINT) AS members FROM asg GROUP BY cid)
             |SELECT rep.cid, members, rep_vec, rep_sim
-            |FROM rep JOIN m ON rep.cid = m.cid ORDER BY rep.cid""".stripMargin.replace("\n", " ")),
-    tier = "E")
+            |FROM rep JOIN m ON rep.cid = m.cid ORDER BY rep.cid""".stripMargin.replace("\n", " ")))
 
   /** The probe side of a graph-ANN beam search over `ring`'s assignment:
     * the probes (vec_id < 10), exact scoring of a bounded (probe, cand)
@@ -678,8 +675,7 @@ object SimilarityQueries {
     Some(s"WITH ${IvfSql.e}, ${r.sql}, ${IvfSql.asg()}, ${IvfSql.edges("ed", "asg", 8)}, " +
       IvfSql.probeCells("cand") + ", " +
       IvfSql.beam("SELECT probe, cand FROM pc UNION SELECT probe, probe AS cand FROM p",
-        ("ed", 4, ""), ("ed", 4, ""))),
-    tier = "E")
+        ("ed", 4, ""), ("ed", 4, ""))))
 
   /** HIERARCHICAL graph ANN — [[simGraphAnn]] grown its second layer
     * (Malkov & Yashunin's multi-layer descent). Layer 1 is the
@@ -735,8 +731,7 @@ object SimilarityQueries {
       "row_number() OVER (PARTITION BY cid ORDER BY vec_id) AS drn FROM l1) WHERE drn <= 8), " +
       IvfSql.probeCells("pcid") + ", " +
       IvfSql.beam("SELECT DISTINCT pc.probe, dl.cand FROM pc JOIN dl ON dl.cid = pc.pcid",
-        ("ed1", 2, ""), ("ed0", 2, " UNION SELECT probe, probe AS cand FROM p"), ("ed0", 4, ""))),
-    tier = "E")
+        ("ed1", 2, ""), ("ed0", 2, " UNION SELECT probe, probe AS cand FROM p"), ("ed0", 4, ""))))
 
   val defs: Seq[(String, QueryDef)] = Seq(
 
@@ -762,8 +757,7 @@ object SimilarityQueries {
               |SELECT a.vec_id AS probe, b.vec_id AS cand, $cosR AS sim,
               |row_number() OVER (PARTITION BY a.vec_id ORDER BY $cosR DESC, b.vec_id) AS rn
               |FROM e a JOIN e b ON a.vec_id < 10 AND b.vec_id <> a.vec_id)
-              |WHERE rn <= 5 ORDER BY probe, sim DESC, cand""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+              |WHERE rn <= 5 ORDER BY probe, sim DESC, cand""".stripMargin.replace("\n", " "))),
 
     // LSH-bucketed ANN: 4 fixed hyperplanes (vectors 0..3) → 16 sign
     // buckets; probes search only their own bucket. The scale path: bucket
@@ -781,8 +775,7 @@ object SimilarityQueries {
               |SELECT a.vec_id AS probe, b.vec_id AS cand, $cosR AS sim,
               |row_number() OVER (PARTITION BY a.vec_id ORDER BY $cosR DESC, b.vec_id) AS rn
               |FROM bkt a JOIN bkt b ON a.vec_id < 10 AND b.bucket = a.bucket AND b.vec_id <> a.vec_id)
-              |WHERE rn <= 3 ORDER BY probe, sim DESC, cand""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+              |WHERE rn <= 3 ORDER BY probe, sim DESC, cand""".stripMargin.replace("\n", " "))),
 
     // IVF-bucketed ANN: the second classic scale path (vs LSH above).
     // 10 fixed centroids (vectors 480..489 — an absolute range, present
@@ -827,8 +820,7 @@ object SimilarityQueries {
               |SELECT a.vec_id AS probe, b.vec_id AS cand, $cosR AS sim,
               |row_number() OVER (PARTITION BY a.vec_id ORDER BY $cosR DESC, b.vec_id) AS rn
               |FROM asg a JOIN asg b ON a.vec_id < 10 AND b.cid = a.cid AND b.vec_id <> a.vec_id)
-              |WHERE rn <= 3 ORDER BY probe, sim DESC, cand""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+              |WHERE rn <= 3 ORDER BY probe, sim DESC, cand""".stripMargin.replace("\n", " "))),
 
     // IVF with nprobe=2 — the standard recall knob sim_ivf_topk lacks:
     // each probe searches its TWO nearest centroid cells instead of only
@@ -866,8 +858,7 @@ object SimilarityQueries {
            |row_number() OVER (PARTITION BY pc.probe ORDER BY $sim DESC, b.vec_id) AS rn
            |FROM pc JOIN asg b ON b.cid = pc.pcid AND b.vec_id <> pc.probe)
            |WHERE rn <= 3 ORDER BY probe, sim DESC, cand""".stripMargin.replace("\n", " ")
-      },
-      tier = "E"),
+      }),
 
     // PRODUCTION spread-ring IVF assignment, oracle-checked. The other
     // declared IVF keys run the oracle ring's aggregate form, so without
@@ -896,8 +887,7 @@ object SimilarityQueries {
               |SELECT cid, CAST(count(*) AS BIGINT) AS members,
               |CAST(sum(vec_id) AS BIGINT) AS sum_vid,
               |min(vec_id) AS min_vid, max(vec_id) AS max_vid
-              |FROM asg GROUP BY cid ORDER BY cid""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+              |FROM asg GROUP BY cid ORDER BY cid""".stripMargin.replace("\n", " "))),
 
     // K-means over embeddings (one Lloyd iteration) — the clustering
     // backbone of semantic dedup and training-mix curation. Scale shape:
@@ -954,8 +944,7 @@ object SimilarityQueries {
               |SELECT a2.cid, CAST(count(*) AS BIGINT) AS n,
               |${proundSql("sqrt(list_dot_product(c1.cv, c1.cv))", 6)} AS cnorm
               |FROM a2 JOIN c1 ON a2.cid = c1.cid
-              |GROUP BY a2.cid, c1.cv ORDER BY a2.cid""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+              |GROUP BY a2.cid, c1.cv ORDER BY a2.cid""".stripMargin.replace("\n", " "))),
 
     // Embedding near-dup: bounded candidate set, cosine threshold.
     "dedup_embedding_cosine" -> QueryDef(
@@ -979,8 +968,7 @@ object SimilarityQueries {
               |SELECT v1, v2, sim FROM (
               |SELECT a.vec_id AS v1, b.vec_id AS v2, $cosR AS sim
               |FROM e a JOIN e b ON a.vec_id < 500 AND b.vec_id > a.vec_id)
-              |WHERE sim >= 0.3 ORDER BY sim DESC, v1, v2 LIMIT 500""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+              |WHERE sim >= 0.3 ORDER BY sim DESC, v1, v2 LIMIT 500""".stripMargin.replace("\n", " "))),
 
     "dedup_semantic" -> dedupSemantic(atOracle),
     "dedup_semantic_spread" -> dedupSemantic(atSqrtN),
@@ -994,8 +982,7 @@ object SimilarityQueries {
           .agg(approx_count_distinct(col("user_id"), 0.01).as("approx_users"), cnt("cnt"))
           .orderBy(col("event_type"))
       },
-      oracle = None,
-      tier = "E"),
+      oracle = None),
 
     // ANN recall evaluation — the quality gate every approximate index
     // ships with: grade the LSH pipeline's top-3 against the brute-force
@@ -1062,8 +1049,7 @@ object SimilarityQueries {
               |FROM (SELECT DISTINCT probe FROM truth) p
               |LEFT JOIN nc ON p.probe = nc.probe
               |LEFT JOIN h ON p.probe = h.probe
-              |ORDER BY p.probe""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+              |ORDER BY p.probe""".stripMargin.replace("\n", " "))),
 
     // Symmetric int8 quantization of embeddings + reconstruction error —
     // the compression step a 100 TB ANN corpus runs before indexing (4×
@@ -1098,8 +1084,7 @@ object SimilarityQueries {
               |${proundSql(
                  "list_reduce(list_transform(v, x -> (x - floor(x * (127.0 / amax) + 0.5) / (127.0 / amax)) * (x - floor(x * (127.0 / amax) + 0.5) / (127.0 / amax))), (a, b) -> a + b) / CAST(dim AS DOUBLE)",
                  10)} AS mse_r
-              |FROM s WHERE amax > 0 ORDER BY vec_id""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+              |FROM s WHERE amax > 0 ORDER BY vec_id""".stripMargin.replace("\n", " "))),
 
     // Product quantization (Jégou et al., the other classic vector
     // compressor beside scalar int8 above): split the 64-d embedding into
@@ -1151,8 +1136,7 @@ object SimilarityQueries {
               |row_number() OVER (PARTITION BY vec_id, m ORDER BY pd, cid) AS rn FROM d) WHERE rn = 1)
               |SELECT m, cid AS code, CAST(count(*) AS BIGINT) AS members,
               |${proundSql("CAST(sum(CAST(" + proundSql("pd", 6) + " AS DECIMAL(28,6))) AS DOUBLE) / CAST(count(*) AS DOUBLE)", 6)} AS mean_err
-              |FROM asg GROUP BY m, cid ORDER BY m, code""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+              |FROM asg GROUP BY m, cid ORDER BY m, code""".stripMargin.replace("\n", " "))),
 
     // PQ ASYMMETRIC DISTANCE search (Jégou et al., PAMI'11) — the query
     // step that makes product quantization THE billion-scale ANN method:
@@ -1201,8 +1185,7 @@ object SimilarityQueries {
               |SELECT probe, cand, adist,
               |row_number() OVER (PARTITION BY probe ORDER BY adist, cand) AS rn
               |FROM adc WHERE probe <> cand) WHERE rn <= 3
-              |ORDER BY probe, adist, cand""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+              |ORDER BY probe, adist, cand""".stripMargin.replace("\n", " "))),
 
     // Maximum-inner-product search via the augmented-vector reduction
     // (Bachrach et al. / Shrivastava-Li): MIPS is NOT cosine — norms
@@ -1268,8 +1251,7 @@ object SimilarityQueries {
               |row_number() OVER (PARTITION BY pr.probe
               |ORDER BY ${proundSql("list_dot_product(pr.pa, b.cva)", 6)} DESC, b.vec_id) AS rn
               |FROM pr JOIN bkt b ON b.bucket = pr.pbk AND b.vec_id <> pr.probe)
-              |WHERE rn <= 3 ORDER BY probe, ip DESC, cand""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+              |WHERE rn <= 3 ORDER BY probe, ip DESC, cand""".stripMargin.replace("\n", " "))),
 
     // Two-stage retrieve-then-rerank ANN — the IVFADC serving pipeline
     // (Jégou et al., PAMI'11) and the production composition of every
@@ -1335,8 +1317,7 @@ object SimilarityQueries {
            |row_number() OVER (PARTITION BY sl.probe ORDER BY $rsim DESC, sl.cand) AS rn2
            |FROM sl JOIN e ce ON ce.vec_id = sl.cand JOIN e pe ON pe.vec_id = sl.probe)
            |WHERE rn2 <= 3 ORDER BY probe, sim DESC, cand""".stripMargin.replace("\n", " ")
-      },
-      tier = "E"),
+      }),
 
     "sim_graph_ann" -> simGraphAnn(atOracle),
     "sim_graph_hnsw" -> simGraphHnsw(atOracle),
@@ -1394,8 +1375,7 @@ object SimilarityQueries {
            |FROM (SELECT probe, true_label, label,
            |row_number() OVER (PARTITION BY probe ORDER BY votes DESC, label) AS vr
            |FROM v) WHERE vr = 1 ORDER BY probe""".stripMargin.replace("\n", " ")
-      },
-      tier = "E"),
+      }),
 
     // PORTABLE HyperLogLog — the oracle-checked twin of the engine-native
     // approx_distinct_hll (which is rows-only because Spark's HLL++ and
@@ -1415,7 +1395,7 @@ object SimilarityQueries {
     "sketch_hll_portable" -> QueryDef(
       (spark, dir) => {
         val m = 64
-        val h = "cast(conv(substr(md5(cast(event_id as string)), 1, 15), 16, 10) as bigint)"
+        val h = hx("cast(event_id as string)")
         val regs = t(spark, dir, "events")
           .select(col("event_type"), expr(s"$h % $m").as("reg"),
             expr(s"$h div $m").as("v"))
@@ -1438,7 +1418,7 @@ object SimilarityQueries {
           .orderBy(col("event_type"))
       },
       Some {
-        val h = "CAST('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 15) AS BIGINT)"
+        val h = hxSql("CAST(event_id AS VARCHAR)")
         val est = "0.709 * 4096.0 / (CAST(z_scaled AS DOUBLE) / 36028797018963968.0)"
         s"""WITH r AS (SELECT event_type, $h % 64 AS reg,
            |least(bit_count((($h // 64) & -($h // 64)) - 1) + 1, 50) AS rho
@@ -1455,8 +1435,7 @@ object SimilarityQueries {
            |${proundSql(s"($est - CAST(exact_n AS DOUBLE)) / CAST(exact_n AS DOUBLE)", 4)} AS rel_err
            |FROM s JOIN ex ON s.event_type = ex.event_type
            |ORDER BY s.event_type""".stripMargin.replace("\n", " ")
-      },
-      tier = "E"),
+      }),
 
     "sample_diverse_cells" -> sampleDiverseCells(atOracle),
     "sample_diverse_cells_spread" -> sampleDiverseCells(atSqrtN),

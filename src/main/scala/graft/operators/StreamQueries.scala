@@ -48,8 +48,7 @@ object StreamQueries {
       Some("""SELECT event_id, user_id, c1h FROM (SELECT event_id, user_id,
              |CAST(count(*) OVER (PARTITION BY user_id ORDER BY CAST(floor(epoch(ts)) AS BIGINT)
              |RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW) AS BIGINT) AS c1h
-             |FROM events) ORDER BY event_id LIMIT 500""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |FROM events) ORDER BY event_id LIMIT 500""".stripMargin.replace("\n", " "))),
 
     // Sessionization: gap > 30 min starts a new session. Streaming twin:
     // session_window($"ts", "30 minutes") — see graft.streaming.StreamTwins.
@@ -69,8 +68,7 @@ object StreamQueries {
              |FROM (SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT)
              |- lag(CAST(floor(epoch(ts)) AS BIGINT), 1)
              |OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap_s
-             |FROM events)) GROUP BY user_id ORDER BY user_id""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |FROM events)) GROUP BY user_id ORDER BY user_id""".stripMargin.replace("\n", " "))),
 
     // Watermark model: rows older than max(ts) − 1h are "late". Streaming
     // twin: withWatermark("ts", "1 hour") drops them; batch counts both.
@@ -86,8 +84,7 @@ object StreamQueries {
       Some("""SELECT
              |CAST(sum(CASE WHEN ts >= cutoff THEN 1 ELSE 0 END) AS BIGINT) AS on_time,
              |CAST(sum(CASE WHEN ts < cutoff THEN 1 ELSE 0 END) AS BIGINT) AS late
-             |FROM events, (SELECT max(ts) - INTERVAL 1 HOUR AS cutoff FROM events)""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |FROM events, (SELECT max(ts) - INTERVAL 1 HOUR AS cutoff FROM events)""".stripMargin.replace("\n", " "))),
 
     // Stream-stream interval join (attribution): each purchase pairs with
     // the same user's views in the 2 h BEFORE it. The batch form is a
@@ -120,8 +117,7 @@ object StreamQueries {
              |AND p.event_type = 'purchase' AND v.event_type = 'view'
              |AND CAST(floor(epoch(v.ts)) AS BIGINT) >= CAST(floor(epoch(p.ts)) AS BIGINT) - 7200
              |AND CAST(floor(epoch(v.ts)) AS BIGINT) <= CAST(floor(epoch(p.ts)) AS BIGINT)
-             |ORDER BY p_id, v_id LIMIT 500""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |ORDER BY p_id, v_id LIMIT 500""".stripMargin.replace("\n", " "))),
 
     // Session-level metrics — one step past stream_session_window's
     // per-user session COUNT: materialize each session (running sum of the
@@ -157,8 +153,7 @@ object StreamQueries {
              |OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap_s
              |FROM events))
              |GROUP BY user_id, sid
-             |ORDER BY dur_s DESC, user_id, sid LIMIT 100""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |ORDER BY dur_s DESC, user_id, sid LIMIT 100""".stripMargin.replace("\n", " "))),
 
     // Streaming dedup semantics (`dropDuplicatesWithinWatermark`) in its
     // batch-equivalent declared form: an at-least-once transport can
@@ -185,8 +180,7 @@ object StreamQueries {
       Some("""SELECT CAST(floor(epoch(date_trunc('hour', ts))) AS BIGINT) AS h,
              |CAST(count(*) AS BIGINT) AS raw_events,
              |CAST(count(DISTINCT (user_id, event_type)) AS BIGINT) AS deduped
-             |FROM events GROUP BY 1 ORDER BY h""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |FROM events GROUP BY 1 ORDER BY h""".stripMargin.replace("\n", " "))),
 
     // Windowed trending top-k — "top event types this hour", the
     // dashboard query every event stream serves. Batch form: tumbling
@@ -217,8 +211,7 @@ object StreamQueries {
              |FROM (SELECT CAST(floor(epoch(date_trunc('hour', ts))) AS BIGINT) AS h,
              |event_type, CAST(count(*) AS BIGINT) AS cnt
              |FROM events GROUP BY 1, 2))
-             |WHERE rnk <= 3 ORDER BY h, rnk""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |WHERE rnk <= 3 ORDER BY h, rnk""".stripMargin.replace("\n", " "))),
 
     // Error-rate spike detection — the alerting query a stream monitor
     // runs: an hour is a SPIKE when its error count exceeds 2× the mean
@@ -266,6 +259,5 @@ object StreamQueries {
              |GROUP BY cur.h, cur.errors)
              |SELECT h, errors, trail_sum,
              |(errors * trail_n > trail_sum * 2) AS spike
-             |FROM tr WHERE trail_n >= 3 ORDER BY h""".stripMargin.replace("\n", " ")),
-      tier = "E"))
+             |FROM tr WHERE trail_n >= 3 ORDER BY h""".stripMargin.replace("\n", " "))))
 }

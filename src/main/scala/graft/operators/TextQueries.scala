@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core._
 
@@ -13,9 +14,8 @@ import graft.core._
   * aggregate/join. The only shuffles are on group keys (lang/source) or
   * LSH band keys, never on raw text.
   *
-  * Portable hashing: engines disagree on built-in `hash()` (Murmur3 vs
-  * DuckDB's), so cross-engine-checked queries use the first 15 hex digits
-  * of md5 as a 60-bit integer — bit-identical everywhere. The
+  * Portable hashing: cross-engine-checked queries use `core.hx` /
+  * `hxSql` (15 hex digits of md5 as a 60-bit integer). The
   * Spark-optimized library variants in graft.functions.* use xxhash64
   * (cheaper, codegen'd) and are exercised by ScalaTest instead.
   */
@@ -34,11 +34,6 @@ object TextQueries {
   private def docsSpread(spark: SparkSession, dir: String): DataFrame =
     tSpread(spark, dir, "documents", "doc_id")
 
-  /** 60-bit portable hash, Spark SQL form. `$s` is an expression string. */
-  private def hx(s: String) = s"cast(conv(substr(md5($s), 1, 15), 16, 10) as bigint)"
-  /** Same hash, DuckDB form. */
-  private def hxDuck(s: String) = s"CAST('0x' || substr(md5($s), 1, 15) AS BIGINT)"
-
   /** Overflow-proof per-language prefilter threshold for balanced sampling:
     * `least(2^60 div n, 2^60 div (quota·4) + 1) · (quota·4)`. For
     * `n ≥ quota·4` the `least` picks the plain quotient (the historical
@@ -55,8 +50,81 @@ object TextQueries {
     s"least(1152921504606846976L div $nCol, ${cap}L) * ${spread}L"
   }
 
-  private val Stopwords = Seq("the", "a", "data", "value", "row")
   private def inList(ws: Seq[String]) = ws.map(w => s"'$w'").mkString("(", ", ", ")")
+  /** The stopword list of the gopher rule and the quality score. */
+  private val Stopwords = inList(Seq("the", "a", "data", "value", "row"))
+
+  // ------------------------------------------------------------------
+  // Per-document text signals, each written once: the Spark SQL form
+  // here, its DuckDB twin in [[TextSql]]. Every key that computes a
+  // signal reads it from here.
+  // ------------------------------------------------------------------
+
+  /** The `k`-word grams of a split-words column `w`, each passed
+    * through `f` (e.g. [[graft.core.hx]]). */
+  private def wordGrams(k: Int, f: String => String = identity): String =
+    s"transform(sequence(1, size(w) - ${k - 1}), j -> ${f(s"concat_ws(' ', slice(w, j, $k))")})"
+
+  /** `docs` with their words `w` and the gopher-rule signals, all
+    * BIGINT: word count `nw`, summed word length `chars`, stopwords
+    * `stopc` and purely alphabetic words `alphac`. */
+  private[graft] def gopherSignals(docs: DataFrame): DataFrame =
+    docs.withColumn("w", split(col("text"), " ")).select(col("*"),
+      size(col("w")).cast("long").as("nw"),
+      expr("aggregate(w, cast(0 as bigint), (a, x) -> a + length(x))").as("chars"),
+      expr(s"cast(size(filter(w, x -> x IN $Stopwords)) as bigint)").as("stopc"),
+      expr("cast(size(filter(w, x -> x rlike '^[a-z]+$')) as bigint)").as("alphac"))
+
+  /** The gopher pass rule over [[gopherSignals]]: word count in
+    * [20, 100000], mean word length in [3, 10], ≥ 80% purely alphabetic
+    * words, ≥ 2 stopwords. Integer arithmetic only (cross-multiplied
+    * bounds, not float ratios), so the decision is bit-identical on
+    * both engines. */
+  private[graft] def gopherPass: Column =
+    col("nw") >= 20 && col("nw") <= 100000 &&
+      col("chars") >= col("nw") * 3 && col("chars") <= col("nw") * 10 &&
+      col("alphac") * 5 >= col("nw") * 4 && col("stopc") >= 2
+
+  /** The quality score of a doc with words `w`: half length norm
+    * (`n_chars / 500`, capped at 1), half stopword share, pround(4)ed.
+    * Every operand is DOUBLE: bare `0.5`/`500.0` literals parse as
+    * DECIMAL in Spark SQL (and DuckDB), silently switching the whole
+    * expression to decimal arithmetic. */
+  private def qualityScore: Column = expr(s"cast(${proundSql(
+    "0.5 * least(1.0, cast(n_chars as double) / 500.0) + " +
+      s"0.5 * (cast(size(filter(w, x -> x IN $Stopwords)) as double) / cast(size(w) as double))",
+    4)} as double)")
+
+  /** Run boundaries of the sorted array column `a`: position 1, every i
+    * where `a[i]` differs from `a[i-1]`, and the one-past-end sentinel. */
+  private def runBounds(a: String): String =
+    s"concat(array(1), filter(sequence(2, size($a)), i -> element_at($a, i) != " +
+      s"element_at($a, i - 1)), array(size($a) + 1))"
+  /** The run lengths between consecutive `bounds`. */
+  private val runLengths =
+    "transform(sequence(1, size(bounds) - 1), j -> element_at(bounds, j + 1) - element_at(bounds, j))"
+
+  /** The md5 digests of a split-words column `w`'s 10-word segments —
+    * the stand-in for a paragraph split in this newline-free corpus. */
+  private val paragraphDigests = "transform(sequence(0, cast(ceil(size(w) / 10.0) as int) - 1), " +
+    "i -> md5(concat_ws(' ', slice(w, i * 10 + 1, 10))))"
+
+  /** The ≥ 3-word docs' distinct shingle sets `sh`, probed by docs
+    * `d1 < 20` of the same language under `pair`: the probe side
+    * `(d1, l1, sh1)` broadcasts, so the corpus never shuffles (its
+    * only equi-key, `lang`, has 5 values — a shuffle join would funnel
+    * the corpus into ≤ 5 partitions). Adds the shared count `inter`. */
+  private def probeShingles(spark: SparkSession, dir: String, pair: Column): DataFrame = {
+    val sh = t(spark, dir, "documents")
+      .withColumn("w", split(col("text"), " "))
+      .filter(size(col("w")) >= 3)
+      .withColumn("sh", expr(s"array_distinct(${wordGrams(3)})"))
+      .select(col("doc_id"), col("lang"), col("sh"))
+    val probes = sh.filter(col("doc_id") < 20)
+      .select(col("doc_id").as("d1"), col("lang").as("l1"), col("sh").as("sh1"))
+    broadcast(probes).join(sh, col("lang") === col("l1") && pair)
+      .withColumn("inter", size(array_intersect(col("sh1"), col("sh"))).cast("double"))
+  }
 
   // w-bit SimHash over word hashes: bit b is the majority vote of bit b
   // across all word hashes. Generated from ONE loop for both engines.
@@ -79,15 +147,12 @@ object TextQueries {
   // verify. [[LshSql]] is the DuckDB twin, stage for stage.
   // ------------------------------------------------------------------
 
-  /** The 3-word shingles of a split-words column `w`, Spark SQL form. */
-  private val shingles3 = "transform(sequence(1, size(w) - 2), j -> concat_ws(' ', slice(w, j, 3)))"
-
   /** Docs of ≥ 3 words with their words `w` and 3-word `shingles`;
     * shorter docs have no shingles and take no part in LSH. */
   private def shingled(docs: DataFrame): DataFrame =
     docs.withColumn("w", split(col("text"), " "))
       .filter(size(col("w")) >= 3)
-      .withColumn("shingles", expr(shingles3))
+      .withColumn("shingles", expr(wordGrams(3)))
 
   /** Distinct shingle sets `(doc_id, s)`, the lookup side of [[verified]]. */
   private def shingleSets(sh: DataFrame): DataFrame =
@@ -269,8 +334,7 @@ object TextQueries {
     def build = t(spark, dir, "documents")
       .withColumn("w", split(col("text"), " "))
       .filter(size(col("w")) >= 6) // ≥ 4 gram-hashes needs ≥ 6 words
-      .withColumn("gh", expr(
-        s"transform(sequence(1, size(w) - 2), j -> ${hx("concat_ws(' ', slice(w, j, 3))")})"))
+      .withColumn("gh", expr(wordGrams(3, hx)))
       .filter(size(col("gh")) >= 4)
       .select(col("doc_id"), size(col("gh")).as("n_grams"), expr(
         "array_distinct(transform(sequence(1, size(gh) - 3), i -> array_min(slice(gh, i, 4))))")
@@ -289,18 +353,12 @@ object TextQueries {
     * keep the real single-query plan (scopedPersist).
     */
   private def e2eFeatures(spark: SparkSession, dir: String): DataFrame = {
-    val stops = inList(Stopwords)
-    val gram5 =
-      "transform(sequence(1, size(w) - 4), j -> concat_ws(' ', slice(w, j, 5)))"
     val featureCols: Seq[Column] =
-      Seq(col("doc_id"), col("lang"), col("nw"),
-        expr("aggregate(w, cast(0 as bigint), (a, x) -> a + length(x))").as("chars"),
-        expr(s"cast(size(filter(w, x -> x IN $stops)) as bigint)").as("stopc"),
-        expr("cast(size(filter(w, x -> x rlike '^[a-z]+$')) as bigint)").as("alphac"),
+      Seq("doc_id", "lang", "nw", "chars", "stopc", "alphac").map(col) ++ Seq(
         md5(col("text")).as("digest"),
         array_distinct(col("sh")).as("s")) ++
       (0 until 8).map(i => mhLane("dg", i).as(s"mh$i")) ++ Seq(
-        when(col("nw") >= 5, array_distinct(expr(gram5)))
+        when(col("nw") >= 5, array_distinct(expr(wordGrams(5))))
           .otherwise(expr("cast(array() as array<string>)")).as("g5"),
         expr(hx("cast(doc_id as string)")).as("h"))
     // NOT scan-spread: this relation is checkpointed once and
@@ -310,29 +368,74 @@ object TextQueries {
     // with the spread; stage walls sum 26 s over 41 stages). The build
     // cost sits in the unmeasured warmup under the shared pipeline, and
     // at cluster scale the scan parallelizes naturally.
-    def build = t(spark, dir, "documents")
-      .withColumn("w", split(col("text"), " "))
-      .withColumn("nw", size(col("w")).cast("long"))
-      .withColumn("sh", when(col("nw") >= 3, expr(shingles3))
+    def build = gopherSignals(t(spark, dir, "documents"))
+      .withColumn("sh", when(col("nw") >= 3, expr(wordGrams(3)))
         .otherwise(expr("cast(array() as array<string>)")))
       .withColumn("dg", expr("transform(sh, s -> md5(s))"))
       .select(featureCols: _*)
     sharedOr(spark, dir, "text.e2e")(build)
   }
 
+  // The curation stage chain both pipeline_*_e2e keys compose over
+  // [[e2eFeatures]]; [[TextSql]] holds its DuckDB twin.
+
+  /** The first doc of each content digest in `df`, as an eager scoped
+    * checkpoint. A window min over digest takes one exchange where a
+    * groupBy(digest) plus a (digest, doc_id) semi-join took two on
+    * different keys; the rows are the same. */
+  private def firstOfContent(df: DataFrame): DataFrame =
+    df.withColumn("mind", min(col("doc_id")).over(Window.partitionBy("digest")))
+      .filter(col("doc_id") === col("mind")).drop("mind")
+      .scopedCheckpoint()
+
+  /** Ids of trainable docs (doc_id ≥ 10) that share a distinct 5-gram
+    * with the eval split (doc_id < 10). Contamination is a per-doc
+    * predicate, so the hit list comes from the whole feature relation
+    * with a map-side explode and a broadcast semi join — the gram
+    * arrays never shuffle, and restricting it to a stage's survivors
+    * afterwards equals computing it over them. */
+  private def contaminated(base: DataFrame): DataFrame = {
+    val evalG = base.filter(col("doc_id") < 10)
+      .select(explode(col("g5")).as("gram")).distinct()
+    base.filter(col("doc_id") >= 10)
+      .select(col("doc_id"), explode(col("g5")).as("gram"))
+      .join(broadcast(evalG), Seq("gram"), "left_semi")
+      .select("doc_id").distinct()
+  }
+
+  /** The feature relation's minhash lanes `(doc_id, mh0…mh7)`. */
+  private def e2eLanes(base: DataFrame): DataFrame =
+    base.select(col("doc_id") +: (0 until 8).map(i => col(s"mh$i")): _*)
+
+  /** `df` without the docs listed in `ids(doc_id)`. */
+  private def without(df: DataFrame, ids: DataFrame): DataFrame =
+    df.join(ids.hint("shuffle_hash"), Seq("doc_id"), "left_anti")
+
+  /** `e` without the docs on the `side` (`d1` or `d2`) of a verified
+    * near-dup pair (ja ≥ 0.5), persisted. */
+  private def nearDupFree(e: DataFrame, pairs: DataFrame, side: String): DataFrame =
+    without(e, pairs.filter(col("ja") >= 0.5).select(col(side).as("doc_id")).distinct())
+      .scopedPersist()
+
+  /** The survivor funnel of named stages: each stage's survivor count
+    * and id sum (which pins the exact surviving set), by stage name. */
+  private def funnel(stages: (String, DataFrame)*): DataFrame =
+    stages.map { case (nm, df) =>
+      df.agg(count(lit(1)).cast("long").as("survivors"),
+        coalesce(sum(col("doc_id")), lit(0L)).cast("long").as("id_sum"))
+        .select(lit(nm).as("stage"), col("survivors"), col("id_sum"))
+    }.reduce(_ unionByName _).orderBy(col("stage"))
+
   /** DuckDB twin of the LSH kernel, one CTE per stage. `x` is the list
     * of extra columns a consumer carries through the stages (e.g.
     * "isd, "). */
   private object LshSql {
-    /** 3-word shingles of the word list `w`. */
-    def shingles(w: String): String =
-      s"list_transform(range(1, len($w) - 1), j -> $w[j] || ' ' || $w[j+1] || ' ' || $w[j+2])"
     /** `docs`: the ≥ 3-word documents with `cols` before their words `w`. */
     def docs(cols: String = ""): String =
       s"docs AS (SELECT doc_id, ${cols}string_split(text, ' ') AS w FROM documents " +
         "WHERE len(string_split(text, ' ')) >= 3)"
     def sh(src: String, x: String = ""): String =
-      s"sh AS (SELECT doc_id, $x${shingles("w")} AS shingles FROM $src)"
+      s"sh AS (SELECT doc_id, $x${TextSql.wordGrams("w", 3)} AS shingles FROM $src)"
     def shs(src: String = "sh"): String =
       s"shs AS (SELECT doc_id, list_distinct(shingles) AS s FROM $src)"
     /** The 8 minhash lanes of a `shingles` list ([[mhLane]]). */
@@ -368,6 +471,75 @@ object TextQueries {
     * `pairs(d1, d2, ja)` relation (no trailing SELECT — callers append).
     */
   private val verifiedCtes: String = s"WITH ${LshSql.docs("lang, ")}, ${LshSql.verified("docs")}"
+
+  /** DuckDB twins of the per-document text signals and of the curation
+    * stage chain. */
+  private object TextSql {
+    /** [[TextQueries.wordGrams]] over the word list `w`. */
+    def wordGrams(w: String, k: Int, f: String => String = identity): String = {
+      val end = if (k > 2) s"len($w) - ${k - 2}" else s"len($w)"
+      val gram = (0 until k).map(i => if (i == 0) s"$w[j]" else s"$w[j+$i]").mkString(" || ' ' || ")
+      s"list_transform(range(1, $end), j -> ${f(gram)})"
+    }
+    /** [[gopherSignals]]' columns over the word list `w`. */
+    val gopherSignals: String = Seq("CAST(len(w) AS BIGINT) AS nw",
+      "CAST(list_sum(list_transform(w, x -> length(x))) AS BIGINT) AS chars",
+      s"CAST(len(list_filter(w, x -> x IN $Stopwords)) AS BIGINT) AS stopc",
+      "CAST(len(list_filter(w, x -> regexp_matches(x, '^[a-z]+$'))) AS BIGINT) AS alphac").mkString(", ")
+    /** [[gopherPass]]. */
+    val gopherPass: String = "nw >= 20 AND nw <= 100000 AND chars >= nw * 3 AND chars <= nw * 10 " +
+      "AND alphac * 5 >= nw * 4 AND stopc >= 2"
+    /** [[qualityScore]] over `documents`' columns. */
+    val qualityScore: String = s"CAST(${proundSql("0.5 * least(1.0, CAST(n_chars AS DOUBLE) / 500.0) + " +
+      s"0.5 * (CAST(len(list_filter(string_split(text, ' '), x -> x IN $Stopwords)) AS DOUBLE) " +
+      "/ CAST(len(string_split(text, ' ')) AS DOUBLE))", 4)} AS DOUBLE)"
+    /** [[runBounds]] of the sorted list `a`. */
+    def runBounds(a: String): String = "list_concat(list_concat([CAST(1 AS BIGINT)], " +
+      s"list_filter(range(2, len($a) + 1), i -> $a[i] != $a[i-1])), [CAST(len($a) + 1 AS BIGINT)])"
+    /** [[runLengths]]. */
+    val runLengths = "list_transform(range(1, len(bounds)), j -> bounds[j+1] - bounds[j])"
+    /** The 10-word segment positions of the word list `w`, and
+      * [[paragraphDigests]] over them. */
+    val paragraphPos = "range(0, CAST(ceil(len(w) / 10.0) AS BIGINT))"
+    val paragraphDigests =
+      s"list_transform($paragraphPos, i -> md5(array_to_string(w[(i*10+1):(i*10+10)], ' ')))"
+    /** `sh`: [[probeShingles]]' shingle sets. */
+    val probeShingles: String = s"sh AS (SELECT doc_id, lang, list_distinct(${wordGrams("w", 3)}) AS sh " +
+      "FROM (SELECT doc_id, lang, string_split(text, ' ') AS w FROM documents " +
+      "WHERE len(string_split(text, ' ')) >= 3))"
+    /** [[winnowedDocs]] as `(doc_id, gh, fps)`. */
+    val winnowed: String = "SELECT doc_id, gh, list_distinct(list_transform(range(1, len(gh) - 2), " +
+      s"i -> list_min(gh[i:i+3]))) AS fps FROM (SELECT doc_id, ${wordGrams("w", 3, hxSql)} AS gh " +
+      "FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents " +
+      "WHERE len(string_split(text, ' ')) >= 6)) WHERE len(gh) >= 4"
+
+    /** `f`: [[e2eFeatures]]' scalar columns, with the words `w`. */
+    val features: String = s"f AS (SELECT doc_id, lang, md5(text) AS digest, $gopherSignals, " +
+      s"w, ${hxSql("CAST(doc_id AS VARCHAR)")} AS h FROM (SELECT doc_id, lang, text, " +
+      "string_split(text, ' ') AS w FROM documents))"
+    /** `g`: the gopher survivors of `src`. */
+    def gopher(src: String): String = s"g AS (SELECT * FROM $src WHERE $gopherPass)"
+    /** `e`: [[firstOfContent]] of `src`. */
+    def firstOfContent(src: String): String =
+      s"k3 AS (SELECT digest, min(doc_id) AS doc_id FROM $src GROUP BY digest), " +
+        s"e AS (SELECT $src.* FROM $src JOIN k3 ON $src.digest = k3.digest AND $src.doc_id = k3.doc_id)"
+    /** `nd`: [[nearDupFree]] of `e`. */
+    def nearDupFree(side: String): String =
+      s"drop4 AS (SELECT DISTINCT $side FROM pairs WHERE ja >= 0.5), " +
+        s"nd AS (SELECT e.* FROM e LEFT JOIN drop4 ON e.doc_id = drop4.$side WHERE drop4.$side IS NULL)"
+    private val g5 = s"list_distinct(${wordGrams("w", 5)})"
+    /** `out`: the docs of `nd` not [[contaminated]]. */
+    def decontaminated(out: String): String =
+      s"evg AS (SELECT DISTINCT unnest($g5) AS gram FROM f WHERE doc_id < 10 AND nw >= 5), " +
+        s"ndg AS (SELECT doc_id, unnest($g5) AS gram FROM nd WHERE nw >= 5), " +
+        "hit AS (SELECT DISTINCT ndg.doc_id FROM ndg JOIN evg USING (gram)), " +
+        s"$out AS (SELECT nd.* FROM nd LEFT JOIN hit ON nd.doc_id = hit.doc_id WHERE hit.doc_id IS NULL)"
+    /** [[funnel]] over `(relation, stage name)` pairs. */
+    def funnel(stages: (String, String)*): String = stages.map { case (src, nm) =>
+      s"SELECT '$nm' AS stage, CAST(count(*) AS BIGINT) AS survivors, " +
+        s"CAST(coalesce(sum(doc_id), 0) AS BIGINT) AS id_sum FROM $src"
+    }.mkString("SELECT stage, survivors, id_sum FROM ( ", " UNION ALL ", ") ORDER BY stage")
+  }
 
   // ------------------------------------------------------------------
   // Shared machinery of the exact-Jaccard lane (dedup_jaccard_prefix)
@@ -569,8 +741,7 @@ object TextQueries {
       Some(s"""SELECT lang, CAST(count(*) AS BIGINT) AS docs,
              |CAST(sum(n_chars) AS BIGINT) AS chars,
              |${proundSql("CAST(sum(n_chars) AS DOUBLE) / CAST(count(*) AS DOUBLE)", 2)} AS avg_chars
-             |FROM documents GROUP BY lang ORDER BY lang""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |FROM documents GROUP BY lang ORDER BY lang""".stripMargin.replace("\n", " "))),
 
     // Token counting: whitespace words, distinct words, and a BPE-ish
     // estimate (chars/4 is the classic subword-token rule of thumb).
@@ -588,8 +759,7 @@ object TextQueries {
              |CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
              |CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) AS n_distinct,
              |CAST(ceil(n_chars / 4.0) AS BIGINT) AS n_tok_est
-             |FROM documents ORDER BY doc_id LIMIT 300""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |FROM documents ORDER BY doc_id LIMIT 300""".stripMargin.replace("\n", " "))),
 
     // BPE-ish subword tokenization via a GPT-2-style pre-tokenizer regex
     // (letter runs / digit runs / punctuation runs, each with optional
@@ -609,33 +779,19 @@ object TextQueries {
       Some("""SELECT doc_id,
              |CAST(len(regexp_extract_all(text, ' ?[a-z]+| ?[0-9]+| ?[^ a-z0-9]+', 0)) AS BIGINT) AS n_bpe,
              |CAST(len(string_split(text, ' ')) AS BIGINT) AS n_ws
-             |FROM documents ORDER BY doc_id LIMIT 300""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |FROM documents ORDER BY doc_id LIMIT 300""".stripMargin.replace("\n", " "))),
 
     // Quality scoring: length norm + stopword ratio (punctuation ratio is
     // degenerate on this corpus — synthetic text has none).
     "text_quality_score" -> QueryDef(
       (spark, dir) => {
-        // every operand forced to DOUBLE on both sides: bare `0.5`/`500.0`
-        // literals parse as DECIMAL in Spark SQL (and DuckDB), silently
-        // switching the whole expression to decimal arithmetic.
-        val stops = inList(Stopwords)
-        val score = s"0.5 * least(1.0, cast(n_chars as double) / 500.0) + " +
-          s"0.5 * (cast(size(filter(w, x -> x IN $stops)) as double) / cast(size(w) as double))"
         t(spark, dir, "documents")
           .withColumn("w", split(col("text"), " "))
-          .select(col("doc_id"),
-            expr(s"cast(${proundSql(score, 4)} as double)").as("quality"))
+          .select(col("doc_id"), qualityScore.as("quality"))
           .orderBy(col("doc_id"))
           .limit(300)
       },
-      Some(s"""SELECT doc_id, CAST(${proundSql(
-               """0.5 * least(1.0, CAST(n_chars AS DOUBLE) / 500.0) +
-               |0.5 * (CAST(len(list_filter(string_split(text, ' '), x -> x IN """.stripMargin.replace("\n", " ")
-                 + inList(Stopwords) +
-               ")) AS DOUBLE) / CAST(len(string_split(text, ' ')) AS DOUBLE))", 4)} AS DOUBLE) AS quality
-              |FROM documents ORDER BY doc_id LIMIT 300""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+      Some(s"SELECT doc_id, ${TextSql.qualityScore} AS quality FROM documents ORDER BY doc_id LIMIT 300")),
 
     // Quality-threshold filtering — the curation step that CONSUMES the
     // quality score: keep documents strictly above their language's
@@ -648,13 +804,9 @@ object TextQueries {
     // comparison, so the keep decision is bit-identical across engines.
     "text_quality_filter" -> QueryDef(
       (spark, dir) => {
-        val stops = inList(Stopwords)
-        val score = s"0.5 * least(1.0, cast(n_chars as double) / 500.0) + " +
-          s"0.5 * (cast(size(filter(w, x -> x IN $stops)) as double) / cast(size(w) as double))"
         val scored = t(spark, dir, "documents")
           .withColumn("w", split(col("text"), " "))
-          .select(col("doc_id"), col("lang"),
-            expr(s"cast(${proundSql(score, 4)} as double)").as("q"))
+          .select(col("doc_id"), col("lang"), qualityScore.as("q"))
         val thresholds = scored.groupBy("lang")
           .agg(pround(expr("percentile(q, 0.5)"), 4).as("thr"))
         scored.join(broadcast(thresholds), "lang")
@@ -664,11 +816,7 @@ object TextQueries {
             max(col("thr")).as("thr"))
           .orderBy(col("lang"))
       },
-      Some(s"""WITH scored AS (SELECT doc_id, lang, CAST(${proundSql(
-               """0.5 * least(1.0, CAST(n_chars AS DOUBLE) / 500.0) +
-               |0.5 * (CAST(len(list_filter(string_split(text, ' '), x -> x IN """.stripMargin.replace("\n", " ")
-                 + inList(Stopwords) +
-               ")) AS DOUBLE) / CAST(len(string_split(text, ' ')) AS DOUBLE))", 4)} AS DOUBLE) AS q
+      Some(s"""WITH scored AS (SELECT doc_id, lang, ${TextSql.qualityScore} AS q
               |FROM documents),
               |thr AS (SELECT lang, ${proundSql("quantile_cont(q, 0.5)", 4)} AS thr
               |FROM scored GROUP BY lang)
@@ -676,8 +824,7 @@ object TextQueries {
               |CAST(sum(CASE WHEN q > thr THEN 1 ELSE 0 END) AS BIGINT) AS kept,
               |max(thr) AS thr
               |FROM scored JOIN thr ON scored.lang = thr.lang
-              |GROUP BY scored.lang ORDER BY scored.lang""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+              |GROUP BY scored.lang ORDER BY scored.lang""".stripMargin.replace("\n", " "))),
 
     // Language-ID: marker-word voting with a deterministic tie order. The
     // full character-trigram-profile variant is functions.TextAnalysis
@@ -714,8 +861,7 @@ object TextQueries {
               |len(list_filter(string_split(text, ' '), x -> x IN ${inList(Seq("el", "la", "de"))})) AS s_es,
               |len(list_filter(string_split(text, ' '), x -> x IN ${inList(Seq("der", "die", "und"))})) AS s_de,
               |len(list_filter(string_split(text, ' '), x -> x IN ${inList(Seq("le", "la", "et"))})) AS s_fr
-              |FROM documents)) GROUP BY lang, pred ORDER BY lang, pred""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+              |FROM documents)) GROUP BY lang, pred ORDER BY lang, pred""".stripMargin.replace("\n", " "))),
 
     // Document fingerprinting: canonical bag-of-words fingerprint (sorted
     // distinct words → md5). Rolling-hash variant in functions.TextAnalysis.
@@ -730,8 +876,7 @@ object TextQueries {
       },
       Some("""SELECT lang, CAST(count(*) AS BIGINT) AS docs,
              |CAST(count(DISTINCT md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' '))) AS BIGINT) AS distinct_fp
-             |FROM documents GROUP BY lang ORDER BY lang""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |FROM documents GROUP BY lang ORDER BY lang""".stripMargin.replace("\n", " "))),
 
     // Exact dedup: hash-groupBy on a content digest — the 100 TB-safe way
     // (shuffle carries 16-byte digests, never documents).
@@ -744,8 +889,7 @@ object TextQueries {
       },
       Some("""SELECT source, CAST(count(*) AS BIGINT) AS docs,
              |CAST(count(DISTINCT md5(text)) AS BIGINT) AS uniq_texts
-             |FROM documents GROUP BY source ORDER BY source""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |FROM documents GROUP BY source ORDER BY source""".stripMargin.replace("\n", " "))),
 
     // Near-dup signature (MinHash-lite, SURVEY §2.B): prefix digest.
     "dedup_text_signature" -> QueryDef(
@@ -758,8 +902,7 @@ object TextQueries {
       },
       Some("""SELECT lang, CAST(count(*) AS BIGINT) AS docs,
              |CAST(count(DISTINCT md5(substr(text, 1, 64))) AS BIGINT) AS distinct_sigs
-             |FROM documents GROUP BY lang ORDER BY lang""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |FROM documents GROUP BY lang ORDER BY lang""".stripMargin.replace("\n", " "))),
 
     // Full MinHash + LSH banding: 3-word shingles → 8 minhashes → 4 bands
     // of 2 → band-key self-join → distinct candidate pairs. This is the
@@ -770,8 +913,7 @@ object TextQueries {
       (spark, dir) => lshCandidates(spark, dir).agg(cnt("candidate_pairs")),
       Some(Seq("WITH " + LshSql.docs(), LshSql.sh("docs"), LshSql.mh(), LshSql.bands(),
         LshSql.capped() + " SELECT CAST(count(*) AS BIGINT) AS candidate_pairs FROM ( " +
-          LshSql.pairing("a.doc_id, b.doc_id") + ")").mkString(", ")),
-      tier = "E"),
+          LshSql.pairing("a.doc_id, b.doc_id") + ")").mkString(", "))),
 
     // GREEDY band-owner admission — the BATCH form of streaming
     // incremental near-dedup: a doc is admitted iff, for EVERY one of
@@ -788,7 +930,6 @@ object TextQueries {
     // offline. Declared output: the per-lang admission funnel.
     "dedup_band_admit" -> QueryDef(
       (spark, dir) => {
-        import org.apache.spark.sql.expressions.Window
         // the per-band owner is a window min over the SAME key
         // the old groupBy+shuffle_hash join used — one exchange by k
         // instead of two (guide §2.4: operations keyed the same way share
@@ -822,8 +963,7 @@ object TextQueries {
            |CAST(count(*) - sum(CASE WHEN rej = 0 THEN 1 ELSE 0 END) AS BIGINT) AS rejected
            |FROM adm JOIN documents d ON d.doc_id = adm.doc_id
            |GROUP BY d.lang ORDER BY d.lang""".stripMargin.replace("\n", " ")
-      },
-      tier = "E"),
+      }),
 
     // The COMPLETE dedup pipeline: MinHash → LSH banding → candidate
     // pairs → exact-Jaccard verification — LSH recall plus exact
@@ -841,8 +981,7 @@ object TextQueries {
       Some(s"""$verifiedCtes
            |SELECT CAST(count(*) AS BIGINT) AS candidate_pairs,
            |CAST(sum(CASE WHEN ja >= 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS verified_pairs
-           |FROM pairs""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+           |FROM pairs""".stripMargin.replace("\n", " "))),
 
     // The ACTIONABLE end of the dedup pipeline: verified near-dup pairs
     // (ja ≥ 0.5) become a keep/drop decision — greedy keep-lowest-id
@@ -866,8 +1005,7 @@ object TextQueries {
            |SELECT lang, CAST(count(*) AS BIGINT) AS docs,
            |CAST(sum(CASE WHEN ver.d2 IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS kept
            |FROM docs LEFT JOIN ver ON docs.doc_id = ver.d2
-           |GROUP BY lang ORDER BY lang""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+           |GROUP BY lang ORDER BY lang""".stripMargin.replace("\n", " "))),
 
     // CLUSTER-correct dedup — the production semantics: near-dup
     // similarity is not transitive (A~B, B~C without A~C), so keep/drop
@@ -904,8 +1042,7 @@ object TextQueries {
            |FROM docs LEFT JOIN comp ON docs.doc_id = comp.id)
            |SELECT lang, CAST(count(*) AS BIGINT) AS docs,
            |CAST(sum(keep) AS BIGINT) AS kept
-           |FROM keepers GROUP BY lang ORDER BY lang""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+           |FROM keepers GROUP BY lang ORDER BY lang""".stripMargin.replace("\n", " "))),
 
     // Character-trigram frequency profile — the TRAINING side of n-gram
     // language-ID (text_lang_id consumes such profiles). Explode emits
@@ -925,8 +1062,7 @@ object TextQueries {
              |SELECT unnest(list_transform(range(1, length(text) - 1),
              |i -> substr(text, i, 3))) AS g
              |FROM documents WHERE lang = 'en' AND length(text) >= 3)
-             |GROUP BY g ORDER BY cnt DESC, g LIMIT 20""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |GROUP BY g ORDER BY cnt DESC, g LIMIT 20""".stripMargin.replace("\n", " "))),
 
     // Deterministic stratified sampling — the training-data-mix operator:
     // each source keeps a fixed percentage, membership decided by a
@@ -948,11 +1084,10 @@ object TextQueries {
           .orderBy(col("source"))
       },
       Some(s"""SELECT source, CAST(count(*) AS BIGINT) AS docs,
-              |CAST(sum(CASE WHEN ${hxDuck("CAST(doc_id AS VARCHAR)")} % 100
+              |CAST(sum(CASE WHEN ${hxSql("CAST(doc_id AS VARCHAR)")} % 100
               | < 5 * (CAST(substr(source, 4) AS INT) % 10 + 1) THEN 1 ELSE 0 END) AS BIGINT) AS kept,
               |CAST(max(5 * (CAST(substr(source, 4) AS INT) % 10 + 1)) AS BIGINT) AS target_pct
-              |FROM documents GROUP BY source ORDER BY source""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+              |FROM documents GROUP BY source ORDER BY source""".stripMargin.replace("\n", " "))),
 
     // Benchmark DECONTAMINATION — the training-data step that keeps eval
     // sets out of the corpus: a document is contaminated if it shares ANY
@@ -968,8 +1103,7 @@ object TextQueries {
         val grams = docsSpread(spark, dir)
           .withColumn("w", split(col("text"), " "))
           .filter(size(col("w")) >= 5)
-          .select(col("doc_id"), col("lang"), explode(array_distinct(expr(
-            "transform(sequence(1, size(w) - 4), j -> concat_ws(' ', slice(w, j, 5)))"))).as("gram"))
+          .select(col("doc_id"), col("lang"), explode(array_distinct(expr(wordGrams(5)))).as("gram"))
         val evalGrams = grams.filter(col("doc_id") < 10).select("gram").distinct()
         val hits = grams.filter(col("doc_id") >= 10)
           .join(broadcast(evalGrams), Seq("gram"), "left_semi")
@@ -982,18 +1116,16 @@ object TextQueries {
             coalesce(col("contaminated"), lit(0L)).as("contaminated"))
           .orderBy(col("lang"))
       },
-      Some("""WITH d AS (SELECT doc_id, lang, string_split(text, ' ') AS w FROM documents
+      Some(s"""WITH d AS (SELECT doc_id, lang, string_split(text, ' ') AS w FROM documents
              |WHERE len(string_split(text, ' ')) >= 5),
-             |g AS (SELECT doc_id, lang, unnest(list_distinct(list_transform(range(1, len(w) - 3),
-             |j -> w[j] || ' ' || w[j+1] || ' ' || w[j+2] || ' ' || w[j+3] || ' ' || w[j+4]))) AS gram FROM d),
+             |g AS (SELECT doc_id, lang, unnest(list_distinct(${TextSql.wordGrams("w", 5)})) AS gram FROM d),
              |ev AS (SELECT DISTINCT gram FROM g WHERE doc_id < 10),
              |hit AS (SELECT DISTINCT g.doc_id, g.lang FROM g JOIN ev USING (gram) WHERE g.doc_id >= 10),
              |hc AS (SELECT lang, CAST(count(*) AS BIGINT) AS contaminated FROM hit GROUP BY lang)
              |SELECT d2.lang, CAST(count(*) AS BIGINT) AS docs,
              |coalesce(max(hc.contaminated), 0) AS contaminated
              |FROM documents d2 LEFT JOIN hc ON d2.lang = hc.lang
-             |WHERE d2.doc_id >= 10 GROUP BY d2.lang ORDER BY d2.lang""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |WHERE d2.doc_id >= 10 GROUP BY d2.lang ORDER BY d2.lang""".stripMargin.replace("\n", " "))),
 
     // Repetition-based quality signals (the Gopher-rule family): per doc,
     // the most-frequent-bigram share of all bigrams and the duplicate-word
@@ -1009,16 +1141,9 @@ object TextQueries {
         t(spark, dir, "documents")
           .withColumn("w", split(col("text"), " "))
           .filter(size(col("w")) >= 3)
-          .withColumn("bg", expr(
-            "array_sort(transform(sequence(1, size(w) - 1), j -> concat_ws(' ', slice(w, j, 2))))"))
-          // run boundaries of the sorted array: position 1, every i where
-          // bg[i] differs from bg[i-1], and the one-past-end sentinel
-          .withColumn("bounds", expr(
-            """concat(array(1),
-              |filter(sequence(2, size(bg)), i -> element_at(bg, i) != element_at(bg, i - 1)),
-              |array(size(bg) + 1))""".stripMargin.replace("\n", " ")))
-          .withColumn("mx", expr(
-            "array_max(transform(sequence(1, size(bounds) - 1), j -> element_at(bounds, j + 1) - element_at(bounds, j)))"))
+          .withColumn("bg", expr(s"array_sort(${wordGrams(2)})"))
+          .withColumn("bounds", expr(runBounds("bg")))
+          .withColumn("mx", expr(s"array_max($runLengths)"))
           .select(col("doc_id"),
             size(col("bg")).cast("long").as("n_bigrams"),
             pround(col("mx").cast("double") / size(col("bg")).cast("double"), 4)
@@ -1030,19 +1155,13 @@ object TextQueries {
       },
       Some(s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents
              |WHERE len(string_split(text, ' ')) >= 3),
-             |s AS (SELECT doc_id, w,
-             |list_sort(list_transform(range(1, len(w)), j -> w[j] || ' ' || w[j+1])) AS bg FROM d),
-             |b AS (SELECT doc_id, w, bg,
-             |list_concat(list_concat([CAST(1 AS BIGINT)],
-             |list_filter(range(2, len(bg) + 1), i -> bg[i] != bg[i-1])),
-             |[CAST(len(bg) + 1 AS BIGINT)]) AS bounds FROM s),
-             |m AS (SELECT doc_id, w, bg,
-             |list_max(list_transform(range(1, len(bounds)), j -> bounds[j+1] - bounds[j])) AS mx FROM b)
+             |s AS (SELECT doc_id, w, list_sort(${TextSql.wordGrams("w", 2)}) AS bg FROM d),
+             |b AS (SELECT doc_id, w, bg, ${TextSql.runBounds("bg")} AS bounds FROM s),
+             |m AS (SELECT doc_id, w, bg, list_max(${TextSql.runLengths}) AS mx FROM b)
              |SELECT doc_id, CAST(len(bg) AS BIGINT) AS n_bigrams,
              |${proundSql("CAST(mx AS DOUBLE) / CAST(len(bg) AS DOUBLE)", 4)} AS top2g_frac,
              |${proundSql("CAST(1.0 AS DOUBLE) - CAST(len(list_distinct(w)) AS DOUBLE) / CAST(len(w) AS DOUBLE)", 4)} AS dup_word_frac
-             |FROM m ORDER BY doc_id LIMIT 300""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |FROM m ORDER BY doc_id LIMIT 300""".stripMargin.replace("\n", " "))),
 
     // Language-BALANCED sampling — exact per-language quota (25 docs)
     // chosen by portable-hash order (companion to sample_stratified's
@@ -1062,7 +1181,6 @@ object TextQueries {
     // semantics-preserving. kept_id_sum pins the exact selected set.
     "sample_lang_balanced" -> QueryDef(
       (spark, dir) => {
-        import org.apache.spark.sql.expressions.Window
         val quota = 25
         val d = t(spark, dir, "documents")
           .withColumn("h", expr(hx("cast(doc_id as string)")))
@@ -1076,7 +1194,7 @@ object TextQueries {
             .agg(cnt("kept"), sum("doc_id").cast("long").as("kept_id_sum"))), "lang")
           .orderBy(col("lang"))
       },
-      Some(s"""WITH h AS (SELECT doc_id, lang, ${hxDuck("CAST(doc_id AS VARCHAR)")} AS h FROM documents),
+      Some(s"""WITH h AS (SELECT doc_id, lang, ${hxSql("CAST(doc_id AS VARCHAR)")} AS h FROM documents),
              |r AS (SELECT doc_id, lang,
              |row_number() OVER (PARTITION BY lang ORDER BY h, doc_id) AS rn FROM h),
              |k AS (SELECT lang, CAST(count(*) AS BIGINT) AS kept,
@@ -1084,8 +1202,7 @@ object TextQueries {
              |SELECT h.lang, CAST(count(*) AS BIGINT) AS docs, max(k.kept) AS kept,
              |max(k.kept_id_sum) AS kept_id_sum
              |FROM h JOIN k ON h.lang = k.lang
-             |GROUP BY h.lang ORDER BY h.lang""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |GROUP BY h.lang ORDER BY h.lang""".stripMargin.replace("\n", " "))),
 
     // The END-TO-END curation pipeline — the
     // operator a 100 TB training-data user actually runs: the per-key
@@ -1112,7 +1229,6 @@ object TextQueries {
     // the sample rank sorts only the threshold-prefiltered quota rows.
     "pipeline_curation_e2e" -> QueryDef(
       (spark, dir) => {
-        import org.apache.spark.sql.expressions.Window
         val quota = 25
         val base = e2eFeatures(spark, dir)
         // the stage relations are NARROW (ids + scalars); the
@@ -1122,14 +1238,6 @@ object TextQueries {
         val narrow = base.select("doc_id", "lang", "nw", "chars", "stopc",
           "alphac", "digest", "h")
         val corpus = narrow.filter(col("doc_id") >= 10)
-        val g = corpus.filter(col("nw") >= 20 && col("nw") <= 100000 &&
-          col("chars") >= col("nw") * 3 && col("chars") <= col("nw") * 10 &&
-          col("alphac") * 5 >= col("nw") * 4 && col("stopc") >= 2)
-          .scopedCheckpoint()
-        // first-of-content = window min over digest — ONE
-        // exchange where the old groupBy(digest) + (digest, doc_id)
-        // semi-join took two on different keys (guide §2.4). Same rows:
-        // keep exactly the min-doc_id row of each digest group.
         // g/e/bands are EAGER scoped checkpoints, not lazy persists:
         // each has 2–3 downstream consumers that AQE
         // submits as concurrent query stages, and a lazy persist makes
@@ -1138,89 +1246,38 @@ object TextQueries {
         // band-build stages per run). Eager materialization runs the
         // chain exactly once and truncates the plan the ~10 downstream
         // stages re-optimize (guide §3.3).
-        val e = g.withColumn("mind",
-            min(col("doc_id")).over(Window.partitionBy("digest")))
-          .filter(col("doc_id") === col("mind")).drop("mind")
-          .scopedCheckpoint()
+        val g = corpus.filter(gopherPass).scopedCheckpoint()
+        val e = firstOfContent(g)
         // band keys for exact-dedup survivors: the minhash lanes ride a
         // 9-long row through one doc_id-keyed semi join, never the text
-        val bands = bandKeys(base
-          .select((Seq(col("doc_id")) ++ (0 until 8).map(i => col(s"mh$i"))): _*)
+        val bands = bandKeys(e2eLanes(base)
           .join(e.select("doc_id").hint("shuffle_hash"), Seq("doc_id"), "left_semi"))
           .scopedCheckpoint()
         // the ONE array-bearing exchange lane: distinct shingle sets
         // shuffle by doc_id into the verification joins (candidates are
         // all e members by construction, so no survivor scoping needed)
         val pairs = verified(candidates(bands), base.select(col("doc_id"), col("s")))
-        val drop4 = pairs.filter(col("ja") >= 0.5).select(col("d2").as("doc_id")).distinct()
-        val nd = e.join(drop4.hint("shuffle_hash"), Seq("doc_id"), "left_anti")
-          .scopedPersist()
-        // contamination is a PER-DOC predicate (shares any distinct
-        // 5-gram with the eval split), so the hit list is computed from
-        // base with a map-side explode + broadcast semi join — the gram
-        // arrays never shuffle and restricting to nd afterwards is
-        // equivalent to computing over nd
-        val evalG = base.filter(col("doc_id") < 10)
-          .select(explode(col("g5")).as("gram")).distinct()
-        val hit5 = base.filter(col("doc_id") >= 10)
-          .select(col("doc_id"), explode(col("g5")).as("gram"))
-          .join(broadcast(evalG), Seq("gram"), "left_semi")
-          .select("doc_id").distinct()
-        val dc = nd.join(hit5.hint("shuffle_hash"), Seq("doc_id"), "left_anti")
-          .scopedPersist()
+        val nd = nearDupFree(e, pairs, "d2")
+        val dc = without(nd, contaminated(base)).scopedPersist()
         val thr = dc.groupBy("lang").agg(count(lit(1)).as("n"))
           .select(col("lang"), expr(balancedThresholdExpr(quota)).as("thr"))
         val surv = dc.join(broadcast(thr), "lang").filter(col("h") < col("thr"))
         val w6 = Window.partitionBy("lang").orderBy(col("h"), col("doc_id"))
         val samp = surv.withColumn("rn", row_number().over(w6)).filter(col("rn") <= quota)
-        def stage(nm: String, df: org.apache.spark.sql.DataFrame) =
-          df.agg(count(lit(1)).cast("long").as("survivors"),
-            coalesce(sum(col("doc_id")), lit(0L)).cast("long").as("id_sum"))
-            .select(lit(nm).as("stage"), col("survivors"), col("id_sum"))
-        stage("1_corpus", corpus)
-          .unionByName(stage("2_gopher", g))
-          .unionByName(stage("3_exact", e))
-          .unionByName(stage("4_neardup", nd))
-          .unionByName(stage("5_decontam", dc))
-          .unionByName(stage("6_sample", samp))
-          .orderBy(col("stage"))
+        funnel("1_corpus" -> corpus, "2_gopher" -> g, "3_exact" -> e,
+          "4_neardup" -> nd, "5_decontam" -> dc, "6_sample" -> samp)
       },
-      Some {
-        val g5 = "list_distinct(list_transform(range(1, len(w) - 3), " +
-          "j -> w[j] || ' ' || w[j+1] || ' ' || w[j+2] || ' ' || w[j+3] || ' ' || w[j+4]))"
-        def cnt2(src: String, nm: String) =
-          s"SELECT '$nm' AS stage, CAST(count(*) AS BIGINT) AS survivors, " +
-          s"CAST(coalesce(sum(doc_id), 0) AS BIGINT) AS id_sum FROM $src"
-        s"""WITH f AS (SELECT doc_id, lang, md5(text) AS digest,
-           |CAST(len(w) AS BIGINT) AS nw,
-           |CAST(list_sum(list_transform(w, x -> length(x))) AS BIGINT) AS chars,
-           |CAST(len(list_filter(w, x -> x IN ${inList(Stopwords)})) AS BIGINT) AS stopc,
-           |CAST(len(list_filter(w, x -> regexp_matches(x, '^[a-z]+$$'))) AS BIGINT) AS alphac,
-           |w, ${hxDuck("CAST(doc_id AS VARCHAR)")} AS h
-           |FROM (SELECT doc_id, lang, text, string_split(text, ' ') AS w FROM documents)),
+      Some(s"""WITH ${TextSql.features},
            |c0 AS (SELECT * FROM f WHERE doc_id >= 10),
-           |g AS (SELECT * FROM c0 WHERE nw >= 20 AND nw <= 100000
-           |AND chars >= nw * 3 AND chars <= nw * 10
-           |AND alphac * 5 >= nw * 4 AND stopc >= 2),
-           |k3 AS (SELECT digest, min(doc_id) AS doc_id FROM g GROUP BY digest),
-           |e AS (SELECT g.* FROM g JOIN k3 ON g.digest = k3.digest AND g.doc_id = k3.doc_id),
+           |${TextSql.gopher("c0")}, ${TextSql.firstOfContent("g")},
            |${LshSql.verified("e")},
-           |drop4 AS (SELECT DISTINCT d2 FROM pairs WHERE ja >= 0.5),
-           |nd AS (SELECT e.* FROM e LEFT JOIN drop4 ON e.doc_id = drop4.d2 WHERE drop4.d2 IS NULL),
-           |evg AS (SELECT DISTINCT unnest($g5) AS gram FROM f WHERE doc_id < 10 AND nw >= 5),
-           |ndg AS (SELECT doc_id, unnest($g5) AS gram FROM nd WHERE nw >= 5),
-           |hit AS (SELECT DISTINCT ndg.doc_id FROM ndg JOIN evg USING (gram)),
-           |dc AS (SELECT nd.* FROM nd LEFT JOIN hit ON nd.doc_id = hit.doc_id WHERE hit.doc_id IS NULL),
+           |${TextSql.nearDupFree("d2")},
+           |${TextSql.decontaminated("dc")},
            |r AS (SELECT doc_id, lang,
            |row_number() OVER (PARTITION BY lang ORDER BY h, doc_id) AS rn FROM dc),
            |samp AS (SELECT doc_id FROM r WHERE rn <= 25)
-           |SELECT stage, survivors, id_sum FROM (
-           |${cnt2("c0", "1_corpus")} UNION ALL ${cnt2("g", "2_gopher")}
-           |UNION ALL ${cnt2("e", "3_exact")} UNION ALL ${cnt2("nd", "4_neardup")}
-           |UNION ALL ${cnt2("dc", "5_decontam")} UNION ALL ${cnt2("samp", "6_sample")})
-           |ORDER BY stage""".stripMargin.replace("\n", " ")
-      },
-      tier = "E"),
+           |${TextSql.funnel("c0" -> "1_corpus", "g" -> "2_gopher", "e" -> "3_exact",
+             "nd" -> "4_neardup", "dc" -> "5_decontam", "samp" -> "6_sample")}""".stripMargin.replace("\n", " "))),
 
     // The INCREMENTAL ingest pipeline — the production counterpart of
     // pipeline_curation_e2e: a DELTA batch (the newest 20% of doc ids;
@@ -1255,29 +1312,16 @@ object TextQueries {
         val existing = narrow.filter(col("doc_id") >= 10 && col("doc_id") < col("cut"))
           .scopedPersist()
         val delta = narrow.filter(col("doc_id") >= col("cut")).scopedPersist()
-        val g = delta.filter(col("nw") >= 20 && col("nw") <= 100000 &&
-          col("chars") >= col("nw") * 3 && col("chars") <= col("nw") * 10 &&
-          col("alphac") * 5 >= col("nw") * 4 && col("stopc") >= 2)
-          .scopedCheckpoint()
-        val gNew = g.join(existing.select("digest").distinct().hint("shuffle_hash"),
-          Seq("digest"), "left_anti")
-        // first-of-content within the delta = window min over
-        // digest — one exchange for the old groupBy + semi-join pair
-        // (same rewrite as pipeline_curation_e2e; identical rows)
-        val e = gNew.withColumn("mind",
-            min(col("doc_id")).over(org.apache.spark.sql.expressions.Window
-              .partitionBy("digest")))
-          .filter(col("doc_id") === col("mind")).drop("mind")
-          .scopedCheckpoint()
+        val g = delta.filter(gopherPass).scopedCheckpoint()
+        val e = firstOfContent(g.join(existing.select("digest").distinct().hint("shuffle_hash"),
+          Seq("digest"), "left_anti"))
         // near-dup partner pool: the corpus (only docs that HAVE
         // shingles — <3-word docs cannot be shingle near-dups) plus the
         // delta's own exact survivors (lower-id rule applied in cand)
         val pool = existing.filter(col("nw") >= 3)
           .select(col("doc_id"), lit(false).as("isd"))
           .unionByName(e.select(col("doc_id"), lit(true).as("isd")))
-        val bands = bandKeys(base
-          .select((Seq(col("doc_id")) ++ (0 until 8).map(i => col(s"mh$i"))): _*)
-          .join(pool.hint("shuffle_hash"), Seq("doc_id")), col("isd"))
+        val bands = bandKeys(e2eLanes(base).join(pool.hint("shuffle_hash"), Seq("doc_id")), col("isd"))
           .scopedCheckpoint()
         val c = capped(bands)
         val cand = c.hint("shuffle_hash").as("a")
@@ -1286,71 +1330,30 @@ object TextQueries {
             col("a.doc_id") =!= col("b.doc_id"))
           .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2")).distinct()
         val pairs = verified(cand, base.select(col("doc_id"), col("s")))
-        val drop4 = pairs.filter(col("ja") >= 0.5).select(col("d1").as("doc_id")).distinct()
-        val nd = e.join(drop4.hint("shuffle_hash"), Seq("doc_id"), "left_anti")
-          .scopedPersist()
-        val evalG = base.filter(col("doc_id") < 10)
-          .select(explode(col("g5")).as("gram")).distinct()
-        val hit5 = base.filter(col("doc_id") >= 10)
-          .select(col("doc_id"), explode(col("g5")).as("gram"))
-          .join(broadcast(evalG), Seq("gram"), "left_semi")
-          .select("doc_id").distinct()
-        val adm = nd.join(hit5.hint("shuffle_hash"), Seq("doc_id"), "left_anti")
-        def stage(nm: String, df: DataFrame) =
-          df.agg(count(lit(1)).cast("long").as("survivors"),
-            coalesce(sum(col("doc_id")), lit(0L)).cast("long").as("id_sum"))
-            .select(lit(nm).as("stage"), col("survivors"), col("id_sum"))
-        stage("0_corpus", existing)
-          .unionByName(stage("1_delta", delta))
-          .unionByName(stage("2_gopher", g))
-          .unionByName(stage("3_exact_new", e))
-          .unionByName(stage("4_neardup_new", nd))
-          .unionByName(stage("5_admitted", adm))
-          .orderBy(col("stage"))
+        val nd = nearDupFree(e, pairs, "d1")
+        funnel("0_corpus" -> existing, "1_delta" -> delta, "2_gopher" -> g, "3_exact_new" -> e,
+          "4_neardup_new" -> nd, "5_admitted" -> without(nd, contaminated(base)))
       },
-      Some {
-        val g5 = "list_distinct(list_transform(range(1, len(w) - 3), " +
-          "j -> w[j] || ' ' || w[j+1] || ' ' || w[j+2] || ' ' || w[j+3] || ' ' || w[j+4]))"
-        def cnt2(src: String, nm: String) =
-          s"SELECT '$nm' AS stage, CAST(count(*) AS BIGINT) AS survivors, " +
-          s"CAST(coalesce(sum(doc_id), 0) AS BIGINT) AS id_sum FROM $src"
-        s"""WITH f AS (SELECT doc_id, md5(text) AS digest,
-           |CAST(len(w) AS BIGINT) AS nw,
-           |CAST(list_sum(list_transform(w, x -> length(x))) AS BIGINT) AS chars,
-           |CAST(len(list_filter(w, x -> x IN ${inList(Stopwords)})) AS BIGINT) AS stopc,
-           |CAST(len(list_filter(w, x -> regexp_matches(x, '^[a-z]+$$'))) AS BIGINT) AS alphac,
-           |w FROM (SELECT doc_id, text, string_split(text, ' ') AS w FROM documents)),
+      Some(s"""WITH ${TextSql.features},
            |mx AS (SELECT CAST(floor(0.8 * max(doc_id)) AS BIGINT) AS cut FROM f),
            |ex AS (SELECT f.* FROM f CROSS JOIN mx WHERE doc_id >= 10 AND doc_id < cut),
            |dl AS (SELECT f.* FROM f CROSS JOIN mx WHERE doc_id >= cut),
-           |g AS (SELECT * FROM dl WHERE nw >= 20 AND nw <= 100000
-           |AND chars >= nw * 3 AND chars <= nw * 10
-           |AND alphac * 5 >= nw * 4 AND stopc >= 2),
+           |${TextSql.gopher("dl")},
            |gnc AS (SELECT g.* FROM g LEFT JOIN (SELECT DISTINCT digest FROM ex) xd
            |ON g.digest = xd.digest WHERE xd.digest IS NULL),
-           |k3 AS (SELECT digest, min(doc_id) AS doc_id FROM gnc GROUP BY digest),
-           |e AS (SELECT gnc.* FROM gnc JOIN k3 ON gnc.digest = k3.digest AND gnc.doc_id = k3.doc_id),
+           |${TextSql.firstOfContent("gnc")},
            |pool AS (SELECT doc_id, FALSE AS isd FROM ex WHERE nw >= 3
            |UNION ALL SELECT doc_id, TRUE AS isd FROM e),
-           |shp AS (SELECT pool.doc_id, pool.isd, ${LshSql.shingles("f.w")} AS shingles
+           |shp AS (SELECT pool.doc_id, pool.isd, ${TextSql.wordGrams("f.w", 3)} AS shingles
            |FROM pool JOIN f ON pool.doc_id = f.doc_id),
            |${LshSql.shs("shp")}, ${LshSql.mh("shp", "isd, ")}, ${LshSql.bands("isd, ")},
            |${LshSql.capped("isd, ")}, cand AS (${LshSql.pairing(
              on = "a.isd AND (NOT b.isd OR b.doc_id < a.doc_id) AND a.doc_id <> b.doc_id")}),
            |${LshSql.pairs},
-           |drop4 AS (SELECT DISTINCT d1 FROM pairs WHERE ja >= 0.5),
-           |nd AS (SELECT e.* FROM e LEFT JOIN drop4 ON e.doc_id = drop4.d1 WHERE drop4.d1 IS NULL),
-           |evg AS (SELECT DISTINCT unnest($g5) AS gram FROM f WHERE doc_id < 10 AND nw >= 5),
-           |ndg AS (SELECT doc_id, unnest($g5) AS gram FROM nd WHERE nw >= 5),
-           |hit AS (SELECT DISTINCT ndg.doc_id FROM ndg JOIN evg USING (gram)),
-           |adm AS (SELECT nd.* FROM nd LEFT JOIN hit ON nd.doc_id = hit.doc_id WHERE hit.doc_id IS NULL)
-           |SELECT stage, survivors, id_sum FROM (
-           |${cnt2("ex", "0_corpus")} UNION ALL ${cnt2("dl", "1_delta")}
-           |UNION ALL ${cnt2("g", "2_gopher")} UNION ALL ${cnt2("e", "3_exact_new")}
-           |UNION ALL ${cnt2("nd", "4_neardup_new")} UNION ALL ${cnt2("adm", "5_admitted")})
-           |ORDER BY stage""".stripMargin.replace("\n", " ")
-      },
-      tier = "E"),
+           |${TextSql.nearDupFree("d1")},
+           |${TextSql.decontaminated("adm")}
+           |${TextSql.funnel("ex" -> "0_corpus", "dl" -> "1_delta", "g" -> "2_gopher",
+             "e" -> "3_exact_new", "nd" -> "4_neardup_new", "adm" -> "5_admitted")}""".stripMargin.replace("\n", " "))),
 
     // Temperature-scaled language mixing (mT5/XLM-R style): sample
     // languages ∝ p_l^α so low-resource languages are up-weighted.
@@ -1394,7 +1397,7 @@ object TextQueries {
       },
       Some {
         val budget = 100
-        s"""WITH d AS (SELECT doc_id, lang, ${hxDuck("CAST(doc_id AS VARCHAR)")} AS h FROM documents),
+        s"""WITH d AS (SELECT doc_id, lang, ${hxSql("CAST(doc_id AS VARCHAR)")} AS h FROM documents),
            |c AS (SELECT lang, CAST(count(*) AS BIGINT) AS n FROM d GROUP BY lang),
            |z AS (SELECT list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
            |list(sqrt(CAST(n AS DOUBLE)) ORDER BY lang)), (a, b) -> a + b) AS z FROM c),
@@ -1411,8 +1414,7 @@ object TextQueries {
            |CAST(sum(CASE WHEN h < thr THEN doc_id ELSE 0 END) AS BIGINT) AS kept_id_sum
            |FROM d JOIN r ON d.lang = r.lang
            |GROUP BY d.lang ORDER BY d.lang""".stripMargin.replace("\n", " ")
-      },
-      tier = "E"),
+      }),
 
     // Incremental dedup — the INGEST question: which documents of a
     // delta (doc_id ≥ 250) duplicate the existing corpus? Exact dups by
@@ -1448,8 +1450,7 @@ object TextQueries {
            |SELECT (SELECT CAST(count(*) AS BIGINT) FROM docs WHERE is_new) AS delta_docs,
            |(SELECT CAST(count(*) AS BIGINT) FROM ex) AS exact_dups,
            |(SELECT CAST(count(*) AS BIGINT) FROM near) AS near_dups""".stripMargin.replace("\n", " ")
-      },
-      tier = "E"),
+      }),
 
     // TF-IDF top terms — corpus-statistics text analysis: per-language
     // document frequency over the WHOLE corpus, scored for a bounded
@@ -1463,7 +1464,6 @@ object TextQueries {
     // by probe doc over ≤ vocabulary-of-probe rows.
     "text_tfidf_top" -> QueryDef(
       (spark, dir) => {
-        import org.apache.spark.sql.expressions.Window
         val words = t(spark, dir, "documents")
           .select(col("doc_id"), col("lang"), explode(split(col("text"), " ")).as("word"))
         val dfr = words.distinct()
@@ -1493,8 +1493,7 @@ object TextQueries {
              |JOIN nd ON nd.lang = tf.lang)
              |SELECT doc_id, word, score FROM (SELECT *,
              |row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, word) AS rn FROM sc)
-             |WHERE rn <= 3 ORDER BY doc_id, score DESC, word""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |WHERE rn <= 3 ORDER BY doc_id, score DESC, word""".stripMargin.replace("\n", " "))),
 
     // SimHash fingerprints (16-bit, majority vote per bit over word
     // hashes) — computed entirely in array HOFs, zero shuffle per doc.
@@ -1508,9 +1507,8 @@ object TextQueries {
       },
       Some(s"""SELECT doc_id, $simhashDuck AS simhash FROM (
               |SELECT doc_id, list_transform(string_split(text, ' '),
-              |w -> ${hxDuck("w")}) AS hs FROM documents)
-              |ORDER BY doc_id LIMIT 300""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+              |w -> ${hxSql("w")}) AS hs FROM documents)
+              |ORDER BY doc_id LIMIT 300""".stripMargin.replace("\n", " "))),
 
     // SimHash pair-finding — the fingerprint's OTHER half (dedup_simhash
     // above computes fingerprints; this finds the near-dup pairs). A
@@ -1556,7 +1554,7 @@ object TextQueries {
       },
       Some(s"""WITH sh AS (SELECT doc_id, ${simhashDuckW(60)} AS sh FROM (
               |SELECT doc_id, list_transform(string_split(text, ' '),
-              |w -> ${hxDuck("w")}) AS hs FROM documents)),
+              |w -> ${hxSql("w")}) AS hs FROM documents)),
               |banded AS (SELECT doc_id, sh, b, (sh >> (15 * b)) & 32767 AS bits
               |FROM sh CROSS JOIN (SELECT unnest(range(0, 4)) AS b)),
               |bandedc AS (SELECT doc_id, sh, b, bits FROM (SELECT doc_id, sh, b, bits,
@@ -1566,26 +1564,13 @@ object TextQueries {
               |CAST(bit_count(xor(a.sh, b.sh)) AS BIGINT) AS dist
               |FROM bandedc a JOIN bandedc b
               |ON a.b = b.b AND a.bits = b.bits AND a.doc_id < b.doc_id)
-              |WHERE dist <= 3 ORDER BY dist, d1, d2 LIMIT 300""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+              |WHERE dist <= 3 ORDER BY dist, d1, d2 LIMIT 300""".stripMargin.replace("\n", " "))),
 
     // n-gram Jaccard near-dup: probe docs vs same-lang candidates on
     // distinct 3-shingle sets. Bounded probe set — never all-pairs.
     "dedup_ngram_jaccard" -> QueryDef(
       (spark, dir) => {
-        val sh = t(spark, dir, "documents")
-          .withColumn("w", split(col("text"), " "))
-          .filter(size(col("w")) >= 3)
-          .withColumn("sh", expr(s"array_distinct($shingles3)"))
-          .select(col("doc_id"), col("lang"), col("sh"))
-        val probes = sh.filter(col("doc_id") < 20)
-          .select(col("doc_id").as("d1"), col("lang").as("l1"), col("sh").as("sh1"))
-        // broadcast the ≤20-doc probe side: the only equi-key is `lang`
-        // (5 distinct values), so a shuffle join would funnel the whole
-        // corpus into ≤5 partitions — a skew scale-killer at 100 TB. With
-        // the probe side broadcast the corpus never shuffles at all.
-        broadcast(probes).join(sh, col("lang") === col("l1") && col("doc_id") > col("d1"))
-          .withColumn("inter", size(array_intersect(col("sh1"), col("sh"))).cast("double"))
+        probeShingles(spark, dir, col("doc_id") > col("d1"))
           .withColumn("ja", pround(col("inter")
             / (size(col("sh1")) + size(col("sh")) - col("inter")), 4))
           .filter(col("ja") >= 0.05)
@@ -1593,19 +1578,14 @@ object TextQueries {
           .orderBy(col("ja").desc, col("d1"), col("d2"))
           .limit(200)
       },
-      Some(s"""WITH sh AS (SELECT doc_id, lang,
-             |list_distinct(list_transform(range(1, len(w) - 1),
-             |j -> w[j] || ' ' || w[j+1] || ' ' || w[j+2])) AS sh
-             |FROM (SELECT doc_id, lang, string_split(text, ' ') AS w FROM documents
-             |WHERE len(string_split(text, ' ')) >= 3))
+      Some(s"""WITH ${TextSql.probeShingles}
              |SELECT d1, d2, ja FROM (
              |SELECT a.doc_id AS d1, b.doc_id AS d2,
              |${proundSql("""CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
              | / (len(a.sh) + len(b.sh) - CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE))""".stripMargin.replace("\n", ""), 4)} AS ja
              |FROM sh a JOIN sh b ON a.lang = b.lang AND b.doc_id > a.doc_id
              |WHERE a.doc_id < 20)
-             |WHERE ja >= 0.05 ORDER BY ja DESC, d1, d2 LIMIT 200""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |WHERE ja >= 0.05 ORDER BY ja DESC, d1, d2 LIMIT 200""".stripMargin.replace("\n", " "))),
 
     // Directional shingle CONTAINMENT — the asymmetric dedup signal
     // Jaccard misses: a short document quoted wholesale inside a long one
@@ -1616,33 +1596,20 @@ object TextQueries {
     // never shuffles.
     "text_containment" -> QueryDef(
       (spark, dir) => {
-        val sh = t(spark, dir, "documents")
-          .withColumn("w", split(col("text"), " "))
-          .filter(size(col("w")) >= 3)
-          .withColumn("sh", expr(s"array_distinct($shingles3)"))
-          .select(col("doc_id"), col("lang"), col("sh"))
-        val probes = sh.filter(col("doc_id") < 20)
-          .select(col("doc_id").as("d1"), col("lang").as("l1"), col("sh").as("sh1"))
-        broadcast(probes).join(sh, col("lang") === col("l1") && col("doc_id") =!= col("d1"))
-          .withColumn("inter", size(array_intersect(col("sh1"), col("sh"))).cast("double"))
+        probeShingles(spark, dir, col("doc_id") =!= col("d1"))
           .withColumn("cont", pround(col("inter") / size(col("sh1")).cast("double"), 4))
           .filter(col("cont") >= 0.01)
           .select(col("d1"), col("doc_id").as("d2"), col("cont"))
           .orderBy(col("cont").desc, col("d1"), col("d2"))
           .limit(200)
       },
-      Some(s"""WITH sh AS (SELECT doc_id, lang,
-             |list_distinct(list_transform(range(1, len(w) - 1),
-             |j -> w[j] || ' ' || w[j+1] || ' ' || w[j+2])) AS sh
-             |FROM (SELECT doc_id, lang, string_split(text, ' ') AS w FROM documents
-             |WHERE len(string_split(text, ' ')) >= 3))
+      Some(s"""WITH ${TextSql.probeShingles}
              |SELECT d1, d2, cont FROM (
              |SELECT a.doc_id AS d1, b.doc_id AS d2,
              |${proundSql("CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) / CAST(len(a.sh) AS DOUBLE)", 4)} AS cont
              |FROM sh a JOIN sh b ON a.lang = b.lang AND b.doc_id <> a.doc_id
              |WHERE a.doc_id < 20)
-             |WHERE cont >= 0.01 ORDER BY cont DESC, d1, d2 LIMIT 200""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |WHERE cont >= 0.01 ORDER BY cont DESC, d1, d2 LIMIT 200""".stripMargin.replace("\n", " "))),
 
     // Winnowing fingerprints (the MOSS scheme): hash every 3-gram, slide
     // a window of 4 hashes, keep each window's MINIMUM — guarantees any
@@ -1669,16 +1636,8 @@ object TextQueries {
       Some(s"""SELECT doc_id, CAST(len(gh) AS BIGINT) AS n_grams,
              |CAST(len(fps) AS BIGINT) AS n_fps,
              |list_min(fps) AS min_fp, list_max(fps) AS max_fp FROM (
-             |SELECT doc_id, gh,
-             |list_distinct(list_transform(range(1, len(gh) - 2), i -> list_min(gh[i:i+3]))) AS fps
-             |FROM (SELECT doc_id,
-             |list_transform(range(1, len(w) - 1),
-             |j -> ${hxDuck("w[j] || ' ' || w[j+1] || ' ' || w[j+2]")}) AS gh
-             |FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents
-             |WHERE len(string_split(text, ' ')) >= 6))
-             |WHERE len(gh) >= 4)
-             |ORDER BY doc_id LIMIT 300""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |${TextSql.winnowed})
+             |ORDER BY doc_id LIMIT 300""".stripMargin.replace("\n", " "))),
 
     // Winnowing pairs — the inverted-index half of the MOSS scheme:
     // explode each doc's winnowed fingerprints, self-join on fingerprint,
@@ -1704,21 +1663,13 @@ object TextQueries {
           .orderBy(col("shared").desc, col("d1"), col("d2"))
           .limit(200)
       },
-      Some(s"""WITH fps AS (SELECT doc_id, unnest(
-             |list_distinct(list_transform(range(1, len(gh) - 2), i -> list_min(gh[i:i+3])))) AS fp
-             |FROM (SELECT doc_id,
-             |list_transform(range(1, len(w) - 1),
-             |j -> ${hxDuck("w[j] || ' ' || w[j+1] || ' ' || w[j+2]")}) AS gh
-             |FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents
-             |WHERE len(string_split(text, ' ')) >= 6))
-             |WHERE len(gh) >= 4),
+      Some(s"""WITH fps AS (SELECT doc_id, unnest(fps) AS fp FROM (${TextSql.winnowed})),
              |capped AS (SELECT doc_id, fp FROM (SELECT doc_id, fp,
              |count(*) OVER (PARTITION BY fp) AS c FROM fps) WHERE c <= 100)
              |SELECT a.doc_id AS d1, b.doc_id AS d2, CAST(count(*) AS BIGINT) AS shared
              |FROM capped a JOIN capped b ON a.fp = b.fp AND a.doc_id < b.doc_id
              |GROUP BY 1, 2 HAVING count(*) >= 2
-             |ORDER BY shared DESC, d1, d2 LIMIT 200""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |ORDER BY shared DESC, d1, d2 LIMIT 200""".stripMargin.replace("\n", " "))),
 
     // Token-distribution Shannon entropy — the classic "is this doc
     // natural text or boilerplate/noise" quality signal (low entropy =
@@ -1737,12 +1688,8 @@ object TextQueries {
         t(spark, dir, "documents")
           .withColumn("sw", array_sort(split(col("text"), " ")))
           .filter(size(col("sw")) >= 2)
-          .withColumn("bounds", expr(
-            """concat(array(1),
-              |filter(sequence(2, size(sw)), i -> element_at(sw, i) != element_at(sw, i - 1)),
-              |array(size(sw) + 1))""".stripMargin.replace("\n", " ")))
-          .withColumn("runs", expr(
-            "transform(sequence(1, size(bounds) - 1), j -> element_at(bounds, j + 1) - element_at(bounds, j))"))
+          .withColumn("bounds", expr(runBounds("sw")))
+          .withColumn("runs", expr(runLengths))
           .withColumn("n", size(col("sw")).cast("double"))
           .withColumn("hsum", expr(
             "aggregate(runs, cast(0.0 as double), (a, x) -> a + cast(x as double) * ln(cast(x as double)))"))
@@ -1754,19 +1701,15 @@ object TextQueries {
       },
       Some(s"""WITH d AS (SELECT doc_id, list_sort(string_split(text, ' ')) AS sw FROM documents
              |WHERE len(string_split(text, ' ')) >= 2),
-             |b AS (SELECT doc_id, sw,
-             |list_concat(list_concat([CAST(1 AS BIGINT)],
-             |list_filter(range(2, len(sw) + 1), i -> sw[i] != sw[i-1])),
-             |[CAST(len(sw) + 1 AS BIGINT)]) AS bounds FROM d),
+             |b AS (SELECT doc_id, sw, ${TextSql.runBounds("sw")} AS bounds FROM d),
              |r AS (SELECT doc_id, CAST(len(sw) AS DOUBLE) AS n, len(sw) AS n_tokens,
-             |list_transform(range(1, len(bounds)), j -> bounds[j+1] - bounds[j]) AS runs FROM b),
+             |${TextSql.runLengths} AS runs FROM b),
              |h AS (SELECT doc_id, n, n_tokens,
              |list_reduce(list_transform(runs, x -> CAST(x AS DOUBLE) * ln(CAST(x AS DOUBLE))),
              |(a, b) -> a + b) AS hsum FROM r)
              |SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
              |${proundSql("(ln(n) - hsum / n) / 0.6931471805599453", 4)} AS entropy
-             |FROM h ORDER BY doc_id LIMIT 300""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |FROM h ORDER BY doc_id LIMIT 300""".stripMargin.replace("\n", " "))),
 
     // PII scrubbing — the redaction pass every training-data pipeline
     // runs before anything else. Email-shaped spans are redacted with a
@@ -1797,8 +1740,7 @@ object TextQueries {
              |CAST(length(text) AS BIGINT) AS len_raw,
              |CAST(length(regexp_replace(regexp_replace(text, '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}', '<EMAIL>', 'g'),
              |'\b(customer|supplier|order)\b', '<ENT>', 'g')) AS BIGINT) AS len_scrubbed
-             |FROM documents ORDER BY doc_id LIMIT 300""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |FROM documents ORDER BY doc_id LIMIT 300""".stripMargin.replace("\n", " "))),
 
     // Paragraph-level dedup — the CCNet/C4 operation:
     // drop duplicate paragraphs ACROSS the corpus, keep the first
@@ -1814,10 +1756,7 @@ object TextQueries {
       (spark, dir) => {
         val inst = t(spark, dir, "documents")
           .withColumn("w", split(col("text"), " "))
-          .select(col("doc_id"), col("lang"), posexplode(expr(
-            """transform(sequence(0, cast(ceil(size(w) / 10.0) as int) - 1),
-              |i -> md5(concat_ws(' ', slice(w, i * 10 + 1, 10))))"""
-              .stripMargin.replace("\n", " "))).as(Seq("pos", "dg")))
+          .select(col("doc_id"), col("lang"), posexplode(expr(paragraphDigests)).as(Seq("pos", "dg")))
           .scopedPersist()
         val kept = inst.groupBy("dg")
           .agg(min(struct(col("doc_id"), col("pos"), col("lang"))).as("o"))
@@ -1833,9 +1772,8 @@ object TextQueries {
       },
       Some(s"""WITH d AS (SELECT doc_id, lang, string_split(text, ' ') AS w FROM documents),
               |seg AS (SELECT doc_id, lang,
-              |unnest(range(0, CAST(ceil(len(w) / 10.0) AS BIGINT))) AS pos,
-              |unnest(list_transform(range(0, CAST(ceil(len(w) / 10.0) AS BIGINT)),
-              |i -> md5(array_to_string(w[(i*10+1):(i*10+10)], ' ')))) AS dg FROM d),
+              |unnest(${TextSql.paragraphPos}) AS pos,
+              |unnest(${TextSql.paragraphDigests}) AS dg FROM d),
               |own AS (SELECT lang FROM (SELECT lang,
               |row_number() OVER (PARTITION BY dg ORDER BY doc_id, pos) AS rn FROM seg) WHERE rn = 1),
               |kept AS (SELECT lang, CAST(count(*) AS BIGINT) AS kept_pars FROM own GROUP BY lang),
@@ -1843,8 +1781,7 @@ object TextQueries {
               |SELECT tot.lang, total_pars, COALESCE(kept_pars, 0) AS kept_pars,
               |${proundSql("CAST(COALESCE(kept_pars, 0) AS DOUBLE) / CAST(total_pars AS DOUBLE)", 6)} AS kept_frac
               |FROM tot LEFT JOIN kept ON tot.lang = kept.lang
-              |ORDER BY tot.lang""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+              |ORDER BY tot.lang""".stripMargin.replace("\n", " "))),
 
     // Exact substring-level dedup — the Lee et al.
     // "Deduplicating Training Data Makes Language Models Better"
@@ -1916,7 +1853,7 @@ object TextQueries {
               |win AS (SELECT doc_id,
               |unnest(range(0, len(w) - 9)) AS pos,
               |unnest(list_transform(range(0, len(w) - 9),
-              |i -> ${hxDuck("array_to_string(w[(i+1):(i+10)], ' ')")})) AS dg
+              |i -> ${hxSql("array_to_string(w[(i+1):(i+10)], ' ')")})) AS dg
               |FROM d WHERE len(w) >= 10),
               |sh AS (SELECT dg, (min(doc_id) <> max(doc_id)) AS shared FROM win GROUP BY dg),
               |j AS (SELECT doc_id, pos, shared FROM win JOIN sh USING (dg)),
@@ -1934,32 +1871,20 @@ object TextQueries {
               |COALESCE(best + 9, 0) AS max_run_tokens
               |FROM (SELECT doc_id FROM documents) docs
               |LEFT JOIN per USING (doc_id) LEFT JOIN mx USING (doc_id)
-              |ORDER BY docs.doc_id""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+              |ORDER BY docs.doc_id""".stripMargin.replace("\n", " "))),
 
     // Gopher-style quality-rule bundle — the standard
     // pretraining filter set alongside repetition/entropy: word count in
     // [20, 100k], mean word length in [3, 10], ≥80% purely-alphabetic
-    // words, ≥2 stopwords. Every per-doc signal is INTEGER arithmetic
-    // (counts and cross-multiplied bounds — `chars ≥ 3·nw` instead of a
-    // float ratio), so the pass decision is bit-identical across engines
-    // with no rounding discipline needed; the only doubles are the two
-    // final pround'd per-source averages over exact BIGINT sums. Map-only
+    // words, ≥2 stopwords ([[gopherPass]]: integer arithmetic, so the
+    // pass decision needs no rounding discipline); the only doubles are
+    // the two final pround'd per-source averages over exact BIGINT sums. Map-only
     // scoring, one tiny per-source aggregate — zero corpus shuffle.
     "text_gopher_rules" -> QueryDef(
       (spark, dir) => {
-        val stops = inList(Stopwords)
-        t(spark, dir, "documents")
-          .withColumn("w", split(col("text"), " "))
-          .select(col("source"),
-            size(col("w")).cast("long").as("nw"),
-            expr("aggregate(w, cast(0 as bigint), (a, x) -> a + length(x))").as("chars"),
-            expr(s"cast(size(filter(w, x -> x IN $stops)) as bigint)").as("stopc"),
-            expr("cast(size(filter(w, x -> x rlike '^[a-z]+$')) as bigint)").as("alphac"))
-          .withColumn("pass",
-            col("nw") >= 20 && col("nw") <= 100000 &&
-              col("chars") >= col("nw") * 3 && col("chars") <= col("nw") * 10 &&
-              col("alphac") * 5 >= col("nw") * 4 && col("stopc") >= 2)
+        gopherSignals(t(spark, dir, "documents"))
+          .select(col("source"), col("nw"), col("chars"), col("stopc"), col("alphac"))
+          .withColumn("pass", gopherPass)
           .groupBy("source")
           .agg(cnt("docs"),
             sum(when(col("pass"), 1L).otherwise(0L)).cast("long").as("passed"),
@@ -1969,19 +1894,13 @@ object TextQueries {
               .as("stop_frac"))
           .orderBy(col("source"))
       },
-      Some(s"""WITH s AS (SELECT source,
-              |CAST(len(w) AS BIGINT) AS nw,
-              |CAST(list_sum(list_transform(w, x -> length(x))) AS BIGINT) AS chars,
-              |CAST(len(list_filter(w, x -> x IN ${inList(Stopwords)})) AS BIGINT) AS stopc,
-              |CAST(len(list_filter(w, x -> regexp_matches(x, '^[a-z]+$$'))) AS BIGINT) AS alphac
+      Some(s"""WITH s AS (SELECT source, ${TextSql.gopherSignals}
               |FROM (SELECT source, string_split(text, ' ') AS w FROM documents))
               |SELECT source, CAST(count(*) AS BIGINT) AS docs,
-              |CAST(sum(CASE WHEN nw >= 20 AND nw <= 100000 AND chars >= nw * 3 AND chars <= nw * 10
-              |AND alphac * 5 >= nw * 4 AND stopc >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS passed,
+              |CAST(sum(CASE WHEN ${TextSql.gopherPass} THEN 1 ELSE 0 END) AS BIGINT) AS passed,
               |${proundSql("CAST(sum(chars) AS DOUBLE) / CAST(sum(nw) AS DOUBLE)", 4)} AS mean_word_len,
               |${proundSql("CAST(sum(stopc) AS DOUBLE) / CAST(sum(nw) AS DOUBLE)", 4)} AS stop_frac
-              |FROM s GROUP BY source ORDER BY source""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+              |FROM s GROUP BY source ORDER BY source""".stripMargin.replace("\n", " "))),
 
     // fastText-style learned quality classifier — the
     // standard LEARNED filter beside the rule-based Gopher bundle: score
@@ -2032,13 +1951,12 @@ object TextQueries {
         s"""WITH scored AS (SELECT source,
            |CAST(${proundSql(s"list_dot_product($feats, $wlit)", 4)} AS DOUBLE) AS score
            |FROM (SELECT source, list_transform(string_split(text, ' '),
-           |x -> ${hxDuck("x")} % $D) AS bs FROM documents))
+           |x -> ${hxSql("x")} % $D) AS bs FROM documents))
            |SELECT source, CAST(count(*) AS BIGINT) AS docs,
            |CAST(sum(CASE WHEN score > 0.0 THEN 1 ELSE 0 END) AS BIGINT) AS passed,
            |${proundSql("CAST(sum(CAST(score AS DECIMAL(14,4))) AS DOUBLE) / CAST(count(*) AS DOUBLE)", 4)} AS mean_score
            |FROM scored GROUP BY source ORDER BY source""".stripMargin.replace("\n", " ")
-      },
-      tier = "E"),
+      }),
 
     // MinHash estimator accuracy — the dedup lane's quality gate, the
     // analog of ann_recall_eval on the ANN lane: for every LSH candidate
@@ -2082,8 +2000,7 @@ object TextQueries {
            |${proundSql(s"abs(est - $ja)", 4)} AS err_r
            |FROM est JOIN shs s1 ON s1.doc_id = est.d1 JOIN shs s2 ON s2.doc_id = est.d2
            |ORDER BY d1, d2 LIMIT 500""".stripMargin.replace("\n", " ")
-      },
-      tier = "E"),
+      }),
 
     // Sequence packing — the concat-and-chunk step that turns a curated
     // corpus into fixed-budget training sequences: per language, documents
@@ -2106,7 +2023,6 @@ object TextQueries {
     // join_skew_salted and sample_lang_balanced.
     "text_pack_sequences" -> QueryDef(
       (spark, dir) => {
-        import org.apache.spark.sql.expressions.Window
         val d = t(spark, dir, "documents")
           .select(col("doc_id"), col("lang"),
             size(split(col("text"), " ")).cast("long").as("tk"))
@@ -2131,14 +2047,13 @@ object TextQueries {
       },
       Some(s"""WITH d AS (SELECT doc_id, lang,
               |CAST(len(string_split(text, ' ')) AS BIGINT) AS tk,
-              |${hxDuck("'pack|' || CAST(doc_id AS VARCHAR)")} AS h FROM documents),
+              |${hxSql("'pack|' || CAST(doc_id AS VARCHAR)")} AS h FROM documents),
               |c AS (SELECT lang, tk,
               |sum(tk) OVER (PARTITION BY lang ORDER BY h, doc_id ROWS UNBOUNDED PRECEDING) - tk AS strt
               |FROM d)
               |SELECT lang, CAST(strt // 256 AS BIGINT) AS chunk, CAST(count(*) AS BIGINT) AS docs,
               |CAST(sum(tk) AS BIGINT) AS tokens
-              |FROM c GROUP BY lang, chunk ORDER BY lang, chunk""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+              |FROM c GROUP BY lang, chunk ORDER BY lang, chunk""".stripMargin.replace("\n", " "))),
 
     // Count-min sketch (Cormode–Muthukrishnan) heavy-hitter estimation —
     // unlike `approx_distinct_hll` (engine-native sketch, rows-only) this
@@ -2176,16 +2091,15 @@ object TextQueries {
       },
       Some(s"""WITH w AS (SELECT unnest(string_split(text, ' ')) AS w FROM documents),
               |lanes AS (SELECT unnest([0, 1, 2, 3]) AS i),
-              |pe AS (SELECT i, (${hxDuck("'cms|' || w")} >> (i * 8)) & 255 AS pos FROM w CROSS JOIN lanes),
+              |pe AS (SELECT i, (${hxSql("'cms|' || w")} >> (i * 8)) & 255 AS pos FROM w CROSS JOIN lanes),
               |cms AS (SELECT i, pos, CAST(count(*) AS BIGINT) AS c FROM pe GROUP BY i, pos),
               |top AS (SELECT w, CAST(count(*) AS BIGINT) AS exact FROM w GROUP BY w
               |ORDER BY exact DESC, w LIMIT 20),
-              |tp AS (SELECT w, exact, i, (${hxDuck("'cms|' || w")} >> (i * 8)) & 255 AS pos
+              |tp AS (SELECT w, exact, i, (${hxSql("'cms|' || w")} >> (i * 8)) & 255 AS pos
               |FROM top CROSS JOIN lanes)
               |SELECT tp.w AS word, tp.exact, CAST(min(cms.c) AS BIGINT) AS est
               |FROM tp JOIN cms ON tp.i = cms.i AND tp.pos = cms.pos
-              |GROUP BY tp.w, tp.exact ORDER BY exact DESC, word""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+              |GROUP BY tp.w, tp.exact ORDER BY exact DESC, word""".stripMargin.replace("\n", " "))),
 
     // Approximate heavy-hitter top-K — the CH `topK` (space-saving)
     // signature, completing the sketch surface beside HLL, count-min,
@@ -2210,7 +2124,6 @@ object TextQueries {
     // space-saving property the CH signature promises.
     "sketch_topk" -> QueryDef(
       (spark, dir) => {
-        import org.apache.spark.sql.expressions.Window
         val counted = t(spark, dir, "documents")
           .select(explode(split(col("text"), " ")).as("w"))
           .withColumn("lane", expr(hx("concat('topk|', w)")) % 8)
@@ -2223,14 +2136,13 @@ object TextQueries {
           .select(col("w").as("word"), col("c").as("est"))
       },
       Some(s"""WITH w AS (SELECT unnest(string_split(text, ' ')) AS w FROM documents),
-              |lc AS (SELECT (${hxDuck("'topk|' || w")}) % 8 AS lane, w,
+              |lc AS (SELECT (${hxSql("'topk|' || w")}) % 8 AS lane, w,
               |CAST(count(*) AS BIGINT) AS c FROM w GROUP BY 1, 2),
               |cand AS (SELECT w, c FROM (
               |SELECT w, c, row_number() OVER (PARTITION BY lane ORDER BY c DESC, w) AS rn
               |FROM lc) WHERE rn <= 5)
               |SELECT w AS word, c AS est FROM cand
-              |ORDER BY c DESC, w LIMIT 20""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+              |ORDER BY c DESC, w LIMIT 20""".stripMargin.replace("\n", " "))),
 
     // Bloom-filter prefilter for incremental ingest — the membership
     // gate that sits in FRONT of dedup_incremental at scale: the existing
@@ -2285,7 +2197,7 @@ object TextQueries {
             sum(when(col("maybe") && col("is_dup").isNull, 1L).otherwise(0L))
               .cast("long").as("false_pos"))
       },
-      Some(s"""WITH d AS (SELECT doc_id, ${hxDuck("text")} AS h FROM documents),
+      Some(s"""WITH d AS (SELECT doc_id, ${hxSql("text")} AS h FROM documents),
               |ex AS (SELECT doc_id, h FROM d WHERE doc_id < 250),
               |de AS (SELECT doc_id, h FROM d WHERE doc_id >= 250),
               |ks AS (SELECT unnest([0, 1, 2]) AS j),
@@ -2304,8 +2216,7 @@ object TextQueries {
               |CAST(sum(CASE WHEN NOT maybe THEN 1 ELSE 0 END) AS BIGINT) AS bloom_new,
               |CAST(sum(CASE WHEN dup.doc_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS true_dups,
               |CAST(sum(CASE WHEN maybe AND dup.doc_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS false_pos
-              |FROM probe LEFT JOIN dup ON probe.doc_id = dup.doc_id""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+              |FROM probe LEFT JOIN dup ON probe.doc_id = dup.doc_id""".stripMargin.replace("\n", " "))),
 
     // Unigram language-model scoring — the CCNet-style perplexity signal
     // beside the rule-based (text_gopher_rules) and learned-linear
@@ -2360,8 +2271,7 @@ object TextQueries {
               |FROM dw LEFT JOIN v ON dw.w = v.w CROSS JOIN n)
               |SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens,
               |${proundSql("CAST(sum(nll) AS DOUBLE) / CAST(sum(c) AS DOUBLE)", 4)} AS bpt
-              |FROM sc GROUP BY doc_id ORDER BY doc_id LIMIT 300""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+              |FROM sc GROUP BY doc_id ORDER BY doc_id LIMIT 300""".stripMargin.replace("\n", " "))),
 
     // Interpolated BIGRAM language model — the count-based LM one notch
     // above text_perplexity_lm's unigram: per-token probability is
@@ -2407,7 +2317,7 @@ object TextQueries {
         // (one exchange by ph) instead of a groupBy(ph) + join back
         // (exchange + join) — guide §2.4; identical values.
         val gbc = gb.withColumn("cp", sum(col("cb"))
-          .over(org.apache.spark.sql.expressions.Window.partitionBy("ph"))
+          .over(Window.partitionBy("ph"))
           .cast("long"))
         val uni = words.select(xxhash64(col("w")).as("wh"))
           .groupBy("wh").agg(cnt("cw")).scopedPersist()
@@ -2431,8 +2341,7 @@ object TextQueries {
       Some {
         val prob = "0.75 * (CAST(cb AS DOUBLE) / CAST(cp AS DOUBLE)) " +
           "+ 0.25 * (CAST(cw AS DOUBLE) / CAST(total AS DOUBLE))"
-        s"""WITH p AS (SELECT doc_id, unnest(list_transform(range(1, len(w)),
-           |j -> w[j] || ' ' || w[j+1])) AS bg
+        s"""WITH p AS (SELECT doc_id, unnest(${TextSql.wordGrams("w", 2)}) AS bg
            |FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents
            |WHERE len(string_split(text, ' ')) >= 2)),
            |wd AS (SELECT unnest(string_split(text, ' ')) AS w FROM documents),
@@ -2452,8 +2361,7 @@ object TextQueries {
            |SELECT doc_id, CAST(sum(m) AS BIGINT) AS n_bigrams,
            |${proundSql("CAST(sum(bits) AS DOUBLE) / CAST(sum(m) AS DOUBLE)", 4)} AS bpt
            |FROM sc GROUP BY doc_id ORDER BY doc_id LIMIT 300""".stripMargin.replace("\n", " ")
-      },
-      tier = "E"),
+      }),
 
     // Edit-distance near-dup — the character-level similarity the
     // shingle/minhash family cannot see (transpositions, small in-place
@@ -2472,7 +2380,6 @@ object TextQueries {
     // dedup_ngram_jaccard.
     "dedup_edit_distance" -> QueryDef(
       (spark, dir) => {
-        import org.apache.spark.sql.expressions.Window
         val d = docsSpread(spark, dir)
         val probes = d.filter(col("doc_id") < 15)
           .select(col("doc_id").as("probe"), col("lang"),
@@ -2496,8 +2403,7 @@ object TextQueries {
              |FROM documents a JOIN documents b ON b.lang = a.lang
              |AND a.doc_id < 15 AND b.doc_id <> a.doc_id
              |AND abs(b.n_chars - a.n_chars) <= 16)
-             |WHERE rn <= 3 ORDER BY probe, dist, cand""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |WHERE rn <= 3 ORDER BY probe, dist, cand""".stripMargin.replace("\n", " "))),
 
     // Exact corpus×corpus set-similarity join via PREFIX FILTERING — the
     // AllPairs/PPJoin answer to "find every pair with word-Jaccard ≥ 0.9
@@ -2590,8 +2496,7 @@ object TextQueries {
         }
         jaccardVerify(spark, sorted, jaccardExactCands(keyed, gen), thr)
       },
-      Some(jaccardExactOracle),
-      tier = "E"),
+      Some(jaccardExactOracle)),
 
     // The ROUTED outcome of the jaccard guard, hash-matched end-to-end
     //: dedup_jaccard_prefix's guard either runs exact
@@ -2743,8 +2648,7 @@ object TextQueries {
           }
         }
       },
-      Some(jaccardExactOracle),
-      tier = "E"),
+      Some(jaccardExactOracle)),
 
     // BPE training, the counting step — iteration 0 of byte-pair encoding
     // (Sennrich et al., ACL'16) counts every adjacent symbol pair across
@@ -2779,8 +2683,7 @@ object TextQueries {
              |SELECT unnest(string_split(text, ' ')) AS w FROM documents) t,
              |LATERAL (SELECT unnest(generate_series(1, length(w) - 1)) AS i) g
              |WHERE length(w) >= 2)
-             |GROUP BY pair ORDER BY n DESC, pair LIMIT 50""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |GROUP BY pair ORDER BY n DESC, pair LIMIT 50""".stripMargin.replace("\n", " "))),
 
     // ClickHouse topKWeighted — the weighted space-saving variant of
     // sketch_topk: candidates rank by an integer WEIGHT sum (here the
@@ -2793,7 +2696,6 @@ object TextQueries {
     // the post-aggregate vocab, and the final top-20 is a TakeOrdered.
     "sketch_topk_weighted" -> QueryDef(
       (spark, dir) => {
-        import org.apache.spark.sql.expressions.Window
         val counted = t(spark, dir, "documents")
           .select(col("n_chars"), explode(split(col("text"), " ")).as("w"))
           .withColumn("lane", expr(hx("concat('topk|', w)")) % 8)
@@ -2807,14 +2709,13 @@ object TextQueries {
           .select(col("w").as("word"), col("wt").as("weight"))
       },
       Some(s"""WITH w AS (SELECT n_chars, unnest(string_split(text, ' ')) AS w FROM documents),
-              |lc AS (SELECT (${hxDuck("'topk|' || w")}) % 8 AS lane, w,
+              |lc AS (SELECT (${hxSql("'topk|' || w")}) % 8 AS lane, w,
               |CAST(sum(n_chars) AS BIGINT) AS wt FROM w GROUP BY 1, 2),
               |cand AS (SELECT w, wt FROM (
               |SELECT w, wt, row_number() OVER (PARTITION BY lane ORDER BY wt DESC, w) AS rn
               |FROM lc) WHERE rn <= 5)
               |SELECT w AS word, wt AS weight FROM cand
-              |ORDER BY wt DESC, w LIMIT 20""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+              |ORDER BY wt DESC, w LIMIT 20""".stripMargin.replace("\n", " "))),
 
     // The actual BPE TRAINING loop (Sennrich et al. 2016), three merge
     // rounds unrolled: count adjacent symbol pairs weighted by word
@@ -2900,8 +2801,7 @@ object TextQueries {
              |SELECT 1 AS round, a AS left_sym, b AS right_sym, n AS pair_count FROM t1
              |UNION ALL SELECT 2, a, b, n FROM t2
              |UNION ALL SELECT 3, a, b, n FROM t3
-             |ORDER BY round""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |ORDER BY round""".stripMargin.replace("\n", " "))),
 
     // Quality-bucketed curriculum mixing — the composition a training-mix
     // pipeline actually runs: score every document (text_quality_score's
@@ -2920,14 +2820,9 @@ object TextQueries {
     // count). No sort of the corpus anywhere.
     "sample_quality_mix" -> QueryDef(
       (spark, dir) => {
-        import org.apache.spark.sql.expressions.Window
-        val stops = inList(Stopwords)
-        val score = s"0.5 * least(1.0, cast(n_chars as double) / 500.0) + " +
-          s"0.5 * (cast(size(filter(w, x -> x IN $stops)) as double) / cast(size(w) as double))"
         val scored = t(spark, dir, "documents")
           .withColumn("w", split(col("text"), " "))
-          .select(col("doc_id"), col("lang"),
-            expr(s"cast(${proundSql(score, 4)} as double)").as("q"))
+          .select(col("doc_id"), col("lang"), qualityScore.as("q"))
           .scopedPersist()
         val stats = scored.groupBy("lang")
           .agg(min(col("q")).as("mn"), max(col("q")).as("mx"), cnt("n"))
@@ -2965,11 +2860,8 @@ object TextQueries {
           .orderBy(col("lang"), col("bucket"))
       },
       Some {
-        val scoreDuck = "0.5 * least(1.0, CAST(n_chars AS DOUBLE) / 500.0) + " +
-          "0.5 * (CAST(len(list_filter(string_split(text, ' '), x -> x IN " +
-          inList(Stopwords) + ")) AS DOUBLE) / CAST(len(string_split(text, ' ')) AS DOUBLE))"
         s"""WITH scored AS (SELECT doc_id, lang,
-           |CAST(${proundSql(scoreDuck, 4)} AS DOUBLE) AS q FROM documents),
+           |${TextSql.qualityScore} AS q FROM documents),
            |st AS (SELECT lang, min(q) AS mn, max(q) AS mx,
            |CAST(count(*) AS BIGINT) AS n FROM scored GROUP BY lang),
            |h AS (SELECT scored.lang,
@@ -2994,12 +2886,11 @@ object TextQueries {
            |CASE bucket WHEN 'low' THEN 10 WHEN 'mid' THEN 50 ELSE 100 END AS rate
            |FROM asg)
            |SELECT lang, bucket, CAST(count(*) AS BIGINT) AS docs,
-           |CAST(sum(CASE WHEN ${hxDuck("CAST(doc_id AS VARCHAR)")} % 100 < rate
+           |CAST(sum(CASE WHEN ${hxSql("CAST(doc_id AS VARCHAR)")} % 100 < rate
            |THEN 1 ELSE 0 END) AS BIGINT) AS kept,
            |CAST(max(rate) AS BIGINT) AS target_pct
            |FROM r GROUP BY lang, bucket ORDER BY lang, bucket""".stripMargin.replace("\n", " ")
-      },
-      tier = "E"),
+      }),
 
     // Deterministic train/validation/test split — the partition every
     // training pipeline needs before anything else touches the corpus.
@@ -3027,9 +2918,8 @@ object TextQueries {
              |CAST(count(*) AS BIGINT) AS docs,
              |CAST(sum(n_chars) AS BIGINT) AS chars
              |FROM (SELECT lang, n_chars,
-             |${hxDuck("CAST(doc_id AS VARCHAR)")} % 100 AS b FROM documents)
-             |GROUP BY 1, 2 ORDER BY split, lang""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |${hxSql("CAST(doc_id AS VARCHAR)")} % 100 AS b FROM documents)
+             |GROUP BY 1, 2 ORDER BY split, lang""".stripMargin.replace("\n", " "))),
 
     // Boilerplate stripping (CCNet line-dedup semantics): a segment that
     // recurs across ≥3 DISTINCT documents of the same source is template
@@ -3049,10 +2939,7 @@ object TextQueries {
       (spark, dir) => {
         val seg = t(spark, dir, "documents")
           .withColumn("w", split(col("text"), " "))
-          .select(col("doc_id"), col("source"), explode(expr(
-            """transform(sequence(0, cast(ceil(size(w) / 10.0) as int) - 1),
-              |i -> md5(concat_ws(' ', slice(w, i * 10 + 1, 10))))"""
-              .stripMargin.replace("\n", " "))).as("dg"))
+          .select(col("doc_id"), col("source"), explode(expr(paragraphDigests)).as("dg"))
           .scopedPersist()
         val bp = seg.select(col("source"), col("dg"), col("doc_id")).distinct()
           .groupBy(col("source"), col("dg")).agg(cnt("ndocs"))
@@ -3072,9 +2959,7 @@ object TextQueries {
           .orderBy(col("source"))
       },
       Some(s"""WITH d AS (SELECT doc_id, source, string_split(text, ' ') AS w FROM documents),
-             |seg AS (SELECT doc_id, source,
-             |unnest(list_transform(range(0, CAST(ceil(len(w) / 10.0) AS BIGINT)),
-             |i -> md5(array_to_string(w[(i*10+1):(i*10+10)], ' ')))) AS dg FROM d),
+             |seg AS (SELECT doc_id, source, unnest(${TextSql.paragraphDigests}) AS dg FROM d),
              |bp AS (SELECT source, dg FROM (
              |SELECT source, dg, CAST(count(DISTINCT doc_id) AS BIGINT) AS ndocs
              |FROM seg GROUP BY 1, 2) WHERE ndocs >= 3),
@@ -3090,8 +2975,7 @@ object TextQueries {
              |COALESCE(removed_instances, 0) AS removed_instances,
              |COALESCE(affected_docs, 0) AS affected_docs
              |FROM tot LEFT JOIN rem ON tot.source = rem.source
-             |ORDER BY tot.source""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |ORDER BY tot.source""".stripMargin.replace("\n", " "))),
 
     // Domain reweighting (DoReMi / Pile-style target mixes): given a
     // TARGET language mix, compute each domain's importance weight
@@ -3147,8 +3031,7 @@ object TextQueries {
              |FROM f)
              |SELECT lang, n, ${proundSql("w", 6)} AS weight,
              |${proundSql("s1 * s1 / s2", 2)} AS ess
-             |FROM w CROSS JOIN e ORDER BY lang""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |FROM w CROSS JOIN e ORDER BY lang""".stripMargin.replace("\n", " "))),
 
     // LSH band-configuration tuning — the calibration an operator runs
     // BEFORE a 100 TB dedup sweep: from ONE set of 8 minhash lanes,
@@ -3203,8 +3086,7 @@ object TextQueries {
            |COALESCE(candidate_pairs, 0) AS candidate_pairs
            |FROM meta LEFT JOIN p ON meta.cfg = p.cfg
            |ORDER BY meta.cfg""".stripMargin.replace("\n", " ")
-      },
-      tier = "E"),
+      }),
 
     // Code-vs-prose routing — the corpus-splitting step before
     // modality-specific quality pipelines (code gets linted/dedup'd by
@@ -3243,6 +3125,5 @@ object TextQueries {
            |CAST(sum(CASE WHEN score >= 0.02 THEN 1 ELSE 0 END) AS BIGINT) AS code_docs,
            |${proundSql("CAST(sum(CAST(score * 1000000 AS DECIMAL(18,0))) AS DOUBLE) / CAST(count(*) AS DOUBLE) / 1000000.0", 6)} AS avg_score
            |FROM s GROUP BY lang ORDER BY lang""".stripMargin.replace("\n", " ")
-      },
-      tier = "E"))
+      }))
 }

@@ -72,8 +72,7 @@ object WindowQueries {
              | / CAST(count(value) OVER w AS DOUBLE)""".stripMargin.replace("\n", ""), 2)} AS mavg
              |FROM events
              |WINDOW w AS (PARTITION BY user_id ORDER BY event_id ROWS BETWEEN 3 PRECEDING AND CURRENT ROW)
-             |ORDER BY event_id LIMIT 500""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |ORDER BY event_id LIMIT 500""".stripMargin.replace("\n", " "))),
 
     "win_running_sum" -> QueryDef(
       (spark, dir) => {
@@ -87,8 +86,7 @@ object WindowQueries {
       Some("""SELECT event_id, user_id,
              |CAST(round(sum(CAST(value AS DECIMAL(14,2))) OVER
              |(PARTITION BY user_id ORDER BY event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS DOUBLE) AS rsum
-             |FROM events ORDER BY event_id LIMIT 500""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |FROM events ORDER BY event_id LIMIT 500""".stripMargin.replace("\n", " "))),
 
     // Relative-rank windows: percent_rank = (rank−1)/(n−1) and cume_dist
     // = rows≤current/n — both one IEEE division, pround(6)'d. Partitioned
@@ -109,8 +107,7 @@ object WindowQueries {
              |${proundSql("cume_dist() OVER w", 6)} AS cd
              |FROM customer
              |WINDOW w AS (PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey)
-             |ORDER BY nationkey, prk, c_custkey LIMIT 300""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |ORDER BY nationkey, prk, c_custkey LIMIT 300""".stripMargin.replace("\n", " "))),
 
     // first/last_value with an explicit full-partition frame (default
     // frames stop at CURRENT ROW for last_value — the classic trap).
@@ -129,8 +126,7 @@ object WindowQueries {
              |last_value(event_type) OVER w AS last_et
              |FROM events
              |WINDOW w AS (PARTITION BY user_id ORDER BY event_id ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-             |ORDER BY event_id LIMIT 500""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |ORDER BY event_id LIMIT 500""".stripMargin.replace("\n", " "))),
 
     // Exact NTILE(4) without a single-partition window, which would
     // funnel the whole table through one task.
@@ -180,8 +176,7 @@ object WindowQueries {
              |min(c_custkey) AS min_ck, max(c_custkey) AS max_ck
              |FROM (SELECT c_custkey,
              |CAST(ntile(4) OVER (ORDER BY c_acctbal DESC, c_custkey) AS BIGINT) AS bucket
-             |FROM customer) GROUP BY bucket ORDER BY bucket""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |FROM customer) GROUP BY bucket ORDER BY bucket""".stripMargin.replace("\n", " "))),
 
     // Gaps-and-islands — the classic streak detector: within a user's
     // event stream (ordered by event_id), maximal runs of the SAME
@@ -213,8 +208,7 @@ object WindowQueries {
              |- row_number() OVER (PARTITION BY user_id, event_type ORDER BY event_id) AS grp
              |FROM events)
              |GROUP BY user_id, event_type, grp)
-             |GROUP BY user_id ORDER BY user_id""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |GROUP BY user_id ORDER BY user_id""".stripMargin.replace("\n", " "))),
 
     // cume_dist + nth_value — the two window functions the surface still
     // lacked. cume_dist is rank-family (frame-less in both engines; the
@@ -246,8 +240,7 @@ object WindowQueries {
              |nth_value(value, 3) OVER (PARTITION BY user_id ORDER BY ts, event_id
              |ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS v3
              |FROM events)
-             |ORDER BY event_id LIMIT 500""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |ORDER BY event_id LIMIT 500""".stripMargin.replace("\n", " "))),
 
     // RANGE frame over event TIME — the frame shape every declared
     // window so far lacks (all are ROWS frames): per user, the trailing
@@ -286,8 +279,7 @@ object WindowQueries {
              | + CAST(second(ts) AS BIGINT) AS secs FROM events)
              |WINDOW w AS (PARTITION BY user_id ORDER BY secs
              |RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW))
-             |ORDER BY event_id LIMIT 500""".stripMargin.replace("\n", " ")),
-      tier = "E"),
+             |ORDER BY event_id LIMIT 500""".stripMargin.replace("\n", " "))),
 
     // Running DISTINCT count — the window composition for "breadth over
     // time": a first-occurrence flag (row_number over (user, type) = 1)
@@ -329,6 +321,5 @@ object WindowQueries {
              |CASE WHEN row_number() OVER (PARTITION BY user_id, event_type
              |ORDER BY ts, event_id) = 1 THEN 1 ELSE 0 END AS flag
              |FROM events))
-             |GROUP BY user_id ORDER BY user_id""".stripMargin.replace("\n", " ")),
-      tier = "E"))
+             |GROUP BY user_id ORDER BY user_id""".stripMargin.replace("\n", " "))))
 }

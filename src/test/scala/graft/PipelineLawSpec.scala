@@ -56,4 +56,17 @@ class PipelineLawSpec extends SparkSpec {
     assert(rows.head._3 + rows(1)._3 === full.head._3,
       "existing + delta id-sums must partition the corpus id-sum")
   }
+
+  test("text_gopher_rules and pipeline_curation_e2e apply the one gopher rule") {
+    import org.apache.spark.sql.functions.{col, sum}
+    import graft.operators.TextQueries.{gopherPass, gopherSignals}
+    val pass = gopherSignals(graft.core.t(spark, sf001, "documents")).filter(gopherPass)
+    val passed = Registry.all.toMap.apply("text_gopher_rules").fn(spark, sf001)
+      .agg(sum("passed")).head.getLong(0)
+    assert(passed === pass.count(), "text_gopher_rules' pass count")
+    val (_, survivors, idSum) = funnel("pipeline_curation_e2e").find(_._1 == "2_gopher").get
+    val trainable = pass.filter(col("doc_id") >= 10)
+    assert(survivors === trainable.count(), "2_gopher survivors")
+    assert(idSum === trainable.agg(sum("doc_id")).head.getLong(0), "2_gopher id_sum")
+  }
 }

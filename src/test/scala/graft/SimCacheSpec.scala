@@ -34,43 +34,40 @@ class SimCacheSpec extends SparkSpec {
   }
 
   test("corpusN re-counts after a regeneration and evicts the stale entry") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_simcache_n").toString
-    regen(dir, 1)
-    val n1 = SimilarityQueries.corpusN(spark, dir)
-    assert(n1 > 0)
-    regen(dir, 2)
-    val n2 = SimilarityQueries.corpusN(spark, dir)
-    assert(n2 === n1 * 2, s"stale corpus count after regeneration: $n2 != 2 x $n1")
+    withTempDir("graft_simcache_n") { dir =>
+      regen(dir, 1)
+      val n1 = SimilarityQueries.corpusN(spark, dir)
+      assert(n1 > 0)
+      regen(dir, 2)
+      val n2 = SimilarityQueries.corpusN(spark, dir)
+      assert(n2 === n1 * 2, s"stale corpus count after regeneration: $n2 != 2 x $n1")
+    }
   }
 
   test("sharedOr evicts a superseded generation's entry AND its checkpoint blocks") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_simcache_s").toString
-    regen(dir, 1)
-    spark.conf.set(SharedPipeline.key, "true")
-    try {
-      val before = persistedCount
-      val a = sharedOr(spark, dir, "spec") {
-        spark.read.parquet(s"$dir/embeddings.parquet").select("vec_id")
-      }
-      val na = a.count() // before regen: eviction truncates a's lineage
-      assert(na > 0)
-      assert(sharedFps(dir).size === 1)
-      assert(persistedCount === before + 1,
-        "the shared build must be checkpoint-persisted")
-      regen(dir, 2)
-      val b = sharedOr(spark, dir, "spec") {
-        spark.read.parquet(s"$dir/embeddings.parquet").select("vec_id")
-      }
-      assert(b.count() === na * 2, "stale shared build served after regeneration")
-      assert(sharedFps(dir).size === 1,
-        s"superseded generation must be evicted: ${sharedFps(dir)}")
-      assert(persistedCount === before + 1,
-        "the superseded generation's checkpoint blocks must be unpersisted")
-    } finally {
-      spark.conf.unset(SharedPipeline.key)
-      // leave no cached blocks behind — DeterminismSpec's sweep-end
-      // zero-blocks pin runs later in this same session
-      evictSharedFor(dir)
+    withTempDir("graft_simcache_s") { dir =>
+      regen(dir, 1)
+      spark.conf.set(SharedPipeline.key, "true")
+      try {
+        val before = persistedCount
+        val a = sharedOr(spark, dir, "spec") {
+          spark.read.parquet(s"$dir/embeddings.parquet").select("vec_id")
+        }
+        val na = a.count() // before regen: eviction truncates a's lineage
+        assert(na > 0)
+        assert(sharedFps(dir).size === 1)
+        assert(persistedCount === before + 1,
+          "the shared build must be checkpoint-persisted")
+        regen(dir, 2)
+        val b = sharedOr(spark, dir, "spec") {
+          spark.read.parquet(s"$dir/embeddings.parquet").select("vec_id")
+        }
+        assert(b.count() === na * 2, "stale shared build served after regeneration")
+        assert(sharedFps(dir).size === 1,
+          s"superseded generation must be evicted: ${sharedFps(dir)}")
+        assert(persistedCount === before + 1,
+          "the superseded generation's checkpoint blocks must be unpersisted")
+      } finally spark.conf.unset(SharedPipeline.key)
     }
   }
 
@@ -86,19 +83,18 @@ class SimCacheSpec extends SparkSpec {
   }
 
   test("shared text and graph builds follow a regeneration of their dir") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_simcache_tg").toString
-    // text_winnowing's top-300 rows all come from the base copy, so
-    // dedup_minhash_lsh's corpus-wide count (the verified pipeline's
-    // pairs) is what shows a stale text build; every LSH kernel and
-    // ring-family consumer is also compared shared against unshared
-    val keys = Seq("text_winnowing", "dedup_minhash_lsh", "dedup_minhash_verified",
-      "dedup_keep_list", "dedup_cluster_components", "dedup_incremental",
-      "dedup_minhash_est", "dedup_lsh_tuning", "graph_triangle_count",
-      "dedup_semantic", "dedup_semantic_spread", "sample_diverse_cells",
-      "sample_diverse_cells_spread", "sim_graph_ann", "sim_graph_ann_spread",
-      "sim_graph_hnsw", "sim_graph_hnsw_spread", "sim_ann_rerank")
-    val s = sharedSession()
-    try {
+    withTempDir("graft_simcache_tg") { dir =>
+      // text_winnowing's top-300 rows all come from the base copy, so
+      // dedup_minhash_lsh's corpus-wide count (the verified pipeline's
+      // pairs) is what shows a stale text build; every LSH kernel and
+      // ring-family consumer is also compared shared against unshared
+      val keys = Seq("text_winnowing", "dedup_minhash_lsh", "dedup_minhash_verified",
+        "dedup_keep_list", "dedup_cluster_components", "dedup_incremental",
+        "dedup_minhash_est", "dedup_lsh_tuning", "graph_triangle_count",
+        "dedup_semantic", "dedup_semantic_spread", "sample_diverse_cells",
+        "sample_diverse_cells_spread", "sim_graph_ann", "sim_graph_ann_spread",
+        "sim_graph_hnsw", "sim_graph_hnsw_spread", "sim_ann_rerank")
+      val s = sharedSession()
       regen(dir, 1)
       val gen1 = keys.map(k => k -> run(s, k, dir)).toMap
       keys.foreach(k => assert(gen1(k) === run(spark, k, dir), s"$k: shared != unshared at x1"))
@@ -110,7 +106,7 @@ class SimCacheSpec extends SparkSpec {
         assert(gen2(k) !== gen1(k), s"$k must see the x2 corpus"))
       assert(sharedFps(dir) === Seq(datasetFingerprint(dir)),
         "only the live generation may hold shared builds")
-    } finally evictSharedFor(dir)
+    }
   }
 
   test("the shared switch is per session: only the session that sets it stores a build") {

@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -8,6 +9,20 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val sf001 = "/root/testdata/sf0.001"
+
+  /** Runs `body` on a fresh temp directory, then evicts the directory's
+    * shared builds (so no cached block outlives the test: DeterminismSpec
+    * pins zero blocks at the end of the suite) and deletes it. */
+  def withTempDir(prefix: String)(body: String => Unit): Unit = {
+    val root = Files.createTempDirectory(prefix)
+    try body(root.toString)
+    finally {
+      core.evictSharedFor(root.toString)
+      val paths = Files.walk(root)
+      try paths.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
+      finally paths.close()
+    }
+  }
 }
 
 object SparkSpec {

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 import graft.core.t
@@ -18,17 +17,11 @@ import org.apache.spark.sql.functions.col
 class TableReadSpec extends SparkSpec {
 
   /** Runs `body` on a fresh copy of the sf0.001 tables, then deletes it. */
-  private def withCopy(prefix: String)(body: String => Unit): Unit = {
-    val root = Files.createTempDirectory(prefix)
-    try {
-      ScaleGen.scaleInto(spark, sf001, root.toString, 1)
-      body(root.toString)
-    } finally {
-      val paths = Files.walk(root)
-      try paths.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
-      finally paths.close()
+  private def withCopy(prefix: String)(body: String => Unit): Unit =
+    withTempDir(prefix) { dir =>
+      ScaleGen.scaleInto(spark, sf001, dir, 1)
+      body(dir)
     }
-  }
 
   /** Spark jobs that `body` starts on `session`'s context. */
   private def jobsOf(session: SparkSession)(body: => Unit): Int = {
