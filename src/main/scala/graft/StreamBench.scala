@@ -46,14 +46,30 @@ object StreamBench {
     Files.move(tmp, dir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
   }
 
-  /** Stage `df` as ONE parquet file at `dest` (a future feed arrival). */
-  private def stageOne(df: DataFrame, dest: Path): Unit = {
-    val tmp = Files.createTempDirectory("graft_sb_chunk").toString
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    Files.copy(part.toPath, dest, StandardCopyOption.REPLACE_EXISTING)
+  /** `body` over fresh temp directories, one per prefix, each deleted
+    * with everything in it once `body` ends: the watched, chunk,
+    * checkpoint and output dirs of a sweep hold copies of the input
+    * tables, so leaving them behind grows the temp dir with every run.
+    */
+  private def withTempDirs[T](prefixes: String*)(body: Seq[Path] => T): T = {
+    val dirs = prefixes.map(Files.createTempDirectory(_))
+    try body(dirs) finally dirs.foreach(deleteTree)
   }
+
+  private def deleteTree(root: Path): Unit = {
+    val paths = Files.walk(root)
+    try paths.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
+    finally paths.close()
+  }
+
+  /** Stage `df` as ONE parquet file at `dest` (a future feed arrival). */
+  private def stageOne(df: DataFrame, dest: Path): Unit =
+    withTempDirs("graft_sb_chunk") { case Seq(tmp) =>
+      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val part = tmp.toFile.listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      Files.copy(part.toPath, dest, StandardCopyOption.REPLACE_EXISTING)
+    }
 
   /** Per-twin streaming-state size: total rows across
     * the final micro-batch's state operators — the number that must stay
@@ -81,16 +97,17 @@ object StreamBench {
     */
   private def arrivals(spark: SparkSession, parts: Seq[Path], schema: StructType, name: String)
                       (build: DataFrame => DataFrame)
-                      (sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit = {
-    val dir = Files.createTempDirectory(s"graft_sb_$name")
-    val q = sink(build(spark.readStream.schema(schema).parquet(dir.toString)).writeStream).start()
-    parts.zipWithIndex.foreach { case (p, i) =>
-      arrive(p, dir, f"arrival_$i%03d.parquet")
-      q.processAllAvailable()
+                      (sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit =
+    withTempDirs(s"graft_sb_$name") { case Seq(dir) =>
+      val q = sink(build(spark.readStream.schema(schema).parquet(dir.toString)).writeStream).start()
+      try {
+        parts.zipWithIndex.foreach { case (p, i) =>
+          arrive(p, dir, f"arrival_$i%03d.parquet")
+          q.processAllAvailable()
+        }
+        recordState(name, q)
+      } finally q.stop()
     }
-    recordState(name, q)
-    q.stop()
-  }
 
   /** Run one twin through [[arrivals]] and collect the memory sink's rows. */
   private def runTwin(spark: SparkSession, parts: Seq[Path], schema: StructType,
@@ -206,35 +223,35 @@ object StreamBench {
     */
   private def restartTwin(spark: SparkSession, parts: Seq[Path], schema: StructType,
                           name: String, mode: String, downArrivals: Int)
-                         (build: DataFrame => DataFrame): Array[Row] = {
-    val dir = Files.createTempDirectory(s"graft_sbr_$name")
-    val ckpt = Files.createTempDirectory(s"graft_sbr_ck_$name").toString
-    val out = Files.createTempDirectory(s"graft_sbr_out_$name").toString
-    def start() = build(spark.readStream.schema(schema).parquet(dir.toString))
-      .writeStream.outputMode(mode)
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        df.write.mode("overwrite").parquet(s"$out/batch=$id")
-      }
-      .start()
-    var arrived = 0
-    def drop(n: Int, q: Option[org.apache.spark.sql.streaming.StreamingQuery]): Unit =
-      parts.slice(arrived, arrived + n).foreach { p =>
-        arrive(p, dir, f"arrival_$arrived%03d.parquet")
-        arrived += 1
-        q.foreach(_.processAllAvailable())
-      }
-    val q1 = start()
-    drop(1, Some(q1))
-    q1.stop() // the "crash": state survives only in the checkpoint
-    drop(downArrivals, None) // the feed keeps moving while we are down
-    val q2 = start()
-    q2.processAllAvailable() // catch up on what landed during the outage
-    drop(parts.size - arrived, Some(q2))
-    recordState(name, q2)
-    q2.stop()
-    spark.read.option("basePath", out).parquet(out).collect()
-  }
+                         (build: DataFrame => DataFrame): Array[Row] =
+    withTempDirs(s"graft_sbr_$name", s"graft_sbr_ck_$name", s"graft_sbr_out_$name") {
+      case Seq(dir, ckptDir, outDir) =>
+        val (ckpt, out) = (ckptDir.toString, outDir.toString)
+        def start() = build(spark.readStream.schema(schema).parquet(dir.toString))
+          .writeStream.outputMode(mode)
+          .option("checkpointLocation", ckpt)
+          .foreachBatch { (df: DataFrame, id: Long) =>
+            df.write.mode("overwrite").parquet(s"$out/batch=$id")
+          }
+          .start()
+        var arrived = 0
+        def drop(n: Int, q: Option[org.apache.spark.sql.streaming.StreamingQuery]): Unit =
+          parts.slice(arrived, arrived + n).foreach { p =>
+            arrive(p, dir, f"arrival_$arrived%03d.parquet")
+            arrived += 1
+            q.foreach(_.processAllAvailable())
+          }
+        val q1 = start()
+        drop(1, Some(q1))
+        q1.stop() // the "crash": state survives only in the checkpoint
+        drop(downArrivals, None) // the feed keeps moving while we are down
+        val q2 = start()
+        q2.processAllAvailable() // catch up on what landed during the outage
+        drop(parts.size - arrived, Some(q2))
+        recordState(name, q2)
+        q2.stop()
+        spark.read.option("basePath", out).parquet(out).collect()
+    }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
@@ -708,67 +725,70 @@ object StreamBench {
       val dupPart = stage.resolve("docs_dup_bands.parquet")
       stageOne(dup, dupPart)
       val parts = docParts :+ dupPart
-      val dir = Files.createTempDirectory("graft_sb_badm")
-      val ckpt = Files.createTempDirectory("graft_sb_badm_ck").toString
-      val stateDir = Files.createTempDirectory("graft_sb_badm_state").toString
-      val outDir = Files.createTempDirectory("graft_sb_badm_out").toString
-      def start() = spark.readStream.schema(docSchema).parquet(dir.toString)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: DataFrame, id: Long) =>
-          val bands = minhashBands(df.select(col("doc_id"), col("text")))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val batchOwners = bands.groupBy("k").agg(min(col("doc_id")).as("owner"))
-          val prev = Option(new java.io.File(stateDir).listFiles()).toSeq.flatten
-            .filter(f => f.getName.startsWith("batch=") &&
-              f.getName.stripPrefix("batch=").toLong < id)
-          val prior =
-            if (prev.isEmpty)
-              spark.range(0).select(lit("").as("k"), col("id").as("owner"))
-            else spark.read.parquet(prev.map(_.getPath): _*)
-          val owners = batchOwners.unionByName(prior)
-            .groupBy("k").agg(min(col("owner")).as("owner"))
-          bands.join(owners, Seq("k"))
-            .groupBy("doc_id")
-            .agg(max(when(col("owner") < col("doc_id"), 1L).otherwise(0L)).as("rej"))
-            .filter(col("rej") === 0L).select("doc_id")
-            .write.mode("overwrite").parquet(s"$outDir/batch=$id")
-          batchOwners.write.mode("overwrite").parquet(s"$stateDir/batch=$id")
-          bands.unpersist()
-          ()
-        }
-        .start()
-      val q1 = start()
-      arrive(parts.head, dir, "arrival_000.parquet")
-      q1.processAllAvailable()
-      q1.stop() // the crash
-      arrive(parts(1), dir, "arrival_001.parquet") // lands while down
-      val q2 = start()
-      q2.processAllAvailable()
-      arrive(parts(2), dir, "arrival_002.parquet") // the near-dup copy
-      q2.processAllAvailable()
-      q2.stop()
-      val got = spark.read.option("basePath", outDir).parquet(outDir)
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      // batch truth over everything that was fed
-      val full = spark.read.parquet(parts.map(_.toString): _*)
-      val tb = minhashBands(full.select(col("doc_id"), col("text")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val towners = tb.groupBy("k").agg(min(col("doc_id")).as("owner"))
-      val truth = tb.join(towners, Seq("k"))
-        .groupBy("doc_id")
-        .agg(max(when(col("owner") < col("doc_id"), 1L).otherwise(0L)).as("rej"))
-        .filter(col("rej") === 0L)
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      tb.unpersist()
-      val dupAdmitted = got.count(_ > maxDoc + 1000L)
-      if (got != truth)
-        Left(s"admitted sets differ: stream=${got.size} batch=${truth.size} " +
-          s"missing=${(truth -- got).size} extra=${(got -- truth).size}")
-      else if (dupAdmitted != 0)
-        Left(s"$dupAdmitted cross-incarnation near-dups admitted — state lost")
-      else Right(s"admitted=${got.size} dups_rejected=${dup.count()} restarted=true")
+      withTempDirs("graft_sb_badm", "graft_sb_badm_ck", "graft_sb_badm_state",
+        "graft_sb_badm_out") { case Seq(dir, ckptDir, stateDirP, outDirP) =>
+        val (ckpt, stateDir, outDir) =
+          (ckptDir.toString, stateDirP.toString, outDirP.toString)
+        def start() = spark.readStream.schema(docSchema).parquet(dir.toString)
+          .writeStream.outputMode("append")
+          .option("checkpointLocation", ckpt)
+          .foreachBatch { (df: DataFrame, id: Long) =>
+            val bands = minhashBands(df.select(col("doc_id"), col("text")))
+              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            val batchOwners = bands.groupBy("k").agg(min(col("doc_id")).as("owner"))
+            val prev = Option(new java.io.File(stateDir).listFiles()).toSeq.flatten
+              .filter(f => f.getName.startsWith("batch=") &&
+                f.getName.stripPrefix("batch=").toLong < id)
+            val prior =
+              if (prev.isEmpty)
+                spark.range(0).select(lit("").as("k"), col("id").as("owner"))
+              else spark.read.parquet(prev.map(_.getPath): _*)
+            val owners = batchOwners.unionByName(prior)
+              .groupBy("k").agg(min(col("owner")).as("owner"))
+            bands.join(owners, Seq("k"))
+              .groupBy("doc_id")
+              .agg(max(when(col("owner") < col("doc_id"), 1L).otherwise(0L)).as("rej"))
+              .filter(col("rej") === 0L).select("doc_id")
+              .write.mode("overwrite").parquet(s"$outDir/batch=$id")
+            batchOwners.write.mode("overwrite").parquet(s"$stateDir/batch=$id")
+            bands.unpersist()
+            ()
+          }
+          .start()
+        val q1 = start()
+        arrive(parts.head, dir, "arrival_000.parquet")
+        q1.processAllAvailable()
+        q1.stop() // the crash
+        arrive(parts(1), dir, "arrival_001.parquet") // lands while down
+        val q2 = start()
+        q2.processAllAvailable()
+        arrive(parts(2), dir, "arrival_002.parquet") // the near-dup copy
+        q2.processAllAvailable()
+        q2.stop()
+        val got = spark.read.option("basePath", outDir).parquet(outDir)
+          .select("doc_id").collect().map(_.getLong(0)).toSet
+        // batch truth over everything that was fed
+        val full = spark.read.parquet(parts.map(_.toString): _*)
+        val tb = minhashBands(full.select(col("doc_id"), col("text")))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val towners = tb.groupBy("k").agg(min(col("doc_id")).as("owner"))
+        val truth = tb.join(towners, Seq("k"))
+          .groupBy("doc_id")
+          .agg(max(when(col("owner") < col("doc_id"), 1L).otherwise(0L)).as("rej"))
+          .filter(col("rej") === 0L)
+          .select("doc_id").collect().map(_.getLong(0)).toSet
+        tb.unpersist()
+        val dupAdmitted = got.count(_ > maxDoc + 1000L)
+        if (got != truth)
+          Left(s"admitted sets differ: stream=${got.size} batch=${truth.size} " +
+            s"missing=${(truth -- got).size} extra=${(got -- truth).size}")
+        else if (dupAdmitted != 0)
+          Left(s"$dupAdmitted cross-incarnation near-dups admitted — state lost")
+        else Right(s"admitted=${got.size} dups_rejected=${dup.count()} restarted=true")
+      }
     }
+
+    deleteTree(stage)
 
     // ---- artifact ----------------------------------------------------
     val ok = results.count(_._2._1)

@@ -4,18 +4,21 @@ package graft.sinks
   * accepts `POST /?query=INSERT INTO <t> FORMAT TabSeparated`, stores
   * each block keyed by (table, batch, partition) — LAST WRITE WINS,
   * which is the insert-block dedup contract replicated CH tables give
-  * pg2ch.
+  * pg2ch. An INSERT into a table named in `failing` is refused with
+  * HTTP 500 and stores nothing.
   */
 final class StubCH {
   import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
   val blocks = new java.util.concurrent.ConcurrentHashMap[(String, Long, Int), String]()
   val posts = new java.util.concurrent.atomic.AtomicInteger(0)
   val truncates = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  val failing = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private val server = HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 0)
   server.createContext("/", new HttpHandler {
     override def handle(ex: HttpExchange): Unit = {
       val q = java.net.URLDecoder.decode(
         Option(ex.getRequestURI.getRawQuery).getOrElse(""), "UTF-8")
+      var status = 200
       if (q.startsWith("query=TRUNCATE TABLE ")) {
         val table = q.stripPrefix("query=TRUNCATE TABLE ").takeWhile(_ != ' ')
         blocks.keySet.removeIf(k => k._1 == table)
@@ -26,10 +29,13 @@ final class StubCH {
         val batch = ex.getRequestHeaders.getFirst("X-Graft-Batch").toLong
         val part = ex.getRequestHeaders.getFirst("X-Graft-Partition").toInt
         val body = new String(ex.getRequestBody.readAllBytes(), "UTF-8")
-        blocks.put((table, batch, part), body)
-        posts.incrementAndGet()
+        if (failing.contains(table)) status = 500
+        else {
+          blocks.put((table, batch, part), body)
+          posts.incrementAndGet()
+        }
       }
-      ex.sendResponseHeaders(200, -1L)
+      ex.sendResponseHeaders(status, -1L)
       ex.close()
     }
   })

@@ -499,7 +499,10 @@ class StreamRunnerSpec extends SparkSpec {
     // table, 13 for 3. Paid once per micro-batch: the frames parse that
     // collects the R definitions (1), the relation-cache write (1), the
     // stamp's range sample, shuffle and counts (3) and the truncate
-    // aggregate (2); per table: the landing write and the POST (2 each)
+    // aggregate (2); per table: the landing write and the POST (2 each).
+    // The per-table chains run on their own threads; a job there that
+    // lost the batch's query/batch-id tags would drop out of this count
+    // (the counts are still 9 and 13 with the chains running concurrently)
     assert(j1 > 0 && j3 > 0, s"no micro-batch jobs seen: 1 table $j1, 3 tables $j3")
     assert(j3 - j1 <= 2 * 2,
       s"each extra table may add 2 jobs (write + POST): 1 table $j1, 3 tables $j3")
@@ -541,5 +544,96 @@ class StreamRunnerSpec extends SparkSpec {
       assert(StreamRunner.changeLog(spark, cfg, "audit").count() === 1L)
       assert(ch.lines("audit").size === 1)
     } finally ch.stop()
+  }
+
+  test("a failing table chain fails the batch only after every chain has ended") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val ch = new graft.sinks.StubCH
+    // every job start in bus order: Left(marker) or Right((queryId, batchId))
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[Either[String, (String, String)]]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = Option(e.properties).foreach { p =>
+        val m = p.getProperty("graft.test.marker")
+        val q = p.getProperty("sql.streaming.queryId")
+        val b = p.getProperty("streaming.sql.batchId")
+        if (m != null) starts.add(Left(m))
+        else if (q != null && b != null) starts.add(Right((q, b)))
+      }
+    }
+    def marker(name: String): Unit = {
+      spark.sparkContext.setLocalProperty("graft.test.marker", name)
+      try spark.range(1).count() finally
+        spark.sparkContext.setLocalProperty("graft.test.marker", null)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val names = Seq("t1", "t2", "t3")
+      val in = Files.createTempDirectory("graft_chainfail_in")
+      val out = Files.createTempDirectory("graft_chainfail_out").toString
+      val cfg = StreamRunner.RunnerConfig(
+        inputDir = in.toString,
+        outputDir = out,
+        checkpointDir = Files.createTempDirectory("graft_chainfail_ckpt").toString,
+        // t1's chain is the short one: the others compact before shipping
+        tables = names.map(n => StreamRunner.TableConfig(n, "ReplacingMergeTree",
+          Seq("k"), ChangeRelation.testRow,
+          mergeThreshold = if (n == "t1") None else Some(1))),
+        clickhouseUrl = Some(ch.endpoint))
+      writeFeed(in, "wal_000.json", names.zipWithIndex.flatMap { case (t, i) =>
+        val l = 10L * i
+        Seq(j(l + 1, "I", t, 1, "a"), j(l + 2, "I", t, 2, "b"),
+          j(l + 3, "U", t, 1, "c"), j(l + 4, "D", t, 2, ""))
+      })
+
+      // t1's INSERT answers 500: its chain fails after its landing
+      ch.failing.add("t1")
+      val qs = StreamRunner.run(spark, cfg)
+      val failedId = qs.head.id.toString
+      try {
+        val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+          qs.head.processAllAvailable())
+        marker("reported")
+        assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+          .exists(e => Option(e.getMessage).exists(_.contains("HTTP 500"))),
+          s"the batch must fail with the INSERT's error: $err")
+      } finally qs.foreach(_.stop())
+      // stray jobs of a chain left running would start during this wait
+      Thread.sleep(1000)
+      marker("end")
+      eventually(starts.contains(Left("end")))
+      val log = starts.asScala.toSeq
+      val late = log.dropWhile(_ != Left("reported"))
+        .count { case Right((q, b)) => q == failedId && b == "0"; case _ => false }
+      assert(late === 0, s"$late jobs of the failed batch started after it failed")
+      // every chain ran to its end: the other tables landed and shipped
+      val shipped = new graft.sinks.HttpCHSink(ch.endpoint, s"$out/_ch_state")
+      assert(names.map(shipped.committedBatches) ===
+        Seq(Set.empty[Long], Set(0L), Set(0L)))
+
+      // fault cleared, query restarted: batch 0 replays; t2/t3 no-op
+      ch.failing.clear()
+      val again = StreamRunner.run(spark, cfg)
+      try again.foreach(_.processAllAvailable()) finally again.foreach(_.stop())
+      names.zipWithIndex.foreach { case (t, i) =>
+        val l = 10L * i
+        assert(StreamRunner.readFinal(spark, cfg, t).select("k", "v").collect()
+          .map(r => (r.getLong(0), r.getString(1))).toSeq === Seq((1L, "c")), t)
+        // Replacing wire rows: k, v, ver, deleted — each exactly once
+        val rows = ch.lines(t).map(_.split("\t", -1)).map(c => (c(0), c(1), c(3), c(4)))
+        assert(rows.sorted === Seq(("1", "a", s"${l + 1}", "0"), ("1", "c", s"${l + 3}", "0"),
+          ("2", "b", s"${l + 2}", "0"), ("2", "old", s"${l + 4}", "1")), t)
+      }
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      ch.stop()
+    }
+  }
+
+  /** Polls `cond` for up to 60 s. */
+  private def eventually(cond: => Boolean): Unit = {
+    val deadline = System.nanoTime() + 60L * 1000000000L
+    while (!cond && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(cond, "condition not met within 60 s")
   }
 }
