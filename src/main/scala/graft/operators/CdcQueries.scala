@@ -26,7 +26,10 @@ import graft.core._
   * Scale notes: `cdc_replacing_latest` is one hash-partition window (single
   * shuffle on user_id, no global sort). The collapse/append/frontier family
   * is partial-agg + final-agg — map-side combine keeps the shuffle tiny at
-  * any scale. The streaming twins of these live in graft.streaming.CdcApply.
+  * any scale. The Replacing and Collapsing rules are stated inline here;
+  * the replicator applies them through graft.streaming.CdcApply, and
+  * their streaming twins (replacingLatestStream, collapsingNetStream)
+  * live in graft.streaming.StreamTwins.
   */
 object CdcQueries {
 

@@ -126,19 +126,21 @@ object TextQueries {
       .withColumn("inter", size(array_intersect(col("sh1"), col("sh"))).cast("double"))
   }
 
-  // w-bit SimHash over word hashes: bit b is the majority vote of bit b
-  // across all word hashes. Generated from ONE loop for both engines.
-  // Width ≤ 60: the word hashes are 60-bit (15 hex digits of md5), so
-  // higher bits carry no signal — and 60 one-bits sum safely in a long.
-  private def simhashSparkW(w: Int): String = (0 until w).map { b =>
-    s"(CASE WHEN 2 * size(filter(hs, h -> ((shiftright(h, $b) & 1) = 1))) > size(hs) THEN ${1L << b} ELSE 0 END)"
-  }.mkString("cast(", " + ", " as bigint)")
+  // w-bit SimHash over the word hashes `hs`: bit b is the majority vote
+  // (2·count > n) of bit b across all word hashes. Width ≤ 60: the word
+  // hashes are 60-bit (15 hex digits of md5), so higher bits carry no
+  // signal — and 60 one-bits sum safely in a long.
+  //
+  // Spark runs the vote in one codegen pass (graft_simhash64) and masks
+  // it to w bits; the coalesce gives a null text the 0 the declarative
+  // form yields. Equal to the DuckDB form below because `split` never
+  // yields null elements and bits ≥ 60 of every hash are 0.
+  // DedupFunctionsSpec pins the two forms against each other.
+  private[graft] def simhash(w: Int): Column =
+    coalesce(call_function("graft_simhash64", col("hs")).bitwiseAND(lit((1L << w) - 1)), lit(0L))
   private def simhashDuckW(w: Int): String = (0 until w).map { b =>
     s"(CASE WHEN 2 * len(list_filter(hs, h -> ((h >> $b) & 1) = 1)) > len(hs) THEN ${1L << b} ELSE 0 END)"
   }.mkString("CAST(", " + ", " AS BIGINT)")
-  // compact 16-bit form for the fingerprint query's declared output
-  private def simhashSpark: String = simhashSparkW(16)
-  private def simhashDuck: String = simhashDuckW(16)
 
   // ------------------------------------------------------------------
   // The MinHash-LSH dedup kernel. Every LSH consumer below reads these
@@ -192,18 +194,25 @@ object TextQueries {
     lanes.select((col("doc_id") +: extra :+
       explode(array((0 until 4).map(b => bandKey(b, Seq(2 * b, 2 * b + 1))): _*)).as("k")): _*)
 
-  /** Hot-band guard: a bucket of B docs emits B²/2 pairs, so one
-    * mega-bucket of boilerplate goes quadratic; buckets over 100 are
-    * skipped (the largest at sf0.1 holds 11 — the cap exists for the
-    * 100 TB corpus, not the test scale). */
-  private def capped(bands: DataFrame): DataFrame =
-    graft.functions.MinHash.capBands(bands, "k", 100)
+  /** Hot-band guard: drops every row whose `key` bucket holds over 100
+    * rows. A bucket of B docs emits B²/2 pairs, so one mega-bucket of
+    * boilerplate goes quadratic (the largest at sf0.1 holds 11 — the cap
+    * exists for the 100 TB corpus, not the test scale). Such buckets are
+    * near-certain duplicate cliques that exact-hash dedup finds far
+    * cheaper. The oversized keys are few (≤ rows/100), so the guard is
+    * one broadcast anti-join and the keyed rows never reshuffle for it.
+    * The minhash, simhash and winnowing pair joins all apply it. */
+  private[graft] def capBands(keyed: DataFrame, key: String): DataFrame = {
+    val oversized = keyed.groupBy(key).agg(count(lit(1)).as("__n"))
+      .filter(col("__n") > 100).select(key)
+    keyed.join(broadcast(oversized), Seq(key), "left_anti")
+  }
 
   /** Distinct candidate pairs `(keep…, d1, d2)`, d1 < d2, of docs that
     * share a capped band key — the self-join is on band keys, never
     * all-pairs. */
   private def candidates(bands: DataFrame, keep: String*): DataFrame = {
-    val c = capped(bands)
+    val c = capBands(bands, "k")
     c.as("a").join(c.as("b"), col("a.k") === col("b.k") && col("a.doc_id") < col("b.doc_id"))
       .select(keep.map(k => col(s"a.$k").as(k)) ++
         Seq(col("a.doc_id").as("d1"), col("b.doc_id").as("d2")): _*)
@@ -330,7 +339,7 @@ object TextQueries {
     * checkpointed session build. Values identical by construction — the
     * build is the exact expression chain both queries inline.
     */
-  private def winnowedDocs(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def winnowedDocs(spark: SparkSession, dir: String): DataFrame = {
     def build = t(spark, dir, "documents")
       .withColumn("w", split(col("text"), " "))
       .filter(size(col("w")) >= 6) // ≥ 4 gram-hashes needs ≥ 6 words
@@ -826,9 +835,8 @@ object TextQueries {
               |FROM scored JOIN thr ON scored.lang = thr.lang
               |GROUP BY scored.lang ORDER BY scored.lang""".stripMargin.replace("\n", " "))),
 
-    // Language-ID: marker-word voting with a deterministic tie order. The
-    // full character-trigram-profile variant is functions.TextAnalysis
-    // (Spark-only, ScalaTest-checked); this pins the voting plumbing.
+    // Language-ID: marker-word voting (three stop words per language)
+    // with a deterministic tie order.
     "text_lang_id" -> QueryDef(
       (spark, dir) => {
         val en = inList(Seq("the", "a", "of"))
@@ -864,7 +872,7 @@ object TextQueries {
               |FROM documents)) GROUP BY lang, pred ORDER BY lang, pred""".stripMargin.replace("\n", " "))),
 
     // Document fingerprinting: canonical bag-of-words fingerprint (sorted
-    // distinct words → md5). Rolling-hash variant in functions.TextAnalysis.
+    // distinct words → md5), so word order and repeats do not matter.
     "text_fingerprint" -> QueryDef(
       (spark, dir) => {
         t(spark, dir, "documents")
@@ -907,8 +915,8 @@ object TextQueries {
     // Full MinHash + LSH banding: 3-word shingles → 8 minhashes → 4 bands
     // of 2 → band-key self-join → distinct candidate pairs. This is the
     // shape that scales: the self-join is on band keys (tiny), candidate
-    // verification never touches all-pairs. Spark-optimized variant:
-    // graft.functions.MinHash (xxhash64).
+    // verification never touches all-pairs. Hashes are md5-derived, so
+    // the DuckDB oracle reproduces every lane bit for bit.
     "dedup_minhash_lsh" -> QueryDef(
       (spark, dir) => lshCandidates(spark, dir).agg(cnt("candidate_pairs")),
       Some(Seq("WITH " + LshSql.docs(), LshSql.sh("docs"), LshSql.mh(), LshSql.bands(),
@@ -1323,7 +1331,7 @@ object TextQueries {
           .unionByName(e.select(col("doc_id"), lit(true).as("isd")))
         val bands = bandKeys(e2eLanes(base).join(pool.hint("shuffle_hash"), Seq("doc_id")), col("isd"))
           .scopedCheckpoint()
-        val c = capped(bands)
+        val c = capBands(bands, "k")
         val cand = c.hint("shuffle_hash").as("a")
           .join(c.as("b"), col("a.k") === col("b.k") && col("a.isd") &&
             (!col("b.isd") || col("b.doc_id") < col("a.doc_id")) &&
@@ -1496,16 +1504,16 @@ object TextQueries {
              |WHERE rn <= 3 ORDER BY doc_id, score DESC, word""".stripMargin.replace("\n", " "))),
 
     // SimHash fingerprints (16-bit, majority vote per bit over word
-    // hashes) — computed entirely in array HOFs, zero shuffle per doc.
+    // hashes) — one codegen pass per doc, zero shuffle.
     "dedup_simhash" -> QueryDef(
       (spark, dir) => {
         t(spark, dir, "documents")
           .withColumn("hs", expr(s"transform(split(text, ' '), w -> ${hx("w")})"))
-          .select(col("doc_id"), expr(simhashSpark).as("simhash"))
+          .select(col("doc_id"), simhash(16).as("simhash"))
           .orderBy(col("doc_id"))
           .limit(300)
       },
-      Some(s"""SELECT doc_id, $simhashDuck AS simhash FROM (
+      Some(s"""SELECT doc_id, ${simhashDuckW(16)} AS simhash FROM (
               |SELECT doc_id, list_transform(string_split(text, ' '),
               |w -> ${hxSql("w")}) AS hs FROM documents)
               |ORDER BY doc_id LIMIT 300""".stripMargin.replace("\n", " "))),
@@ -1522,7 +1530,7 @@ object TextQueries {
       (spark, dir) => {
         val d = docsSpread(spark, dir)
           .withColumn("hs", expr(s"transform(split(text, ' '), w -> ${hx("w")})"))
-          .select(col("doc_id"), expr(simhashSparkW(60)).as("sh"))
+          .select(col("doc_id"), simhash(60).as("sh"))
         val bandCols = (0 until 4).map { b =>
           struct(lit(b).as("b"),
             expr(s"shiftright(sh, ${15 * b}) & 32767").as("bits"))
@@ -1540,8 +1548,8 @@ object TextQueries {
         // emits ~4·K²/2 join rows before distinct. Buckets over 100 are
         // exact-dup cliques that dedup_exact_docs already establishes far
         // cheaper; what the banded join exists to find is the long tail.
-        // One broadcast anti-join (MinHash.capBands) — no reshuffle.
-        val capped = graft.functions.MinHash.capBands(banded, "band", 100)
+        // One broadcast anti-join (capBands) — no reshuffle.
+        val capped = capBands(banded, "band")
         capped.as("a")
           .join(capped.as("b"),
             col("a.band") === col("b.band") && col("a.doc_id") < col("b.doc_id"))
@@ -1654,7 +1662,7 @@ object TextQueries {
         val fps = winnowedDocs(spark, dir)
           .select(col("doc_id"), explode(col("fps")).as("fp"))
           .scopedPersist()
-        val capped = graft.functions.MinHash.capBands(fps, "fp", 100)
+        val capped = capBands(fps, "fp")
         capped.as("a")
           .join(capped.as("b"), col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
           .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))

@@ -13,9 +13,7 @@ import graft.core._
   * or, for `win_ntile`, a range-partition id) — one hash shuffle,
   * per-partition sort, NO unpartitioned window anywhere (PlanShapeSpec
   * pins this repo-wide). `win_ntile` computes the exact global ntile in
-  * parallel via range partitioning + broadcast rank offsets; the
-  * approximate alternative for percentile-bucket semantics lives in
-  * functions/Quantiles.approxNtile.
+  * parallel via range partitioning + broadcast rank offsets.
   */
 object WindowQueries {
 

@@ -119,8 +119,8 @@ object GraftExtensions {
   /** Registers every function `spark` does not have yet; a session that
     * already has them (built with the extension, or installed before) is
     * left as it is. `core.t` calls this, so every declared query finds
-    * the functions; library entry points that take a caller's DataFrame
-    * call it on that DataFrame's session.
+    * the functions; `Multimodal.cosineTopK`, whose features need not come
+    * from `core.t`, calls it on the session it is given.
     */
   def install(spark: org.apache.spark.sql.SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry

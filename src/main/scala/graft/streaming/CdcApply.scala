@@ -7,10 +7,11 @@ import org.apache.spark.sql.functions._
 /** Batch CDC-apply operators over a [[ChangeRelation]] — the engine's
   * re-expression of pg2ch's three table-engine semantics
   * (`pkg/tableengines/{mergetree,replacingmergetree,collapsingmergetree}
-  * .go` [recall:med]; SURVEY.md §2.A6–A8). The `cdc_*` declared queries
-  * exercise the same algebra over the events table; these functions give
-  * the general form over arbitrary key/row structs, and the streaming path
-  * reuses them inside foreachBatch (see [[BufferedSink]]).
+  * .go` [recall:med]; SURVEY.md §2.A6–A8). These functions take
+  * arbitrary key/row structs, and the streaming path runs them inside
+  * foreachBatch (see [[BufferedSink]]). The `cdc_*` declared queries do
+  * not call them: they restate the engine rules inline over the events
+  * table, so the DuckDB oracle checks those restatements, not this code.
   *
   * Scale notes: every apply is a single hash shuffle on the key columns.
   * applyReplacing uses max_by-style window; applyCollapsing is partial-agg

@@ -13,7 +13,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Runs `body` on a fresh temp directory, then evicts the directory's
     * shared builds (so no cached block outlives the test: DeterminismSpec
     * pins zero blocks at the end of the suite) and deletes it. */
-  def withTempDir(prefix: String)(body: String => Unit): Unit = {
+  def withTempDir[A](prefix: String)(body: String => A): A = {
     val root = Files.createTempDirectory(prefix)
     try body(root.toString)
     finally {

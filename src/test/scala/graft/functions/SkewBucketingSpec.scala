@@ -1,11 +1,10 @@
 package graft.functions
 
 import graft.SparkSpec
-import graft.sources.Bucketing
 import org.apache.spark.sql.functions._
 
-/** Salted joins must equal their plain twins row-for-row; bucketed
-  * co-located joins must plan with zero shuffle Exchange.
+/** Salted joins must equal their plain twins row-for-row, and AQE must
+  * split a skewed join partition at runtime.
   */
 class SkewBucketingSpec extends SparkSpec {
 
@@ -82,87 +81,6 @@ class SkewBucketingSpec extends SparkSpec {
     } finally saved.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
-    }
-  }
-
-  test("bucketed tables join with zero shuffle Exchange") {
-    val bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      Bucketing.writeBucketed(
-        graft.core.t(spark, sf001, "orders").select("o_orderkey", "o_custkey", "o_totalprice"),
-        "orders_bkt", buckets = 8, key = "o_custkey")
-      Bucketing.writeBucketed(
-        graft.core.t(spark, sf001, "customer").select("c_custkey", "c_mktsegment"),
-        "customer_bkt", buckets = 8, key = "c_custkey")
-      val j = Bucketing.colocatedJoin(spark, "orders_bkt", "customer_bkt",
-        "o_custkey", "c_custkey")
-      assert(j.count() > 0)
-      assert(Bucketing.isShuffleFree(j),
-        s"expected exchange-free plan, got:\n${j.queryExecution.executedPlan}")
-      // control: the same join over the raw (un-bucketed) parquet DOES shuffle
-      val raw = graft.core.t(spark, sf001, "orders")
-        .join(graft.core.t(spark, sf001, "customer"),
-          col("o_custkey") === col("c_custkey"))
-      raw.count()
-      assert(!Bucketing.isShuffleFree(raw), "control join should shuffle")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
-      spark.sql("DROP TABLE IF EXISTS orders_bkt")
-      spark.sql("DROP TABLE IF EXISTS customer_bkt")
-    }
-  }
-
-  test("bucketed shingle relation makes the dedup verify join exchange-free (VERDICT r07 #7)") {
-    // The verified-dedup exact-Jaccard join shuffles the shingle-set
-    // relation on doc_id EVERY run. Production organize-once/join-many
-    // layout: write the shingle relation bucketed by doc_id once; every
-    // subsequent verify (each ingest batch, each threshold sweep) joins
-    // against it with ZERO Exchange on the shingle side — the shingle
-    // sets (the heavy payload: arrays of text) never move again.
-    val bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      // the pipeline's exact shingle construction (TextQueries ≥3-word
-      // docs → distinct 3-gram shingle sets)
-      val shs = graft.core.t(spark, sf001, "documents")
-        .withColumn("w", split(col("text"), " "))
-        .filter(size(col("w")) >= 3)
-        .select(col("doc_id"), expr(
-          "array_distinct(transform(sequence(1, size(w) - 2), j -> concat_ws(' ', slice(w, j, 3))))")
-          .as("s"))
-      Bucketing.writeBucketed(shs, "shingles_bkt", buckets = 4, key = "doc_id")
-      // candidate pairs land bucketed on d1 by the same layout (the band
-      // join emits them partitioned; a synthetic pair set keeps the spec
-      // fast — the plan shape is what is pinned here)
-      val cand = shs.select(col("doc_id").as("d1"),
-        (col("doc_id") + 1).as("d2"))
-      Bucketing.writeBucketed(cand, "cand_bkt", buckets = 4, key = "d1")
-      // verify leg 1: cand ⋈ shingles on d1 — both bucketed, no Exchange
-      val withS1 = spark.table("cand_bkt")
-        .join(spark.table("shingles_bkt"), col("d1") === col("doc_id"))
-        .select(col("d1"), col("d2"), col("s").as("s1"))
-      withS1.write.format("noop").mode("overwrite").save()
-      assert(Bucketing.isShuffleFree(withS1),
-        s"bucketed verify leg must not shuffle:\n${withS1.queryExecution.executedPlan}")
-      // full verify: the second leg re-keys only the NARROW intermediate
-      // (d1, d2, s1) on d2; the bucketed shingle side still reads in
-      // place. Exactly ONE Exchange total (vs three un-bucketed).
-      val verify = withS1
-        .join(spark.table("shingles_bkt"), col("d2") === col("doc_id"))
-        .withColumn("inter", size(array_intersect(col("s1"), col("s"))).cast("double"))
-        .select(col("d1"), col("d2"), col("inter"))
-      verify.write.format("noop").mode("overwrite").save()
-      val plan = verify.queryExecution.executedPlan.toString
-      val exchanges = "Exchange hashpartitioning".r.findAllMatchIn(plan).size
-      assert(exchanges <= 1,
-        s"expected at most the intermediate's d2 re-key, got $exchanges Exchanges:\n$plan")
-      assert(plan.contains("Bucketed: true"),
-        s"shingle scans must read bucketed in place:\n$plan")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
-      spark.sql("DROP TABLE IF EXISTS shingles_bkt")
-      spark.sql("DROP TABLE IF EXISTS cand_bkt")
     }
   }
 }
