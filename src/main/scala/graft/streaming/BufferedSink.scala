@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Two-phase, exactly-once micro-batch sink with buffer→main compaction —
   * the Spark-native form of the reference's buffer-table flush pipeline
@@ -42,15 +42,27 @@ import org.apache.spark.sql.types.StructType
   * once and reads the segments' coverage once, so its state reads do not
   * multiply with the number of batches ever landed.
   *
+  * Truncate frontiers are sink state too: a landing whose batch carries
+  * `T` rows records each table's frontier (the LSN of its last `T`) in
+  * `_truncates/b=<batchId>` before the batch marker, and
+  * [[truncateFrontiers]] reads the max over the committed batches'
+  * records, so a FINAL read needs no aggregate over the log. The stamp
+  * finds the `T` rows in the pass it already runs.
+  *
   * Compaction (A11's second half): with `mergeThreshold > 0`, once that
-  * many committed batch dirs are live they are merged — sorted by the
-  * explicit `__row_id` (batchId-major, intra-batch arrival order minor)
-  * — into one `main/seg-<maxBatchId>` segment, and the merged batch dirs
-  * are deleted. The compaction read is given the landed schema, so it
-  * runs no schema-inference job. Without compaction a long-running
-  * stream lands one directory per micro-batch forever and every read
-  * re-opens all of them — unbounded small-file growth, the failure every
-  * real long-running replication hits.
+  * many committed batch dirs are live they are merged into one
+  * `main/seg-<maxBatchId>` segment, and the merged batch dirs are
+  * deleted. A compaction is one read → write job: it does not sort,
+  * because `__row_id` (batchId-major, intra-batch arrival order minor)
+  * carries the arrival order and every reader orders or groups by
+  * column, never by a segment's physical order. The read is given the
+  * landed schema, so it runs no schema-inference job either. The landing
+  * itself never compacts: [[writeBatch]] compacts after its landing, and
+  * the routed stream calls [[maybeCompact]] after the ClickHouse ship, so
+  * the mirror gets a batch's rows before the housekeeping runs. Without
+  * compaction a long-running stream lands one directory per micro-batch
+  * forever and every read re-opens all of them — unbounded small-file
+  * growth, the failure every real long-running replication hits.
   *
   * Crash safety: the set of batch ids a segment covers is written INSIDE
   * the staged segment (`_batches`, an underscore file parquet readers
@@ -78,6 +90,7 @@ final class BufferedSink(tableDir: String, mergeThreshold: Int = 0,
   private val root = new HPath(tableDir)
   private val committed = new HPath(root, "_committed_batches")
   private val mainDir = new HPath(root, "main")
+  private val truncatesDir = new HPath(root, "_truncates")
 
   def committedBatches(): Set[Long] = StateFs.markers(committed)
 
@@ -98,53 +111,77 @@ final class BufferedSink(tableDir: String, mergeThreshold: Int = 0,
       .map(new HPath(mainDir, _))
 
   /** Idempotent micro-batch write: stamp `__row_id`, then [[writeStamped]]'s
-    * landing. Safe to call again with the same batchId (crash-replay
-    * path); a replay is detected before the stamp runs.
+    * landing, then the compaction that is due. Safe to call again with the
+    * same batchId (crash-replay path): a replay is detected before the
+    * stamp runs, and only a compaction the crash left due still runs.
     */
   def writeBatch(batch: DataFrame, batchId: Long): Boolean = {
+    val spark = batch.sparkSession
     val done = committedBatches()
-    if (done.contains(batchId)) return false
-    val (stamped, release) = stampRowIds(batch, batchId)
-    try land(stamped, batchId, done) finally release()
+    if (done.contains(batchId)) {
+      compactDue(spark, done, None)
+      return false
+    }
+    val stamped = stampRowIds(batch, batchId)
+    try land(stamped.rows, batchId, stamped.truncates) finally stamped.release()
+    compactDue(spark, done + batchId, Some(stamped.rows.schema))
+    true
   }
 
   /** Idempotent landing of a batch that already carries `__row_id`: stage
-    * → atomic move → manifest marker, then compaction when the live-batch
-    * count reaches the threshold.
+    * → atomic move → truncate record → manifest marker. `truncates` are
+    * the batch's truncate frontiers, as its stamp returned them. It does
+    * not compact; the caller runs [[maybeCompact]] when it is ready to.
     */
-  def writeStamped(stamped: DataFrame, batchId: Long): Boolean = {
-    val done = committedBatches()
-    !done.contains(batchId) && land(stamped, batchId, done)
-  }
+  def writeStamped(stamped: DataFrame, batchId: Long,
+                   truncates: Map[String, Long]): Boolean =
+    !committedBatches().contains(batchId) && land(stamped, batchId, truncates)
 
-  private def land(stamped: DataFrame, batchId: Long, done: Set[Long]): Boolean = {
+  private def land(stamped: DataFrame, batchId: Long,
+                   truncates: Map[String, Long]): Boolean = {
     val staging = new HPath(root, s"_staging/$batchId")
     val target = new HPath(root, s"batch=$batchId")
     stamped.write.mode("overwrite").parquet(staging.toString)
     // a lost commitMove means a previous attempt's move already landed
     // (crashed between move and marker): keep the committed copy
     if (!StateFs.commitMove(staging, target)) StateFs.delete(staging)
+    // before the marker: a crash between the two replays both, and a
+    // record without its marker is never read
+    if (truncates.nonEmpty)
+      StateFs.writeRecords(new HPath(truncatesDir, s"b=$batchId"),
+        truncates.toSeq.map { case (t, lsn) => Seq(t, lsn.toString) })
     StateFs.addMarker(committed, batchId)
-    if (mergeThreshold > 0)
-      compactDue(stamped.sparkSession, done + batchId, Some(stamped.schema))
     true
   }
 
+  /** Every table's truncate frontier over the committed batches: the max
+    * of their landing records (see the class doc). Equal to
+    * [[CdcApply.truncateFrontiers]] over [[readCommitted]], without a job.
+    */
+  def truncateFrontiers(): Map[String, Long] = {
+    val done = committedBatches()
+    StateFs.markers(truncatesDir).filter(done).toSeq
+      .flatMap(b => StateFs.readRecords(new HPath(truncatesDir, s"b=$b")))
+      .collect { case Seq(t, lsn) => t -> lsn.toLong }
+      .groupMapReduce(_._1)(_._2)(math.max)
+  }
+
   /** [[BufferedSink.stampRowIds]] over this sink's arrival-order key. */
-  def stampRowIds(batch: DataFrame, batchId: Long): (DataFrame, () => Unit) =
+  def stampRowIds(batch: DataFrame, batchId: Long): BufferedSink.Stamped =
     BufferedSink.stampRowIds(batch, batchId, orderCols)
 
-  /** Compact when ≥ mergeThreshold live batches exist. Also retires any
-    * batch dir a previous crash left behind after its segment committed.
+  /** Compact when ≥ mergeThreshold live batches exist (never with a
+    * threshold of 0). Also retires any batch dir a previous crash left
+    * behind after its segment committed. `landed` is the landed rows'
+    * schema, when the caller knows it (else the compaction read infers
+    * it, which costs a job).
     */
-  def maybeCompact(spark: SparkSession): Unit =
-    compactDue(spark, committedBatches(), None)
+  def maybeCompact(spark: SparkSession, landed: Option[StructType] = None): Unit =
+    compactDue(spark, committedBatches(), landed)
 
-  /** `done` is the committed set and `landed` the schema of the batch
-    * just landed, when there is one (else the compaction read infers it).
-    */
+  /** `done` is the committed set. */
   private def compactDue(spark: SparkSession, done: Set[Long],
-                         landed: Option[StructType]): Unit = {
+                         landed: Option[StructType]): Unit = if (mergeThreshold > 0) {
     val covered = compactedBatches()
     val onDisk = StateFs.listNames(root).collect {
       case n if n.startsWith("batch=") => n.stripPrefix("batch=").toLong
@@ -157,10 +194,11 @@ final class BufferedSink(tableDir: String, mergeThreshold: Int = 0,
     }
   }
 
-  /** Merge the given committed batches into one main segment in __row_id
-    * order — the reference's `INSERT INTO main SELECT … FROM buffer ORDER
-    * BY row_id; TRUNCATE buffer`. Idempotent: a replayed segment move
-    * keeps the existing committed segment.
+  /** Merge the given committed batches into one main segment — the
+    * reference's `INSERT INTO main SELECT … FROM buffer ORDER BY row_id;
+    * TRUNCATE buffer`, whose order `__row_id` keeps (see the class doc).
+    * Idempotent: a replayed segment move keeps the existing committed
+    * segment.
     */
   private def compact(spark: SparkSession, batches: Set[Long],
                       landed: Option[StructType]): Unit = {
@@ -169,9 +207,13 @@ final class BufferedSink(tableDir: String, mergeThreshold: Int = 0,
     val target = new HPath(mainDir, s"seg-$segId")
     if (!StateFs.exists(target)) {
       val dirs = batches.toSeq.sorted.map(b => s"$tableDir/batch=$b")
-      val reader = landed.fold(spark.read)(spark.read.schema)
-      segmentMerge(reader.parquet(dirs: _*))
-        .sort(col("__row_id"))
+      val rows = landed.fold(spark.read)(spark.read.schema).parquet(dirs: _*)
+      // the scan gives each small landed file a task of its own; narrowing
+      // to one task per maxPartitionBytes of input keeps a segment of many
+      // small batches to a few files, still in one job with no exchange
+      val files = math.ceil(rows.queryExecution.optimizedPlan.stats.sizeInBytes.toDouble /
+        graft.core.confBytes(spark, "spark.sql.files.maxPartitionBytes", 128L << 20)).toInt
+      segmentMerge(rows).coalesce(math.max(files, 1))
         .write.mode("overwrite").parquet(staging.toString)
       // coverage metadata INSIDE the staged segment: data + the record of
       // what it replaces become visible in the same atomic move.
@@ -204,18 +246,12 @@ final class BufferedSink(tableDir: String, mergeThreshold: Int = 0,
     val live = liveBatches().toSeq.sorted.map(b => new HPath(root, s"batch=$b"))
       .filter(StateFs.exists).map(_.toString)
     val dirs = segs ++ live
-    val reader = if (schema == null) spark.read else {
-      val withRowId = StructType(schema.fields :+
-        org.apache.spark.sql.types.StructField("__row_id",
-          org.apache.spark.sql.types.LongType, nullable = true))
-      spark.read.schema(withRowId)
-    }
     if (dirs.isEmpty) {
       require(schema != null, "empty sink and no schema to shape an empty result")
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(schema.fields :+ org.apache.spark.sql.types.StructField("__row_id",
-          org.apache.spark.sql.types.LongType, nullable = true)))
-    } else reader.parquet(dirs: _*)
+        BufferedSink.withRowId(schema))
+    } else if (schema == null) spark.read.parquet(dirs: _*)
+    else spark.read.schema(BufferedSink.withRowId(schema)).parquet(dirs: _*)
   }
 
   /** foreachBatch adapter: `stream.writeStream.foreachBatch(sink.forEachBatch _)`. */
@@ -228,6 +264,29 @@ object BufferedSink {
 
   // working columns of the stamp; a batch carrying one is refused
   private val Reserved = Seq("__pid", "__lrn", "__off", "__row_id")
+
+  /** `schema` plus the stamp's `__row_id`: the landed rows' schema. */
+  def withRowId(schema: StructType): StructType =
+    StructType(schema.fields :+ StructField("__row_id", LongType, nullable = true))
+
+  /** Whether `batch` is one partition, found without running a job: only
+    * a plan with no exchange, adaptive plan or subquery is asked for its
+    * RDD, which then builds no stage.
+    */
+  private def onePartition(batch: DataFrame): Boolean = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val plan = batch.queryExecution.executedPlan
+    plan.find(p => p.isInstanceOf[Exchange] || p.isInstanceOf[AdaptiveSparkPlanExec] ||
+      p.subqueries.nonEmpty).isEmpty && plan.execute().getNumPartitions == 1
+  }
+
+  /** A stamped batch: its rows, persisted until `release` runs, and the
+    * truncate frontier (LSN of the last `T`) of every table whose `T`
+    * rows it carries.
+    */
+  final case class Stamped(rows: DataFrame, truncates: Map[String, Long],
+                           release: () => Unit)
 
   /** Stamp `__row_id = batchId·2³² + global arrival rank` (1-based, in
     * `orderCols` order) WITHOUT an unpartitioned window — a snapshot
@@ -248,15 +307,25 @@ object BufferedSink {
     * window's stamp. The counts and the stamped rows read the SAME
     * persisted partitioning, so the ids agree with each other. The stamp
     * costs the range sample, the shuffle and the counts job: no window
-    * exchange, aggregate exchange or broadcast.
+    * exchange, aggregate exchange or broadcast. (Under AQE the range
+    * exchange samples twice and its shuffle map stage is a job of its
+    * own, so that is 4 jobs.) A batch that arrives as ONE partition — a
+    * micro-batch of one feed file, say — is already range-partitioned:
+    * it is sorted in place and the counts job is the stamp's only job.
+    *
+    * The counts job also returns the `(table, lsn)` of the `T` rows it
+    * meets (when the batch has the change relation's string `op` and
+    * `table` and long `lsn`), folded to each table's max: the batch's
+    * truncate frontiers, as [[CdcApply.truncateFrontiers]] would compute
+    * them, at no job of their own. `T` rows are rare.
     *
     * When the batch lacks an order column, every column is the order key
     * (generic batches): still a deterministic total order attempt, so a
-    * replayed batch stamps identical row_ids. Returns the stamped frame
-    * and a release thunk the caller runs after consuming it.
+    * replayed batch stamps identical row_ids. The caller runs the
+    * result's `release` after consuming its rows.
     */
   def stampRowIds(batch: DataFrame, batchId: Long,
-                  orderCols: Seq[String] = Seq("lsn")): (DataFrame, () => Unit) = {
+                  orderCols: Seq[String] = Seq("lsn")): Stamped = {
     // the working columns below would silently REPLACE same-named user
     // columns — refuse loudly instead of corrupting the batch
     val clash = batch.columns.filter(Reserved.contains)
@@ -267,8 +336,7 @@ object BufferedSink {
       if (orderCols.forall(batch.columns.contains)) orderCols
       else batch.columns.toSeq
     val sortCols = effOrder.map(c => col(s"`$c`"))
-    val ranked = batch
-      .repartitionByRange(sortCols: _*)
+    val ranked = (if (onePartition(batch)) batch else batch.repartitionByRange(sortCols: _*))
       .sortWithinPartitions(sortCols: _*)
       // both evaluated in the one task that builds the partition:
       // monotonically_increasing_id = (partition index << 33) + position
@@ -276,13 +344,30 @@ object BufferedSink {
         (monotonically_increasing_id() -
           shiftleft(spark_partition_id().cast("long"), 33) + 1L).as("__lrn"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val counts = ranked.select(col("__pid")).as(Encoders.scalaInt)
-      .mapPartitions { pids =>
+    val isChange = Seq("op" -> StringType, "table" -> StringType, "lsn" -> LongType)
+      .forall { case (n, t) => batch.schema.exists(f => f.name == n && f.dataType == t) }
+    val truncate =
+      if (isChange) when(col("op") === ChangeRelation.OpTruncate && col("lsn").isNotNull,
+        struct(col("table"), col("lsn")))
+      else lit(null).cast("struct<table:string,lsn:bigint>")
+    // per partition: (pid, rows, None) per pid, then (-1, 0, Some(table →
+    // max T lsn)) per table with a T row
+    val parts = ranked.select(col("__pid"), truncate)
+      .as(Encoders.product[(Int, Option[(String, Long)])])
+      .mapPartitions { rows =>
         val n = scala.collection.mutable.HashMap.empty[Int, Long]
-        pids.foreach(p => n(p) = n.getOrElse(p, 0L) + 1L)
-        n.iterator
-      }(Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong))
-      .collect().groupMapReduce(_._1)(_._2)(_ + _)
+        val t = scala.collection.mutable.HashMap.empty[String, Long]
+        rows.foreach { case (p, tr) =>
+          n(p) = n.getOrElse(p, 0L) + 1L
+          tr.foreach { case (table, lsn) => t(table) = math.max(t.getOrElse(table, lsn), lsn) }
+        }
+        n.iterator.map { case (p, c) => (p, c, Option.empty[(String, Long)]) } ++
+          t.iterator.map(e => (-1, 0L, Some(e)))
+      }(Encoders.product[(Int, Long, Option[(String, Long)])])
+      .collect()
+    val counts = parts.collect { case (p, c, None) => p -> c }
+      .groupMapReduce(_._1)(_._2)(_ + _)
+    val truncates = parts.flatMap(_._3).groupMapReduce(_._1)(_._2)(math.max)
     // offsets(p) = rows in partitions before p
     val offsets = (0 until counts.keys.maxOption.fold(0)(_ + 1))
       .scanLeft(0L)((acc, p) => acc + counts.getOrElse(p, 0L))
@@ -291,6 +376,6 @@ object BufferedSink {
       .withColumn("__row_id",
         (lit(batchId) * lit(1L << 32) + col("__off") + col("__lrn")).cast("long"))
       .drop("__pid", "__lrn", "__off")
-    (stamped, () => { ranked.unpersist(false); () })
+    Stamped(stamped, truncates, () => { ranked.unpersist(false); () })
   }
 }

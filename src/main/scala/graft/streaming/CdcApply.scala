@@ -40,7 +40,12 @@ object CdcApply {
     }
 
   /** Every table's truncate frontier (the LSN of its last `T` event),
-    * collected to the driver by one aggregate of ≤ #tables rows.
+    * collected to the driver by one aggregate of ≤ #tables rows — for
+    * callers holding a bare change log. The replication path runs no such
+    * job: its stamp returns each batch's frontiers from the counts job it
+    * already runs ([[BufferedSink.stampRowIds]]), the landing records them
+    * as sink state, and `StreamRunner.readFinal` takes the max over the
+    * committed batches' records ([[BufferedSink.truncateFrontiers]]).
     */
   def truncateFrontiers(changes: DataFrame): Map[String, Long] =
     changes.filter(col("op") === ChangeRelation.OpTruncate)
@@ -48,7 +53,8 @@ object CdcApply {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
   // Each apply below takes the changes' truncate frontiers, or resolves
-  // them itself (one aggregate job) when the caller has none in hand.
+  // them itself (one aggregate job) when the caller has none in hand;
+  // readFinal always passes the sink's recorded frontiers.
 
   /** MergeTree append: inserts only; U/D are not supported by the plain
     * engine (the reference rejects them at config time — SURVEY §2.A6).

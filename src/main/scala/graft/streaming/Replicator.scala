@@ -20,8 +20,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * every streamed LSN) under the reserved snapshot batch id. Engine
   * semantics then need no special casing: `readFinal` replays snapshot
   * + stream as one log (a streamed update/delete at `lsn > 0` wins over
-  * the snapshot row; compaction orders the snapshot's `__row_id` before
-  * all stream batches). The snapshot write is batch-idempotent like any
+  * the snapshot row; `__row_id` orders the snapshot's rows before all
+  * stream batches). The snapshot write is batch-idempotent like any
   * other batch, so a crashed bootstrap re-runs safely. The snapshot
   * DataFrames come from any batch source — [[graft.sources.TableSource]]
   * (parquet or partitioned JDBC) is the provided one, standing in for

@@ -68,17 +68,60 @@ private[graft] object StateFs {
 
   /** Commit `src` to `dst` by rename. Returns false when `dst` already
     * exists or the rename was lost to a concurrent committer — callers
-    * treat false as "another replay won; discard my staging".
+    * treat false as "another replay won; discard my staging". Any other
+    * failed rename throws.
     */
   def commitMove(src: Path, dst: Path): Boolean = {
     val f = fs(src)
     Option(dst.getParent).foreach(f.mkdirs(_))
-    if (f.exists(dst)) false else f.rename(src, dst)
+    if (f.exists(dst)) false
+    else if (f.rename(src, dst)) true
+    // a rename that failed with nothing at `dst` lost no race: callers
+    // would drop their staging and go on as if it had committed
+    else if (f.exists(dst)) false
+    else throw new java.io.IOException(s"could not move $src to $dst")
   }
 
   def delete(p: Path): Unit = {
     val f = fs(p)
     if (f.exists(p)) { f.delete(p, true); () }
+  }
+
+  // ---- small record files ----
+
+  /** One line per record, its fields tab-separated; backslash, tab, CR
+    * and LF inside a field are escaped, so any string round-trips through
+    * [[readRecords]], and a record of one or more fields keeps its field
+    * count (a trailing empty field included).
+    */
+  def writeRecords(file: Path, records: Seq[Seq[String]]): Unit =
+    writeFile(file, records.map(_.map(escape).mkString("\t") + "\n").mkString)
+
+  def readRecords(file: Path): Seq[Seq[String]] =
+    readLines(file).map(_.split("\t", -1).toSeq.map(unescape))
+
+  private def escape(s: String): String = {
+    val b = new StringBuilder(s.length)
+    s.foreach {
+      case '\\' => b ++= "\\\\"
+      case '\t' => b ++= "\\t"
+      case '\n' => b ++= "\\n"
+      case '\r' => b ++= "\\r"
+      case c => b += c
+    }
+    b.result()
+  }
+
+  private def unescape(s: String): String = {
+    val b = new StringBuilder(s.length)
+    var i = 0
+    while (i < s.length) {
+      if (s(i) == '\\' && i + 1 < s.length) {
+        b += (s(i + 1) match { case 't' => '\t'; case 'n' => '\n'; case 'r' => '\r'; case c => c })
+        i += 2
+      } else { b += s(i); i += 1 }
+    }
+    b.result()
   }
 
   // ---- marker-directory manifests (append-free) ----

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -28,7 +28,7 @@ import org.apache.spark.sql.types.StructType
   * first thing a real deployment hits.
   *
   * After the shared decode and stamp, each table's chain (typed slice →
-  * landing → due compaction → ClickHouse ship) runs concurrently with the
+  * landing → ClickHouse ship → due compaction) runs concurrently with the
   * other tables' chains, at most `defaultParallelism` at a time
   * ([[PerTable]]) — pg2ch likewise flushes each table's buffer on its
   * own (SURVEY §2.A10). A table's jobs are small and most of its chain is
@@ -38,9 +38,10 @@ import org.apache.spark.sql.types.StructType
   *
   * Crash semantics are unchanged from the per-table shape: each
   * (table, batchId) landing is independently idempotent, and within a
-  * table the landing still commits before the ship, so a crash mid-route
-  * replays the batch and already-landed tables no-op — the same contract
-  * pg2ch gets from its persisted per-table LSN. The target
+  * table the landing still commits before the ship (and the compaction
+  * runs after it), so a crash mid-route replays the batch and
+  * already-landed tables no-op — the same contract pg2ch gets from its
+  * persisted per-table LSN. The target
   * table semantics (Replacing FINAL / Collapsing net / append) are
   * applied AT READ TIME over the landed log — exactly ClickHouse's
   * merge-on-read model — via [[readFinal]].
@@ -152,7 +153,7 @@ object StreamRunner {
       new graft.sinks.HttpCHSink(url, s"${cfg.outputDir}/_ch_state"))
     val relations =
       if (cfg.feedFormat == "pgoutput")
-        Some(new RelationCache(spark, new HPath(cfg.outputDir, "_relations")))
+        Some(new RelationCache(new HPath(cfg.outputDir, "_relations")))
       else None
     val reader = spark.readStream
     cfg.tables.map(_.bufferSize).filter(_ > 0).reduceOption(_ min _)
@@ -174,37 +175,42 @@ object StreamRunner {
     * the row count, dominated small batches. So a batch runs a fixed,
     * small set of jobs:
     *  - binary feeds: one job parses the frames into a persisted copy and
-    *    collects the batch's `R` definitions to the driver, plus one
-    *    relation-cache write when the batch carries `R` frames;
+    *    collects the batch's `R` definitions to the driver;
     *  - the stamp ([[BufferedSink.stampRowIds]]) over the decoded rows of
     *    every configured table: the range sample, the shuffle, and the
-    *    per-partition counts job. Its persisted result is the batch's only
-    *    cached copy from then on;
-    *  - with a ClickHouse mirror, one aggregate for every table's truncate
-    *    frontier (table → LSN of its last `T`);
+    *    per-partition counts job (only the counts job when the batch is
+    *    one partition), which also returns every table's truncate
+    *    frontier (table → LSN of its last `T`). Its persisted result is
+    *    the batch's only cached copy from then on;
     *  - per table, exactly two: the landing write ([[BufferedSink.
     *    writeStamped]] over the table's slice, with no re-stamp) and the
     *    ClickHouse POST, whose encode drops pre-truncate rows with a
     *    literal LSN filter;
-    *  - compaction, when a table reaches its threshold.
-    * A replayed batch that every layer already holds runs none of them.
-    * The relation definitions never touch Spark on the way in: the merged
-    * set lives in a driver-side [[RelationCache]] and reaches the decode
-    * as a literal.
+    *  - after the POST, one read → write job per table that reaches its
+    *    compaction threshold.
+    * A replayed batch that every layer already holds runs none of them,
+    * only a compaction that a crash after the POST left due.
+    * The relation definitions never touch Spark: the merged set lives in
+    * a driver-side [[RelationCache]] and reaches the decode as a literal.
     *
-    * The decode, the stamp and the truncate frontiers run once, in order;
-    * then the per-table chains run concurrently on at most
-    * `defaultParallelism` threads ([[PerTable]]), so one table's driver
-    * gaps (commit renames, markers, planning) overlap another's jobs.
-    * Every chain's jobs keep the batch's query and batch-id tags. The
-    * stamped copy is released only after every chain has ended, and a
-    * failed chain fails the batch only once the others have ended too.
+    * The decode and the stamp run once, in order; then the per-table
+    * chains run concurrently on at most `defaultParallelism` threads
+    * ([[PerTable]]), so one table's driver gaps (commit renames, markers,
+    * planning) overlap another's jobs. Every chain's jobs keep the batch's
+    * query and batch-id tags. The stamped copy is released only after
+    * every chain has ended, and a failed chain fails the batch only once
+    * the others have ended too.
     */
   private def routeBatch(cfg: RunnerConfig,
                          sinks: Map[String, BufferedSink],
                          chSink: Option[graft.sinks.HttpCHSink],
                          relations: Option[RelationCache],
                          rawBatch: DataFrame, batchId: Long): Unit = {
+    val spark = rawBatch.sparkSession
+    // housekeeping after the ship, so the mirror never waits on it; the
+    // landed rows are the table's change relation plus `__row_id`
+    def compact(tc: TableConfig): Unit = sinks(tc.name).maybeCompact(spark,
+      Some(BufferedSink.withRowId(ChangeRelation.schema(tc.rowSchema))))
     // a replay of a batch that every table's landing and mirror already
     // hold: both layers would be no-ops, so skip the decode and stamp too.
     // (The relation cache needs nothing either: the first run wrote this
@@ -213,11 +219,39 @@ object StreamRunner {
       sinks(tc.name).committedBatches().contains(batchId) &&
         chSink.forall(_.committedBatches(tc.name).contains(batchId))
     }
-    if (replayed) return
+    if (replayed) {
+      PerTable.foreach(spark, cfg.tables)(compact)
+      return
+    }
+    val stamped = stampBatch(cfg, relations, rawBatch, batchId)
+    try {
+      val frontiers = stamped.truncates
+      PerTable.foreach(spark, cfg.tables) { tc =>
+        val slice = ChangeFeed.typed(
+          stamped.rows.filter(col("table") === tc.name), tc.rowSchema, tc.columnsMap)
+        sinks(tc.name).writeStamped(slice, batchId, frontiers.filter(_._1 == tc.name))
+        // ship AFTER the landing commits: both layers are idempotent on
+        // batchId, so a crash between them replays into two no-ops
+        chSink.foreach { ch =>
+          ch.insert(encodeForCH(tc, slice, frontiers), tc.name,
+            batchId, truncateFirst = frontiers.contains(tc.name))
+        }
+        compact(tc)
+      }
+    } finally stamped.release() // every chain has ended: PerTable waits for all
+  }
+
+  /** The batch's decode and stamp: the rows of every configured table,
+    * stamped with `__row_id`, and their truncate frontiers.
+    */
+  private[streaming] def stampBatch(cfg: RunnerConfig,
+                                    relations: Option[RelationCache],
+                                    rawBatch: DataFrame,
+                                    batchId: Long): BufferedSink.Stamped = {
     // binary feeds parse into a persisted frame copy that lives until the
     // stamp has materialized its own
     var frames: Option[Dataset[PgOutput.Frame]] = None
-    val (stamped, release) = try {
+    try {
       val decoded = cfg.feedFormat match {
         case "json" => ChangeFeed.fromJsonLinesRaw(rawBatch)
         case "pgoutput" =>
@@ -238,49 +272,29 @@ object StreamRunner {
         decoded.filter(col("table").isin(cfg.tables.map(_.name): _*)),
         batchId, Seq("lsn", "table"))
     } finally frames.foreach(_.unpersist())
-    try {
-      // only the mirror needs the truncate frontiers
-      val frontiers =
-        if (chSink.isEmpty) Map.empty[String, Long]
-        else CdcApply.truncateFrontiers(stamped)
-
-      PerTable.foreach(stamped.sparkSession, cfg.tables) { tc =>
-        val slice = ChangeFeed.typed(
-          stamped.filter(col("table") === tc.name), tc.rowSchema, tc.columnsMap)
-        sinks(tc.name).writeStamped(slice, batchId)
-        // ship AFTER the landing commits: both layers are idempotent on
-        // batchId, so a crash between them replays into two no-ops
-        chSink.foreach { ch =>
-          ch.insert(encodeForCH(tc, slice, frontiers), tc.name,
-            batchId, truncateFirst = frontiers.contains(tc.name))
-        }
-      }
-    } finally release() // every chain has ended: PerTable waits for all
   }
 
   /** The merged `R` definitions — pg2ch's live relation map, which must
     * survive across micro-batches and restarts because a subscription
     * sends each table's R frame ONCE, not once per batch.
     *
-    * The working copy is a driver-side set, loaded once (with an explicit
-    * schema, so no inference job) when the query starts. The durable copy
-    * is VERSIONED full snapshots, not an append log: each R-bearing batch
-    * writes the complete set to `_relations/v=<batchId>` (staged + atomic
-    * move — replay keeps the committed version) and retires older
-    * versions, so a restart opens ONE tiny parquet dir regardless of how
-    * many schema changes the feed has ever carried. Batches without R
-    * frames touch neither. Replay is safe twice over: the version move is
-    * idempotent, and definitions are LSN-versioned, so re-merging the
-    * same definitions changes nothing at resolution time.
+    * The working copy is a driver-side set, loaded once when the query
+    * starts. The durable copy is VERSIONED full snapshots, not an append
+    * log: each R-bearing batch writes the complete set as one small text
+    * file, `_relations/v=<batchId>` (staged + atomic move through
+    * [[StateFs]] — replay keeps the committed version), and retires older
+    * versions, so a restart reads ONE file regardless of how many schema
+    * changes the feed has ever carried. Neither the write nor the load
+    * runs a Spark job, and batches without R frames touch neither. Replay
+    * is safe twice over: the version move is idempotent, and definitions
+    * are LSN-versioned, so re-merging the same definitions changes
+    * nothing at resolution time.
     */
-  private final class RelationCache(spark: SparkSession, dir: HPath) {
-    import spark.implicits._
+  private[streaming] final class RelationCache(dir: HPath) {
 
     private var defs: Seq[ChangeFeed.RelationDef] =
       latestVersion().fold(Seq.empty[ChangeFeed.RelationDef])(v =>
-        spark.read.schema(Encoders.product[ChangeFeed.RelationDef].schema)
-          .parquet(new HPath(dir, s"v=$v").toString)
-          .as[ChangeFeed.RelationDef].collect().toSeq)
+        RelationCache.decode(StateFs.readRecords(new HPath(dir, s"v=$v"))))
 
     /** Fold a batch's feed definitions in; the complete merged set. */
     def merge(batchId: Long,
@@ -301,18 +315,28 @@ object StreamRunner {
       val target = new HPath(dir, s"v=$batchId")
       if (!StateFs.exists(target)) {
         val staging = new HPath(dir, s"_staging_v$batchId")
-        defs.toDS().coalesce(1).write.mode("overwrite").parquet(staging.toString)
+        StateFs.writeRecords(staging, RelationCache.encode(defs))
         // lost move = a concurrent replay committed this version first
         if (!StateFs.commitMove(staging, target)) StateFs.delete(staging)
       }
       // retire superseded versions (lazy: a crash here just leaves one
-      // extra dir for the next write to retire)
+      // extra version for the next write to retire)
       latestVersion().foreach { latest =>
         StateFs.listNames(dir)
           .filter(n => n.startsWith("v=") && n.stripPrefix("v=").toLong < latest)
           .foreach(n => StateFs.delete(new HPath(dir, n)))
       }
     }
+  }
+
+  private[streaming] object RelationCache {
+
+    /** One record per definition: relid, rlsn, name, then its columns. */
+    def encode(defs: Seq[ChangeFeed.RelationDef]): Seq[Seq[String]] =
+      defs.map(d => Seq(d.relId.toString, d.rlsn.toString, d.relName) ++ d.cols)
+
+    def decode(records: Seq[Seq[String]]): Seq[ChangeFeed.RelationDef] =
+      records.map(r => ChangeFeed.RelationDef(r(0).toInt, r(1).toLong, r(2), r.drop(3)))
   }
 
   /** Engine wire encoding for the ClickHouse buffer table — the aux
@@ -361,19 +385,22 @@ object StreamRunner {
       .drop("__row_id")
 
   /** Read-side FINAL — the reference's target-table semantics applied
-    * over the landed log, truncate-aware. The apply resolves the table's
-    * truncate frontier on the driver when called (one aggregate over the
-    * log's `op`, `table` and `lsn` columns), so the FINAL itself filters
-    * by a literal LSN instead of joining a frontier back into the log.
+    * over the landed log, truncate-aware. The table's truncate frontier is
+    * the sink's record of it ([[BufferedSink.truncateFrontiers]]: the max
+    * over the committed batches' landing records), so resolving it runs
+    * no Spark job, and the FINAL filters by a literal LSN instead of
+    * joining a frontier back into the log.
     */
   def readFinal(spark: SparkSession, cfg: RunnerConfig, table: String): DataFrame = {
     val tc = cfg.tables.find(_.name == table)
       .getOrElse(throw new IllegalArgumentException(s"unconfigured table: $table"))
     val log = changeLog(spark, cfg, table)
+    val frontiers = sinkFor(cfg, table).truncateFrontiers()
     tc.engine match {
-      case "ReplacingMergeTree" => CdcApply.applyReplacing(log, tc.keyColumns)
-      case "CollapsingMergeTree" => CdcApply.collapse(CdcApply.toSignedRows(log))
-      case "MergeTree" => CdcApply.applyAppend(log)
+      case "ReplacingMergeTree" => CdcApply.applyReplacing(log, tc.keyColumns, frontiers)
+      case "CollapsingMergeTree" =>
+        CdcApply.collapse(CdcApply.toSignedRows(log, frontiers))
+      case "MergeTree" => CdcApply.applyAppend(log, frontiers)
       case other => throw new IllegalArgumentException(s"unknown engine: $other")
     }
   }

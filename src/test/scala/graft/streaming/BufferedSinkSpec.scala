@@ -91,6 +91,75 @@ class BufferedSinkSpec extends SparkSpec {
     assert(before.toSeq === after.toSeq)
   }
 
+  test("a compaction that fails after the landing fails the write; the replay only compacts") {
+    val dir = Files.createTempDirectory("graft_compact_fault").toString
+    var fail = true
+    val sink = new BufferedSink(dir, mergeThreshold = 2, segmentMerge = { df =>
+      if (fail) throw new IllegalStateException("injected compaction fault")
+      df
+    })
+    assert(sink.writeBatch(Seq(1L).toDF("lsn"), 0L))
+    val e = intercept[IllegalStateException](sink.writeBatch(Seq(2L, 3L).toDF("lsn"), 1L))
+    assert(e.getMessage.contains("injected"))
+    // the landing committed before the compaction ran
+    assert(sink.committedBatches() === Set(0L, 1L))
+    assert(sink.compactedBatches().isEmpty)
+
+    fail = false
+    assert(!sink.writeBatch(Seq(99L).toDF("lsn"), 1L), "the replay must not land again")
+    assert(sink.compactedBatches() === Set(0L, 1L))
+    assert(sink.liveBatchDirCount() === 0)
+    val rows = sink.readCommitted(spark).orderBy("__row_id").select("lsn").as[Long].collect()
+    assert(rows.toSeq === Seq(1L, 2L, 3L))
+  }
+
+  test("one compaction over 3 batch dirs is one job, and its plan has no exchange") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
+      SparkListenerSQLExecutionStart}
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val dir = Files.createTempDirectory("graft_compact_one").toString
+    val raw = new BufferedSink(dir)
+    (0 until 3).foreach { b =>
+      assert(raw.writeBatch(Seq(2L * b + 1, 2L * b + 2).toDF("lsn").repartition(2), b.toLong))
+    }
+    val landed = BufferedSink.withRowId(StructType(Seq(StructField("lsn", LongType))))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val nodes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    def walk(p: SparkPlanInfo): Unit = { nodes.add(p.nodeName); p.children.foreach(walk) }
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.test.marker") != null)) marker.countDown()
+        else jobs.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => walk(s.sparkPlanInfo)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate => walk(u.sparkPlanInfo)
+        case _ =>
+      }
+    }
+    val compacting = new BufferedSink(dir, mergeThreshold = 3)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      compacting.maybeCompact(spark, Some(landed))
+      // an RDD job: no SQL plan of its own. The bus delivers in order, so
+      // every event of the compaction has been seen once it is.
+      spark.sparkContext.setLocalProperty("graft.test.marker", "1")
+      try spark.sparkContext.parallelize(Seq(1), 1).count() finally
+        spark.sparkContext.setLocalProperty("graft.test.marker", null)
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    assert(compacting.compactedBatches() === Set(0L, 1L, 2L))
+    assert(compacting.liveBatchDirCount() === 0)
+    assert(jobs.get === 1, s"the compaction ran ${jobs.get} jobs")
+    assert(nodes.asScala.nonEmpty && !nodes.asScala.exists(_.contains("Exchange")),
+      s"the compaction plan shuffles: ${nodes.asScala.toSeq.distinct}")
+    val rows = compacting.readCommitted(spark).orderBy("__row_id").select("lsn").as[Long].collect()
+    assert(rows.toSeq === (1L to 6L))
+  }
+
   private def copyTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit = {
     Files.walk(from).forEach { p =>
       val dest = to.resolve(from.relativize(p).toString)
@@ -106,7 +175,8 @@ class BufferedSinkSpec extends SparkSpec {
     val sink = new BufferedSink(dir)
     // enough rows to span several range partitions; shuffled arrival order
     val lsns = scala.util.Random.shuffle((1L to 5000L).toList)
-    val (stamped, release) = sink.stampRowIds(lsns.toDF("lsn").repartition(8), 7L)
+    val BufferedSink.Stamped(stamped, _, release) =
+      sink.stampRowIds(lsns.toDF("lsn").repartition(8), 7L)
     try {
       // plan pin: the de-funneled stamp must not contain ANY unpartitioned
       // window — the old Window.orderBy form funnels the batch into 1 task
@@ -135,13 +205,13 @@ class BufferedSinkSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_stamp_edge").toString
     val sink = new BufferedSink(dir)
     // empty batch: stamps nothing, breaks nothing
-    val (empty, rel0) = sink.stampRowIds(Seq.empty[Long].toDF("lsn"), 1L)
+    val BufferedSink.Stamped(empty, _, rel0) = sink.stampRowIds(Seq.empty[Long].toDF("lsn"), 1L)
     try assert(empty.count() === 0L) finally rel0()
     // duplicate order keys: ranks must still be a permutation of 1..n
     // within each key group (ties are unordered but ids stay dense and
     // unique — the property compaction's row_id sort relies on)
     val dups = Seq(5L, 5L, 5L, 2L, 2L, 9L)
-    val (stamped, rel1) = sink.stampRowIds(dups.toDF("lsn"), 3L)
+    val BufferedSink.Stamped(stamped, _, rel1) = sink.stampRowIds(dups.toDF("lsn"), 3L)
     try {
       val ids = stamped.select(col("__row_id")).collect().map(_.getLong(0)).sorted
       assert(ids.toSeq === (1L to 6L).map(r => 3L * (1L << 32) + r))
@@ -162,7 +232,7 @@ class BufferedSinkSpec extends SparkSpec {
       assert(e.getMessage.contains(name))
     }
     // a column that merely PREFIXES a reserved name is fine
-    val (ok, rel) = sink.stampRowIds(Seq((1L, 2L)).toDF("lsn", "__pidx"), 1L)
+    val BufferedSink.Stamped(ok, _, rel) = sink.stampRowIds(Seq((1L, 2L)).toDF("lsn", "__pidx"), 1L)
     try assert(ok.columns.contains("__pidx")) finally rel()
   }
 

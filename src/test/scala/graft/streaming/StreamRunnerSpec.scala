@@ -495,15 +495,16 @@ class StreamRunnerSpec extends SparkSpec {
       jobs.count { case (q, b) => q == run._1 && b == "0" }
     val (j1, j3) = (count(one), count(three))
     info(s"micro-batch jobs: 1 table $j1, 3 tables $j3")
-    // observed (local[4], 4 shuffle partitions, AQE on): 9 jobs for 1
-    // table, 13 for 3. Paid once per micro-batch: the frames parse that
-    // collects the R definitions (1), the relation-cache write (1), the
-    // stamp's range sample, shuffle and counts (3) and the truncate
-    // aggregate (2); per table: the landing write and the POST (2 each).
-    // The per-table chains run on their own threads; a job there that
-    // lost the batch's query/batch-id tags would drop out of this count
-    // (the counts are still 9 and 13 with the chains running concurrently)
+    // observed (local[4], 4 shuffle partitions, AQE on): 4 jobs for 1
+    // table, 8 for 3. Paid once per micro-batch: the frames parse that
+    // collects the R definitions (1) and the stamp of the one-file batch,
+    // whose counts job also returns the truncate frontiers (1); per
+    // table: the landing write and the POST (2 each). The relation-cache
+    // write and the truncate frontiers run no job. The per-table chains
+    // run on their own threads; a job there that lost the batch's
+    // query/batch-id tags would drop out of this count
     assert(j1 > 0 && j3 > 0, s"no micro-batch jobs seen: 1 table $j1, 3 tables $j3")
+    assert(j1 <= 6, s"the fixed part of a batch may cost 6 jobs: 1 table $j1")
     assert(j3 - j1 <= 2 * 2,
       s"each extra table may add 2 jobs (write + POST): 1 table $j1, 3 tables $j3")
   }
@@ -575,7 +576,7 @@ class StreamRunnerSpec extends SparkSpec {
         inputDir = in.toString,
         outputDir = out,
         checkpointDir = Files.createTempDirectory("graft_chainfail_ckpt").toString,
-        // t1's chain is the short one: the others compact before shipping
+        // t1's chain is the short one: the others compact after shipping
         tables = names.map(n => StreamRunner.TableConfig(n, "ReplacingMergeTree",
           Seq("k"), ChangeRelation.testRow,
           mergeThreshold = if (n == "t1") None else Some(1))),
@@ -628,6 +629,221 @@ class StreamRunnerSpec extends SparkSpec {
       spark.sparkContext.removeSparkListener(listener)
       ch.stop()
     }
+  }
+
+  private def onePass(cfg: StreamRunner.RunnerConfig): Unit = {
+    val qs = StreamRunner.run(spark, cfg)
+    try qs.foreach(_.processAllAvailable()) finally qs.foreach(_.stop())
+  }
+
+  /** A table's FINAL, and CdcApply's own FINAL over its change log, as sorted rows. */
+  private def finals(cfg: StreamRunner.RunnerConfig, table: String): (Seq[String], Seq[String]) = {
+    val tc = cfg.tables.find(_.name == table).get
+    val log = StreamRunner.changeLog(spark, cfg, table)
+    val want = tc.engine match {
+      case "ReplacingMergeTree" => CdcApply.applyReplacing(log, tc.keyColumns)
+      case "CollapsingMergeTree" => CdcApply.collapse(CdcApply.toSignedRows(log))
+      case _ => CdcApply.applyAppend(log)
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    (rows(StreamRunner.readFinal(spark, cfg, table)), rows(want))
+  }
+
+  private def deleteWithCrc(dir: Path, name: String): Unit = {
+    Files.delete(dir.resolve(name))
+    Files.deleteIfExists(dir.resolve(s".$name.crc"))
+  }
+
+  test("a compaction that fails after its ship fails the batch; the replay only compacts") {
+    val ch = new graft.sinks.StubCH
+    try {
+      val in = Files.createTempDirectory("graft_cfail_in")
+      val out = Files.createTempDirectory("graft_cfail_out").toString
+      val cfg = StreamRunner.RunnerConfig(
+        inputDir = in.toString,
+        outputDir = out,
+        checkpointDir = Files.createTempDirectory("graft_cfail_ckpt").toString,
+        tables = Seq(
+          StreamRunner.TableConfig("users", "ReplacingMergeTree", Seq("k"),
+            ChangeRelation.testRow),
+          StreamRunner.TableConfig("ledger", "CollapsingMergeTree", Seq("k"),
+            ChangeRelation.testRow)),
+        mergeThreshold = 2,
+        clickhouseUrl = Some(ch.endpoint))
+      writeFeed(in, "wal_000.json", Seq(j(1, "I", "users", 1, "a"), j(2, "I", "ledger", 10, "x")))
+      onePass(cfg)
+
+      // users' segment area is a file: its compaction, due in batch 1,
+      // fails after the batch has landed and shipped
+      val blocker = Paths.get(out, "users", "main")
+      Files.writeString(blocker, "not a directory")
+      writeFeed(in, "wal_001.json", Seq(
+        j(3, "U", "users", 1, "b"), j(4, "I", "users", 2, "c"), j(5, "U", "ledger", 10, "y")))
+      intercept[Exception](onePass(cfg))
+      val users = new BufferedSink(s"$out/users", 2)
+      val shipped = new graft.sinks.HttpCHSink(ch.endpoint, s"$out/_ch_state")
+      assert(users.committedBatches() === Set(0L, 1L))
+      assert(shipped.committedBatches("users") === Set(0L, 1L))
+      assert(users.compactedBatches().isEmpty)
+      val posts = ch.posts.get
+
+      // fault cleared, query restarted: batch 1 replays; land and ship are
+      // no-ops and the leftover compaction runs
+      Files.delete(blocker)
+      onePass(cfg)
+      assert(ch.posts.get === posts, "the replay must not POST again")
+      assert(users.compactedBatches() === Set(0L, 1L))
+      assert(users.liveBatchDirCount() === 0)
+      Seq("users", "ledger").foreach { t =>
+        val (got, want) = finals(cfg, t)
+        assert(got === want, t)
+      }
+      assert(finals(cfg, "users")._1.map(_.take(6)) === Seq("[1,b,n", "[2,c,n"))
+      // the stub holds each row exactly once
+      def wire(t: String) = ch.lines(t).map(_.split("\t", -1).toSeq).sortBy(_.mkString(","))
+      assert(wire("users").map(c => (c(0), c(1), c(3), c(4))) ===
+        Seq(("1", "a", "1", "0"), ("1", "b", "3", "0"), ("2", "c", "4", "0")))
+      assert(wire("ledger").map(c => (c(0), c(1), c(3))).sorted ===
+        Seq(("10", "old", "-1"), ("10", "x", "1"), ("10", "y", "1")))
+    } finally ch.stop()
+  }
+
+  test("a crash between the truncate record and the batch marker replays to the same readFinal") {
+    val in = Files.createTempDirectory("graft_tcrash_in")
+    val out = Files.createTempDirectory("graft_tcrash_out").toString
+    val cfg = StreamRunner.RunnerConfig(
+      inputDir = in.toString,
+      outputDir = out,
+      checkpointDir = Files.createTempDirectory("graft_tcrash_ckpt").toString,
+      tables = Seq(StreamRunner.TableConfig("users", "ReplacingMergeTree", Seq("k"),
+        ChangeRelation.testRow)))
+    writeFeed(in, "wal_000.json", Seq(j(1, "I", "users", 1, "a"), j(2, "I", "users", 2, "b")))
+    onePass(cfg)
+    writeFeed(in, "wal_001.json", Seq(
+      s"""{"lsn":3,"op":"T","table":"users"}""", j(4, "I", "users", 3, "c")))
+    onePass(cfg)
+    val sink = new BufferedSink(s"$out/users")
+    val (clean, _) = finals(cfg, "users")
+    assert(clean.map(_.take(4)) === Seq("[3,c"))
+    assert(sink.truncateFrontiers() === Map("users" -> 3L))
+
+    // the crash window: batch 1's dir moved and its truncate record
+    // written, but neither its marker nor the checkpoint commit
+    deleteWithCrc(Paths.get(out, "users", "_committed_batches"), "b=1")
+    deleteWithCrc(Paths.get(cfg.checkpointDir, "_routed", "commits"), "1")
+    assert(Files.exists(Paths.get(out, "users", "_truncates", "b=1")))
+    // a record without its marker is not read
+    assert(sink.truncateFrontiers() === Map.empty)
+    val (crashed, crashedWant) = finals(cfg, "users")
+    assert(crashed === crashedWant)
+    assert(crashed.map(_.take(4)) === Seq("[1,a", "[2,b"))
+
+    onePass(cfg) // replays batch 1
+    assert(sink.committedBatches() === Set(0L, 1L))
+    assert(sink.truncateFrontiers() === Map("users" -> 3L))
+    assert(finals(cfg, "users")._1 === clean)
+    assert(StreamRunner.changeLog(spark, cfg, "users").count() === 4L)
+  }
+
+  test("truncate frontiers: each batch's, and FINAL's after compaction and restart, equal CdcApply's") {
+    import org.apache.spark.sql.Encoders
+    val b64 = java.util.Base64.getEncoder
+    val tables = Seq(
+      StreamRunner.TableConfig("users", "ReplacingMergeTree", Seq("k"), ChangeRelation.testRow),
+      StreamRunner.TableConfig("audit", "MergeTree", Seq("k"), ChangeRelation.testRow),
+      StreamRunner.TableConfig("ledger", "CollapsingMergeTree", Seq("k"), ChangeRelation.testRow))
+    def t(lsn: Long, table: String) = s"""{"lsn":$lsn,"op":"T","table":"$table"}"""
+    val json = Seq(
+      // one truncate naming two relations, and one naming an unknown relation
+      Seq(j(1, "I", "users", 1, "a"), j(2, "I", "audit", 100, "x"), j(3, "I", "ledger", 10, "x"),
+        t(4, "users"), t(4, "audit"), t(5, "ghost"), j(6, "I", "users", 2, "b")),
+      // two truncates of one table in one batch
+      Seq(t(7, "ledger"), j(8, "I", "ledger", 11, "y"), t(9, "ledger"),
+        j(10, "I", "ledger", 12, "z"), j(11, "U", "users", 2, "c")),
+      Seq(j(12, "I", "audit", 101, "w")))
+    val cols = Seq("k", "v", "amt")
+    val pg = Seq(
+      // a T naming two relations, one naming an unknown relid, and one
+      // before its relation's R frame
+      Seq(PgOutput.encodeRelation(0, 42, "users", cols), PgOutput.encodeRelation(0, 43, "audit", cols),
+        PgOutput.encodeInsert(1, 42, Seq("1", "a", null)), PgOutput.encodeInsert(2, 43, Seq("100", "x", null)),
+        PgOutput.encodeTruncate(3, Seq(42, 43)), PgOutput.encodeTruncate(4, Seq(999)),
+        PgOutput.encodeTruncate(5, Seq(44)), PgOutput.encodeRelation(6, 44, "ledger", cols),
+        PgOutput.encodeInsert(7, 44, Seq("10", "x", null)), PgOutput.encodeInsert(8, 42, Seq("2", "b", null))),
+      Seq(PgOutput.encodeTruncate(9, Seq(44)), PgOutput.encodeInsert(10, 44, Seq("11", "y", null)),
+        PgOutput.encodeTruncate(11, Seq(44)), PgOutput.encodeInsert(12, 44, Seq("12", "z", null)),
+        PgOutput.encodeInsert(13, 42, Seq("3", "c", null))),
+      Seq(PgOutput.encodeInsert(14, 43, Seq("101", "w", null)))).map(_.map(b64.encodeToString))
+    val cases = Seq(
+      ("json", json, Seq(Map("users" -> 4L, "audit" -> 4L), Map("ledger" -> 9L), Map.empty[String, Long]),
+        Map("users" -> 4L, "audit" -> 4L, "ledger" -> 9L)),
+      ("pgoutput", pg, Seq(Map("users" -> 3L, "audit" -> 3L), Map("ledger" -> 11L), Map.empty[String, Long]),
+        Map("users" -> 3L, "audit" -> 3L, "ledger" -> 11L)))
+    cases.foreach { case (format, batches, perBatch, all) =>
+      val cfg = StreamRunner.RunnerConfig(
+        inputDir = Files.createTempDirectory(s"graft_front_${format}_in").toString,
+        outputDir = Files.createTempDirectory(s"graft_front_${format}_out").toString,
+        checkpointDir = Files.createTempDirectory(s"graft_front_${format}_ckpt").toString,
+        tables = tables, mergeThreshold = 2, feedFormat = format)
+
+      // the frontiers the batch's stamp resolves
+      val relations =
+        if (format == "pgoutput") Some(new StreamRunner.RelationCache(
+          new org.apache.hadoop.fs.Path(Files.createTempDirectory("graft_front_rel").toString)))
+        else None
+      batches.zip(perBatch).zipWithIndex.foreach { case ((lines, want), b) =>
+        val raw = spark.createDataset(lines)(Encoders.STRING).toDF("value")
+        val stamped = StreamRunner.stampBatch(cfg, relations, raw, b.toLong)
+        try {
+          assert(stamped.truncates === CdcApply.truncateFrontiers(stamped.rows), s"$format batch $b")
+          assert(stamped.truncates === want, s"$format batch $b")
+        } finally stamped.release()
+      }
+
+      // the frontiers FINAL reads back: two batches (a compaction), then a
+      // restarted query lands the third
+      batches.zipWithIndex.foreach { case (lines, b) =>
+        writeFeed(Paths.get(cfg.inputDir), f"wal_$b%03d.$format", lines)
+        onePass(cfg)
+      }
+      tables.foreach { tc =>
+        val sink = StreamRunner.sinkFor(cfg, tc.name)
+        assert(sink.compactedBatches().nonEmpty, s"$format ${tc.name}")
+        val log = StreamRunner.changeLog(spark, cfg, tc.name)
+        assert(sink.truncateFrontiers() === CdcApply.truncateFrontiers(log), s"$format ${tc.name}")
+        assert(sink.truncateFrontiers() === all.filter(_._1 == tc.name), s"$format ${tc.name}")
+        val (got, want) = finals(cfg, tc.name)
+        assert(got === want, s"$format ${tc.name}")
+      }
+    }
+  }
+
+  test("relation definitions round-trip through the relation cache's version file") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    def roundTrip(defs: Seq[ChangeFeed.RelationDef]): Seq[ChangeFeed.RelationDef] =
+      withTempDir("graft_relfile") { d =>
+        val dir = new org.apache.hadoop.fs.Path(d)
+        new StreamRunner.RelationCache(dir).merge(0L, defs)
+        new StreamRunner.RelationCache(dir).merge(1L, Seq.empty)
+      }
+    // an empty column list and a single empty column name stay apart
+    val edge = Seq(ChangeFeed.RelationDef(1, 0L, "t", Seq.empty),
+      ChangeFeed.RelationDef(2, -1L, "", Seq("")), ChangeFeed.RelationDef(3, 5L, "x", Seq("", "")))
+    assert(roundTrip(edge) === edge)
+    val piece = Gen.oneOf("\t", ",", "\n", "\r", "\r\n", "\\", "\\t", "\\n", "\"", "'",
+      "é", "名前", "😀", "a", "Z", " ", "")
+    val name = Gen.listOf(piece).map(_.mkString)
+    val definition = for {
+      relId <- Gen.choose(Int.MinValue, Int.MaxValue)
+      rlsn <- Gen.choose(Long.MinValue, Long.MaxValue)
+      rel <- name
+      cols <- Gen.listOf(name)
+    } yield ChangeFeed.RelationDef(relId, rlsn, rel, cols)
+    val prop = Prop.forAllNoShrink(Gen.nonEmptyListOf(definition)) { defs =>
+      roundTrip(defs) == defs.distinct
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(40), prop)
+    assert(res.passed, res.status.toString)
   }
 
   /** Polls `cond` for up to 60 s. */
